@@ -527,10 +527,16 @@ object TimeOne {
             "skipping code-warmup (WARMUP_DIR warms registered queries only)")
       }
     }
+    // codegen_compiles: Janino compiles during the rep (JVM-wide), so
+    // a warm rep that still compiles shows its codegen cache misses
+    def compiles = org.apache.spark.metrics.source.CodegenMetrics
+      .METRIC_COMPILATION_TIME.getCount
     (1 to reps).foreach { r =>
+      val c0 = compiles
       val t0 = System.nanoTime()
       dfFor(name).write.format("noop").mode("overwrite").save()
-      println(f"[timeone] $name rep$r: ${(System.nanoTime()-t0)/1e9}%.2f s")
+      println(f"[timeone] $name rep$r: ${(System.nanoTime()-t0)/1e9}%.2f s" +
+        s" codegen_compiles=${compiles - c0}")
     }
     // SPARK_GRAFT_EXPLAIN=1: dump the FINAL adaptive plan (collect()
     // so AQE finalizes on this very QueryExecution — a noop write

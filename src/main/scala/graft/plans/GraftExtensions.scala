@@ -9,10 +9,29 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * works in any session built with
   * `.config("spark.sql.extensions", "graft.plans.GraftExtensions")`
   * (the (c)-tier extension mechanism; used by Verify/Bench/tests).
+  *
+  * It also sizes Spark's generated-class cache
+  * (`spark.sql.codegen.cache.maxEntries`) to 4096 entries, up from
+  * Spark's 100, via [[org.apache.spark.sql.graft.CodegenCache]]:
+  *  - why 4096: a graft pass cycles through more distinct generated
+  *    classes than 100 (~100 on a perfbench etl pass, ~230 on a
+  *    stream pass, 2,782 across the 188-row sweep), and the cache
+  *    is LRU, so at 100 every warm pass recompiles what the previous
+  *    pass evicted. 4096 is the next power of two above the sweep; a
+  *    session only holds the classes it actually compiles.
+  *  - the cache is JVM-global and Spark sizes it on the first codegen
+  *    in the JVM. A session built after that (or a JVM whose first
+  *    codegen ran outside any graft session) keeps the earlier size.
+  *  - an explicit `spark.sql.codegen.cache.maxEntries` always wins;
+  *    this only fills the key when it is missing.
+  * `apply` runs inside `getOrCreate`, after the SparkContext exists
+  * but before the session's shared state and SQLConf do, so the static
+  * conf takes effect for the session being built.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   import GraftExtensions._
   override def apply(ext: SparkSessionExtensions): Unit = {
+    org.apache.spark.sql.graft.CodegenCache.sizeActiveContext()
     ext.injectFunction((
       FunctionIdentifier("cosine_sim"),
       new ExpressionInfo(classOf[org.apache.spark.sql.graft.CosineSimilarity].getName, "cosine_sim"),

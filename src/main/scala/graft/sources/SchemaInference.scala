@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import java.time.LocalDate
-import java.time.format.DateTimeFormatter
+import java.time.format.{DateTimeFormatter, ResolverStyle}
 
 /** Sample-based CSV schema inference with the reference's exact rules
   * (BlueForty.py:239-297, SURVEY.md §2a S9):
@@ -29,9 +29,14 @@ object SchemaInference {
 
   val NullLikes: Set[String] = Set("None", "", "NULL", "\\N")
 
+  // STRICT resolution rejects impossible days (2013-02-30) the way
+  // strptime does; the default SMART resolver clamps them to the
+  // month's last day. STRICT needs `uuuu`: `yyyy` is year-of-era and
+  // would need an era field to resolve.
   private val dateFormats: Seq[DateTimeFormatter] = Seq(
-    "yyyy-M-d", "M/d/yyyy", "yyyy/M/d"
-  ).map(DateTimeFormatter.ofPattern)
+    "uuuu-M-d", "M/d/uuuu", "uuuu/M/d"
+  ).map(p => DateTimeFormatter.ofPattern(p)
+    .withResolverStyle(ResolverStyle.STRICT))
 
   /** Spark datetime patterns equivalent to [[dateFormats]], for the
     * distributed TRY-cast read. */
@@ -46,8 +51,14 @@ object SchemaInference {
   private[sources] def isInt(s: String): Boolean =
     try { s.trim.toLong; true } catch { case _: Exception => false }
 
+  // what Python's float() parses, apart from digit-group underscores;
+  // Java's toDouble also takes `1d`, `2f` and hex `0x1p3`, which it
+  // rejects
+  private val PyFloat =
+    """(?i)[+-]?(inf|infinity|nan|(\d+\.?\d*|\.\d+)(e[+-]?\d+)?)""".r
+
   private[sources] def isFloat(s: String): Boolean =
-    try { s.trim.toDouble; true } catch { case _: Exception => false }
+    PyFloat.matches(s.trim)
 
   /** Infer one column's type from its sampled (non-null-like) values. */
   private[sources] def inferColumn(values: Seq[String]): DataType = {

@@ -19,6 +19,8 @@ class SchemaInferenceSpec extends SparkTestBase {
     assert(inferColumn(Seq("1", "2.5")) === DoubleType)
     assert(inferColumn(Seq("1", "x")) === StringType)
     assert(inferColumn(Seq("2013-01-05", "7")) === StringType) // date+int mix
+    assert(inferColumn(Seq("2/29/2012")) === DateType)         // leap day
+    assert(inferColumn(Seq("1", "1d")) === StringType)         // Java-only float
   }
 
   test("null-likes are dropped before the vote; all-null → STRING") {
@@ -31,6 +33,12 @@ class SchemaInferenceSpec extends SparkTestBase {
     assert(inferColumn(Seq("2013-13-45")) === StringType)  // bad month/day
     assert(inferColumn(Seq("05.01.2013")) === StringType)  // wrong separator
     assert(inferColumn(Seq("20130105")) === LongType)      // int, not date
+    // impossible days are rejected, not clamped to the month's end
+    Seq("2013-02-30", "2/30/2013", "2013/4/31", "2/29/2013").foreach(v =>
+      assert(inferColumn(Seq(v)) === StringType, v))
+    // Java-only float forms that Python's float() rejects
+    Seq("1d", "2f", "0x1p3").foreach(v =>
+      assert(inferColumn(Seq(v)) === StringType, v))
   }
 
   test("property: inferred type accepts every sampled non-null value") {
