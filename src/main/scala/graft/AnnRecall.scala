@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
 object AnnRecall {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = LocalCpus()
     val spark = SparkSession.builder().master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")

@@ -31,7 +31,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = LocalCpus()
     val builder = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -50,9 +50,8 @@ object Bench {
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    val all = SparkEntry.queries ++ SparkEntry.benchOnly
     def run(name: String): Unit =
-      all(name)(spark, sfDir)
+      SparkEntry.all(name)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
 
     // host contention self-adjudication: the 1-minute load average
@@ -77,7 +76,7 @@ object Bench {
         System.err.println(s"[bench] $name failed: ${e.getMessage}"); -1.0
       }
     }
-    val raw = all.keys.toSeq.sorted.map { name =>
+    val raw = SparkEntry.all.keys.toSeq.sorted.map { name =>
       val r1 = timed(name)
       val r2 = if (r1 < 0) -1.0 else timed(name)
       val r3 = if (r2 < 0) -1.0 else timed(name)

@@ -27,7 +27,7 @@ object CompactionProbe {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val nBatches = if (args.length > 1) args(1).toInt else 64
     val reps = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = LocalCpus()
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

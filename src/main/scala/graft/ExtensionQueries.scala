@@ -4687,8 +4687,11 @@ object ExtensionQueries {
       | CAST(MAX(total_tokens) AS BIGINT) AS total_tokens
       |FROM c GROUP BY lang ORDER BY lang""".stripMargin
 
-  val oracles: Map[String, String] = Map(
-    "x19_passage_dedup" ->
+  /** The extension family's rows. Declared after the private SQL vals
+    * above: an object initializes top to bottom, so a row listed before
+    * the val it reads would capture null. */
+  val rows: Seq[RowDef] = Seq(
+    RowDef("x19_passage_dedup", x19PassageDedup, Some(
       """WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
         |c AS (SELECT doc_id, CAST(k AS INT) AS chunk_id,
         |        md5(array_to_string(
@@ -4702,9 +4705,9 @@ object ExtensionQueries {
         | CAST(SUM(CASE WHEN rn = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
         | md5(COALESCE(string_agg(CASE WHEN rn = 1 THEN h END, ','
         |       ORDER BY chunk_id), '')) AS kept_md5
-        |FROM f GROUP BY doc_id ORDER BY doc_id""".stripMargin,
+        |FROM f GROUP BY doc_id ORDER BY doc_id""".stripMargin)),
 
-    "x20_source_budget" ->
+    RowDef("x20_source_budget", x20SourceBudget, Some(
       """WITH d AS (SELECT doc_id, source,
         |        CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok,
         |        (doc_id * 48271) % 2147483647 AS h
@@ -4718,14 +4721,15 @@ object ExtensionQueries {
         | CAST(SUM(CASE WHEN cum_tok*2 <= total_tokens THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
         | CAST(SUM(CASE WHEN cum_tok*2 <= total_tokens THEN n_tok ELSE 0 END) AS BIGINT) AS kept_tokens,
         | CAST(MAX(total_tokens) AS BIGINT) AS total_tokens
-        |FROM c GROUP BY source ORDER BY source""".stripMargin,
+        |FROM c GROUP BY source ORDER BY source""".stripMargin)),
 
-    "x30_language_budget" -> x30BudgetSql,
+    RowDef("x30_language_budget", x30LanguageBudget, Some(x30BudgetSql)),
     // x30b's sharded prefix scan is bit-identical to x30 by
     // construction (range shards of the hash order) — same oracle
-    "x30b_language_budget_sharded" -> x30BudgetSql,
+    RowDef("x30b_language_budget_sharded", x30bLanguageBudgetSharded,
+      Some(x30BudgetSql)),
 
-    "x22_topic_balance" ->
+    RowDef("x22_topic_balance", x22TopicBalance, Some(
       """WITH e AS (SELECT vec_id, i, CAST(CAST(x AS DOUBLE) AS DECIMAL(9,6)) v FROM
         |  (SELECT vec_id, unnest(embedding) x, generate_subscripts(embedding,1) i
         |   FROM embeddings)),
@@ -4751,13 +4755,13 @@ object ExtensionQueries {
         |   AS n_kept,
         | CAST(SUM(CASE WHEN pos*2 <= n_members THEN vec_id ELSE 0 END) AS BIGINT)
         |   AS kept_id_sum
-        |FROM capped GROUP BY cluster_id ORDER BY cluster_id""".stripMargin,
+        |FROM capped GROUP BY cluster_id ORDER BY cluster_id""".stripMargin)),
 
     // sorted-neighborhood (w=8) within first-token blocks, restated
     // identically — the window is part of the declared blocking
     // strategy; fixture blocks hold exactly 8 names, so at oracle
     // scale this returns the same rows as the all-pairs block join
-    "t10_name_match" ->
+    RowDef("t10_name_match", t10NameMatch, Some(
       """WITH n AS (SELECT DISTINCT p_name,
         |             string_split(p_name, ' ')[1] AS blk FROM part),
         |r AS (SELECT p_name, blk,
@@ -4768,41 +4772,46 @@ object ExtensionQueries {
         |FROM r a JOIN r b ON a.blk = b.blk
         |                 AND b.rn > a.rn AND b.rn <= a.rn + 8
         |WHERE ROUND(jaro_winkler_similarity(a.p_name, b.p_name), 6) >= 0.5
-        |ORDER BY name_a, name_b""".stripMargin,
+        |ORDER BY name_a, name_b""".stripMargin)),
 
-    "x1_dedup_exact" ->
+    RowDef("x1_dedup_exact", x1DedupExact, Some(
       """SELECT MIN(doc_id) AS doc_id_kept, COUNT(*) AS n_copies,
         |       md5(text) AS text_md5
         |FROM (SELECT doc_id, text FROM documents
         |      UNION ALL SELECT doc_id + 1000000, text FROM documents) t
-        |GROUP BY text ORDER BY doc_id_kept""".stripMargin,
+        |GROUP BY text ORDER BY doc_id_kept""".stripMargin)),
 
-    "x2_dedup_ngram_jaccard" -> jaccardPairsSql.replace("%THRESH%", "0.5"),
+    RowDef("x2_dedup_ngram_jaccard", x2NgramJaccard,
+      Some(jaccardPairsSql.replace("%THRESH%", "0.5"))),
 
-    "x2b_dedup_jaccard_capped" -> jaccardPairsCappedSql
-      .replace("%THRESHPPM%", "500000")
-      .replace("%CAP%", "(SELECT 2*SUM(df)//COUNT(*) FROM df)"),
+    RowDef("x2b_dedup_jaccard_capped", x2bNgramJaccardCapped,
+      Some(jaccardPairsCappedSql
+        .replace("%THRESHPPM%", "500000")
+        .replace("%CAP%", "(SELECT 2*SUM(df)//COUNT(*) FROM df)"))),
 
     // x2c: bounded-state collection of the SAME adaptive capped set —
     // semantics identical to x2b by construction, oracle verbatim
-    "x2c_jaccard_bounded_state" -> jaccardPairsCappedSql
-      .replace("%THRESHPPM%", "500000")
-      .replace("%CAP%", "(SELECT 2*SUM(df)//COUNT(*) FROM df)"),
+    RowDef("x2c_jaccard_bounded_state", x2cJaccardBoundedState,
+      Some(jaccardPairsCappedSql
+        .replace("%THRESHPPM%", "500000")
+        .replace("%CAP%", "(SELECT 2*SUM(df)//COUNT(*) FROM df)"))),
 
     // x32: the full capped pair listing over corpus ∪ increment,
     // restricted to pairs touching the increment — increment ids are
     // the top of the id domain, so "≥1 new side" ⇔ the LARGER pair id
     // is new (idb ≥ 5·10¹², IncrementOffset). Same cap rule and ppm
     // arithmetic as x2b, stated over the union corpus.
-    "x32_incremental_neardup" -> incrementalNearDupSql,
+    RowDef("x32_incremental_neardup", x32IncrementalNearDup,
+      Some(incrementalNearDupSql)),
 
     // x33: x32 served from the posting index — identical row set by
     // construction (IncrementalIndexSpec), oracle verbatim
-    "x33_incremental_from_index" -> incrementalNearDupSql,
+    RowDef("x33_incremental_from_index", x33IncrementalFromIndex,
+      Some(incrementalNearDupSql)),
 
     // t5b: the capped candidate CTE (integer-ppm gate) feeding the
     // same exact levenshtein verify as t5
-    "t5b_edit_pairs_capped" ->
+    RowDef("t5b_edit_pairs_capped", t5bEditPairsCapped, Some(
       s"""SELECT p.ida, p.idb,
         | levenshtein(substr(da.text,1,60), substr(db.text,1,60)) AS dist
         |FROM (${jaccardPairsCappedCte
@@ -4811,22 +4820,24 @@ object ExtensionQueries {
         |JOIN documents da ON da.doc_id = p.ida
         |JOIN documents db ON db.doc_id = p.idb
         |WHERE levenshtein(substr(da.text,1,60), substr(db.text,1,60)) <= 10
-        |ORDER BY ida, idb""".stripMargin,
+        |ORDER BY ida, idb""".stripMargin)),
 
     // x27b: x27's corpus/shingle CTEs with the density-adaptive df-cap
     // (4× average df — containment needs the wider cap, see the query
     // doc) applied before pairing, mirroring
     // Dedup.coShinglePairs(DfCap.AdaptiveAvg(4))
-    "x27b_containment_capped" -> containmentCappedSql,
+    RowDef("x27b_containment_capped", x27bContainmentCapped,
+      Some(containmentCappedSql)),
 
     // x27c: bounded-state collection of the SAME adaptive capped set —
     // semantics identical to x27b by construction, oracle verbatim
-    "x27c_containment_bounded" -> containmentCappedSql,
+    RowDef("x27c_containment_bounded", x27cContainmentBoundedState,
+      Some(containmentCappedSql)),
 
     // x27: exact containment over the snippet-augmented corpus; same
     // word/shingle CTE shape as the Jaccard oracle but with corpus =
     // documents ∪ 40%-prefix snippets and a directed union of pairs
-    "x27_containment_pairs" ->
+    RowDef("x27_containment_pairs", x27ContainmentPairs, Some(
       """WITH corpus AS (
         |  SELECT doc_id, text FROM documents
         |  UNION ALL
@@ -4856,50 +4867,56 @@ object ExtensionQueries {
         |  SELECT idb, ida, c, sb.n FROM inter JOIN sizes sb ON sb.doc_id = idb)
         |SELECT id_sub, id_super, CAST(c * 1000000 // nsub AS BIGINT) AS cont_ppm
         |FROM dir WHERE c * 100 >= 90 * nsub
-        |ORDER BY id_sub, id_super""".stripMargin,
+        |ORDER BY id_sub, id_super""".stripMargin)),
 
-    "t5_edit_pairs" ->
+    RowDef("t5_edit_pairs", t5EditPairs, Some(
       s"""SELECT p.ida, p.idb,
         | levenshtein(substr(da.text,1,60), substr(db.text,1,60)) AS dist
         |FROM (${jaccardPairsCte.replace("%THRESH%", "0.3")}) p
         |JOIN documents da ON da.doc_id = p.ida
         |JOIN documents db ON db.doc_id = p.idb
         |WHERE levenshtein(substr(da.text,1,60), substr(db.text,1,60)) <= 10
-        |ORDER BY ida, idb""".stripMargin,
+        |ORDER BY ida, idb""".stripMargin)),
 
-    "x3_dedup_minhash_lsh" -> jaccardPairsSql.replace("%THRESH%", "0.8"),
+    RowDef("x3_dedup_minhash_lsh", x3MinhashLsh,
+      Some(jaccardPairsSql.replace("%THRESH%", "0.8"))),
 
     // x35: the exact union pair listing restricted to ≥1-new (the
     // increment tops the id domain, so the new-side test is on idb) —
     // same recall adjudication as x3's exact oracle. Shared verbatim
     // by x35b (served from the memoized signature/set artifact).
-    "x35b_lsh_from_artifact" -> incrementalLshSql,
-    "x35_incremental_lsh" -> incrementalLshSql,
+    RowDef("x35b_lsh_from_artifact", x35bLshFromArtifact,
+      Some(incrementalLshSql)),
+    RowDef("x35_incremental_lsh", x35IncrementalLsh, Some(incrementalLshSql)),
 
     // x37: x27b's directed containment under the 4× adaptive cap,
     // stated over x32's union corpus and restricted to pairs touching
     // the increment (the undirected pair's larger id is the new side).
     // Shared verbatim by x37b (served from the posting index).
-    "x37b_containment_from_index" -> incrementalContainmentSql,
-    "x37_incremental_containment" -> incrementalContainmentSql,
+    RowDef("x37b_containment_from_index", x37bContainmentFromIndex,
+      Some(incrementalContainmentSql)),
+    RowDef("x37_incremental_containment", x37IncrementalContainment,
+      Some(incrementalContainmentSql)),
 
     // x38: incremental fuzzy dedup — t5b's candidate gate restated
     // over the x32 union corpus restricted to ≥1-new, exact
     // levenshtein verify on 60-char prefixes
-    "x38_incremental_fuzzy" -> incrementalFuzzySql,
+    RowDef("x38_incremental_fuzzy", x38IncrementalFuzzy,
+      Some(incrementalFuzzySql)),
 
     // x39: the folded cluster map vs a from-scratch union recompute
-    "x39_incremental_clusters" -> incrementalClustersSql,
+    RowDef("x39_incremental_clusters", x39IncrementalClusters,
+      Some(incrementalClustersSql)),
 
     // x40: two curation days, day 2 against the folded artifacts
-    "x40_serve_fold_serve" -> serveFoldServeSql,
+    RowDef("x40_serve_fold_serve", x40ServeFoldServe, Some(serveFoldServeSql)),
 
     // x41/x42: the same two-day fold proof on the LSH band/set and
     // embedding-bucket artifacts (the two families x40 left uncovered)
-    "x41_lsh_fold_serve" -> lshFoldServeSql,
-    "x42_emb_fold_serve" -> embFoldServeSql,
+    RowDef("x41_lsh_fold_serve", x41LshFoldServe, Some(lshFoldServeSql)),
+    RowDef("x42_emb_fold_serve", x42EmbFoldServe, Some(embFoldServeSql)),
 
-    "x4b_simhash_portable" -> {
+    RowDef("x4b_simhash_portable", x4bSimhashPortable, Some {
       val bitSums = (0 until 60)
         .map(j => s"SUM(CASE WHEN (h >> $j) & 1 = 1 THEN 1 ELSE -1 END) AS b$j")
         .mkString(",\n   ")
@@ -4925,9 +4942,9 @@ object ExtensionQueries {
         |SELECT ida, idb, CAST(bit_count(xor(sa, sb)) AS INTEGER) AS hamming
         |FROM cand WHERE bit_count(xor(sa, sb)) <= 3
         |ORDER BY ida, idb""".stripMargin
-    },
+    }),
 
-    "x11_dup_clusters" ->
+    RowDef("x11_dup_clusters", x11DupClusters, Some(
       s"""WITH RECURSIVE pairs AS (
         |  SELECT * FROM (${jaccardPairsCte.replace("%THRESH%", "0.8")}) t),
         |edges AS (SELECT ida AS src, idb AS dst FROM pairs
@@ -4937,12 +4954,12 @@ object ExtensionQueries {
         |  UNION
         |  SELECT e.src, r.label FROM edges e JOIN reach r ON r.node = e.dst)
         |SELECT node AS doc_id, MIN(label) AS cluster_id
-        |FROM reach GROUP BY node ORDER BY doc_id""".stripMargin,
+        |FROM reach GROUP BY node ORDER BY doc_id""".stripMargin)),
 
     // x29: same recursive-CTE component restatement as x11, singleton
     // fill via LEFT JOIN, split = minstd(cluster_id) % 10 (80/10/10);
     // max_cluster_span pinned at 1 IS the no-leakage proof
-    "x29_leakage_split" ->
+    RowDef("x29_leakage_split", x29LeakageSplit, Some(
       s"""WITH RECURSIVE pairs AS (
         |  SELECT * FROM (${jaccardPairsCte.replace("%THRESH%", "0.8")}) t),
         |edges AS (SELECT ida AS src, idb AS dst FROM pairs
@@ -4973,9 +4990,9 @@ object ExtensionQueries {
         |    AS n_dup_clusters,
         |  CAST(MAX(n_splits) AS BIGINT) AS max_cluster_span
         |FROM tagged t JOIN spans s USING (cluster_id)
-        |GROUP BY split ORDER BY split""".stripMargin,
+        |GROUP BY split ORDER BY split""".stripMargin)),
 
-    "x18_incremental_upsert" ->
+    RowDef("x18_incremental_upsert", x18IncrementalUpsert, Some(
       """WITH base AS (
         |  SELECT doc_id, 1 AS rev, text, FALSE AS deleted, 0 AS src
         |  FROM documents),
@@ -4992,18 +5009,18 @@ object ExtensionQueries {
         |  FROM (SELECT * FROM base UNION ALL SELECT * FROM changes))
         |SELECT doc_id, rev, md5(text) AS fp FROM merged
         |WHERE rn = 1 AND NOT deleted
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin)),
 
-    "x7_incremental_dedup" ->
+    RowDef("x7_incremental_dedup", x7IncrementalDedup, Some(
       """WITH inc AS (
         |  SELECT doc_id, md5(text) AS fp FROM documents WHERE doc_id % 2 = 1
         |  UNION ALL
         |  SELECT doc_id + 1000000, md5(text) FROM documents WHERE doc_id % 2 = 0)
         |SELECT doc_id, fp FROM inc
         |WHERE fp NOT IN (SELECT md5(text) FROM documents WHERE doc_id % 2 = 0)
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin)),
 
-    "x10_corpus_pipeline" ->
+    RowDef("x10_corpus_pipeline", x10CorpusPipeline, Some(
       s"""WITH s AS ($langScoreSql),
         |scored AS (
         |  SELECT doc_id, text,
@@ -5030,7 +5047,7 @@ object ExtensionQueries {
         |       THEN 'train' ELSE 'eval' END AS split
         |FROM f2 LEFT JOIN drop2 ON f2.doc_id = drop2.doc_id
         |WHERE drop2.doc_id IS NULL
-        |ORDER BY f2.doc_id""".stripMargin,
+        |ORDER BY f2.doc_id""".stripMargin)),
 
     // x34: the incremental curation pipeline restated end-to-end —
     // x32's batch construction, x10's scoring/filter/fingerprint
@@ -5041,11 +5058,13 @@ object ExtensionQueries {
     // +5·10¹² batch ids). Shared verbatim by x34b (served from the
     // posting index) — identical verdicts by construction, pinned by
     // IncrementalCurationSpec.
-    "x34_incremental_curation" -> incrementalCurationSql,
-    "x34b_curation_from_index" -> incrementalCurationSql,
+    RowDef("x34_incremental_curation", x34IncrementalCuration,
+      Some(incrementalCurationSql)),
+    RowDef("x34b_curation_from_index", x34bCurationFromIndex,
+      Some(incrementalCurationSql)),
     // x24: four unrolled power iterations with the same integer
     // arithmetic; `//` == DIV on positives, so ranks are bit-identical
-    "x24_pagerank" -> {
+    RowDef("x24_pagerank", x24Pagerank, Some {
       val iters = (1 to 4).map { k =>
         s"""|r$k AS (
             |  SELECT n.doc_id,
@@ -5073,7 +5092,7 @@ object ExtensionQueries {
          |       CAST(COALESCE(i.in_deg, 0) AS BIGINT) AS in_deg
          |FROM r4 r LEFT JOIN indeg i ON i.dst = r.doc_id
          |ORDER BY rank_scaled DESC, doc_id LIMIT 20""".stripMargin
-    },
+    }),
 
     // x31: each round restated independently — pair counts via zipped
     // adjacent list slices, the argmax with the same (count DESC, pair
@@ -5082,7 +5101,7 @@ object ExtensionQueries {
     // the left symbol" rule is exactly BpeMerge's left-to-right
     // non-overlapping semantics (incl. left==right runs:
     // a a a a a -> aa aa a). Backreference is \1 in DuckDB's RE2.
-    "x31_bpe_merges" -> {
+    RowDef("x31_bpe_merges", x31BpeMerges, Some {
       val rounds = (1 to 8).map { k =>
         s"""|p$k AS (
             |  SELECT a || ' ' || b AS pair, SUM(cnt) AS pc FROM (
@@ -5115,12 +5134,12 @@ object ExtensionQueries {
          |$rounds
          |SELECT * FROM ($out)
          |ORDER BY round""".stripMargin
-    },
+    }),
 
     // x31b: the same 8 learned rounds (w carried through), then the
     // final per-word token count joins the corpus's exploded words —
     // all-integer accounting, one `//` for the ppm
-    "x31b_bpe_encode" -> {
+    RowDef("x31b_bpe_encode", x31bBpeEncode, Some {
       val rounds = (1 to 8).map { k =>
         s"""|p$k AS (
             |  SELECT a || ' ' || b AS pair, SUM(cnt) AS pc FROM (
@@ -5158,11 +5177,11 @@ object ExtensionQueries {
          |FROM docwords d JOIN vocab v USING (w)
          |GROUP BY d.doc_id
          |ORDER BY d.doc_id""".stripMargin
-    },
+    }),
 
     // x23: same minstd form as x9; all-integer weights, `//` == DIV on
     // positives, so the kept set and HT weights are bit-identical
-    "x23_weighted_sample" ->
+    RowDef("x23_weighted_sample", x23WeightedSample, Some(
       """WITH w AS (
         |  SELECT doc_id, lang,
         |    CAST(LEAST(999, GREATEST(1, n_chars // 3)) AS BIGINT) AS w_milli
@@ -5171,9 +5190,9 @@ object ExtensionQueries {
         |       CAST(1000000000 // w_milli AS BIGINT) AS inv_w_micro
         |FROM w
         |WHERE (doc_id * 48271) % 2147483647 % 1000 < w_milli
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin)),
 
-    "x9_hash_sample" ->
+    RowDef("x9_hash_sample", x9HashSample, Some(
       """WITH cut AS (
         |  SELECT doc_id, lang, (doc_id * 48271) % 2147483647 AS h
         |  FROM documents
@@ -5183,20 +5202,20 @@ object ExtensionQueries {
         |    ROW_NUMBER() OVER (PARTITION BY lang ORDER BY h, doc_id)
         |      AS strat_rank
         |  FROM cut) t
-        |WHERE strat_rank <= 20 ORDER BY doc_id""".stripMargin,
+        |WHERE strat_rank <= 20 ORDER BY doc_id""".stripMargin)),
 
-    "x8_crossbatch_overlap" ->
+    RowDef("x8_crossbatch_overlap", x8CrossBatchOverlap, Some(
       """WITH inc AS (
         |  SELECT doc_id, md5(text) AS fp FROM documents WHERE doc_id % 2 = 1
         |  UNION ALL
         |  SELECT doc_id + 1000000, md5(text) FROM documents WHERE doc_id % 2 = 0)
         |SELECT doc_id, fp FROM inc
         |WHERE fp IN (SELECT md5(text) FROM documents WHERE doc_id % 2 = 0)
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin)),
 
     // x5b reruns x5's exact contract through the LSH candidate path:
     // identical oracle, identical output — the match IS the recall proof
-    "x5b_ann_lsh_topk" ->
+    RowDef("x5b_ann_lsh_topk", x5bAnnLshTopK, Some(
       """WITH e AS (SELECT vec_id, i, CAST(CAST(x AS DOUBLE) AS DECIMAL(9,6)) v FROM
         |  (SELECT vec_id, unnest(embedding) x, generate_subscripts(embedding,1) i
         |   FROM embeddings)),
@@ -5210,12 +5229,12 @@ object ExtensionQueries {
         |SELECT query_id, neighbor_id, cos FROM (
         |  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
         |    ORDER BY cos DESC, neighbor_id ASC) rn FROM scored) t
-        |WHERE rn <= 10 ORDER BY query_id, neighbor_id""".stripMargin,
+        |WHERE rn <= 10 ORDER BY query_id, neighbor_id""".stripMargin)),
 
     // x5c: k-means cells are data-adaptive (not SQL-reproducible), so
     // the contract is the truth size per query + the recall >= 0.7
     // floor the Spark side computes against its own brute-force set
-    "x5c_ann_ivf_recall" ->
+    RowDef("x5c_ann_ivf_recall", x5cAnnIvfRecall, Some(
       """WITH e AS (SELECT vec_id, i, CAST(CAST(x AS DOUBLE) AS DECIMAL(9,6)) v FROM
         |  (SELECT vec_id, unnest(embedding) x, generate_subscripts(embedding,1) i
         |   FROM embeddings)),
@@ -5231,9 +5250,9 @@ object ExtensionQueries {
         |    ORDER BY cos DESC, neighbor_id ASC) rn FROM scored) t
         |  WHERE rn <= 10)
         |SELECT query_id, COUNT(*) AS n_true, true AS recall_ok
-        |FROM topk GROUP BY query_id ORDER BY query_id""".stripMargin,
+        |FROM topk GROUP BY query_id ORDER BY query_id""".stripMargin)),
 
-    "x5_ann_cosine_topk" ->
+    RowDef("x5_ann_cosine_topk", x5AnnCosineTopK, Some(
       """WITH e AS (SELECT vec_id, i, CAST(CAST(x AS DOUBLE) AS DECIMAL(9,6)) v FROM
         |  (SELECT vec_id, unnest(embedding) x, generate_subscripts(embedding,1) i
         |   FROM embeddings)),
@@ -5247,11 +5266,11 @@ object ExtensionQueries {
         |SELECT query_id, neighbor_id, cos FROM (
         |  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
         |    ORDER BY cos DESC, neighbor_id ASC) rn FROM scored) t
-        |WHERE rn <= 10 ORDER BY query_id, neighbor_id""".stripMargin,
+        |WHERE rn <= 10 ORDER BY query_id, neighbor_id""".stripMargin)),
 
     // x6b shares x6's oracle verbatim: the bucketed path must find the
     // identical pair set the exact cartesian finds
-    "x6b_neardup_lsh" ->
+    RowDef("x6b_neardup_lsh", x6bNearDupLsh, Some(
       """WITH base AS (
         |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
         |  FROM embeddings WHERE vec_id < 200
@@ -5267,19 +5286,20 @@ object ExtensionQueries {
         |  SELECT ida, idb,
         |    ROUND(CAST(dot AS DOUBLE)/(SQRT(CAST(na.n2 AS DOUBLE))*SQRT(CAST(nb.n2 AS DOUBLE))),6) AS cos
         |  FROM dots JOIN norms na ON na.vec_id=ida JOIN norms nb ON nb.vec_id=idb) t
-        |WHERE cos >= 0.99 ORDER BY ida, idb""".stripMargin,
+        |WHERE cos >= 0.99 ORDER BY ida, idb""".stripMargin)),
 
     // x36: the exact decimal pair listing over corpus ∪ re-embed
     // batch, restricted to ≥1-new (batch ids top the domain)
-    "x36_incremental_embed_neardup" -> embedIncrementOracle,
+    RowDef("x36_incremental_embed_neardup", x36IncrementalEmbedNearDup,
+      Some(embedIncrementOracle)),
 
     // st12: the STREAMED form of the same recurrence — trigger 1's
     // emitted pairs are exactly x36's restricted listing (the corpus
     // streamed as trigger 0; candidates from the accumulated bucket
     // deltas; identical quantized-decimal rerank) — oracle shared
-    "st12_stream_embed" -> embedIncrementOracle,
+    RowDef("st12_stream_embed", st12StreamEmbed, Some(embedIncrementOracle)),
 
-    "x6_embedding_neardup" ->
+    RowDef("x6_embedding_neardup", x6EmbeddingNearDup, Some(
       """WITH base AS (
         |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
         |  FROM embeddings WHERE vec_id < 200
@@ -5295,9 +5315,9 @@ object ExtensionQueries {
         |  SELECT ida, idb,
         |    ROUND(CAST(dot AS DOUBLE)/(SQRT(CAST(na.n2 AS DOUBLE))*SQRT(CAST(nb.n2 AS DOUBLE))),6) AS cos
         |  FROM dots JOIN norms na ON na.vec_id=ida JOIN norms nb ON nb.vec_id=idb) t
-        |WHERE cos >= 0.99 ORDER BY ida, idb""".stripMargin,
+        |WHERE cos >= 0.99 ORDER BY ida, idb""".stripMargin)),
 
-    "t6_pii_scrub" ->
+    RowDef("t6_pii_scrub", t6PiiScrub, Some(
       """WITH withpii AS (
         |  SELECT doc_id,
         |    CASE WHEN doc_id % 3 = 0 THEN
@@ -5312,9 +5332,9 @@ object ExtensionQueries {
         | md5(regexp_replace(
         |   regexp_replace(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '[EMAIL]', 'g'),
         |   '[0-9]{3}-[0-9]{3}-[0-9]{4}', '[PHONE]', 'g')) AS scrubbed_md5
-        |FROM withpii ORDER BY doc_id""".stripMargin,
+        |FROM withpii ORDER BY doc_id""".stripMargin)),
 
-    "t7_chunking" ->
+    RowDef("t7_chunking", t7Chunking, Some(
       """WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
         |c AS (SELECT doc_id, CAST(k AS INT) AS chunk_id,
         |        ws[CAST(k*24+1 AS BIGINT) : CAST(k*24+32 AS BIGINT)] AS ch
@@ -5322,9 +5342,9 @@ object ExtensionQueries {
         |SELECT doc_id, chunk_id,
         | CAST(len(ch) AS BIGINT) AS n_words,
         | md5(array_to_string(ch, ' ')) AS chunk_md5
-        |FROM c ORDER BY doc_id, chunk_id""".stripMargin,
+        |FROM c ORDER BY doc_id, chunk_id""".stripMargin)),
 
-    "x12_boilerplate_ngrams" ->
+    RowDef("x12_boilerplate_ngrams", x12BoilerplateNgrams, Some(
       """WITH words AS (
         |  SELECT doc_id, w, i FROM (
         |    SELECT doc_id, unnest(string_split(text,' ')) AS w,
@@ -5335,14 +5355,15 @@ object ExtensionQueries {
         |  FROM words a JOIN words b ON b.doc_id=a.doc_id AND b.i=a.i+1
         |               JOIN words c ON c.doc_id=a.doc_id AND c.i=a.i+2)
         |SELECT gram, COUNT(*) AS doc_freq FROM sh
-        |GROUP BY gram HAVING COUNT(*) >= 5 ORDER BY gram""".stripMargin,
+        |GROUP BY gram HAVING COUNT(*) >= 5 ORDER BY gram""".stripMargin)),
 
-    "x13_decontaminate" -> x13OracleSql,
+    RowDef("x13_decontaminate", x13Decontaminate, Some(x13OracleSql)),
 
     // identical contract: the Bloom prefilter is result-invisible
-    "x13b_decontaminate_bloom" -> x13OracleSql,
+    RowDef("x13b_decontaminate_bloom", x13bDecontaminateBloom,
+      Some(x13OracleSql)),
 
-    "t8_quality_signals" ->
+    RowDef("t8_quality_signals", t8QualitySignals, Some(
       """WITH words AS (
         |  SELECT doc_id, w, i FROM (
         |    SELECT doc_id, unnest(string_split(text,' ')) AS w,
@@ -5373,9 +5394,9 @@ object ExtensionQueries {
         |JOIN wstats w ON w.doc_id = d.doc_id
         |LEFT JOIN p2 ON p2.doc_id = d.doc_id
         |LEFT JOIN p3 ON p3.doc_id = d.doc_id
-        |ORDER BY d.doc_id""".stripMargin,
+        |ORDER BY d.doc_id""".stripMargin)),
 
-    "x14_vocab_encode" ->
+    RowDef("x14_vocab_encode", x14VocabEncode, Some(
       """WITH words AS (
         |  SELECT doc_id, i, w FROM (
         |    SELECT doc_id, unnest(string_split(text,' ')) AS w,
@@ -5390,9 +5411,9 @@ object ExtensionQueries {
         |SELECT doc_id, COUNT(*) AS n_tokens,
         | CAST(SUM(CASE WHEN id = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_unk,
         | md5(string_agg(CAST(id AS VARCHAR), ',' ORDER BY i)) AS ids_md5
-        |FROM enc GROUP BY doc_id ORDER BY doc_id""".stripMargin,
+        |FROM enc GROUP BY doc_id ORDER BY doc_id""".stripMargin)),
 
-    "x17_cluster_canonical" ->
+    RowDef("x17_cluster_canonical", x17ClusterCanonical, Some(
       s"""WITH RECURSIVE pairs AS (
         |  SELECT * FROM (${jaccardPairsCte.replace("%THRESH%", "0.8")}) t),
         |edges AS (SELECT ida AS src, idb AS dst FROM pairs
@@ -5423,17 +5444,17 @@ object ExtensionQueries {
         |SELECT cluster_id, doc_id AS kept_doc_id,
         |       sum_milli AS kept_quality_milli,
         |       CAST(n_members AS BIGINT) AS n_members
-        |FROM ranked WHERE rn = 1 ORDER BY cluster_id""".stripMargin,
+        |FROM ranked WHERE rn = 1 ORDER BY cluster_id""".stripMargin)),
 
-    "st5_stream_enrich" ->
+    RowDef("st5_stream_enrich", st5StreamEnrich, Some(
       """SELECT CAST(COALESCE(c.c_nationkey, -1) AS BIGINT) AS nation,
         | COUNT(*) AS n_events,
         | CAST(ROUND(SUM(CAST(e.value AS DECIMAL(18,2))), 2) AS DOUBLE)
         |   AS sum_value
         |FROM events e LEFT JOIN customer c ON e.user_id = c.c_custkey
-        |GROUP BY 1 ORDER BY nation""".stripMargin,
+        |GROUP BY 1 ORDER BY nation""".stripMargin)),
 
-    "st4_stream_curate" ->
+    RowDef("st4_stream_curate", st4StreamCurate, Some(
       s"""WITH s AS ($langScoreSql),
         |scored AS (
         |  SELECT doc_id,
@@ -5444,9 +5465,9 @@ object ExtensionQueries {
         |  FROM s),
         |filt AS (SELECT * FROM scored WHERE q >= 0.3)
         |SELECT MIN(doc_id) AS doc_id, fp, COUNT(*) AS n_dups
-        |FROM filt GROUP BY fp ORDER BY doc_id""".stripMargin,
+        |FROM filt GROUP BY fp ORDER BY doc_id""".stripMargin)),
 
-    "t9_quality_classifier" ->
+    RowDef("t9_quality_classifier", t9QualityClassifier, Some(
       """WITH toks AS (
         |  SELECT doc_id,
         |         CAST(('0x' || substr(md5(w), 1, 15)) AS BIGINT) % 4096 AS feat
@@ -5464,11 +5485,11 @@ object ExtensionQueries {
         |       (sum_milli * 1000 + n_tok * 10000000) // n_tok - 10000000
         |         AS score_micro,
         |       CAST(CASE WHEN sum_milli > 0 THEN 1 ELSE 0 END AS INT) AS label
-        |FROM agg ORDER BY doc_id""".stripMargin,
+        |FROM agg ORDER BY doc_id""".stripMargin)),
 
     // t11: all-integer BM25 — HUGEINT products stay exact (≤ ~1e21),
     // `//` on positives == Spark's DIV on DECIMAL(38,0)
-    "t11_bm25_topk" ->
+    RowDef("t11_bm25_topk", t11Bm25TopK, Some(
       """WITH tok AS (
         |  SELECT doc_id, unnest(string_split_regex(lower(text), '[^a-z]+'))
         |    AS term FROM documents),
@@ -5495,11 +5516,11 @@ object ExtensionQueries {
         |SELECT doc_id, COUNT(*) AS terms_hit,
         |       CAST(SUM(score_micro) AS BIGINT) AS bm25_micro
         |FROM scored GROUP BY doc_id
-        |ORDER BY bm25_micro DESC, doc_id LIMIT 20""".stripMargin,
+        |ORDER BY bm25_micro DESC, doc_id LIMIT 20""".stripMargin)),
 
     // x25: the oracle is the plain exact computation — the Spark side
     // must reproduce it through the sketch-then-verify two-pass plan
-    "x25_heavy_hitters" ->
+    RowDef("x25_heavy_hitters", x25HeavyHitters, Some(
       """WITH tok AS (
         |  SELECT unnest(string_split_regex(lower(text), '[^a-z]+')) AS term
         |  FROM documents),
@@ -5509,13 +5530,13 @@ object ExtensionQueries {
         |SELECT c.term, c.cnt,
         |       CAST(c.cnt * 1000000 // n.total AS BIGINT) AS share_ppm
         |FROM c, n WHERE c.cnt * 50 >= n.total
-        |ORDER BY c.cnt DESC, c.term""".stripMargin,
+        |ORDER BY c.cnt DESC, c.term""".stripMargin)),
 
     // st6 shares x25's oracle verbatim: the union of per-shard MG(64)
     // candidate sets (the streaming state layout) must admit exactly
     // the single-sketch batch answer after the exact recount —
     // undercount ≤ total/65 < threshold total/50 guarantees recall.
-    "st6_heavy_hitters" ->
+    RowDef("st6_heavy_hitters", st6HeavyHittersBatch, Some(
       """WITH tok AS (
         |  SELECT unnest(string_split_regex(lower(text), '[^a-z]+')) AS term
         |  FROM documents),
@@ -5525,9 +5546,9 @@ object ExtensionQueries {
         |SELECT c.term, c.cnt,
         |       CAST(c.cnt * 1000000 // n.total AS BIGINT) AS share_ppm
         |FROM c, n WHERE c.cnt * 50 >= n.total
-        |ORDER BY c.cnt DESC, c.term""".stripMargin,
+        |ORDER BY c.cnt DESC, c.term""".stripMargin)),
 
-    "t12_tfidf_keywords" ->
+    RowDef("t12_tfidf_keywords", t12TfidfKeywords, Some(
       """WITH tok AS (
         |  SELECT doc_id, unnest(string_split_regex(lower(text), '[^a-z]+'))
         |    AS term FROM documents),
@@ -5548,11 +5569,11 @@ object ExtensionQueries {
         |      ORDER BY score_micro DESC, term ASC) AS rank
         |  FROM scored)
         |SELECT doc_id, rank, term, tf, score_micro FROM ranked
-        |WHERE rank <= 3 ORDER BY doc_id, rank""".stripMargin,
+        |WHERE rank <= 3 ORDER BY doc_id, rank""".stripMargin)),
 
     // x28: clean-room canonical construction (as x26) → per-domain
     // minstd-ordered rank → 50-URL cap
-    "x28_domain_budget" ->
+    RowDef("x28_domain_budget", x28DomainBudget, Some(
       """WITH c AS (
         |  SELECT o_orderkey AS k,
         |    (CASE WHEN o_orderkey % 4 >= 2 THEN 'https' ELSE 'http' END)
@@ -5574,9 +5595,9 @@ object ExtensionQueries {
         | CAST(SUM(CASE WHEN rn <= 50 THEN 1 ELSE 0 END) AS BIGINT) AS n_admitted,
         | CAST(SUM(CASE WHEN rn <= 50 THEN n_raw ELSE 0 END) AS BIGINT) AS admitted_raw,
         | CAST(SUM(n_raw) AS BIGINT) AS total_raw
-        |FROM r GROUP BY reg_domain ORDER BY reg_domain""".stripMargin,
+        |FROM r GROUP BY reg_domain ORDER BY reg_domain""".stripMargin)),
 
-    "t13_token_rarity" ->
+    RowDef("t13_token_rarity", t13TokenRarity, Some(
       """WITH tok AS (
         |  SELECT doc_id, unnest(string_split_regex(lower(text), '[^a-z]+'))
         |    AS term FROM documents),
@@ -5592,9 +5613,9 @@ object ExtensionQueries {
         |SELECT doc_id, COUNT(*) AS n_tok,
         | CAST(SUM(share_ppm) // COUNT(*) AS BIGINT) AS mean_share_ppm,
         | CAST(SUM(is_rare) AS BIGINT) AS n_rare
-        |FROM scored GROUP BY doc_id ORDER BY doc_id""".stripMargin,
+        |FROM scored GROUP BY doc_id ORDER BY doc_id""".stripMargin)),
 
-    "t14_bigram_lm" ->
+    RowDef("t14_bigram_lm", t14BigramLm, Some(
       """WITH tok0 AS (
         |  SELECT doc_id,
         |    unnest(string_split_regex(lower(text), '[^a-z]+')) AS term,
@@ -5618,12 +5639,12 @@ object ExtensionQueries {
         |SELECT doc_id, COUNT(*) AS n_bigrams,
         | CAST(SUM(cond_ppm) // COUNT(*) AS BIGINT) AS mean_cond_ppm,
         | CAST(SUM(is_novel) AS BIGINT) AS n_novel
-        |FROM scored GROUP BY doc_id ORDER BY doc_id""".stripMargin,
+        |FROM scored GROUP BY doc_id ORDER BY doc_id""".stripMargin)),
 
     // x26: the oracle never parses anything — it states the canonical
     // URL straight from the key arithmetic; Spark must recover the
     // identical string from the messy variant
-    "x26_url_canonical" ->
+    RowDef("x26_url_canonical", x26UrlCanonical, Some(
       """WITH c AS (
         |  SELECT o_orderkey AS k,
         |    (CASE WHEN o_orderkey % 4 >= 2 THEN 'https' ELSE 'http' END)
@@ -5637,12 +5658,12 @@ object ExtensionQueries {
         |SELECT canonical_url, reg_domain, COUNT(*) AS n_raw,
         |       MIN(k) AS min_key
         |FROM c GROUP BY canonical_url, reg_domain
-        |ORDER BY canonical_url""".stripMargin,
+        |ORDER BY canonical_url""".stripMargin)),
 
     // x15's oracle states the packing offsets as the naive global
     // window; the Spark side must reproduce them from the distributed
     // two-pass prefix scan — same numbers, cluster-safe plan.
-    "x15_sequence_pack" ->
+    RowDef("x15_sequence_pack", x15SequencePack, Some(
       """WITH t AS (
         |  SELECT doc_id,
         |         CAST(length(string_split(text, ' ')) AS BIGINT) AS n_tok
@@ -5658,9 +5679,9 @@ object ExtensionQueries {
         |       CAST((start_off + n_tok - 1) // 256 AS BIGINT) AS last_seq,
         |       CAST((start_off + n_tok - 1) // 256 - start_off // 256 + 1
         |            AS BIGINT) AS n_seqs
-        |FROM o ORDER BY doc_id""".stripMargin,
+        |FROM o ORDER BY doc_id""".stripMargin)),
 
-    "x16_mixture_upsample" ->
+    RowDef("x16_mixture_upsample", x16MixtureUpsample, Some(
       """WITH r AS (
         |  SELECT doc_id, lang,
         |    CAST(CASE lang WHEN 'en' THEN 0 WHEN 'de' THEN 1
@@ -5674,9 +5695,9 @@ object ExtensionQueries {
         |SELECT doc_id, lang, repeats,
         |       unnest(generate_series(1, repeats)) AS copy_idx
         |FROM r WHERE repeats > 0
-        |ORDER BY doc_id, copy_idx""".stripMargin,
+        |ORDER BY doc_id, copy_idx""".stripMargin)),
 
-    "t1_text_stats" ->
+    RowDef("t1_text_stats", t1TextStats, Some(
       s"""SELECT doc_id,
         | CAST(length(text) AS BIGINT) AS n_chars_measured,
         | CAST(len(string_split(text,' ')) AS BIGINT) AS n_words,
@@ -5687,9 +5708,9 @@ object ExtensionQueries {
         |        + (length(' '||text||' ')-length(replace(' '||text||' ',' of ','')))/4
         |        + (length(' '||text||' ')-length(replace(' '||text||' ',' and ','')))/5)
         |      / (len(string_split(text,' ')) + 1.0), 1.0) * 0.4, 6) AS quality
-        |FROM documents ORDER BY doc_id""".stripMargin,
+        |FROM documents ORDER BY doc_id""".stripMargin)),
 
-    "t2_langid" ->
+    RowDef("t2_langid", t2LangId, Some(
       s"""WITH s AS ($langScoreSql)
         |SELECT doc_id,
         | CASE WHEN s_en > 0 AND s_en = GREATEST(s_en,s_fr,s_de,s_es) THEN 'en'
@@ -5703,16 +5724,16 @@ object ExtensionQueries {
         |      WHEN g_es > 0 AND g_es = GREATEST(g_en,g_fr,g_de,g_es) THEN 'es'
         |      ELSE 'und' END AS lang_detected_ngram,
         | s_en AS en_score, lang AS lang_declared
-        |FROM s ORDER BY doc_id""".stripMargin,
+        |FROM s ORDER BY doc_id""".stripMargin)),
 
-    "t3_fingerprint" ->
+    RowDef("t3_fingerprint", t3Fingerprint, Some(
       """SELECT doc_id,
         | md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS fp_md5
-        |FROM documents ORDER BY doc_id""".stripMargin,
+        |FROM documents ORDER BY doc_id""".stripMargin)),
 
     // m1b: decoded width/height/pixel-sum restated in closed form from
     // doc_id (syntheticPng's pixel formula) — pure arithmetic, no codec
-    "m1b_image_decode" ->
+    RowDef("m1b_image_decode", m1bImageDecode, Some(
       """WITH wx AS (
         |  SELECT doc_id,
         |    unnest(generate_series(0, CAST(doc_id % 8 AS BIGINT))) AS x
@@ -5725,14 +5746,14 @@ object ExtensionQueries {
         | CAST(1 + doc_id % 8 AS INT) AS width,
         | CAST(1 + doc_id % 6 AS INT) AS height,
         | CAST(SUM((doc_id*31 + x*7 + y*13) % 256) AS BIGINT) AS pix_sum
-        |FROM wxy GROUP BY doc_id ORDER BY doc_id""".stripMargin,
+        |FROM wxy GROUP BY doc_id ORDER BY doc_id""".stripMargin)),
 
     // m3b: the decoded frame set restated in closed form from
     // (doc_id, frame_idx): frames 0..doc_id%3, stride 2 keeps the even
     // ones, frame f's pixels follow syntheticPng(doc_id*16+f)'s formula
     // (scalar unnest(generate_series) — DuckDB's table-function form
     // can't take lateral parameters, see CLAUDE.md)
-    "m3b_video_decode" ->
+    RowDef("m3b_video_decode", m3bVideoDecode, Some(
       """WITH f AS (
         |  SELECT doc_id,
         |    unnest(generate_series(0, CAST(doc_id % 3 AS BIGINT))) AS fi
@@ -5753,13 +5774,13 @@ object ExtensionQueries {
         | CAST(1 + fid % 6 AS INT) AS height,
         | CAST(SUM((fid*31 + x*7 + y*13) % 256) AS BIGINT) AS pix_sum
         |FROM wxy GROUP BY doc_id, fi, fid
-        |ORDER BY doc_id, frame_idx""".stripMargin,
+        |ORDER BY doc_id, frame_idx""".stripMargin)),
 
     // m4: decoded sample count/sum/rate restated in closed form from
     // doc_id (syntheticWav's PCM formula) — pure arithmetic, no codec
     // (scalar unnest(generate_series): the table-function form can't
     // take lateral parameters, see CLAUDE.md)
-    "m4_audio_decode" ->
+    RowDef("m4_audio_decode", m4AudioDecode, Some(
       """WITH sm AS (
         |  SELECT doc_id,
         |    unnest(generate_series(0, CAST(39 + doc_id % 23 AS BIGINT))) AS i
@@ -5768,20 +5789,20 @@ object ExtensionQueries {
         | CAST(40 + doc_id % 23 AS BIGINT) AS n_samples,
         | CAST(SUM((doc_id*31 + i*7) % 2001 - 1000) AS BIGINT) AS sample_sum,
         | CAST(8000 AS INT) AS sample_rate
-        |FROM sm GROUP BY doc_id ORDER BY doc_id""".stripMargin,
+        |FROM sm GROUP BY doc_id ORDER BY doc_id""".stripMargin)),
 
-    "m1_multimodal_stub" ->
+    RowDef("m1_multimodal_stub", m1MultimodalStub, Some(
       """SELECT doc_id,
         | CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
         | sha256(text) AS sha256_hex,
         | CAST(GREATEST(CAST(FLOOR((octet_length(encode(text))-16)/64.0) AS BIGINT), 0) + 1 AS BIGINT) AS n_frames,
         | CAST(LEAST(octet_length(encode(text)), 256) AS BIGINT) AS n_resized_bytes
-        |FROM documents ORDER BY doc_id""".stripMargin,
+        |FROM documents ORDER BY doc_id""".stripMargin)),
 
     // m3: every frame's byte range + slice hash restated from the text
     // column (ASCII fixture ⇒ char offsets == byte offsets, the same
     // equivalence m1's sha256 oracle already relies on)
-    "m3_frame_manifest" ->
+    RowDef("m3_frame_manifest", m3FrameManifest, Some(
       """WITH f AS (
         |  SELECT doc_id, text,
         |    unnest(generate_series(0,
@@ -5793,21 +5814,21 @@ object ExtensionQueries {
         |  CAST(16 AS BIGINT) AS frame_len,
         |  CAST(i*2560 AS BIGINT) AS pts_ms,
         |  md5(substr(text, CAST(i*64+1 AS INT), 16)) AS frame_md5
-        |FROM f ORDER BY doc_id, frame_idx""".stripMargin,
+        |FROM f ORDER BY doc_id, frame_idx""".stripMargin)),
 
     // m2b shares m2's integrity oracle: batching payloads into few
     // parquet files must lose nothing vs one file per row
-    "m2b_batched_ingest" ->
+    RowDef("m2b_batched_ingest", m2bBatchedIngest, Some(
       """SELECT doc_id,
         | CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
         | sha256(text) AS sha256_hex
-        |FROM documents ORDER BY doc_id""".stripMargin,
+        |FROM documents ORDER BY doc_id""".stripMargin)),
 
     // per-copy key domain (id // 1e8 picks the MakeScale copy): at the
     // base corpus this is exactly the old `% 997` fixture; on replicas
     // each copy reproduces it in a disjoint key range so the hot key
     // stays fixed-multiplicity per copy (linear, not quadratic, in N)
-    "j6b_skew_salted" ->
+    RowDef("j6b_skew_salted", j6bSkewSalted, Some(
       """WITH probe AS (
         |  SELECT (l_orderkey // 100000000) * 997 +
         |         CASE WHEN (l_orderkey % 100000000) % 10 < 4 THEN 0
@@ -5821,15 +5842,15 @@ object ExtensionQueries {
         |SELECT k, COUNT(*) AS n_pairs,
         | CAST(ROUND(SUM(qty), 2) AS DOUBLE) AS sum_qty
         |FROM probe JOIN build USING (k)
-        |GROUP BY k ORDER BY k""".stripMargin,
+        |GROUP BY k ORDER BY k""".stripMargin)),
 
-    "m2_binaryfile_ingest" ->
+    RowDef("m2_binaryfile_ingest", m2BinaryFileIngest, Some(
       """SELECT doc_id,
         | CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
         | sha256(text) AS sha256_hex
-        |FROM documents ORDER BY doc_id""".stripMargin,
+        |FROM documents ORDER BY doc_id""".stripMargin)),
 
-    "t4_json_props" ->
+    RowDef("t4_json_props", t4JsonProps, Some(
       """SELECT k_bucket, event_type, COUNT(*) AS n,
         |       CAST(SUM(k) AS BIGINT) AS sum_k FROM (
         | SELECT event_type,
@@ -5837,9 +5858,9 @@ object ExtensionQueries {
         |   CAST(json_extract_string(props, '$.k') AS BIGINT) % 10 AS k_bucket
         | FROM events) t
         |GROUP BY k_bucket, event_type
-        |ORDER BY k_bucket, event_type""".stripMargin,
+        |ORDER BY k_bucket, event_type""".stripMargin)),
 
-    "st2_sessionize" ->
+    RowDef("st2_sessionize", st2Sessionize, Some(
       """WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS us, value FROM events),
         |m AS (SELECT *, CASE WHEN lag(us) OVER w IS NULL
         |                       OR us - lag(us) OVER w > 43200000000 THEN 1
@@ -5852,9 +5873,9 @@ object ExtensionQueries {
         | COUNT(*) AS n_events,
         | CAST(ROUND(SUM(CAST(value AS DECIMAL(18,2))),2) AS DOUBLE) AS sum_value
         |FROM s GROUP BY user_id, session_seq
-        |ORDER BY user_id, session_seq""".stripMargin,
+        |ORDER BY user_id, session_seq""".stripMargin)),
 
-    "st7_stream_budget" ->
+    RowDef("st7_stream_budget", st7BudgetTwin, Some(
       """WITH e AS (SELECT event_type AS key, event_id AS doc_id,
         |        CAST(CAST(value AS DECIMAL(18,4)) * 10000 AS BIGINT) AS n_tok,
         |        ts FROM events),
@@ -5866,26 +5887,60 @@ object ExtensionQueries {
         | CAST(SUM(CASE WHEN cum_tok <= 50000000 THEN 1 ELSE 0 END) AS BIGINT) AS n_admitted,
         | CAST(SUM(CASE WHEN cum_tok <= 50000000 THEN n_tok ELSE 0 END) AS BIGINT) AS admitted_tok,
         | CAST(MAX(cum_tok) AS BIGINT) AS total_tok
-        |FROM c GROUP BY key ORDER BY key""".stripMargin,
+        |FROM c GROUP BY key ORDER BY key""".stripMargin)),
 
-    "st1_event_window" ->
+    RowDef("st1_event_window", st1EventWindow, Some(
       """SELECT CAST(date_trunc('hour', ts) AS VARCHAR) AS window_start,
         | event_type, COUNT(*) AS n,
         | CAST(ROUND(SUM(CAST(value AS DECIMAL(18,2))),2) AS DOUBLE) AS sum_value
-        |FROM events GROUP BY 1, 2 ORDER BY window_start, event_type""".stripMargin,
+        |FROM events GROUP BY 1, 2 ORDER BY window_start, event_type""".stripMargin)),
 
     // st10: the streamed per-trigger cluster folds must compose to the
     // from-scratch map of the whole corpus (ST8's exactly-once pair
     // identity + ST10's fold ≡ rebuild) — x11's recursive-CTE
     // components over the integer-ppm ≥ 0.8 gate every streamed pair
     // was admitted under
-    "st10_stream_clusters" -> streamClustersOracle,
+    RowDef("st10_stream_clusters", st10StreamClusters,
+      Some(streamClustersOracle)),
 
     // st11: the SEEDED stream's composed view covers the whole corpus
     // too — the snapshot layers carry the pre-stream two thirds, the
     // live trigger folds the rest — so the very same from-scratch
     // rebuild is the oracle (seeded ≡ streamed-from-scratch ≡ rebuild)
-    "st11_bootstrap_stream" -> streamClustersOracle,
+    RowDef("st11_bootstrap_stream", st11BootstrapStream,
+      Some(streamClustersOracle)),
+
+    // bench-only rows (no oracle). x4's xxhash64 token hash has no
+    // DuckDB equivalent: its correctness signal is DedupSpec's parity
+    // assertion against exact Jaccard plus the fully oracle-matched x4b
+    // twin (identical banding/Hamming logic, portable md5 hash)
+    RowDef("x4_dedup_simhash", x4Simhash, None),
+    RowDef("a4b_quantile_sketch", CoreQueries.a4bQuantileSketch, None),
+    // native 100 TB paths of the exact-decimal oracle forms — benched
+    // as themselves, pinned to the oracle forms by NativeTwinSpec
+    // (float-vs-DECIMAL(9,6) cosine differs in the 6th decimal, so a
+    // bit-identical SQL oracle cannot exist for these)
+    RowDef("x5n_ann_lsh_native", x5nAnnLshNative, None),
+    RowDef("x6n_neardup_native", x6nNearDupNative, None),
+    RowDef("x22b_topic_native", x22bTopicBalanceNative, None),
+    RowDef("x22c_topic_sharded", x22cTopicBalanceSharded, None),
+    RowDef("x22d_topic_fitted", x22dTopicFitted, None),
+    // artifact BUILD costs, memo bypassed (see x31fBpeFit doc)
+    RowDef("x31f_bpe_fit", x31fBpeFit, None),
+    RowDef("x5cf_ivf_fit", x5cfIvfFit, None),
+    RowDef("x22df_topic_fit", x22dfTopicFit, None),
+    // x32's full-recompute baseline: same rows, Σdf² pair stage over
+    // the whole union — bench history tracks the incremental win
+    RowDef("x32f_union_recompute", x32fUnionRecompute, None),
+    // posting-index build cost (x33 serves from the memo/table)
+    RowDef("x33b_index_build", x33bIndexBuild, None),
+    // LSH signature/set artifact build cost (x35b serves from the memo)
+    RowDef("x35f_lsh_sigset_build", x35fLshSigsetBuild, None),
+    // corpus fp-set build cost (x34b serves from the memo/table)
+    RowDef("x34f_fp_build", x34fFpBuild, None),
+    // the vector recurrence at ~1M vectors: artifact serve vs build
+    RowDef("x36s_embstress_serve", x36sEmbStressServe, None),
+    RowDef("x36sf_embstress_build", x36sfEmbStressBuild, None),
   )
 
   /** The exact DECIMAL(9,6) pair listing over corpus ∪ re-embed batch
@@ -5945,95 +6000,6 @@ object ExtensionQueries {
       |SELECT node AS doc_id, MIN(label) AS cluster_id
       |FROM reach GROUP BY node ORDER BY doc_id""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x1_dedup_exact"         -> (x1DedupExact _),
-    "x2_dedup_ngram_jaccard" -> (x2NgramJaccard _),
-    "x2b_dedup_jaccard_capped" -> (x2bNgramJaccardCapped _),
-    "x2c_jaccard_bounded_state" -> (x2cJaccardBoundedState _),
-    "x32_incremental_neardup" -> (x32IncrementalNearDup _),
-    "x33_incremental_from_index" -> (x33IncrementalFromIndex _),
-    "x34_incremental_curation" -> (x34IncrementalCuration _),
-    "x34b_curation_from_index" -> (x34bCurationFromIndex _),
-    "x35_incremental_lsh"    -> (x35IncrementalLsh _),
-    "x35b_lsh_from_artifact" -> (x35bLshFromArtifact _),
-    "x37_incremental_containment" -> (x37IncrementalContainment _),
-    "x37b_containment_from_index" -> (x37bContainmentFromIndex _),
-    "x38_incremental_fuzzy"       -> (x38IncrementalFuzzy _),
-    "x39_incremental_clusters"    -> (x39IncrementalClusters _),
-    "x40_serve_fold_serve"        -> (x40ServeFoldServe _),
-    "x41_lsh_fold_serve"          -> (x41LshFoldServe _),
-    "x42_emb_fold_serve"          -> (x42EmbFoldServe _),
-    "x3_dedup_minhash_lsh"   -> (x3MinhashLsh _),
-    "x4b_simhash_portable"   -> (x4bSimhashPortable _),
-    "x7_incremental_dedup"   -> (x7IncrementalDedup _),
-    "x8_crossbatch_overlap"  -> (x8CrossBatchOverlap _),
-    "x9_hash_sample"         -> (x9HashSample _),
-    "x23_weighted_sample"    -> (x23WeightedSample _),
-    "x24_pagerank"           -> (x24Pagerank _),
-    "x31_bpe_merges"         -> (x31BpeMerges _),
-    "x31b_bpe_encode"        -> (x31bBpeEncode _),
-    "x10_corpus_pipeline"    -> (x10CorpusPipeline _),
-    "x11_dup_clusters"       -> (x11DupClusters _),
-    "x5_ann_cosine_topk"     -> (x5AnnCosineTopK _),
-    "x5b_ann_lsh_topk"       -> (x5bAnnLshTopK _),
-    "x5c_ann_ivf_recall"     -> (x5cAnnIvfRecall _),
-    "x6_embedding_neardup"   -> (x6EmbeddingNearDup _),
-    "x6b_neardup_lsh"        -> (x6bNearDupLsh _),
-    "x36_incremental_embed_neardup" -> (x36IncrementalEmbedNearDup _),
-    "t1_text_stats"          -> (t1TextStats _),
-    "t2_langid"              -> (t2LangId _),
-    "t3_fingerprint"         -> (t3Fingerprint _),
-    "t5_edit_pairs"          -> (t5EditPairs _),
-    "t5b_edit_pairs_capped"  -> (t5bEditPairsCapped _),
-    "t4_json_props"          -> (t4JsonProps _),
-    "t6_pii_scrub"           -> (t6PiiScrub _),
-    "t7_chunking"            -> (t7Chunking _),
-    "x12_boilerplate_ngrams" -> (x12BoilerplateNgrams _),
-    "x13_decontaminate"      -> (x13Decontaminate _),
-    "x13b_decontaminate_bloom" -> (x13bDecontaminateBloom _),
-    "x14_vocab_encode"       -> (x14VocabEncode _),
-    "x15_sequence_pack"      -> (x15SequencePack _),
-    "x16_mixture_upsample"   -> (x16MixtureUpsample _),
-    "x17_cluster_canonical"  -> (x17ClusterCanonical _),
-    "x18_incremental_upsert" -> (x18IncrementalUpsert _),
-    "x19_passage_dedup"      -> (x19PassageDedup _),
-    "x20_source_budget"      -> (x20SourceBudget _),
-    "x30_language_budget"    -> (x30LanguageBudget _),
-    "x30b_language_budget_sharded" -> (x30bLanguageBudgetSharded _),
-    "t10_name_match"         -> (t10NameMatch _),
-    "t11_bm25_topk"          -> (t11Bm25TopK _),
-    "x25_heavy_hitters"      -> (x25HeavyHitters _),
-    "st6_heavy_hitters"      -> (st6HeavyHittersBatch _),
-    "t12_tfidf_keywords"     -> (t12TfidfKeywords _),
-    "x26_url_canonical"      -> (x26UrlCanonical _),
-    "x27_containment_pairs"  -> (x27ContainmentPairs _),
-    "x27b_containment_capped" -> (x27bContainmentCapped _),
-    "x27c_containment_bounded" -> (x27cContainmentBoundedState _),
-    "t13_token_rarity"       -> (t13TokenRarity _),
-    "t14_bigram_lm"          -> (t14BigramLm _),
-    "x28_domain_budget"      -> (x28DomainBudget _),
-    "x29_leakage_split"      -> (x29LeakageSplit _),
-    "x22_topic_balance"      -> (x22TopicBalance _),
-    "t8_quality_signals"     -> (t8QualitySignals _),
-    "t9_quality_classifier"  -> (t9QualityClassifier _),
-    "m1_multimodal_stub"     -> (m1MultimodalStub _),
-    "m1b_image_decode"       -> (m1bImageDecode _),
-    "m2_binaryfile_ingest"   -> (m2BinaryFileIngest _),
-    "m2b_batched_ingest"     -> (m2bBatchedIngest _),
-    "m3_frame_manifest"      -> (m3FrameManifest _),
-    "m3b_video_decode"       -> (m3bVideoDecode _),
-    "m4_audio_decode"        -> (m4AudioDecode _),
-    "j6b_skew_salted"        -> (j6bSkewSalted _),
-    "st1_event_window"       -> (st1EventWindow _),
-    "st7_stream_budget"      -> (st7BudgetTwin _),
-    "st10_stream_clusters"   -> (st10StreamClusters _),
-    "st11_bootstrap_stream"  -> (st11BootstrapStream _),
-    "st12_stream_embed"      -> (st12StreamEmbed _),
-    "st2_sessionize"         -> (st2Sessionize _),
-    "st4_stream_curate"      -> (st4StreamCurate _),
-    "st5_stream_enrich"      -> (st5StreamEnrich _),
-  )
-
   /** The memoized artifacts' BUILD cost as first-class bench rows: the
     * serving queries (x31, x5c, x22d) hit the session memo after their
     * first run, so BENCH history records memo-lookup cost (~0.06 s)
@@ -6068,39 +6034,4 @@ object ExtensionQueries {
       .map { case (c, i) => (i, c.toArray.sum) }.toSeq
       .toDF("cluster_id", "center_mass").orderBy("cluster_id")
   }
-
-  /** Benchmarked but not oracle-checked: x4's xxhash64 token hash has
-    * no DuckDB equivalent, so its correctness signal is DedupSpec's
-    * parity assertion against exact Jaccard plus the fully
-    * oracle-matched x4b twin (identical banding/Hamming logic, portable
-    * md5 hash). Kept out of `queries` so the driver ledger stays N/N. */
-  val benchOnly: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x4_dedup_simhash"   -> (x4Simhash _),
-    "a4b_quantile_sketch" -> (CoreQueries.a4bQuantileSketch _),
-    // native 100 TB paths of the exact-decimal oracle forms — benched
-    // as themselves, pinned to the oracle forms by NativeTwinSpec
-    // (float-vs-DECIMAL(9,6) cosine differs in the 6th decimal, so a
-    // bit-identical SQL oracle cannot exist for these)
-    "x5n_ann_lsh_native"  -> (x5nAnnLshNative _),
-    "x6n_neardup_native"  -> (x6nNearDupNative _),
-    "x22b_topic_native"   -> (x22bTopicBalanceNative _),
-    "x22c_topic_sharded"  -> (x22cTopicBalanceSharded _),
-    "x22d_topic_fitted"   -> (x22dTopicFitted _),
-    // artifact BUILD costs, memo bypassed (see x31fBpeFit doc)
-    "x31f_bpe_fit"        -> (x31fBpeFit _),
-    "x5cf_ivf_fit"        -> (x5cfIvfFit _),
-    "x22df_topic_fit"     -> (x22dfTopicFit _),
-    // x32's full-recompute baseline: same rows, Σdf² pair stage over
-    // the whole union — bench history tracks the incremental win
-    "x32f_union_recompute" -> (x32fUnionRecompute _),
-    // posting-index build cost (x33 serves from the memo/table)
-    "x33b_index_build"     -> (x33bIndexBuild _),
-    // LSH signature/set artifact build cost (x35b serves from the memo)
-    "x35f_lsh_sigset_build" -> (x35fLshSigsetBuild _),
-    // corpus fp-set build cost (x34b serves from the memo/table)
-    "x34f_fp_build"        -> (x34fFpBuild _),
-    // the vector recurrence at ~1M vectors: artifact serve vs build
-    "x36s_embstress_serve"  -> (x36sEmbStressServe _),
-    "x36sf_embstress_build" -> (x36sfEmbStressBuild _),
-  )
 }

@@ -87,7 +87,7 @@ object MakeScale {
     val src = if (pos.length > 0) pos(0) else "/root/testdata/sf0.1"
     val dst = if (pos.length > 1) pos(1) else "/tmp/sf0.5x"
     val copies = if (pos.length > 2) pos(2).toInt else 5
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = LocalCpus()
     // getOrCreate: under a test harness this reuses (and must not
     // stop) the suite's session — main only stops what it created
     val hadSession = SparkSession.getActiveSession

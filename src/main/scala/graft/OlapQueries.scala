@@ -846,48 +846,11 @@ object OlapQueries {
       .orderBy("user_bucket", "event_type")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "a8_pivot"           -> (a8Pivot _),
-    "a9_group_concat"    -> (a9GroupConcat _),
-    "a10_unpivot"        -> (a10Unpivot _),
-    "st3_gapfill"        -> (st3GapFill _),
-    "j7_asof_join"       -> (j7AsofJoin _),
-    "j8_range_join"      -> (j8RangeJoin _),
-    "j10_bbox_join"      -> (j10BboxJoin _),
-    "a5_rollup"          -> (a5Rollup _),
-    "a5b_cube"           -> (a5bCube _),
-    "w5_quality_deciles" -> (w5QualityDeciles _),
-    "w3_lag_rolling"     -> (w3LagRolling _),
-    "w4_rank_family"     -> (w4RankFamily _),
-    "a6_setops"          -> (a6SetOps _),
-    "a11_conditional_agg" -> (a11ConditionalAgg _),
-    "p20_datetime_funcs" -> (p20DatetimeFuncs _),
-    "p21_string_funcs"   -> (p21StringFuncs _),
-    "p22_array_funcs"    -> (p22ArrayFuncs _),
-    "j9_outer_join"      -> (j9OuterJoin _),
-    "a7_approx_distinct" -> (a7ApproxDistinct _),
-    "w6_scd2_history"    -> (w6Scd2History _),
-    "a12_table_profile"  -> (a12TableProfile _),
-    "w7_funnel"          -> (w7Funnel _),
-    "a13_incremental_refresh" -> (a13IncrementalRefresh _),
-    "st3b_interpolate"   -> (st3bInterpolate _),
-    "p23_map_funcs"      -> (p23MapFuncs _),
-    "a14_histogram"      -> (a14Histogram _),
-    "w8_range_frame"     -> (w8RangeFrame _),
-    "a15_robust_zscore"  -> (a15RobustZscore _),
-    "j11_hierarchy"      -> (j11Hierarchy _),
-    "a16_constraint_audit" -> (a16ConstraintAudit _),
-    "a17_corr_matrix"    -> (a17CorrMatrix _),
-    "a18_grouping_sets"  -> (a18GroupingSets _),
-    "p24_bitwise_funcs"  -> (p24BitwiseFuncs _),
-    "w9_value_windows"   -> (w9ValueWindows _),
-    "w10_window_distinct" -> (w10WindowDistinct _),
-  )
-
-  val oracles: Map[String, String] = Map(
+  /** The OLAP family's rows, each builder beside its oracle SQL. */
+  val rows: Seq[RowDef] = Seq(
     // a17: the oracle restates the same exact-moment formula; the
     // UNION arms are generated from the same pair list as the query
-    "a17_corr_matrix" -> {
+    RowDef("a17_corr_matrix", a17CorrMatrix, Some {
       val cols = Seq("q" -> "l_quantity", "e" -> "l_extendedprice",
         "di" -> "l_discount", "tx" -> "l_tax")
       val pairs = for {
@@ -911,9 +874,9 @@ object OlapQueries {
          |m AS (SELECT COUNT(*) AS n, $moms FROM sc)
          |SELECT col_x, col_y, n, corr FROM ($arms) t
          |ORDER BY col_x, col_y""".stripMargin
-    },
+    }),
 
-    "a16_constraint_audit" ->
+    RowDef("a16_constraint_audit", a16ConstraintAudit, Some(
       """WITH o AS (
         |  SELECT o_orderkey, o_custkey, o_totalprice, o_orderdate
         |  FROM orders
@@ -956,9 +919,9 @@ object OlapQueries {
         |  UNION ALL SELECT 'orders.o_orderdate.in_window', bad_date, o_n FROM oa
         |  UNION ALL SELECT 'orders.o_orderkey.unique', o_n - o_nd, o_n FROM oa
         |  UNION ALL SELECT 'orders.o_totalprice.positive', bad_price, o_n FROM oa
-        |) t ORDER BY check_name""".stripMargin,
+        |) t ORDER BY check_name""".stripMargin)),
 
-    "a14_histogram" ->
+    RowDef("a14_histogram", a14Histogram, Some(
       """WITH b AS (
         |  SELECT CAST(LEAST(9, n_chars // 50) AS BIGINT) AS bucket,
         |         n_chars, lang
@@ -970,9 +933,9 @@ object OlapQueries {
         |       MIN(n_chars) AS min_chars, MAX(n_chars) AS max_chars,
         |       CAST(SUM(n_chars) AS BIGINT) AS sum_chars,
         |       CAST(COUNT(DISTINCT lang) AS BIGINT) AS n_langs
-        |FROM b GROUP BY bucket ORDER BY bucket""".stripMargin,
+        |FROM b GROUP BY bucket ORDER BY bucket""".stripMargin)),
 
-    "p23_map_funcs" ->
+    RowDef("p23_map_funcs", p23MapFuncs, Some(
       """WITH c AS (SELECT user_id, event_type, COUNT(*) AS n
         |           FROM events GROUP BY 1, 2),
         |m AS (SELECT user_id,
@@ -984,9 +947,9 @@ object OlapQueries {
         | COALESCE(m['view'][1], 0) AS n_view,
         | COALESCE(m['error'][1], 0) AS n_error,
         | array_to_string(map_keys(m), ',') AS types
-        |FROM m ORDER BY user_id""".stripMargin,
+        |FROM m ORDER BY user_id""".stripMargin)),
 
-    "st3b_interpolate" ->
+    RowDef("st3b_interpolate", st3bInterpolate, Some(
       """WITH hourly AS (
         |  SELECT event_type,
         |         epoch_us(date_trunc('hour', ts)) // 3600000000 AS hr_id,
@@ -1017,9 +980,9 @@ object OlapQueries {
         |  CASE WHEN v_micro IS NOT NULL THEN v_micro
         |       ELSE (pv * (nt - pt) + (nv - pv) * (hr_id - pt)) // (nt - pt)
         |  END AS v_interp_micro
-        |FROM w ORDER BY event_type, hr_id""".stripMargin,
+        |FROM w ORDER BY event_type, hr_id""".stripMargin)),
 
-    "w7_funnel" ->
+    RowDef("w7_funnel", w7Funnel, Some(
       """WITH ev AS (SELECT user_id, epoch_us(ts) AS t_us, event_type FROM events),
         |v AS (SELECT user_id, MIN(t_us) AS v_us FROM ev
         |      WHERE event_type = 'view' GROUP BY user_id),
@@ -1039,17 +1002,17 @@ object OlapQueries {
         | COUNT(p.p_us) AS n_purchased
         |FROM v LEFT JOIN c ON v.user_id = c.user_id
         |       LEFT JOIN p ON v.user_id = p.user_id
-        |GROUP BY 1 ORDER BY cohort_day""".stripMargin,
+        |GROUP BY 1 ORDER BY cohort_day""".stripMargin)),
 
-    "a13_incremental_refresh" ->
+    RowDef("a13_incremental_refresh", a13IncrementalRefresh, Some(
       """SELECT l_returnflag,
         | CAST(ROUND(SUM(CAST(l_quantity AS DECIMAL(18,4))), 2) AS DOUBLE) AS sum_qty,
         | COUNT(*) AS n_rows,
         | ROUND(CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE)
         |   / CAST(COUNT(*) AS DOUBLE), 6) AS avg_qty
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)),
 
-    "w6_scd2_history" ->
+    RowDef("w6_scd2_history", w6Scd2History, Some(
       """WITH ev AS (SELECT user_id, event_id, epoch_us(ts) AS t_us,
         |        event_type AS attr FROM events),
         |ch AS (SELECT *, LAG(attr) OVER (PARTITION BY user_id
@@ -1062,9 +1025,9 @@ object OlapQueries {
         | LEAD(t_us) OVER w AS valid_to_us,
         | (LEAD(t_us) OVER w IS NULL) AS is_current
         |FROM f WINDOW w AS (PARTITION BY user_id ORDER BY t_us, event_id)
-        |ORDER BY user_id, version""".stripMargin,
+        |ORDER BY user_id, version""".stripMargin)),
 
-    "a12_table_profile" ->
+    RowDef("a12_table_profile", a12TableProfile, Some(
       """SELECT col_name, n_rows, n_null, n_distinct, min_val, max_val
         |FROM (
         | SELECT 'l_quantity' AS col_name, COUNT(*) AS n_rows,
@@ -1090,9 +1053,9 @@ object OlapQueries {
         |  CAST(COUNT(DISTINCT l_tax) AS BIGINT),
         |  CAST(MIN(l_tax) AS DOUBLE),
         |  CAST(MAX(l_tax) AS DOUBLE) FROM lineitem) t
-        |ORDER BY col_name""".stripMargin,
+        |ORDER BY col_name""".stripMargin)),
 
-    "a8_pivot" -> {
+    RowDef("a8_pivot", a8Pivot, Some {
       def cell(t: String) =
         s"""CAST(ROUND(SUM(CASE WHEN event_type = '$t'
            |  THEN CAST(value AS DECIMAL(18,2)) END), 2) AS DOUBLE) AS $t"""
@@ -1101,9 +1064,9 @@ object OlapQueries {
          | ${Seq("click", "error", "purchase", "signup", "view")
                .map(cell).mkString(",\n ")}
          |FROM events GROUP BY user_id % 10 ORDER BY user_bucket""".stripMargin
-    },
+    }),
 
-    "a11_conditional_agg" ->
+    RowDef("a11_conditional_agg", a11ConditionalAgg, Some(
       """SELECT l_returnflag,
         | COUNT(*) FILTER (WHERE l_quantity > 25) AS n_big,
         | CAST(ROUND(SUM(CASE WHEN l_quantity > 25
@@ -1113,9 +1076,9 @@ object OlapQueries {
         | max_by(l_orderkey,
         |   CAST(l_extendedprice AS DECIMAL(28,4)) * 1000000000
         |     + l_orderkey * 10 + l_linenumber) AS top_price_order
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)),
 
-    "p20_datetime_funcs" ->
+    RowDef("p20_datetime_funcs", p20DatetimeFuncs, Some(
       """SELECT o_orderkey,
         | date_diff('day', CAST(o_orderdate AS DATE), DATE '1995-06-17') AS days_to_ref,
         | CAST(CAST(o_orderdate AS DATE) + INTERVAL 3 MONTH AS DATE) AS plus3m,
@@ -1125,9 +1088,9 @@ object OlapQueries {
         | CAST(dayofweek(CAST(o_orderdate AS DATE)) + 1 AS INTEGER) AS dow,
         | CAST(dayofyear(CAST(o_orderdate AS DATE)) AS INTEGER) AS doy,
         | CAST(week(CAST(o_orderdate AS DATE)) AS INTEGER) AS woy
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
+        |FROM orders ORDER BY o_orderkey""".stripMargin)),
 
-    "p21_string_funcs" ->
+    RowDef("p21_string_funcs", p21StringFuncs, Some(
       """SELECT c_custkey,
         | split_part(c_name, '#', 2) AS id_part,
         | translate(c_name, 'Cu0', 'cU-') AS translated,
@@ -1135,9 +1098,9 @@ object OlapQueries {
         | reverse(left(c_name, 8)) AS reversed,
         | CAST(position('#' IN c_name) AS INTEGER) AS hash_pos,
         | CAST(ascii(c_name) AS INTEGER) AS first_code
-        |FROM customer ORDER BY c_custkey""".stripMargin,
+        |FROM customer ORDER BY c_custkey""".stripMargin)),
 
-    "p22_array_funcs" ->
+    RowDef("p22_array_funcs", p22ArrayFuncs, Some(
       """SELECT doc_id,
         | list_contains(string_split(text,' '), 'the') AS has_the,
         | CAST(list_position(string_split(text,' '), 'the') AS BIGINT) AS the_pos,
@@ -1145,24 +1108,24 @@ object OlapQueries {
         | list_aggregate(string_split(text,' '), 'max') AS max_word,
         | list_aggregate(string_split(text,' '), 'min') AS min_word,
         | array_to_string(list_sort(string_split(text,' '))[1:3], '|') AS first3_sorted
-        |FROM documents ORDER BY doc_id""".stripMargin,
+        |FROM documents ORDER BY doc_id""".stripMargin)),
 
-    "a9_group_concat" ->
+    RowDef("a9_group_concat", a9GroupConcat, Some(
       """SELECT s_nationkey, COUNT(*) AS n,
         | string_agg(s_name, ',' ORDER BY s_name) AS names_csv
         |FROM supplier WHERE s_suppkey % 7 = 0
-        |GROUP BY s_nationkey ORDER BY s_nationkey""".stripMargin,
+        |GROUP BY s_nationkey ORDER BY s_nationkey""".stripMargin)),
 
-    "a10_unpivot" ->
+    RowDef("a10_unpivot", a10Unpivot, Some(
       """WITH wide AS (
         |  SELECT user_id % 10 AS user_bucket, event_type,
         |    CAST(ROUND(SUM(CAST(value AS DECIMAL(18,2))), 2) AS DOUBLE) AS sum_value
         |  FROM events GROUP BY user_id % 10, event_type)
         |SELECT user_bucket, event_type, sum_value FROM wide
         |WHERE sum_value IS NOT NULL
-        |ORDER BY user_bucket, event_type""".stripMargin,
+        |ORDER BY user_bucket, event_type""".stripMargin)),
 
-    "st3_gapfill" ->
+    RowDef("st3_gapfill", st3GapFill, Some(
       """WITH hourly AS (
         |  SELECT event_type, date_trunc('hour', ts) AS h, COUNT(*) AS n
         |  FROM events GROUP BY event_type, date_trunc('hour', ts)),
@@ -1174,8 +1137,8 @@ object OlapQueries {
         |       COALESCE(hourly.n, 0) AS n
         |FROM allh a LEFT JOIN hourly ON a.event_type = hourly.event_type
         |                            AND a.h = hourly.h
-        |ORDER BY a.event_type, hour_start""".stripMargin,
-    "j7_asof_join" ->
+        |ORDER BY a.event_type, hour_start""".stripMargin)),
+    RowDef("j7_asof_join", j7AsofJoin, Some(
       """WITH ev AS (SELECT event_id, user_id, epoch_us(ts) AS t_us,
         |                   event_type, value FROM events),
         |quotes AS (SELECT user_id, t_us AS q_us,
@@ -1187,18 +1150,18 @@ object OlapQueries {
         |       CAST(q.quote AS DOUBLE) AS quote
         |FROM trades t ASOF LEFT JOIN quotes q
         |  ON t.user_id = q.user_id AND t.t_us >= q.q_us
-        |ORDER BY t.event_id""".stripMargin,
+        |ORDER BY t.event_id""".stripMargin)),
 
-    "j8_range_join" ->
+    RowDef("j8_range_join", j8RangeJoin, Some(
       """WITH pts AS (SELECT CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100
         |    AS BIGINT) AS cents FROM lineitem),
         |bands AS (SELECT id AS band_id, id*60000 AS lo, id*60000+90000 AS hi
         |  FROM range(200) t(id))
         |SELECT band_id, COUNT(*) AS n, CAST(SUM(cents) AS BIGINT) AS sum_cents
         |FROM pts JOIN bands ON cents >= lo AND cents < hi
-        |GROUP BY band_id ORDER BY band_id""".stripMargin,
+        |GROUP BY band_id ORDER BY band_id""".stripMargin)),
 
-    "j10_bbox_join" ->
+    RowDef("j10_bbox_join", j10BboxJoin, Some(
       """WITH pts AS (SELECT s_suppkey,
         |   (s_suppkey*7) % 12000 - 6000 AS px,
         |   (s_suppkey*13) % 34000 - 17000 AS py FROM supplier),
@@ -1210,16 +1173,16 @@ object OlapQueries {
         |SELECT box_id, COUNT(*) AS n_points, MIN(s_suppkey) AS min_supp
         |FROM pts JOIN boxes
         |  ON px >= xlo AND px < xhi AND py >= ylo AND py < yhi
-        |GROUP BY box_id ORDER BY box_id""".stripMargin,
+        |GROUP BY box_id ORDER BY box_id""".stripMargin)),
 
-    "a5_rollup" ->
+    RowDef("a5_rollup", a5Rollup, Some(
       """SELECT CAST(GROUPING(l_returnflag, l_linestatus) AS BIGINT) AS gid,
         | l_returnflag, l_linestatus, COUNT(*) AS n,
         | CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(18,4))), 2) AS DOUBLE) AS sum_price
         |FROM lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus)
-        |ORDER BY gid, l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin,
+        |ORDER BY gid, l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin)),
 
-    "p24_bitwise_funcs" ->
+    RowDef("p24_bitwise_funcs", p24BitwiseFuncs, Some(
       """SELECT o_orderkey AS k,
         | o_orderkey & 255 AS band,
         | o_orderkey | 15 AS bor,
@@ -1234,9 +1197,9 @@ object OlapQueries {
         |   OVER (PARTITION BY o_orderkey % 7) AS gor,
         | bit_xor(o_orderkey & 255)
         |   OVER (PARTITION BY o_orderkey % 7) AS gxor
-        |FROM orders ORDER BY k""".stripMargin,
+        |FROM orders ORDER BY k""".stripMargin)),
 
-    "a18_grouping_sets" ->
+    RowDef("a18_grouping_sets", a18GroupingSets, Some(
       """SELECT CAST(GROUPING(o_orderstatus, o_orderpriority) AS BIGINT) AS gid,
         | o_orderstatus, o_orderpriority, COUNT(*) AS n,
         | CAST(ROUND(SUM(CAST(o_totalprice AS DECIMAL(18,4))), 2) AS DOUBLE)
@@ -1245,23 +1208,23 @@ object OlapQueries {
         |GROUP BY GROUPING SETS ((o_orderstatus, o_orderpriority),
         |                        (o_orderpriority), ())
         |ORDER BY gid, o_orderstatus NULLS FIRST,
-        |         o_orderpriority NULLS FIRST""".stripMargin,
+        |         o_orderpriority NULLS FIRST""".stripMargin)),
 
-    "a5b_cube" ->
+    RowDef("a5b_cube", a5bCube, Some(
       """SELECT CAST(GROUPING(lang, source) AS BIGINT) AS gid,
         | lang, source, COUNT(*) AS n,
         | CAST(SUM(n_chars) AS BIGINT) AS sum_chars
         |FROM documents GROUP BY CUBE(lang, source)
-        |ORDER BY gid, lang NULLS FIRST, source NULLS FIRST""".stripMargin,
+        |ORDER BY gid, lang NULLS FIRST, source NULLS FIRST""".stripMargin)),
 
-    "w5_quality_deciles" ->
+    RowDef("w5_quality_deciles", w5QualityDeciles, Some(
       """SELECT doc_id, lang, n_chars,
         | CAST(NTILE(10) OVER w AS BIGINT) AS decile,
         | ROUND(PERCENT_RANK() OVER w, 6) AS pr,
         | ROUND(CUME_DIST() OVER w, 6) AS cd
         |FROM documents
         |WINDOW w AS (PARTITION BY lang ORDER BY n_chars DESC, doc_id ASC)
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin)),
 
     // j11: DuckDB's real recursive CTE is the ground truth the
     // pointer-doubling loop must reproduce exactly. The walk steps
@@ -1272,7 +1235,7 @@ object OlapQueries {
     // diverged on the sparse 5× replica blocks — 13 vs 16 depth
     // rows); anc is the stopping ancestor, n_rooted counts chains
     // that reached root 0.
-    "j11_hierarchy" ->
+    RowDef("j11_hierarchy", j11Hierarchy, Some(
       """WITH RECURSIVE walk AS (
         |  SELECT doc_id, doc_id AS cur, 0 AS d FROM documents
         |  UNION ALL
@@ -1285,9 +1248,9 @@ object OlapQueries {
         |SELECT depth, COUNT(*) AS n_nodes,
         |       MIN(doc_id) AS min_id, MAX(doc_id) AS max_id,
         |       COUNT(*) FILTER (WHERE anc = 0) AS n_rooted
-        |FROM fin GROUP BY depth ORDER BY depth""".stripMargin,
+        |FROM fin GROUP BY depth ORDER BY depth""".stripMargin)),
 
-    "w8_range_frame" ->
+    RowDef("w8_range_frame", w8RangeFrame, Some(
       """WITH ev AS (SELECT event_id, user_id, epoch_us(ts) AS t_us,
         |  CAST(value AS DECIMAL(18,2)) AS v FROM events)
         |SELECT event_id, user_id, t_us,
@@ -1295,11 +1258,11 @@ object OlapQueries {
         | CAST(ROUND(SUM(v) OVER w, 2) AS DOUBLE) AS sum_1h
         |FROM ev WINDOW w AS (PARTITION BY user_id ORDER BY t_us
         |  RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW)
-        |ORDER BY event_id""".stripMargin,
+        |ORDER BY event_id""".stripMargin)),
 
     // a15: quantile_cont == Spark's interpolated percentile; small
     // exact values make every median/MAD comparison tie-free
-    "a15_robust_zscore" ->
+    RowDef("a15_robust_zscore", a15RobustZscore, Some(
       """WITH li AS (SELECT l_returnflag, CAST(l_quantity AS DOUBLE) AS q
         |            FROM lineitem),
         |med AS (SELECT l_returnflag, quantile_cont(q, 0.5) AS med
@@ -1315,9 +1278,9 @@ object OlapQueries {
         |   AS outlier_mass
         |FROM li JOIN mad m USING (l_returnflag)
         |GROUP BY li.l_returnflag, m.med, m.mad
-        |ORDER BY l_returnflag""".stripMargin,
+        |ORDER BY l_returnflag""".stripMargin)),
 
-    "w3_lag_rolling" ->
+    RowDef("w3_lag_rolling", w3LagRolling, Some(
       """WITH ev AS (SELECT event_id, user_id, epoch_us(ts) AS t_us,
         |  CAST(value AS DECIMAL(18,2)) AS v FROM events)
         |SELECT event_id, user_id, t_us,
@@ -1327,9 +1290,9 @@ object OlapQueries {
         | COUNT(*) OVER (PARTITION BY user_id ORDER BY t_us, event_id
         |   ROWS BETWEEN 3 PRECEDING AND CURRENT ROW) AS n_win
         |FROM ev WINDOW w AS (PARTITION BY user_id ORDER BY t_us, event_id)
-        |ORDER BY event_id""".stripMargin,
+        |ORDER BY event_id""".stripMargin)),
 
-    "w9_value_windows" ->
+    RowDef("w9_value_windows", w9ValueWindows, Some(
       """WITH ev AS (SELECT event_id, user_id, epoch_us(ts) AS t_us,
         |  CAST(value AS DECIMAL(18,2)) AS v FROM events)
         |SELECT event_id, user_id, t_us,
@@ -1343,9 +1306,9 @@ object OlapQueries {
         |        ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING),
         | wc AS (PARTITION BY user_id ORDER BY t_us, event_id
         |        ROWS BETWEEN 1 PRECEDING AND 1 FOLLOWING)
-        |ORDER BY event_id""".stripMargin,
+        |ORDER BY event_id""".stripMargin)),
 
-    "w10_window_distinct" ->
+    RowDef("w10_window_distinct", w10WindowDistinct, Some(
       """WITH ev AS (SELECT event_id, user_id, epoch_us(ts) AS t_us,
         |  event_type FROM events)
         |SELECT event_id, user_id, t_us,
@@ -1353,9 +1316,9 @@ object OlapQueries {
         | COUNT(*) OVER wt AS n_trail
         |FROM ev WINDOW wt AS (PARTITION BY user_id ORDER BY t_us, event_id
         |  ROWS BETWEEN 9 PRECEDING AND CURRENT ROW)
-        |ORDER BY event_id""".stripMargin,
+        |ORDER BY event_id""".stripMargin)),
 
-    "w4_rank_family" ->
+    RowDef("w4_rank_family", w4RankFamily, Some(
       """WITH ev AS (SELECT event_id, user_id, epoch_us(ts) AS t_us,
         |  CAST(value AS DECIMAL(18,2)) AS v FROM events)
         |SELECT event_id, user_id, CAST(v AS DOUBLE) AS value,
@@ -1365,9 +1328,9 @@ object OlapQueries {
         | ROUND(CUME_DIST() OVER wt, 6) AS cdist,
         | NTILE(4) OVER (PARTITION BY user_id ORDER BY v, event_id) AS quartile
         |FROM ev WINDOW wt AS (PARTITION BY user_id ORDER BY v)
-        |ORDER BY event_id""".stripMargin,
+        |ORDER BY event_id""".stripMargin)),
 
-    "a6_setops" ->
+    RowDef("a6_setops", a6SetOps, Some(
       """WITH a AS (SELECT c_nationkey AS nationkey FROM customer
         |           WHERE c_mktsegment = 'BUILDING'),
         |     b AS (SELECT s_nationkey FROM supplier WHERE s_acctbal > 5000)
@@ -1376,9 +1339,9 @@ object OlapQueries {
         |SELECT 'intersect', nationkey FROM (SELECT nationkey FROM a INTERSECT SELECT * FROM b) t
         |UNION ALL
         |SELECT 'except', nationkey FROM (SELECT nationkey FROM a EXCEPT SELECT * FROM b) t
-        |ORDER BY op, nationkey""".stripMargin,
+        |ORDER BY op, nationkey""".stripMargin)),
 
-    "j9_outer_join" ->
+    RowDef("j9_outer_join", j9OuterJoin, Some(
       """WITH big AS (SELECT l_orderkey,
         |    SUM(CAST(l_extendedprice AS DECIMAL(18,4))) AS big_total,
         |    COUNT(*) AS n_big
@@ -1388,11 +1351,11 @@ object OlapQueries {
         | COALESCE(big.n_big, 0) AS n_big,
         | big.l_orderkey IS NOT NULL AS has_big
         |FROM orders o LEFT JOIN big ON o.o_orderkey = big.l_orderkey
-        |ORDER BY o.o_orderkey""".stripMargin,
+        |ORDER BY o.o_orderkey""".stripMargin)),
 
-    "a7_approx_distinct" ->
+    RowDef("a7_approx_distinct", a7ApproxDistinct, Some(
       """SELECT l_returnflag, COUNT(DISTINCT l_partkey) AS exact_dc,
         | true AS approx_within_5pct
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)),
   )
 }

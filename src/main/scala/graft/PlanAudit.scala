@@ -21,11 +21,10 @@ object PlanAudit {
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    val all = SparkEntry.queries ++ SparkEntry.benchOnly
     names.foreach { n =>
       val (exec, name) = if (n.startsWith("exec:")) (true, n.drop(5)) else (false, n)
       println(s"\n========== $n ==========")
-      val df = all(name)(spark, sfDir)
+      val df = SparkEntry.all(name)(spark, sfDir)
       if (exec) { val _ = df.collect() } // materialize → AQE final plan
       println(df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode))

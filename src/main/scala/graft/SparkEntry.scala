@@ -16,77 +16,18 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     CoreQueries.a1PoTotals(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "a1_po_totals"      -> (CoreQueries.a1PoTotals _),
-    "j1_reconciliation" -> (CoreQueries.j1Reconciliation _),
-    "w1_top1_per_key"   -> (CoreQueries.w1Top1PerKey _),
-    "w2_minby_top1"     -> (CoreQueries.w2MinByTop1 _),
-    "j6_salted_join"    -> (CoreQueries.j6SaltedJoin _),
-    "q_tpch_q3"         -> (CoreQueries.qTpchQ3 _),
-    "q_tpch_q5"         -> (CoreQueries.qTpchQ5 _),
-    "q_tpch_q18"        -> (CoreQueries.qTpchQ18 _),
-    "q_tpch_q10"        -> (CoreQueries.qTpchQ10 _),
-    "q_tpch_q7"         -> (CoreQueries.qTpchQ7 _),
-    "q_tpch_q14"        -> (CoreQueries.qTpchQ14 _),
-    "q_tpch_q19"        -> (CoreQueries.qTpchQ19 _),
-    "q_tpch_q1"         -> (CoreQueries.qTpchQ1 _),
-    "q_tpch_q21"        -> (CoreQueries.qTpchQ21 _),
-    "q_tpch_q13"        -> (CoreQueries.qTpchQ13 _),
-    "q_tpch_q17"        -> (CoreQueries.qTpchQ17 _),
-    "q_tpch_q22"        -> (CoreQueries.qTpchQ22 _),
-    "q_tpch_q2"         -> (CoreQueries.qTpchQ2 _),
-    "q_tpch_q15"        -> (CoreQueries.qTpchQ15 _),
-    "q_tpch_q20"        -> (CoreQueries.qTpchQ20 _),
-    "q_tpch_q4"         -> (CoreQueries.qTpchQ4 _),
-    "q_tpch_q6"         -> (CoreQueries.qTpchQ6 _),
-    "q_tpch_q8"         -> (CoreQueries.qTpchQ8 _),
-    "q_tpch_q9"         -> (CoreQueries.qTpchQ9 _),
-    "q_tpch_q11"        -> (CoreQueries.qTpchQ11 _),
-    "q_tpch_q12"        -> (CoreQueries.qTpchQ12 _),
-    "q_tpch_q16"        -> (CoreQueries.qTpchQ16 _),
-    "c3_exists"         -> (CoreQueries.c3Exists _),
-    "a3_distinct"       -> (CoreQueries.a3Distinct _),
-    "a4_quantile_stats" -> (CoreQueries.a4QuantileStats _),
-    "a4c_quantile_hist" -> (CoreQueries.a4cQuantileHist _),
-    "j5_threeway_2key"  -> (CoreQueries.j5ThreeWayTwoKey _),
-    "p14_zip_normalize" -> (CoreQueries.p14ZipNormalize _),
-    "p5_try_casts"      -> (CoreQueries.p5TryCasts _),
-    "j3_knn_nearest"    -> (CoreQueries.j3KnnNearest _),
-    "p17_haversine"     -> (CoreQueries.p17Haversine _),
-    "j2_crosstype_join" -> (CoreQueries.j2CrossTypeJoin _),
-    "s1_csv_roundtrip"  -> (SourceQueries.s1CsvRoundtrip _),
-    "s8_jdbc_extract"   -> (SourceQueries.s8JdbcExtract _),
-    "s2_staged_partitions" -> (SourceQueries.s2StagedPartitions _),
-    "s10_tsv"           -> (SourceQueries.s10Tsv _),
-    "s7_xml_shred"      -> (SourceQueries.s7XmlShred _),
-    "s9_schema_inference" -> (SourceQueries.s9SchemaInference _),
-    "s11_ctas_insert_view" -> (SourceQueries.s11CtasInsertView _),
-    "s15_jsonl_roundtrip" -> (SourceQueries.s15JsonlRoundtrip _),
-    "s16_orc_roundtrip"   -> (SourceQueries.s16OrcRoundtrip _),
-    "v1_variant_shred"    -> (SourceQueries.v1VariantShred _),
-    "v2_variant_flatten"  -> (SourceQueries.v2VariantFlatten _),
-    "s17_zorder_layout"   -> (SourceQueries.s17ZorderLayout _),
-    "s18_gzip_csv"        -> (SourceQueries.s18GzipCsv _),
-    "s19_shard_manifest"  -> (SourceQueries.s19ShardManifest _),
-  ) ++ ExtensionQueries.queries ++ OlapQueries.queries
-
-  /** Spec-verified queries timed by Bench but excluded from the driver's
-    * oracle ledger (no portable SQL equivalent). */
-  def benchOnly: Map[String, (SparkSession, String) => DataFrame] =
-    ExtensionQueries.benchOnly
-
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] = Map(
-    "a1_po_totals" ->
+  /** The core and source rows, one per implemented operator from
+    * SURVEY.md §2: each builder beside the ANSI SQL that DuckDB runs over
+    * the same parquet tables to restate it. */
+  private val coreRows: Seq[RowDef] = Seq(
+    RowDef("a1_po_totals", CoreQueries.a1PoTotals, Some(
       """SELECT l_orderkey,
         | CAST(ROUND(SUM(COALESCE(CAST(l_quantity AS DECIMAL(18,4)),0)
         |   * COALESCE(CAST(l_extendedprice AS DECIMAL(18,4)),0)), 2) AS DOUBLE) AS total_amount,
         | COUNT(*) AS line_count
-        |FROM lineitem GROUP BY l_orderkey ORDER BY l_orderkey""".stripMargin,
+        |FROM lineitem GROUP BY l_orderkey ORDER BY l_orderkey""".stripMargin)),
 
-    "j1_reconciliation" ->
+    RowDef("j1_reconciliation", CoreQueries.j1Reconciliation, Some(
       """WITH li AS (
         |  SELECT l_orderkey,
         |    SUM(COALESCE(CAST(l_extendedprice AS DECIMAL(18,4)),0)) AS li_total
@@ -96,32 +37,32 @@ object SparkEntry {
         | CAST(ROUND(li.li_total, 2) AS DOUBLE) AS lineitem_total,
         | CAST(ROUND(CAST(o.o_totalprice AS DECIMAL(18,4)) - li.li_total, 2) AS DOUBLE) AS variance
         |FROM orders o JOIN li ON o.o_orderkey = li.l_orderkey
-        |ORDER BY o.o_orderkey""".stripMargin,
+        |ORDER BY o.o_orderkey""".stripMargin)),
 
-    "w1_top1_per_key" ->
+    RowDef("w1_top1_per_key", CoreQueries.w1Top1PerKey, Some(
       """SELECT l_orderkey, l_linenumber, l_extendedprice FROM (
         | SELECT l_orderkey, l_linenumber, l_extendedprice,
         |  ROW_NUMBER() OVER (PARTITION BY l_orderkey
         |    ORDER BY l_extendedprice DESC, l_linenumber ASC) AS rn
-        | FROM lineitem) t WHERE rn = 1 ORDER BY l_orderkey""".stripMargin,
+        | FROM lineitem) t WHERE rn = 1 ORDER BY l_orderkey""".stripMargin)),
 
-    "w2_minby_top1" ->
+    RowDef("w2_minby_top1", CoreQueries.w2MinByTop1, Some(
       """SELECT l_orderkey, l_linenumber, l_extendedprice FROM (
         | SELECT l_orderkey, l_linenumber, l_extendedprice,
         |  ROW_NUMBER() OVER (PARTITION BY l_orderkey
         |    ORDER BY l_extendedprice DESC, l_linenumber ASC) AS rn
-        | FROM lineitem) t WHERE rn = 1 ORDER BY l_orderkey""".stripMargin,
+        | FROM lineitem) t WHERE rn = 1 ORDER BY l_orderkey""".stripMargin)),
 
-    "j6_salted_join" ->
+    RowDef("j6_salted_join", CoreQueries.j6SaltedJoin, Some(
       """SELECT e.event_id, e.user_id, c.c_name, e.value
         |FROM events e JOIN customer c ON e.user_id = c.c_custkey
-        |ORDER BY e.event_id""".stripMargin,
+        |ORDER BY e.event_id""".stripMargin)),
 
-    "a3_distinct" ->
+    RowDef("a3_distinct", CoreQueries.a3Distinct, Some(
       """SELECT DISTINCT c_nationkey, c_mktsegment FROM customer
-        |ORDER BY c_nationkey, c_mktsegment""".stripMargin,
+        |ORDER BY c_nationkey, c_mktsegment""".stripMargin)),
 
-    "q_tpch_q3" ->
+    RowDef("q_tpch_q3", CoreQueries.qTpchQ3, Some(
       """SELECT o_orderkey, o_date, revenue FROM (
         | SELECT o.o_orderkey, CAST(o.o_orderdate AS DATE) AS o_date,
         |  CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(18,4)) *
@@ -129,9 +70,9 @@ object SparkEntry {
         | FROM orders o JOIN lineitem ON o.o_orderkey = l_orderkey
         | WHERE o.o_orderpriority = '1-URGENT'
         | GROUP BY o.o_orderkey, CAST(o.o_orderdate AS DATE)) t
-        |ORDER BY revenue DESC, o_orderkey ASC LIMIT 10""".stripMargin,
+        |ORDER BY revenue DESC, o_orderkey ASC LIMIT 10""".stripMargin)),
 
-    "q_tpch_q5" ->
+    RowDef("q_tpch_q5", CoreQueries.qTpchQ5, Some(
       """SELECT n.n_name,
         | CAST(ROUND(SUM(CAST(l.l_extendedprice AS DECIMAL(18,4)) *
         |   (CAST(1 AS DECIMAL(18,4)) - CAST(l.l_discount AS DECIMAL(18,4)))), 2) AS DOUBLE) AS revenue,
@@ -144,9 +85,9 @@ object SparkEntry {
         |JOIN supplier s ON s.s_suppkey = l.l_suppkey
         |              AND s.s_nationkey = c.c_nationkey
         |WHERE r.r_name = 'ASIA'
-        |GROUP BY n.n_name ORDER BY n.n_name""".stripMargin,
+        |GROUP BY n.n_name ORDER BY n.n_name""".stripMargin)),
 
-    "q_tpch_q18" ->
+    RowDef("q_tpch_q18", CoreQueries.qTpchQ18, Some(
       """SELECT c.c_name, c.c_custkey, o.o_orderkey,
         | CAST(o.o_orderdate AS DATE) AS o_orderdate, o.o_totalprice,
         | CAST(ROUND(big.sum_qty, 2) AS DOUBLE) AS sum_qty
@@ -157,9 +98,9 @@ object SparkEntry {
         |      HAVING SUM(CAST(l_quantity AS DECIMAL(18,4))) > 150) big
         |  ON o.o_orderkey = big.l_orderkey
         |JOIN customer c ON o.o_custkey = c.c_custkey
-        |ORDER BY o.o_orderkey""".stripMargin,
+        |ORDER BY o.o_orderkey""".stripMargin)),
 
-    "q_tpch_q10" ->
+    RowDef("q_tpch_q10", CoreQueries.qTpchQ10, Some(
       """SELECT c_custkey, c_name, c_acctbal, n_name, revenue FROM (
         | SELECT c.c_custkey, c.c_name, c.c_acctbal, n.n_name,
         |  CAST(ROUND(SUM(CAST(l.l_extendedprice AS DECIMAL(18,4)) *
@@ -173,9 +114,9 @@ object SparkEntry {
         |   AND o.o_orderdate >= TIMESTAMP '1995-10-01 00:00:00'
         |   AND o.o_orderdate <  TIMESTAMP '1996-01-01 00:00:00'
         | GROUP BY c.c_custkey, c.c_name, c.c_acctbal, n.n_name) t
-        |ORDER BY revenue DESC, c_custkey ASC LIMIT 20""".stripMargin,
+        |ORDER BY revenue DESC, c_custkey ASC LIMIT 20""".stripMargin)),
 
-    "q_tpch_q7" ->
+    RowDef("q_tpch_q7", CoreQueries.qTpchQ7, Some(
       """SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
         | CAST(year(l.l_shipdate) AS BIGINT) AS l_year,
         | CAST(ROUND(SUM(CAST(l.l_extendedprice AS DECIMAL(18,4)) *
@@ -192,9 +133,9 @@ object SparkEntry {
         |  AND n2.n_name IN ('NATION_0','NATION_1','NATION_2','NATION_3')
         |  AND n1.n_name <> n2.n_name
         |GROUP BY n1.n_name, n2.n_name, year(l.l_shipdate)
-        |ORDER BY supp_nation, cust_nation, l_year""".stripMargin,
+        |ORDER BY supp_nation, cust_nation, l_year""".stripMargin)),
 
-    "q_tpch_q14" ->
+    RowDef("q_tpch_q14", CoreQueries.qTpchQ14, Some(
       """WITH g AS (
         | SELECT CAST(date_trunc('month', l.l_shipdate) AS DATE) AS month,
         |  SUM(CAST(l.l_extendedprice AS DECIMAL(18,4)) *
@@ -210,9 +151,9 @@ object SparkEntry {
         | CAST(ROUND(p, 2) AS DOUBLE) AS promo_revenue,
         | CAST(CAST(ROUND(p, 2) * 100 AS BIGINT) * 1000000
         |      // CAST(ROUND(r, 2) * 100 AS BIGINT) AS BIGINT) AS promo_ppm
-        |FROM g ORDER BY month""".stripMargin,
+        |FROM g ORDER BY month""".stripMargin)),
 
-    "q_tpch_q19" ->
+    RowDef("q_tpch_q19", CoreQueries.qTpchQ19, Some(
       """SELECT
         | CAST(ROUND(SUM(CAST(l.l_extendedprice AS DECIMAL(18,4)) *
         |   (CAST(1 AS DECIMAL(18,4)) - CAST(l.l_discount AS DECIMAL(18,4)))), 2)
@@ -224,9 +165,9 @@ object SparkEntry {
         |   OR (p.p_brand = 'Brand#2' AND p.p_size BETWEEN 1 AND 25
         |       AND l.l_quantity BETWEEN 10 AND 20)
         |   OR (p.p_brand = 'Brand#3' AND p.p_size BETWEEN 1 AND 35
-        |       AND l.l_quantity BETWEEN 20 AND 30)""".stripMargin,
+        |       AND l.l_quantity BETWEEN 20 AND 30)""".stripMargin)),
 
-    "q_tpch_q1" ->
+    RowDef("q_tpch_q1", CoreQueries.qTpchQ1, Some(
       """WITH g AS (
         | SELECT l_returnflag, l_linestatus,
         |  SUM(CAST(l_quantity AS DECIMAL(18,4))) AS sq,
@@ -253,9 +194,9 @@ object SparkEntry {
         | CAST(CAST(ROUND(sd, 4) * 10000 AS BIGINT) * 100
         |      // count_order AS BIGINT) AS avg_disc_micro,
         | count_order
-        |FROM g ORDER BY l_returnflag, l_linestatus""".stripMargin,
+        |FROM g ORDER BY l_returnflag, l_linestatus""".stripMargin)),
 
-    "q_tpch_q13" ->
+    RowDef("q_tpch_q13", CoreQueries.qTpchQ13, Some(
       """SELECT c_count, COUNT(*) AS custdist FROM (
         | SELECT c.c_custkey, COUNT(o.o_orderkey) AS c_count
         | FROM customer c LEFT JOIN orders o
@@ -263,9 +204,9 @@ object SparkEntry {
         |   AND o.o_orderpriority <> '1-URGENT'
         | GROUP BY c.c_custkey) t
         |GROUP BY c_count
-        |ORDER BY custdist DESC, c_count DESC""".stripMargin,
+        |ORDER BY custdist DESC, c_count DESC""".stripMargin)),
 
-    "q_tpch_q17" ->
+    RowDef("q_tpch_q17", CoreQueries.qTpchQ17, Some(
       """SELECT
         | CAST(CAST(ROUND(SUM(CAST(l.l_extendedprice AS DECIMAL(18,4))), 2)
         |   * 100 AS BIGINT) // 7 AS BIGINT) AS avg_yearly_cents,
@@ -274,9 +215,9 @@ object SparkEntry {
         |WHERE p.p_brand = 'Brand#1' AND p.p_size < 10
         |  AND l.l_quantity * 5 <
         |      (SELECT SUM(l2.l_quantity) / COUNT(*) FROM lineitem l2
-        |       WHERE l2.l_partkey = l.l_partkey)""".stripMargin,
+        |       WHERE l2.l_partkey = l.l_partkey)""".stripMargin)),
 
-    "q_tpch_q22" ->
+    RowDef("q_tpch_q22", CoreQueries.qTpchQ22, Some(
       """SELECT c.c_nationkey AS cntrycode, COUNT(*) AS numcust,
         | CAST(ROUND(SUM(CAST(c.c_acctbal AS DECIMAL(18,4))), 2) AS DOUBLE)
         |   AS totacctbal
@@ -289,9 +230,9 @@ object SparkEntry {
         |                  WHERE o.o_custkey = c.c_custkey
         |                    AND o.o_orderpriority = '1-URGENT')
         |GROUP BY c.c_nationkey
-        |ORDER BY cntrycode""".stripMargin,
+        |ORDER BY cntrycode""".stripMargin)),
 
-    "q_tpch_q21" ->
+    RowDef("q_tpch_q21", CoreQueries.qTpchQ21, Some(
       """SELECT s.s_name, COUNT(*) AS numwait
         |FROM supplier s
         |JOIN lineitem l1 ON l1.l_suppkey = s.s_suppkey
@@ -307,9 +248,9 @@ object SparkEntry {
         |                    AND l3.l_returnflag = 'R')
         |GROUP BY s.s_name
         |ORDER BY numwait DESC, s_name ASC
-        |LIMIT 100""".stripMargin,
+        |LIMIT 100""".stripMargin)),
 
-    "q_tpch_q2" ->
+    RowDef("q_tpch_q2", CoreQueries.qTpchQ2, Some(
       """WITH ps AS (SELECT l_partkey AS ps_partkey, l_suppkey AS ps_suppkey,
         |  MIN(l_extendedprice) AS ps_supplycost, SUM(l_quantity) AS ps_availqty
         |  FROM lineitem GROUP BY l_partkey, l_suppkey)
@@ -330,9 +271,9 @@ object SparkEntry {
         |    JOIN region r2 ON r2.r_regionkey = n2.n_regionkey
         |    WHERE ps2.ps_partkey = p.p_partkey AND r2.r_name = 'EUROPE')
         |ORDER BY s.s_acctbal DESC, n.n_name, s.s_name, p.p_partkey
-        |LIMIT 100""".stripMargin,
+        |LIMIT 100""".stripMargin)),
 
-    "q_tpch_q15" ->
+    RowDef("q_tpch_q15", CoreQueries.qTpchQ15, Some(
       """WITH revenue AS (
         |  SELECT l_suppkey AS supplier_no,
         |    SUM(CAST(l_extendedprice AS DECIMAL(18,4)) *
@@ -346,9 +287,9 @@ object SparkEntry {
         |  CAST(ROUND(r.total_revenue, 2) AS DOUBLE) AS total_revenue
         |FROM supplier s JOIN revenue r ON s.s_suppkey = r.supplier_no
         |WHERE r.total_revenue = (SELECT MAX(total_revenue) FROM revenue)
-        |ORDER BY s.s_suppkey""".stripMargin,
+        |ORDER BY s.s_suppkey""".stripMargin)),
 
-    "q_tpch_q4" ->
+    RowDef("q_tpch_q4", CoreQueries.qTpchQ4, Some(
       """SELECT o.o_orderpriority, COUNT(*) AS order_count
         |FROM orders o
         |WHERE o.o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
@@ -357,9 +298,9 @@ object SparkEntry {
         |              WHERE l.l_orderkey = o.o_orderkey
         |                AND l.l_returnflag = 'R')
         |GROUP BY o.o_orderpriority
-        |ORDER BY o_orderpriority""".stripMargin,
+        |ORDER BY o_orderpriority""".stripMargin)),
 
-    "q_tpch_q6" ->
+    RowDef("q_tpch_q6", CoreQueries.qTpchQ6, Some(
       """SELECT
         | CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(18,4)) *
         |   CAST(l_discount AS DECIMAL(6,4))), 2) AS DOUBLE) AS revenue,
@@ -368,9 +309,9 @@ object SparkEntry {
         |WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
         |  AND l_shipdate <  TIMESTAMP '1997-01-01 00:00:00'
         |  AND l_discount >= 0.05 AND l_discount <= 0.07
-        |  AND l_quantity < 24""".stripMargin,
+        |  AND l_quantity < 24""".stripMargin)),
 
-    "q_tpch_q8" ->
+    RowDef("q_tpch_q8", CoreQueries.qTpchQ8, Some(
       """WITH vol AS (
         | SELECT CAST(year(o.o_orderdate) AS BIGINT) AS o_year,
         |  CAST(l.l_extendedprice AS DECIMAL(18,4)) *
@@ -397,9 +338,9 @@ object SparkEntry {
         | CAST(ROUND(tv, 2) AS DOUBLE) AS total_volume,
         | CAST(CAST(ROUND(nv, 2) * 100 AS BIGINT) * 1000000
         |      // CAST(ROUND(tv, 2) * 100 AS BIGINT) AS BIGINT) AS share_ppm
-        |FROM g ORDER BY o_year""".stripMargin,
+        |FROM g ORDER BY o_year""".stripMargin)),
 
-    "q_tpch_q9" ->
+    RowDef("q_tpch_q9", CoreQueries.qTpchQ9, Some(
       """WITH ps AS (SELECT l_partkey AS ps_partkey, l_suppkey AS ps_suppkey,
         |  MIN(l_extendedprice) AS ps_supplycost, SUM(l_quantity) AS ps_availqty
         |  FROM lineitem GROUP BY l_partkey, l_suppkey)
@@ -420,9 +361,9 @@ object SparkEntry {
         |JOIN nation n ON n.n_nationkey = s.s_nationkey
         |WHERE p.p_name LIKE '%gear%'
         |GROUP BY n.n_name, year(o.o_orderdate)
-        |ORDER BY nation, o_year DESC""".stripMargin,
+        |ORDER BY nation, o_year DESC""".stripMargin)),
 
-    "q_tpch_q11" ->
+    RowDef("q_tpch_q11", CoreQueries.qTpchQ11, Some(
       """WITH ps AS (SELECT l_partkey AS ps_partkey, l_suppkey AS ps_suppkey,
         |  MIN(l_extendedprice) AS ps_supplycost, SUM(l_quantity) AS ps_availqty
         |  FROM lineitem GROUP BY l_partkey, l_suppkey),
@@ -438,9 +379,9 @@ object SparkEntry {
         |SELECT ps_partkey, CAST(ROUND(value, 2) AS DOUBLE) AS value
         |FROM v
         |WHERE value * 1000 > (SELECT SUM(value) FROM v)
-        |ORDER BY value DESC, ps_partkey""".stripMargin,
+        |ORDER BY value DESC, ps_partkey""".stripMargin)),
 
-    "q_tpch_q12" ->
+    RowDef("q_tpch_q12", CoreQueries.qTpchQ12, Some(
       """SELECT l.l_returnflag AS ret_mode,
         | CAST(SUM(CASE WHEN o.o_orderpriority IN ('1-URGENT','2-HIGH')
         |     THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
@@ -452,9 +393,9 @@ object SparkEntry {
         |  AND l.l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
         |  AND l.l_shipdate <  TIMESTAMP '1997-01-01 00:00:00'
         |GROUP BY l.l_returnflag
-        |ORDER BY ret_mode""".stripMargin,
+        |ORDER BY ret_mode""".stripMargin)),
 
-    "q_tpch_q16" ->
+    RowDef("q_tpch_q16", CoreQueries.qTpchQ16, Some(
       """WITH ps AS (SELECT l_partkey AS ps_partkey, l_suppkey AS ps_suppkey,
         |  MIN(l_extendedprice) AS ps_supplycost, SUM(l_quantity) AS ps_availqty
         |  FROM lineitem GROUP BY l_partkey, l_suppkey)
@@ -467,9 +408,9 @@ object SparkEntry {
         |  AND ps.ps_suppkey NOT IN
         |      (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
         |GROUP BY p.p_brand, p.p_type, p.p_size
-        |ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""".stripMargin,
+        |ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""".stripMargin)),
 
-    "q_tpch_q20" ->
+    RowDef("q_tpch_q20", CoreQueries.qTpchQ20, Some(
       """WITH ps AS (SELECT l_partkey AS ps_partkey, l_suppkey AS ps_suppkey,
         |  MIN(l_extendedprice) AS ps_supplycost, SUM(l_quantity) AS ps_availqty
         |  FROM lineitem GROUP BY l_partkey, l_suppkey)
@@ -487,31 +428,31 @@ object SparkEntry {
         |          AND l.l_suppkey = ps.ps_suppkey
         |          AND l.l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
         |          AND l.l_shipdate <  TIMESTAMP '1997-01-01 00:00:00'))
-        |ORDER BY s.s_name, s.s_suppkey""".stripMargin,
+        |ORDER BY s.s_name, s.s_suppkey""".stripMargin)),
 
-    "c3_exists" ->
+    RowDef("c3_exists", CoreQueries.c3Exists, Some(
       """SELECT o_orderkey, o_orderstatus FROM orders o
         |WHERE EXISTS (SELECT 1 FROM lineitem l
         |              WHERE l.l_orderkey = o.o_orderkey AND l.l_discount > 0.09)
         |  AND NOT EXISTS (SELECT 1 FROM lineitem l
         |                  WHERE l.l_orderkey = o.o_orderkey AND l.l_tax > 0.07)
-        |ORDER BY o_orderkey""".stripMargin,
+        |ORDER BY o_orderkey""".stripMargin)),
 
-    "a4_quantile_stats" ->
+    RowDef("a4_quantile_stats", CoreQueries.a4QuantileStats, Some(
       """SELECT l_returnflag, COUNT(DISTINCT l_partkey) AS dc,
         | ROUND(quantile_cont(l_quantity, 0.5), 6) AS p50,
         | ROUND(quantile_cont(l_quantity, 0.95), 6) AS p95
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)),
 
     // a4c: the bounded-state histogram rewrite must reproduce the same
     // order statistics quantile_cont defines
-    "a4c_quantile_hist" ->
+    RowDef("a4c_quantile_hist", CoreQueries.a4cQuantileHist, Some(
       """SELECT l_returnflag, COUNT(DISTINCT l_partkey) AS dc,
         | ROUND(quantile_cont(l_quantity, 0.5), 6) AS p50,
         | ROUND(quantile_cont(l_quantity, 0.95), 6) AS p95
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)),
 
-    "j5_threeway_2key" ->
+    RowDef("j5_threeway_2key", CoreQueries.j5ThreeWayTwoKey, Some(
       """SELECT e.event_id, o.o_orderkey, c.c_name, c.c_mktsegment, e.value
         |FROM (SELECT event_id, user_id, EXTRACT(day FROM CAST(ts AS DATE)) AS event_day, value
         |      FROM events WHERE event_type = 'purchase') e
@@ -519,9 +460,9 @@ object SparkEntry {
         |      FROM orders) o
         |  ON e.user_id = o.o_custkey AND e.event_day = o.o_day
         |JOIN customer c ON o.o_custkey = c.c_custkey
-        |ORDER BY e.event_id, o.o_orderkey""".stripMargin,
+        |ORDER BY e.event_id, o.o_orderkey""".stripMargin)),
 
-    "p14_zip_normalize" ->
+    RowDef("p14_zip_normalize", CoreQueries.p14ZipNormalize, Some(
       """SELECT s_suppkey, zip5 FROM (
         | SELECT s_suppkey,
         |  LPAD(RIGHT(COALESCE(
@@ -529,9 +470,9 @@ object SparkEntry {
         |    TRIM(CAST(s_nationkey AS VARCHAR))), 5), 5, '0') AS zip5
         | FROM supplier) t
         |WHERE zip5 IS NOT NULL AND zip5 <> ''
-        |ORDER BY s_suppkey""".stripMargin,
+        |ORDER BY s_suppkey""".stripMargin)),
 
-    "p5_try_casts" ->
+    RowDef("p5_try_casts", CoreQueries.p5TryCasts, Some(
       """SELECT event_id,
         | CAST(TRY_CAST(CAST(CAST(value AS DECIMAL(18,2)) AS VARCHAR) AS DECIMAL(18,2)) AS DOUBLE) AS num_val,
         | TRY_CAST(CAST(CAST(ts AS DATE) AS VARCHAR) AS DATE) AS date_val,
@@ -539,9 +480,9 @@ object SparkEntry {
         | TRY_CAST(event_type AS INTEGER) AS bad_int,
         | NULLIF(TRIM('  ' || event_type || '  '), '') AS trimmed,
         | (TRY_CAST(CAST(event_id % 2 AS VARCHAR) AS INTEGER) = 1) AS flag
-        |FROM events ORDER BY event_id""".stripMargin,
+        |FROM events ORDER BY event_id""".stripMargin)),
 
-    "j3_knn_nearest" ->
+    RowDef("j3_knn_nearest", CoreQueries.j3KnnNearest, Some(
       """WITH sup AS (SELECT DISTINCT s_suppkey,
         |   CAST((s_suppkey*7) % 120 - 60 AS DECIMAL(10,4)) AS s_lat,
         |   CAST((s_suppkey*13) % 340 - 170 AS DECIMAL(10,4)) AS s_lon FROM supplier),
@@ -555,9 +496,9 @@ object SparkEntry {
         |              station_id ASC) AS rn
         |  FROM sup CROSS JOIN st)
         |SELECT s_suppkey, station_id, CAST(d2 AS DOUBLE) AS dist_sq
-        |FROM crossed WHERE rn = 1 ORDER BY s_suppkey""".stripMargin,
+        |FROM crossed WHERE rn = 1 ORDER BY s_suppkey""".stripMargin)),
 
-    "p17_haversine" ->
+    RowDef("p17_haversine", CoreQueries.p17Haversine, Some(
       """WITH sup AS (SELECT s_suppkey,
         |   CAST((s_suppkey*7) % 120 - 60 AS DOUBLE) AS s_lat,
         |   CAST((s_suppkey*13) % 340 - 170 AS DOUBLE) AS s_lon FROM supplier),
@@ -569,31 +510,31 @@ object SparkEntry {
         |   POW(SIN((RADIANS(t_lat)-RADIANS(s_lat))/2),2) +
         |   COS(RADIANS(s_lat))*COS(RADIANS(t_lat))*POW(SIN((RADIANS(t_lon)-RADIANS(s_lon))/2),2))), 1) AS dist_km
         |FROM sup CROSS JOIN st
-        |ORDER BY s_suppkey, station_id""".stripMargin,
+        |ORDER BY s_suppkey, station_id""".stripMargin)),
 
-    "j2_crosstype_join" ->
+    RowDef("j2_crosstype_join", CoreQueries.j2CrossTypeJoin, Some(
       """SELECT c.c_custkey, c.c_name, n.n_name
         |FROM customer c
         |JOIN (SELECT CAST(n_nationkey AS VARCHAR) AS nation_code, n_name FROM nation) n
         |  ON CAST(c.c_nationkey AS VARCHAR) = n.nation_code
-        |ORDER BY c.c_custkey""".stripMargin,
+        |ORDER BY c.c_custkey""".stripMargin)),
 
-    "s1_csv_roundtrip" ->
+    RowDef("s1_csv_roundtrip", SourceQueries.s1CsvRoundtrip, Some(
       """SELECT l_returnflag, l_linestatus, COUNT(*) AS n_rows,
         | CAST(ROUND(SUM(CAST(l_quantity AS DECIMAL(18,4))),2) AS DOUBLE) AS sum_qty,
         | CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(18,4))),2) AS DOUBLE) AS sum_price,
         | COUNT(l_shipdate) AS n_dates
         |FROM lineitem GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
+        |ORDER BY l_returnflag, l_linestatus""".stripMargin)),
 
-    "s8_jdbc_extract" ->
+    RowDef("s8_jdbc_extract", SourceQueries.s8JdbcExtract, Some(
       """SELECT CAST(s_nationkey AS INT) AS nation,
         | COUNT(*) AS n_suppliers,
         | CAST(SUM(length(s_name)) AS BIGINT) AS sum_name_len,
         | CAST(ROUND(SUM(CAST(s_acctbal AS DECIMAL(18,2))), 2) AS DOUBLE) AS total_bal
-        |FROM supplier GROUP BY 1 ORDER BY nation""".stripMargin,
+        |FROM supplier GROUP BY 1 ORDER BY nation""".stripMargin)),
 
-    "s2_staged_partitions" ->
+    RowDef("s2_staged_partitions", SourceQueries.s2StagedPartitions, Some(
       """SELECT yr, mo,
         | 'purchases_' || CAST(yr AS VARCHAR) || '_' ||
         |   lpad(CAST(mo AS VARCHAR), 2, '0') || '.csv' AS src_filename,
@@ -604,9 +545,9 @@ object SparkEntry {
         |        CAST(EXTRACT(month FROM CAST(o_orderdate AS DATE)) AS INT) AS mo,
         |        o_totalprice
         |      FROM orders) t
-        |GROUP BY yr, mo ORDER BY yr, mo""".stripMargin,
+        |GROUP BY yr, mo ORDER BY yr, mo""".stripMargin)),
 
-    "s10_tsv" ->
+    RowDef("s10_tsv", SourceQueries.s10Tsv, Some(
       """SELECT state, COUNT(*) AS n_zips,
         | CAST(ROUND(SUM(lat), 4) AS DOUBLE) AS sum_lat,
         | CAST(ROUND(SUM(lng), 4) AS DOUBLE) AS sum_lng,
@@ -617,9 +558,9 @@ object SparkEntry {
         |        CAST((s_suppkey * 13) % 340 - 170 AS DECIMAL(10,4)) AS lng,
         |        'ST' || lpad(CAST(s_nationkey AS VARCHAR), 2, '0') AS state
         |      FROM supplier) t
-        |GROUP BY state ORDER BY state""".stripMargin,
+        |GROUP BY state ORDER BY state""".stripMargin)),
 
-    "s7_xml_shred" ->
+    RowDef("s7_xml_shred", SourceQueries.s7XmlShred, Some(
       """SELECT transaction_id, supplier_id, invoice_number, transaction_date,
         |       amount, is_finalized, xml_index
         |FROM (
@@ -633,24 +574,24 @@ object SparkEntry {
         |        ORDER BY o_orderkey) - 1 AS BIGINT) AS xml_index
         |  FROM orders) t
         |WHERE transaction_id % 97 <> 0
-        |ORDER BY transaction_id""".stripMargin,
+        |ORDER BY transaction_id""".stripMargin)),
 
-    "s9_schema_inference" ->
+    RowDef("s9_schema_inference", SourceQueries.s9SchemaInference, Some(
       """SELECT * FROM (VALUES
         | ('date_col','date'), ('date_mixed_fmt','date'), ('id_col','long'),
         | ('mixed_col','double'), ('name_col','string'), ('null_col','string'),
         | ('num_col','double')) AS t(column_name, inferred_type)
-        |ORDER BY column_name""".stripMargin,
+        |ORDER BY column_name""".stripMargin)),
 
-    "s15_jsonl_roundtrip" ->
+    RowDef("s15_jsonl_roundtrip", SourceQueries.s15JsonlRoundtrip, Some(
       """SELECT lang, COUNT(*) AS n,
         | CAST(SUM(n_chars) AS BIGINT) AS sum_chars,
         | CAST(MAX(LENGTH(text)) AS BIGINT) AS max_len
-        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin,
+        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin)),
 
     // s17: the oracle restates the Morton interleave as a literal
     // bit-arithmetic sum — all integers, so cells and stats are exact
-    "s17_zorder_layout" -> {
+    RowDef("s17_zorder_layout", SourceQueries.s17ZorderLayout, Some {
       val zTerms = (0 until 12).map(i =>
         s"((px >> $i) & 1) * ${1L << (2 * i)} + " +
           s"((py >> $i) & 1) * ${1L << (2 * i + 1)}")
@@ -664,13 +605,13 @@ object SparkEntry {
          | MIN(z) AS min_z, MAX(z) AS max_z,
          | (MAX(px)-MIN(px)+1) * (MAX(py)-MIN(py)+1) AS bbox_area
          |FROM z GROUP BY cell ORDER BY cell""".stripMargin
-    },
+    }),
 
     // v1: oracle recomputes every VARIANT-extracted value straight from
     // the base columns — a hash match proves the JSON→VARIANT→typed-path
     // chain (incl. double round-trip) is lossless. The two try_ columns
     // are null by construction (missing path; 'click'→bigint cast fail).
-    "v1_variant_shred" ->
+    RowDef("v1_variant_shred", SourceQueries.v1VariantShred, Some(
       """SELECT event_id,
         | event_type AS etype,
         | value AS val_back,
@@ -679,13 +620,13 @@ object SparkEntry {
         | user_id % 7 AS user_mod7,
         | CAST(NULL AS BIGINT) AS absent,
         | CAST(NULL AS BIGINT) AS type_as_num
-        |FROM events ORDER BY event_id""".stripMargin,
+        |FROM events ORDER BY event_id""".stripMargin)),
 
     // v2: oracle restates every array element from the same base-column
     // key arithmetic — one row per (event, ordinal), elem_key null in
     // array mode, try_ columns null (string→bigint cast fail; missing
     // path). unnest(generate_series) is DuckDB's lateral-flatten twin.
-    "v2_variant_flatten" ->
+    RowDef("v2_variant_flatten", SourceQueries.v2VariantFlatten, Some(
       """WITH f AS (
         | SELECT event_id, event_type,
         |  unnest(generate_series(0, CAST(user_id % 3 AS BIGINT))) AS i
@@ -698,32 +639,32 @@ object SparkEntry {
         | event_type || '-' || CAST(i AS VARCHAR) AS name,
         | CAST(NULL AS BIGINT) AS name_as_num,
         | CAST(NULL AS VARCHAR) AS absent
-        |FROM f ORDER BY event_id, ord""".stripMargin,
+        |FROM f ORDER BY event_id, ord""".stripMargin)),
 
-    "s16_orc_roundtrip" ->
+    RowDef("s16_orc_roundtrip", SourceQueries.s16OrcRoundtrip, Some(
       """SELECT source, COUNT(*) AS n,
         | CAST(SUM(n_chars) AS BIGINT) AS sum_chars
-        |FROM documents GROUP BY source ORDER BY source""".stripMargin,
+        |FROM documents GROUP BY source ORDER BY source""".stripMargin)),
 
-    "s18_gzip_csv" ->
+    RowDef("s18_gzip_csv", SourceQueries.s18GzipCsv, Some(
       """SELECT o_orderstatus, COUNT(*) AS n_rows,
         | CAST(ROUND(SUM(CAST(o_totalprice AS DECIMAL(18,4))), 2) AS DOUBLE)
         |   AS sum_price,
         | COUNT(DISTINCT CAST(o_orderdate AS DATE)) AS n_dates,
         | MIN(o_orderkey) AS min_key, MAX(o_orderkey) AS max_key
-        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
+        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin)),
 
-    "s11_ctas_insert_view" ->
+    RowDef("s11_ctas_insert_view", SourceQueries.s11CtasInsertView, Some(
       """SELECT o_orderstatus, COUNT(*) AS n,
         | CAST(ROUND(SUM(CAST(o_totalprice AS DECIMAL(18,4))), 2) AS DOUBLE) AS total
         |FROM orders WHERE o_orderstatus IN ('F','O')
-        |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
+        |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin)),
 
     // s19: the oracle recomputes the minstd shard route and the
     // per-shard masses from the original parquet, and states n_files
     // as the literal 1 — Spark's count_distinct(input_file_name())
     // must agree, which pins the one-file-per-shard write layout
-    "s19_shard_manifest" ->
+    RowDef("s19_shard_manifest", SourceQueries.s19ShardManifest, Some(
       """WITH d AS (SELECT doc_id, text,
         |        ((doc_id * 48271) % 2147483647) % 8 AS shard
         |      FROM documents)
@@ -732,6 +673,29 @@ object SparkEntry {
         | CAST(SUM(len(string_split(text, ' '))) AS BIGINT) AS sum_tokens,
         | MIN(doc_id) AS min_doc, MAX(doc_id) AS max_doc,
         | CAST(1 AS BIGINT) AS n_files
-        |FROM d GROUP BY shard ORDER BY shard""".stripMargin,
-  ) ++ ExtensionQueries.oracles ++ OlapQueries.oracles
+        |FROM d GROUP BY shard ORDER BY shard""".stripMargin)),
+  )
+
+  /** Every bench row, declared once: the core/source rows plus the
+    * extension and OLAP families. A name declared twice fails here. */
+  val rows: Seq[RowDef] =
+    RowDef.distinct(coreRows ++ ExtensionQueries.rows ++ OlapQueries.rows)
+
+  /** Every row's builder, with or without an oracle: what Bench times. */
+  val all: Map[String, (SparkSession, String) => DataFrame] =
+    rows.map(r => r.name -> r.build).toMap
+
+  /** The oracle-checked rows: what Verify dumps for the DuckDB compare. */
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    rows.collect { case r if r.oracle.isDefined => r.name -> r.build }.toMap
+
+  /** Rows Bench times but Verify never dumps (no portable SQL
+    * equivalent); a spec pins each one instead. */
+  val benchOnly: Map[String, (SparkSession, String) => DataFrame] =
+    rows.collect { case r if r.oracle.isEmpty => r.name -> r.build }.toMap
+
+  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
+    * the same parquet tables. */
+  val oracleSql: Map[String, String] =
+    rows.flatMap(r => r.oracle.map(r.name -> _)).toMap
 }

@@ -25,7 +25,7 @@ object SpillProbe {
     val names = if (args.length > 1) args.drop(1).toSeq
       else Seq("x10_corpus_pipeline", "x28_domain_budget",
         "a4_quantile_stats", "x22d_topic_fitted", "w6_scd2_history")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = LocalCpus()
     // Per-task input = partition size: at a FIXED executor memory the
     // partition COUNT must scale with the input (the canonical cluster
     // operating rule — a 25x corpus over the same 32 partitions is 25x
@@ -54,7 +54,6 @@ object SpillProbe {
       }
     })
 
-    val all = SparkEntry.queries ++ SparkEntry.benchOnly
     println(s"""{"probe":"spill","sf":"$sfDir","xmx_mb":${
       Runtime.getRuntime.maxMemory() / (1 << 20)},"mem_fraction":"${
       spark.conf.getOption("spark.memory.fraction").getOrElse("default")}"}""")
@@ -63,7 +62,7 @@ object SpillProbe {
       val t0 = System.nanoTime()
       val ok =
         try {
-          all(name)(spark, sfDir)
+          SparkEntry.all(name)(spark, sfDir)
             .write.format("noop").mode("overwrite").save()
           true
         } catch {

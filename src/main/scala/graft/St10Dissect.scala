@@ -15,7 +15,7 @@ object St10Dissect {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val reps = if (args.length > 1) args(1).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = LocalCpus()
     val spark = SparkSession.builder().master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", "true")

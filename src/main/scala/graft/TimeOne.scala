@@ -6,7 +6,7 @@ object TimeOne {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = LocalCpus()
     // SPARK_GRAFT_SHUFFLE decouples reduce partition count from task
     // slots (the SpillProbe levers) for memory-posture experiments
     val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
@@ -505,7 +505,7 @@ object TimeOne {
         off.groupBy().agg(count(lit(1)).as("n"), max(col("start_off")).as("mx"),
           sum(col("start_off")).as("ck"))
       case other    =>
-        (SparkEntry.queries ++ SparkEntry.benchOnly)(other)(spark, sfDir)
+        SparkEntry.all(other)(spark, sfDir)
     }
     SparkEntry.queries("a1_po_totals")(spark, sfDir).write.format("noop").mode("overwrite").save()
     // SPARK_GRAFT_WARMUP_DIR: run the SAME query once on a tiny SF
@@ -513,7 +513,7 @@ object TimeOne {
     // warmup (paid here, on negligible data) from data-dependent
     // first-run cost (still in rep1)
     sys.env.get("SPARK_GRAFT_WARMUP_DIR").foreach { wd =>
-      (SparkEntry.queries ++ SparkEntry.benchOnly).get(name) match {
+      SparkEntry.all.get(name) match {
         case Some(q) =>
           val t0 = System.nanoTime()
           q(spark, wd).write.format("noop").mode("overwrite").save()

@@ -6,7 +6,22 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    // Dev loop: SPARK_GRAFT_ONLY=q1,q2 restricts both the dump and
+    // oracle_sql.json to those rows (absent → all), so check_oracle.py
+    // compares exactly them. A name that is not an oracle row fails
+    // here instead of dumping nothing.
+    val only = sys.env.get("SPARK_GRAFT_ONLY")
+      .map(_.split(",").map(_.trim).toSet)
+    only.foreach { set =>
+      val unknown = set -- SparkEntry.queries.keySet
+      require(unknown.isEmpty, "SPARK_GRAFT_ONLY names no oracle row: " +
+        unknown.toSeq.sorted.mkString(", "))
+    }
+    val selected = only match {
+      case Some(set) => SparkEntry.queries.filter { case (n, _) => set(n) }
+      case None      => SparkEntry.queries
+    }
+    val cpus = LocalCpus()
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -16,23 +31,18 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // Dev loop: SPARK_GRAFT_ONLY=q1,q2 restricts the dump (absent → all;
-    // the driver never sets it). check_oracle.py skips missing dirs no —
-    // so pair with a filtered oracle compare or eyeball the parquet.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    val selected = only match {
-      case Some(set) => SparkEntry.queries.filter { case (n, _) => set(n) }
-      case None      => SparkEntry.queries
-    }
     // Exercise every materialized per-snapshot artifact end-to-end:
     // write the bucketed snapshot table once, point the session conf
     // at it, and evict the memo — the consuming queries then run the
     // READ-BACK path, so their oracle rows prove the durable tables
     // serve the same rows the build path does (x35b/x36/x34b in a
     // fresh JVM read saveAsTable artifacts, not memos). Any failure
-    // falls back to the memo build.
-    def snapshot(consumers: Set[String], what: String)(write: => Unit): Unit =
+    // falls back to the memo build. A consumer name must be an oracle
+    // row: after a rename the read-back path would silently go unrun.
+    def snapshot(consumers: Set[String], what: String)(write: => Unit): Unit = {
+      val unknown = consumers -- SparkEntry.queries.keySet
+      require(unknown.isEmpty,
+        s"$what snapshot consumers are not oracle rows: ${unknown.mkString(", ")}")
       if (selected.keys.exists(consumers)) {
         try write
         catch { case e: Throwable =>
@@ -40,6 +50,7 @@ object Verify {
             s"[verify] $what snapshot failed (memo fallback): ${e.getMessage}")
         }
       }
+    }
     snapshot(Set("x11_dup_clusters", "x17_cluster_canonical",
         "x29_leakage_split"), "cluster-map") {
       ExtensionQueries.useClusterMap(spark, sfDir, "g_cluster_map_snapshot")

@@ -31,11 +31,11 @@ object BlueFortyMain {
       if (args.length > 1) args(1) else "/tmp/blueforty_out")
     Files.createDirectories(outDir)
 
+    val cpus = graft.LocalCpus()
     val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
+      .master(s"local[$cpus]")
       .appName("blueforty-pipeline")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.ui.enabled", "false")

@@ -269,18 +269,18 @@ class DurableClusterFoldSpec extends SparkTestBase {
     assert(rows(ExtensionQueries.readClusterMap(spark, serveTable))
       === memoMap)
 
-    val want17 = ExtensionQueries.queries("x17_cluster_canonical")(spark, d)
+    val want17 = SparkEntry.queries("x17_cluster_canonical")(spark, d)
       .collect().map(_.toSeq).toSeq
-    val want29 = ExtensionQueries.queries("x29_leakage_split")(spark, d)
+    val want29 = SparkEntry.queries("x29_leakage_split")(spark, d)
       .collect().map(_.toSeq).toSeq
 
     val s2 = spark.newSession()
     s2.conf.set(ExtensionQueries.ClusterMapTableConf, serveTable)
     s2.conf.set(DurableArtifact.ServeFoldedConf, "true")
     val builds = ExtensionQueries.clusterMapBuilds.get()
-    assert(ExtensionQueries.queries("x17_cluster_canonical")(s2, d)
+    assert(SparkEntry.queries("x17_cluster_canonical")(s2, d)
       .collect().map(_.toSeq).toSeq === want17)
-    assert(ExtensionQueries.queries("x29_leakage_split")(s2, d)
+    assert(SparkEntry.queries("x29_leakage_split")(s2, d)
       .collect().map(_.toSeq).toSeq === want29)
     assert(ExtensionQueries.clusterMapBuilds.get() === builds,
       "fold-aware conf-resolved consumers must serve the patched " +

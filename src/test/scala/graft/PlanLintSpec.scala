@@ -1,7 +1,8 @@
 package graft
 
-/** Plan lint over EVERY SparkEntry query — the two shapes that kill a
-  * 100 TB job must never silently appear in a future change:
+/** Plan lint over EVERY registered SparkEntry row, bench-only included —
+  * the two shapes that kill a 100 TB job must never silently appear in
+  * a future change:
   *
   *  - `CartesianProduct`: an unkeyed shuffled cross join (the j3/p17
   *    nearest-neighbour queries are BroadcastNestedLoop with a
@@ -57,11 +58,20 @@ class PlanLintSpec extends SparkTestBase {
     // the from-index cap stats: two 1-row broadcast aggregates
     // (Σ|index lists| over the index; Σ|batch lists| + batch-only
     // shingle count over the joined batch)
-    "x33_incremental_from_index")
+    "x33_incremental_from_index",
+    // bench-only rows: x32f is x32's AdaptiveAvg cap merge over the
+    // whole union; the artifact-build and stress rows reduce to one
+    // corpus-level stats row (counts and sums of partials)
+    "x32f_union_recompute",
+    "x33b_index_build",      // n_shingles, Σ|posting list|: one row
+    "x34f_fp_build",         // n_fps: one row
+    "x35f_lsh_sigset_build", // n_docs, Σ|signature set|: one row
+    "x36s_embstress_serve",  // n_candidates, Σ idb: one row
+    "x36sf_embstress_build") // n_rows, Σ bucket code: one row
 
   test("no query plans a cartesian product or an unbounded single-partition stage") {
     val d = "/root/testdata/sf0.001"
-    val bad = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
+    val bad = SparkEntry.all.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
       val plan = fn(spark, d).queryExecution.executedPlan.toString
       val cart = plan.contains("CartesianProduct")
       val sp = plan.contains("SinglePartition") &&
@@ -107,10 +117,9 @@ class PlanLintSpec extends SparkTestBase {
       case _ => false
     }
     val d = "/root/testdata/sf0.001"
-    val all = SparkEntry.queries ++ SparkEntry.benchOnly
     var seen = 0
     val bad = globalAggWhitelist.toSeq.sorted.flatMap { name =>
-      flatten(all(name)(spark, d).queryExecution.executedPlan).collect {
+      flatten(SparkEntry.all(name)(spark, d).queryExecution.executedPlan).collect {
         case e: ShuffleExchangeExec if e.outputPartitioning == SinglePartition =>
           seen += 1
           if (isPartialAgg(e.child)) None
@@ -228,11 +237,10 @@ class PlanLintSpec extends SparkTestBase {
   // spec; the running rank frame ends at currentrow$().
   test("x22-family cap stage carries no unbounded window frame") {
     val d = "/root/testdata/sf0.001"
-    val all = SparkEntry.queries ++ SparkEntry.benchOnly
     for (name <- Seq("x22_topic_balance", "x22b_topic_native",
         "x22c_topic_sharded", "x20_source_budget", "x28_domain_budget",
         "x30_language_budget", "x30b_language_budget_sharded")) {
-      val plan = all(name)(spark, d).queryExecution.executedPlan.toString
+      val plan = SparkEntry.all(name)(spark, d).queryExecution.executedPlan.toString
       assert(!plan.toLowerCase.contains("unboundedfollowing"),
         s"$name: unbounded window frame in the physical plan")
     }
@@ -250,14 +258,13 @@ class PlanLintSpec extends SparkTestBase {
   // would run twice, measured 2.9 s → 5.2 s at sf0.1).
   test("join-back queries reuse the shared exchange at runtime") {
     val d = "/root/testdata/sf0.001"
-    val all = SparkEntry.queries ++ SparkEntry.benchOnly
     // x22c's shared explicit exchange exists precisely for this reuse
     // — pin it too, or a refactor de-duplicating its subtrees doubles
     // the pair-graph cost unnoticed.
     for (name <- Seq("x28_domain_budget", "x22_topic_balance",
         "x22b_topic_native", "x22c_topic_sharded",
         "x30b_language_budget_sharded")) {
-      val df = all(name)(spark, d)
+      val df = SparkEntry.all(name)(spark, d)
       // collect(), not a noop write: the write wraps the plan in its
       // own QueryExecution and this df's adaptive plan never finalizes
       val _ = df.collect()
@@ -279,7 +286,7 @@ class PlanLintSpec extends SparkTestBase {
     // What x29 still needs pinned is the device itself: the explicit
     // cluster_id repartition feeding both consumers, so the shape
     // stays reuse-ELIGIBLE for the at-scale distributed path.
-    val x29 = all("x29_leakage_split")(spark, d)
+    val x29 = SparkEntry.all("x29_leakage_split")(spark, d)
     val _ = x29.collect()
     val x29plan = x29.queryExecution.executedPlan.toString
     assert("REPARTITION_BY_COL".r.findAllIn(x29plan).size >= 2,

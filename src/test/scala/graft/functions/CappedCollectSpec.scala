@@ -100,7 +100,7 @@ class CappedCollectSpec extends SparkTestBase {
   test("x27c (AdaptiveBounded) emits exactly x27b's (AdaptiveAvg) rows " +
       "on the sf0.001 snippet corpus — the containment path, wider 4x cap") {
     def rowSet(name: String) =
-      graft.ExtensionQueries.queries(name)(spark, "/root/testdata/sf0.001")
+      graft.SparkEntry.queries(name)(spark, "/root/testdata/sf0.001")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val bounded = rowSet("x27c_containment_bounded")
     assert(bounded === rowSet("x27b_containment_capped"))

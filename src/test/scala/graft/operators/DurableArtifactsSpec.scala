@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{ExtensionQueries, SparkTestBase}
+import graft.{ExtensionQueries, SparkEntry, SparkTestBase}
 import org.apache.spark.sql.DataFrame
 
 /** The durable-table story for the round-10 memo-only artifacts —
@@ -56,14 +56,14 @@ class DurableArtifactsSpec extends SparkTestBase {
   test("x35b serves from the written LSH tables with zero rebuilds, " +
       "rows identical to the memo path; bucket layout on the join keys") {
     // memo-path truth first (no conf set)
-    val viaMemo = rows(ExtensionQueries.queries("x35b_lsh_from_artifact")(spark, d))
+    val viaMemo = rows(SparkEntry.queries("x35b_lsh_from_artifact")(spark, d))
     assert(viaMemo.nonEmpty)
 
     ExtensionQueries.useLshArtifacts(spark, d, lshBase)
     ExtensionQueries.evictLshArtifacts(spark, d) // kill the memo path
     val bandedBuilds = ExtensionQueries.lshBandedArtifact.builds.get()
     val setsBuilds = ExtensionQueries.lshSetsArtifact.builds.get()
-    val viaTable = rows(ExtensionQueries.queries("x35b_lsh_from_artifact")(spark, d))
+    val viaTable = rows(SparkEntry.queries("x35b_lsh_from_artifact")(spark, d))
     assert(viaTable === viaMemo)
     assert(ExtensionQueries.lshBandedArtifact.builds.get() === bandedBuilds &&
       ExtensionQueries.lshSetsArtifact.builds.get() === setsBuilds,
@@ -86,13 +86,13 @@ class DurableArtifactsSpec extends SparkTestBase {
 
   test("x34b serves the fp probe from the written fp table with zero " +
       "rebuilds, verdicts identical to the memo path") {
-    val viaMemo = rows(ExtensionQueries.queries("x34b_curation_from_index")(spark, d))
+    val viaMemo = rows(SparkEntry.queries("x34b_curation_from_index")(spark, d))
     assert(viaMemo.nonEmpty)
 
     ExtensionQueries.useCorpusFp(spark, d, fpTable)
     ExtensionQueries.evictCorpusFp(spark, d)
     val before = ExtensionQueries.corpusFpArtifact.builds.get()
-    val viaTable = rows(ExtensionQueries.queries("x34b_curation_from_index")(spark, d))
+    val viaTable = rows(SparkEntry.queries("x34b_curation_from_index")(spark, d))
     assert(viaTable === viaMemo)
     assert(ExtensionQueries.corpusFpArtifact.builds.get() === before,
       "conf-resolved x34b must not rebuild the fp set")
@@ -112,13 +112,13 @@ class DurableArtifactsSpec extends SparkTestBase {
 
   test("x36 serves candidates from the written probed-bucket table " +
       "with zero rebuilds, pairs identical to the memo path") {
-    val viaMemo = rows(ExtensionQueries.queries("x36_incremental_embed_neardup")(spark, d))
+    val viaMemo = rows(SparkEntry.queries("x36_incremental_embed_neardup")(spark, d))
     assert(viaMemo.nonEmpty)
 
     ExtensionQueries.useEmbBuckets(spark, d, embTable)
     ExtensionQueries.evictEmbBuckets(spark, d)
     val before = ExtensionQueries.embBucketsArtifact.builds.get()
-    val viaTable = rows(ExtensionQueries.queries("x36_incremental_embed_neardup")(spark, d))
+    val viaTable = rows(SparkEntry.queries("x36_incremental_embed_neardup")(spark, d))
     assert(viaTable === viaMemo)
     assert(ExtensionQueries.embBucketsArtifact.builds.get() === before,
       "conf-resolved x36 must not rebuild the probed buckets")

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{ExtensionQueries, SparkTestBase, Tables}
+import graft.{SparkEntry, SparkTestBase, Tables}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -22,7 +22,7 @@ class IncrementalCurationSpec extends SparkTestBase {
   import spark.implicits._
 
   private val d = "/root/testdata/sf0.001"
-  private lazy val out = ExtensionQueries.queries("x34_incremental_curation")(
+  private lazy val out = SparkEntry.queries("x34_incremental_curation")(
     spark, d).collect()
 
   // the batch + filter + exact-dedup chain, restated with groupBy-min
@@ -91,7 +91,7 @@ class IncrementalCurationSpec extends SparkTestBase {
   }
 
   test("x34b (served from the posting index) is row-identical to x34") {
-    val b = ExtensionQueries.queries("x34b_curation_from_index")(spark, d)
+    val b = SparkEntry.queries("x34b_curation_from_index")(spark, d)
       .collect()
     assert(b.map(_.toString).toSeq === out.map(_.toString).toSeq)
   }

@@ -66,9 +66,9 @@ class IncrementalLshSpec extends SparkTestBase {
   test("x35b (served from the banded + set artifacts) is row-identical " +
       "to x35") {
     val d = "/root/testdata/sf0.001"
-    val a = graft.ExtensionQueries.queries("x35_incremental_lsh")(spark, d)
+    val a = graft.SparkEntry.queries("x35_incremental_lsh")(spark, d)
       .collect().map(_.toString).toSeq
-    val b = graft.ExtensionQueries.queries("x35b_lsh_from_artifact")(spark, d)
+    val b = graft.SparkEntry.queries("x35b_lsh_from_artifact")(spark, d)
       .collect().map(_.toString).toSeq
     assert(a === b)
   }

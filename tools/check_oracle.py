@@ -63,4 +63,5 @@ for name, sql in sorted(oracle.items()):
         fail += 1
 
 print(f"\n{ok} ok, {fail} fail")
-sys.exit(1 if fail else 0)
+# zero rows compared is a broken dump, not a pass
+sys.exit(1 if fail or not ok else 0)
