@@ -1068,11 +1068,7 @@ object Dedup {
     // shared: the count reads the persisted edges the loop would have
     // persisted anyway.
     val spark = pairs.sparkSession
-    val rawMax = spark.conf.get(FoldLocalCcMaxEdgesConf, "4000000")
-    val maxLocal = scala.util.Try(rawMax.toLong).toOption.filter(_ >= 0)
-      .getOrElse(throw new IllegalArgumentException(
-        s"$FoldLocalCcMaxEdgesConf must be a non-negative long, got " +
-          s"'$rawMax'"))
+    val maxLocal = foldLocalGate(spark)
     val pairEdges = base.select(col(aCol).as("_pa"), col(bCol).as("_pb"))
     val longKeys = pairEdges.schema.fields.forall(_.dataType ==
       org.apache.spark.sql.types.LongType)
@@ -1082,14 +1078,7 @@ object Dedup {
       val labels = localMinLabels(pe.collect()
         .map(r => (r.getLong(0), r.getLong(1))))
       pe.unpersist()
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("node",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("cluster_id",
-          org.apache.spark.sql.types.LongType)))
-      return spark.createDataFrame(
-        java.util.Arrays.asList(labels.toSeq.map { case (n, l) =>
-          org.apache.spark.sql.Row(n, l) }: _*), schema)
+      return longPairFrame(spark, "node", "cluster_id", labels)
     }
     // above the gate the loop starts from the SAME persisted pair
     // list the count just materialized — no extra pass over the pair
@@ -1202,8 +1191,30 @@ object Dedup {
   private[graft] def clusterFoldDelta(map: DataFrame, newPairs: DataFrame,
       aCol: String = "ida", bCol: String = "idb",
       maxIter: Int = 25): ClusterFoldDelta = {
-    val pairs = newPairs.select(col(aCol).as("_a"), col(bCol).as("_b"))
-      .persist()
+    val spark = map.sparkSession
+    val maxLocal = foldLocalGate(spark)
+    val probeCap = maxLocal.min(Int.MaxValue - 1L).toInt
+    val pairCols = newPairs.select(col(aCol).as("_a"), col(bCol).as("_b"))
+    val longKeys = pairCols.schema.fields.forall(_.dataType ==
+      org.apache.spark.sql.types.LongType)
+    // Driver path — the common batch shape. The batch's pairs are
+    // probed by a LIMIT-guarded collect (driver memory bounded at
+    // maxLocal+1 rows); when they fit the gate, the whole fold runs
+    // on the driver: one scan of `map` fetches the touched nodes'
+    // current roots, and contraction, the union-find and the
+    // relabel/new-node split are plain collections. The distributed
+    // path below runs three multi-stage queries for the same rows
+    // (roots checkpoint, contracted-edge probe, the returned
+    // relabel/newNodes plans): 13-18 Spark jobs per stream-trigger
+    // fold, against 4-5 here (PERF.md "Cluster fold on the driver").
+    if (longKeys && maxLocal > 0) {
+      val probed = pairCols.limit(probeCap + 1).collect()
+      if (probed.length <= probeCap)
+        return localFoldDelta(map, probed.map(r => (r.getLong(0),
+          r.getLong(1))))
+    }
+    // Distributed path: over the gate, or for non-long keys.
+    val pairs = pairCols.persist()
     val nodes = pairs.select(col("_a").as("_n"))
       .union(pairs.select(col("_b").as("_n"))).distinct()
     // current root per touched node: its cluster when mapped, itself
@@ -1223,44 +1234,23 @@ object Dedup {
       .join(roots.select(col("_n").as("_b"), col("_r").as("_rb")), Seq("_b"))
       .filter(col("_ra") =!= col("_rb"))
       .select(col("_ra").cast("long"), col("_rb").cast("long"))
-    // Connected components over roots only. Size-gated: below the
-    // threshold (the common daily-batch shape) the contracted edges
-    // collect to the driver — they were headed there anyway as the
-    // broadcast relabel map — and a union-find labels them in
-    // microseconds, where the distributed loop pays ~0.5 s of local
-    // stage latency PER ITERATION at any SF. The gate probes by a
-    // LIMIT-guarded collect (one job, driver memory bounded at
-    // maxLocal+1 rows) instead of the old localCheckpoint + count +
-    // collect triple — two fewer driver actions per fold, which at
-    // the streaming triggers' one-fold-per-batch cadence was ~0.3 s
-    // of pure stage floor each. Above the gate the distributed
-    // min-label loop runs from a checkpoint leaf as before (the
-    // truncated probe is re-derived — the rare corpus-scale path; a
-    // relabel map too big to collect is too big to broadcast anyway).
-    val spark = map.sparkSession
-    val rawMax = spark.conf.get(FoldLocalCcMaxEdgesConf, "4000000")
-    val maxLocal = scala.util.Try(rawMax.toLong).toOption.filter(_ >= 0)
-      .getOrElse(throw new IllegalArgumentException(
-        s"$FoldLocalCcMaxEdgesConf must be a non-negative long, got " +
-          s"'$rawMax'"))
-    val probeCap = maxLocal.min(Int.MaxValue - 1L).toInt
+    // Connected components over roots only. Within-cluster pairs drop
+    // in the contraction, so a batch over the pair gate can still
+    // contract under it: the contracted edges are probed the same way
+    // (one LIMIT-guarded collect, in place of a localCheckpoint +
+    // count + collect triple) and, when they fit, labeled by the
+    // driver union-find. Above the gate the distributed min-label
+    // loop runs from a checkpoint leaf (the truncated probe is
+    // re-derived — the rare corpus-scale path; a relabel map too big
+    // to collect is too big to broadcast anyway).
     val probed =
       if (maxLocal > 0) contractedPlan.limit(probeCap + 1).collect()
       else Array.empty[org.apache.spark.sql.Row]
     val (cc, small) =
-      if (maxLocal > 0 && probed.length <= probeCap) {
-        val labels = localMinLabels(probed
-          .map(r => (r.getLong(0), r.getLong(1))))
-        val schema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("_root",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("_l",
-            org.apache.spark.sql.types.LongType)))
-        val rows: java.util.List[org.apache.spark.sql.Row] =
-          java.util.Arrays.asList(labels.toSeq.map { case (n, l) =>
-            org.apache.spark.sql.Row(n, l) }: _*)
-        (spark.createDataFrame(rows, schema), true)
-      } else {
+      if (maxLocal > 0 && probed.length <= probeCap)
+        (longPairFrame(spark, "_root", "_l", localMinLabels(probed
+          .map(r => (r.getLong(0), r.getLong(1))))), true)
+      else {
         // checkpoint leaf: the propagation loop's plan doubles per
         // round, so it must not start from the join plan above
         val contracted = contractedPlan.localCheckpoint()
@@ -1292,12 +1282,76 @@ object Dedup {
       broadcastable = small)
   }
 
-  /** Session conf: contracted-edge count up to which
-    * [[foldPairsIntoClusterMap]] labels the touched-cluster graph with
-    * a driver-side union-find instead of the distributed min-label
-    * loop (default 4M edges ≈ 64 MB collected — the broadcast-join
-    * budget the relabel map must fit anyway). IncrementalClusterSpec
-    * pins both paths identical; set 0 to force the distributed loop. */
+  /** [[clusterFoldDelta]]'s driver path over the batch's collected
+    * pairs — row-identical to the distributed path
+    * (IncrementalClusterSpec compares the deltas): roots come from one
+    * scan of `map` semi-joined against the broadcast touched ids, and
+    * the rest is the same contraction and min-label relabel, in
+    * driver collections. Both frames are local relations. */
+  private def localFoldDelta(map: DataFrame,
+      pairs: Array[(Long, Long)]): ClusterFoldDelta = {
+    val spark = map.sparkSession
+    val nodes = pairs.iterator.flatMap { case (a, b) => Iterator(a, b) }
+      .toSet
+    val mapped: Map[Long, Long] =
+      if (nodes.isEmpty) Map.empty
+      else {
+        val ids = spark.createDataFrame(
+          java.util.Arrays.asList(nodes.toSeq
+            .map(n => org.apache.spark.sql.Row(n)): _*),
+          org.apache.spark.sql.types.StructType(Seq(
+            org.apache.spark.sql.types.StructField("_n",
+              org.apache.spark.sql.types.LongType))))
+        map.select(col("doc_id").cast("long").as("_n"),
+            col("cluster_id").cast("long").as("_r"))
+          .join(broadcast(ids), Seq("_n"), "left_semi")
+          .collect().iterator.map(r => r.getLong(0) -> r.getLong(1)).toMap
+      }
+    val root = (n: Long) => mapped.getOrElse(n, n)
+    val labels = localMinLabels(pairs.map { case (a, b) => (root(a), root(b)) }
+      .filter { case (ra, rb) => ra != rb })
+    val oldRoots = mapped.values.toSet
+    ClusterFoldDelta(
+      longPairFrame(spark, "_root", "_l", labels.filter { case (r, l) =>
+        r != l && oldRoots(r) }),
+      longPairFrame(spark, "doc_id", "cluster_id", nodes.iterator
+        .filterNot(mapped.contains).map(n => n -> labels.getOrElse(n, n))
+        .toSeq),
+      broadcastable = true)
+  }
+
+  /** A two-long-column local relation — the driver union-find's rows
+    * handed back to Spark. */
+  private def longPairFrame(spark: org.apache.spark.sql.SparkSession,
+      a: String, b: String, rows: Iterable[(Long, Long)]): DataFrame =
+    spark.createDataFrame(
+      java.util.Arrays.asList(rows.toSeq.map { case (x, y) =>
+        org.apache.spark.sql.Row(x, y) }: _*),
+      org.apache.spark.sql.types.StructType(Seq(a, b).map(
+        org.apache.spark.sql.types.StructField(_,
+          org.apache.spark.sql.types.LongType))))
+
+  /** [[FoldLocalCcMaxEdgesConf]], validated. */
+  private def foldLocalGate(spark: org.apache.spark.sql.SparkSession): Long = {
+    val raw = spark.conf.get(FoldLocalCcMaxEdgesConf, "4000000")
+    scala.util.Try(raw.toLong).toOption.filter(_ >= 0)
+      .getOrElse(throw new IllegalArgumentException(
+        s"$FoldLocalCcMaxEdgesConf must be a non-negative long, got " +
+          s"'$raw'"))
+  }
+
+  /** Session conf: edge count up to which the cluster folds run on
+    * the driver (default 4M edges ≈ 64 MB collected — the
+    * broadcast-join budget the relabel map must fit anyway).
+    * [[clusterFoldDelta]] probes the batch's PAIR count first: when
+    * the pairs fit (and the ids are longs), the whole fold — root
+    * lookup aside — runs on the driver. Otherwise the distributed
+    * fold probes its CONTRACTED edge count against the same gate and
+    * labels the touched-cluster graph with a driver-side union-find
+    * when that fits, the distributed min-label loop when not.
+    * [[connectedComponents]] gates its edge list the same way.
+    * IncrementalClusterSpec pins every path identical; set 0 to force
+    * the distributed loop. */
   val FoldLocalCcMaxEdgesConf = "spark.graft.foldLocalCcMaxEdges"
 
   /** Union-find with path compression over the collected contracted

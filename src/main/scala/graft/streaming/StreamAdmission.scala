@@ -119,36 +119,36 @@ object StreamAdmission {
         // every job joined. The corpus-data job starts first (it
         // depends only on `flagged`; concurrent computation of the
         // persisted frame is block-locked, not duplicated work).
-        val wave = new StreamIndex.BatchWave
-        wave.submit(StreamIndex.writeDirNoMarker(
-          StreamIndex.deltaSized(flagged.select("doc_id", "text")),
-          s"$baseDir/corpus/b=$batchId"))
-        wave.submit(StreamIndex.deltaSized(flagged.select("fp").distinct())
-          .write.mode("overwrite").parquet(s"$baseDir/fps/b=$batchId"))
-        // the survivors' posting delta is built ONCE (localCheckpoint,
-        // O(batch) state, sized before the lineage cut) and serves
-        // both the near-dup probe and the index append below — the
-        // from-text form shingled the survivors twice per trigger
-        // (same change as StreamNearDup.pairBatch; St10Dissect A/B)
-        val batchIdx = StreamIndex.batchCkpt(StreamIndex.deltaSized(
-          Dedup.postingIndex(survivors, "doc_id", "text", n)))
-        val nearIds = Dedup.incrementalJaccardPairsFromIndexDeltasPrebuilt(
-            indexView(s, baseDir, n), batchIdx, thresholdPpm, dfCap)
-          .select(col("idb").as("doc_id")).distinct()
-          .withColumn("_nd", lit(1))
-        val verdicts = flagged.join(nearIds, Seq("doc_id"), "left")
-          .select(col("doc_id"), col("quality"),
-            when(col("is_exact"), lit("exact_dup"))
-              .when(col("_nd").isNotNull, lit("near_dup"))
-              .otherwise(lit("kept")).as("verdict"),
-            when(!col("is_exact") && col("_nd").isNull,
-              when(pmod(Sampling.minstdHash(col("doc_id")), lit(10)) < 8,
-                lit("train")).otherwise(lit("eval"))).as("split"))
-        wave.submit(batchIdx
-          .write.mode("overwrite").parquet(s"$baseDir/index/b=$batchId"))
-        wave.submit(StreamIndex.deltaSized(verdicts).write.mode("overwrite")
-          .parquet(s"$baseDir/verdicts/b=$batchId"))
-        wave.commit(s"$baseDir/corpus/b=$batchId")
+        StreamIndex.BatchWave.run(s"$baseDir/corpus/b=$batchId") { wave =>
+          wave.submit(StreamIndex.writeDirNoMarker(
+            StreamIndex.deltaSized(flagged.select("doc_id", "text")),
+            s"$baseDir/corpus/b=$batchId"))
+          wave.submit(StreamIndex.deltaSized(flagged.select("fp").distinct())
+            .write.mode("overwrite").parquet(s"$baseDir/fps/b=$batchId"))
+          // the survivors' posting delta is built ONCE (localCheckpoint,
+          // O(batch) state, sized before the lineage cut) and serves
+          // both the near-dup probe and the index append below — the
+          // from-text form shingled the survivors twice per trigger
+          // (same change as StreamNearDup.pairBatch; St10Dissect A/B)
+          val batchIdx = StreamIndex.batchCkpt(StreamIndex.deltaSized(
+            Dedup.postingIndex(survivors, "doc_id", "text", n)))
+          val nearIds = Dedup.incrementalJaccardPairsFromIndexDeltasPrebuilt(
+              indexView(s, baseDir, n), batchIdx, thresholdPpm, dfCap)
+            .select(col("idb").as("doc_id")).distinct()
+            .withColumn("_nd", lit(1))
+          val verdicts = flagged.join(nearIds, Seq("doc_id"), "left")
+            .select(col("doc_id"), col("quality"),
+              when(col("is_exact"), lit("exact_dup"))
+                .when(col("_nd").isNotNull, lit("near_dup"))
+                .otherwise(lit("kept")).as("verdict"),
+              when(!col("is_exact") && col("_nd").isNull,
+                when(pmod(Sampling.minstdHash(col("doc_id")), lit(10)) < 8,
+                  lit("train")).otherwise(lit("eval"))).as("split"))
+          wave.submit(batchIdx
+            .write.mode("overwrite").parquet(s"$baseDir/index/b=$batchId"))
+          wave.submit(StreamIndex.deltaSized(verdicts).write.mode("overwrite")
+            .parquet(s"$baseDir/verdicts/b=$batchId"))
+        }
       } finally {
         val _ = flagged.unpersist()
       }

@@ -72,13 +72,13 @@ object StreamBootstrap {
     // discipline, StreamIndex.BatchWave): only the corpus `_SUCCESS`
     // — the seed's commit marker — is order-bearing, laid down by the
     // driver strictly after every copy joined
-    val wave = new StreamIndex.BatchWave
-    wave.submit(index.select("_sh", "_lst").write.mode("overwrite")
-      .parquet(s"$baseDir/index/c=$SeedBatch"))
-    cmap.foreach(c => wave.submit(
-      c.select("doc_id", "cluster_id").write.mode("overwrite")
-        .parquet(s"$baseDir/cmap/c=$SeedBatch")))
-    commitCorpus(wave, baseDir, corpus)
+    commitCorpus(baseDir, corpus) { wave =>
+      wave.submit(index.select("_sh", "_lst").write.mode("overwrite")
+        .parquet(s"$baseDir/index/c=$SeedBatch"))
+      cmap.foreach(c => wave.submit(
+        c.select("doc_id", "cluster_id").write.mode("overwrite")
+          .parquet(s"$baseDir/cmap/c=$SeedBatch")))
+    }
   }
 
   /** Seed ST9 (streaming curation) layers: the exact-survivor posting
@@ -89,12 +89,12 @@ object StreamBootstrap {
       index: DataFrame, fps: DataFrame,
       params: Map[String, String]): Unit = {
     prepareSeed(baseDir, params)
-    val wave = new StreamIndex.BatchWave
-    wave.submit(index.select("_sh", "_lst").write.mode("overwrite")
-      .parquet(s"$baseDir/index/c=$SeedBatch"))
-    wave.submit(fps.select("fp").write.mode("overwrite")
-      .parquet(s"$baseDir/fps/c=$SeedBatch"))
-    commitCorpus(wave, baseDir, corpus)
+    commitCorpus(baseDir, corpus) { wave =>
+      wave.submit(index.select("_sh", "_lst").write.mode("overwrite")
+        .parquet(s"$baseDir/index/c=$SeedBatch"))
+      wave.submit(fps.select("fp").write.mode("overwrite")
+        .parquet(s"$baseDir/fps/c=$SeedBatch"))
+    }
   }
 
   /** BY-REFERENCE ST8/ST10 seed: the snapshot layers land as POINTER
@@ -132,13 +132,13 @@ object StreamBootstrap {
   def seedEmbed(baseDir: String, corpus: DataFrame, buckets: DataFrame,
       params: Map[String, String]): Unit = {
     prepareSeed(baseDir, params)
-    val wave = new StreamIndex.BatchWave
-    wave.submit(buckets.select("_id", "_bucket").write.mode("overwrite")
-      .parquet(s"$baseDir/ebkt/c=$SeedBatch"))
-    wave.submit(StreamIndex.writeDirNoMarker(
-      corpus.select("vec_id", "embedding"),
-      s"$baseDir/corpus/b=$SeedBatch"))
-    wave.commit(s"$baseDir/corpus/b=$SeedBatch")
+    StreamIndex.BatchWave.run(s"$baseDir/corpus/b=$SeedBatch") { wave =>
+      wave.submit(buckets.select("_id", "_bucket").write.mode("overwrite")
+        .parquet(s"$baseDir/ebkt/c=$SeedBatch"))
+      wave.submit(StreamIndex.writeDirNoMarker(
+        corpus.select("vec_id", "embedding"),
+        s"$baseDir/corpus/b=$SeedBatch"))
+    }
   }
 
   /** The ST12 by-ref twin of [[seedNearDupByRef]]: ebkt and corpus as
@@ -166,19 +166,21 @@ object StreamBootstrap {
       corpusTable, "epoch")
   }
 
-  /** The corpus `_SUCCESS` IS the seed's commit: the DATA copy joins
-    * the wave (marker suppressed), and the marker lands strictly
-    * after every copy — what makes the whole seed visible to every
-    * reader (committedBatches-driven views never look past it). NOT
-    * routed through [[StreamIndex.deltaSized]]'s small-file bound —
-    * the seed is corpus-sized by definition and keeps the frame's own
+  /** The corpus `_SUCCESS` IS the seed's commit: `layers` submits
+    * the snapshot copies, the DATA copy joins the same wave (marker
+    * suppressed), and the marker lands strictly after every copy —
+    * what makes the whole seed visible to every reader
+    * (committedBatches-driven views never look past it). NOT routed
+    * through [[StreamIndex.deltaSized]]'s small-file bound — the seed
+    * is corpus-sized by definition and keeps the frame's own
     * parallelism. */
-  private def commitCorpus(wave: StreamIndex.BatchWave, baseDir: String,
-      corpus: DataFrame): Unit = {
-    wave.submit(StreamIndex.writeDirNoMarker(
-      corpus.select("doc_id", "text"), s"$baseDir/corpus/b=$SeedBatch"))
-    wave.commit(s"$baseDir/corpus/b=$SeedBatch")
-  }
+  private def commitCorpus(baseDir: String, corpus: DataFrame)(
+      layers: StreamIndex.BatchWave => Unit): Unit =
+    StreamIndex.BatchWave.run(s"$baseDir/corpus/b=$SeedBatch") { wave =>
+      layers(wave)
+      wave.submit(StreamIndex.writeDirNoMarker(
+        corpus.select("doc_id", "text"), s"$baseDir/corpus/b=$SeedBatch"))
+    }
 
   /** Every layer any seed variant can write — a re-seed must account
     * for ALL of them, not just its own, or a torn prior seed's

@@ -118,7 +118,8 @@ object StreamClusters {
                 s"restore pairs/b=$v from backup (the batch's verdicts " +
                 "are not derivable once the pre-batch index state is " +
                 "compacted away)")
-          val pairs = s.read.parquet(s"$baseDir/pairs/b=$v")
+          val pairs = s.read.schema(StreamNearDup.PairsSchema)
+            .parquet(s"$baseDir/pairs/b=$v")
           val delta = Dedup.clusterFoldDelta(viewUpTo(s, baseDir, v), pairs)
           require(delta.broadcastable,
             s"StreamClusters: batch $v's relabel delta exceeded the " +
@@ -165,8 +166,8 @@ object StreamClusters {
       .filter(v => Files.exists(Paths.get(s"$baseDir/$Layer/b=$v/_SUCCESS")))
       .sorted
     if (batches.isEmpty) return base
-    val deltas = s.read.parquet(
-      batches.map(v => s"$baseDir/$Layer/b=$v"): _*)
+    val deltas = s.read.schema(DeltaSchema)
+      .parquet(batches.map(v => s"$baseDir/$Layer/b=$v"): _*)
     val rel: Map[Long, Map[Long, Long]] = deltas.filter(col("_rel"))
       .select("_b", "_k", "_v").collect()
       .groupBy(_.getLong(0))
@@ -247,9 +248,11 @@ object StreamClusters {
         StructField("doc_id", LongType, nullable = false),
         StructField("cluster_id", LongType, nullable = false))))
 
-  /** Delta schema doc (kept for readers of the layout): `_b` batch
-    * id, `_rel` discriminates relabel rows (`_k` old root → `_v` new
-    * label) from new-node rows (`_k` doc → `_v` cluster). */
+  /** The `cmap/b=` delta schema, declared so [[viewUpTo]]'s read
+    * costs no schema-inference job (StreamLayerSchemaSpec pins it
+    * against [[foldCommitted]]'s files): `_b` batch id, `_rel`
+    * discriminates relabel rows (`_k` old root → `_v` new label) from
+    * new-node rows (`_k` doc → `_v` cluster). */
   private[streaming] val DeltaSchema = StructType(Seq(
     StructField("_b", LongType, nullable = false),
     StructField("_k", LongType, nullable = false),

@@ -99,37 +99,37 @@ object StreamEmbed {
       // order-bearing, and the driver lays it down strictly after
       // every job joined. The corpus-data job starts first — it
       // depends on nothing the trigger computes.
-      val wave = new StreamIndex.BatchWave
-      wave.submit(StreamIndex.writeDirNoMarker(
-        StreamIndex.deltaSized(bdf.select("vec_id", "embedding")),
-        s"$baseDir/corpus/b=$batchId"))
-      // The batch hashes against the hyperplanes ONCE (localCheckpoint
-      // — O(batch) state, sized before the lineage cut): raw buckets,
-      // the radius-1 probe (a map-only explode of raw), and the ebkt
-      // delta below all derive from this frame. The from-vectors form
-      // hashed the batch three times per trigger (candXC's raw,
-      // candII's probed, the ebkt write's probed).
-      val rawB = StreamIndex.batchCkpt(StreamIndex.deltaSized(
-        Similarity.rawBuckets(floatB, "vec_id", "embedding", dim, nPlanes)))
-      val probedB = Similarity.probedFromRaw(rawB, nPlanes)
-      // candidates: batch raw buckets vs the accumulated PROBED layers
-      // (batch×corpus) + the batch's own probed self-join — the corpus
-      // bucket rows are never self-joined, never re-hashed
-      val cand = Similarity.incrementalLshCandidatesPrebuilt(
-        bucketsView(s, baseDir, dim, nPlanes), rawB, probedB)
-      // exact DECIMAL(9,6) rerank on candidates only — x36's scoring,
-      // so the emitted pairs are oracle-exact (the threshold is stated
-      // in ppm like every other gate; /1e6 reproduces the double)
-      val pairs = graft.ExtensionQueries.quantizedCosOnPairs(
-          corpusView(s, baseDir).unionByName(bdf), cand, "ida", "idb")
-        .filter(col("cos") >= cosThresholdPpm / 1e6)
-      // probedB inherits the checkpoint's already-bounded partitioning
-      // (deltaSized's leaf stats are gone after the lineage cut)
-      wave.submit(probedB
-        .write.mode("overwrite").parquet(s"$baseDir/ebkt/b=$batchId"))
-      wave.submit(StreamIndex.deltaSized(pairs)
-        .write.mode("overwrite").parquet(s"$baseDir/pairs/b=$batchId"))
-      wave.commit(s"$baseDir/corpus/b=$batchId")
+      StreamIndex.BatchWave.run(s"$baseDir/corpus/b=$batchId") { wave =>
+        wave.submit(StreamIndex.writeDirNoMarker(
+          StreamIndex.deltaSized(bdf.select("vec_id", "embedding")),
+          s"$baseDir/corpus/b=$batchId"))
+        // The batch hashes against the hyperplanes ONCE (localCheckpoint
+        // — O(batch) state, sized before the lineage cut): raw buckets,
+        // the radius-1 probe (a map-only explode of raw), and the ebkt
+        // delta below all derive from this frame. The from-vectors form
+        // hashed the batch three times per trigger (candXC's raw,
+        // candII's probed, the ebkt write's probed).
+        val rawB = StreamIndex.batchCkpt(StreamIndex.deltaSized(
+          Similarity.rawBuckets(floatB, "vec_id", "embedding", dim, nPlanes)))
+        val probedB = Similarity.probedFromRaw(rawB, nPlanes)
+        // candidates: batch raw buckets vs the accumulated PROBED layers
+        // (batch×corpus) + the batch's own probed self-join — the corpus
+        // bucket rows are never self-joined, never re-hashed
+        val cand = Similarity.incrementalLshCandidatesPrebuilt(
+          bucketsView(s, baseDir, dim, nPlanes), rawB, probedB)
+        // exact DECIMAL(9,6) rerank on candidates only — x36's scoring,
+        // so the emitted pairs are oracle-exact (the threshold is stated
+        // in ppm like every other gate; /1e6 reproduces the double)
+        val pairs = graft.ExtensionQueries.quantizedCosOnPairs(
+            corpusView(s, baseDir).unionByName(bdf), cand, "ida", "idb")
+          .filter(col("cos") >= cosThresholdPpm / 1e6)
+        // probedB inherits the checkpoint's already-bounded partitioning
+        // (deltaSized's leaf stats are gone after the lineage cut)
+        wave.submit(probedB
+          .write.mode("overwrite").parquet(s"$baseDir/ebkt/b=$batchId"))
+        wave.submit(StreamIndex.deltaSized(pairs)
+          .write.mode("overwrite").parquet(s"$baseDir/pairs/b=$batchId"))
+      }
       true
     }
   }

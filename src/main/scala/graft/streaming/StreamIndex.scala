@@ -1,7 +1,8 @@
 package graft.streaming
 
 import graft.operators.Dedup
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.{ArrayType, LongType, StructField, StructType}
 
 import java.nio.file.{Files, Paths}
 
@@ -23,13 +24,22 @@ private[graft] object StreamIndex {
     * [[Dedup.incrementalJaccardPairsFromIndexDeltas]] merges. Covered
     * deltas surviving a crashed compaction cleanup are provably
     * redundant and ignored; a torn compaction (no `_SUCCESS`) is
-    * invisible and its covered deltas still serve. */
+    * invisible and its covered deltas still serve. Read with the
+    * declared [[IndexSchema]]: inferring it costs a Spark job per
+    * read, on every trigger. */
   def indexView(s: SparkSession, baseDir: String,
       heal: Seq[Long] => Unit): DataFrame = {
     val dirs = layerDirs(baseDir, "index", heal)
     if (dirs.isEmpty) emptyIndex(s)
-    else readDirs(s, dirs)
+    else readDirs(s, dirs, Some(IndexSchema))
   }
+
+  /** The posting-index layer's `(_sh, _lst)` schema — every writer's
+    * [[Dedup.postingIndex]] / [[Dedup.mergePostingDeltas]] shape
+    * (StreamLayerSchemaSpec pins it against the files). */
+  val IndexSchema: StructType = StructType(Seq(
+    StructField("_sh", LongType),
+    StructField("_lst", ArrayType(LongType))))
 
   /** The committed dirs a layer's view reads: newest committed compact
     * snapshot (if any) plus every committed corpus batch's delta
@@ -67,15 +77,17 @@ private[graft] object StreamIndex {
     * committed delta extends the current snapshot. */
   def compactIndex(s: SparkSession, baseDir: String,
       heal: Seq[Long] => Unit): Option[Long] =
-    compactLayer(s, baseDir, "index", heal, Dedup.mergePostingDeltas)
+    compactLayer(s, baseDir, "index", heal, Dedup.mergePostingDeltas,
+      Some(IndexSchema))
 
   /** Generic layer compaction — the index layer merges with
     * [[Dedup.mergePostingDeltas]], the fps layer with `distinct`; the
     * snapshot/delta/crash/deferred-cleanup rules (see
-    * [[compactIndex]]'s doc) are identical. */
+    * [[compactIndex]]'s doc) are identical. `schema` is the layer's
+    * declared schema, if it has one (see [[readDirs]]). */
   def compactLayer(s: SparkSession, baseDir: String, layer: String,
-      heal: Seq[Long] => Unit,
-      merge: DataFrame => DataFrame): Option[Long] = {
+      heal: Seq[Long] => Unit, merge: DataFrame => DataFrame,
+      schema: Option[StructType] = None): Option[Long] = {
     val prev = layerSnapshot(baseDir, layer)
     val fresh = committedBatches(s"$baseDir/corpus")
       .filter(v => prev.forall(v > _))
@@ -89,7 +101,7 @@ private[graft] object StreamIndex {
       // table here, so THIS pass is what materializes the stream's
       // own physical snapshot — and the deferred sweep then retires
       // the pointer, ending the stream's dependence on the table
-      merge(readDirs(s, parts))
+      merge(readDirs(s, parts, schema))
         .write.mode("overwrite").parquet(s"$baseDir/$layer/c=$hi")
       Some(hi)
     }
@@ -189,16 +201,16 @@ private[graft] object StreamIndex {
   // deterministic replay overwrites all dirs — the crash contract is
   // unchanged, the per-trigger wall-clock drops from the SUM of the
   // write chains to their MAX (each chain is 1-3 local stages at the
-  // 0.3-0.5 s floor). Any job failure joins the remaining jobs first
-  // (a replay's overwrite must never race a still-running stale
-  // write), skips the marker, and rethrows.
+  // 0.3-0.5 s floor). Any failure — a write job's, or the driver's
+  // own between submits (a failed batch checkpoint, a bad conf) —
+  // joins every submitted job first (a replay's overwrite must never
+  // race a still-running stale write), skips the marker, and
+  // rethrows.
 
-  /** One trigger's concurrent write wave. Submit jobs as their inputs
-    * become ready (the corpus data write typically first — it depends
-    * on nothing the trigger computes); `commit` joins every job,
-    * rethrows the first failure only after ALL joined, and otherwise
-    * lays down `corpusDir/_SUCCESS` as the batch's commit point. */
-  private[graft] final class BatchWave {
+  /** One trigger's concurrent write wave, opened by [[BatchWave.run]].
+    * Submit jobs as their inputs become ready (the corpus data write
+    * typically first — it depends on nothing the trigger computes). */
+  private[graft] final class BatchWave private () {
     private val pool = java.util.concurrent.Executors.newCachedThreadPool(
       (r: Runnable) => {
         val t = new Thread(r, "graft-batch-wave")
@@ -213,14 +225,33 @@ private[graft] object StreamIndex {
         def call(): Unit = body
       })
 
-    def commit(corpusDir: String): Unit = {
-      val errs = try jobs.toSeq.flatMap(f =>
+    /** Join every submitted job and shut the pool; the failures, in
+      * submission order. */
+    private def join(): Seq[Throwable] =
+      try jobs.toSeq.flatMap(f =>
         scala.util.Try(f.get()).failed.toOption.map {
           case e: java.util.concurrent.ExecutionException => e.getCause
           case e => e
         })
       finally pool.shutdown()
-      errs.headOption.foreach(e => throw e)
+  }
+
+  private[graft] object BatchWave {
+    /** Run `body` as one wave whose commit point is
+      * `corpusDir/_SUCCESS`: the marker lands only after `body`
+      * returned and every job it submitted joined without failure.
+      * On any failure — `body` throwing or a job failing — every
+      * submitted job is joined before the first error rethrows (the
+      * others suppressed onto it), and the marker is skipped. */
+    def run(corpusDir: String)(body: BatchWave => Unit): Unit = {
+      val wave = new BatchWave
+      val failed = try { body(wave); None }
+        catch { case e: Throwable => Some(e) }
+      val errs = failed.toSeq ++ wave.join()
+      errs.headOption.foreach { e =>
+        errs.tail.foreach(t => if (t ne e) e.addSuppressed(t))
+        throw e
+      }
       val _ = Files.write(Paths.get(corpusDir, "_SUCCESS"),
         Array.empty[Byte])
     }
@@ -228,7 +259,7 @@ private[graft] object StreamIndex {
 
   /** Write `df` to `dir` with the job-level `_SUCCESS` SUPPRESSED —
     * the corpus-data leg of a [[BatchWave]]: the batch's only commit
-    * marker is the driver's explicit one in [[BatchWave.commit]]. */
+    * marker is the driver's explicit one in [[BatchWave.run]]. */
   private[graft] def writeDirNoMarker(df: DataFrame, dir: String): Unit =
     df.write.mode("overwrite")
       .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
@@ -383,21 +414,18 @@ private[graft] object StreamIndex {
 
   /** Resolve MANY committed dirs. The no-pointer fast path keeps the
     * exact multi-path parquet scan every non-seeded stream plans
-    * today (byte-identical plans); pointer-bearing listings union the
+    * today, read with the layer's declared `schema` when given (saving
+    * the schema-inference job); pointer-bearing listings union the
     * resolved frames by name. */
-  def readDirs(s: SparkSession, dirs: Seq[String]): DataFrame =
-    if (!dirs.exists(isPointer)) s.read.parquet(dirs: _*)
+  def readDirs(s: SparkSession, dirs: Seq[String],
+      schema: Option[StructType] = None): DataFrame =
+    if (!dirs.exists(isPointer))
+      schema.fold(s.read)(s.read.schema(_)).parquet(dirs: _*)
     else dirs.map(readDir(s, _)).reduce(_.unionByName(_))
 
-  /** The `(_sh, _lst)` schema with no rows — the pre-first-commit view. */
+  /** The [[IndexSchema]] with no rows — the pre-first-commit view. */
   def emptyIndex(s: SparkSession): DataFrame =
-    s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("_sh",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("_lst",
-          org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.LongType)))))
+    s.createDataFrame(s.sparkContext.emptyRDD[Row], IndexSchema)
 
   /** Newest committed compact snapshot id under `index/`, if any. */
   def compactSnapshot(baseDir: String): Option[Long] =

@@ -1,7 +1,8 @@
 package graft.streaming
 
 import graft.operators.Dedup
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import java.nio.file.{Files, Paths}
@@ -155,18 +156,18 @@ object StreamNearDup {
       // story unchanged: no marker ⇒ batch invisible, deterministic
       // replay overwrites every dir; marker ⇒ pairs and delta are
       // necessarily complete.
-      val wave = new StreamIndex.BatchWave
-      wave.submit(StreamIndex.writeDirNoMarker(
-        StreamIndex.deltaSized(batch.toDF()), s"$baseDir/corpus/b=$batchId"))
-      val batchIdx = StreamIndex.batchCkpt(StreamIndex.deltaSized(
-        Dedup.postingIndex(batch.toDF(), "doc_id", "text", n)))
-      val pairs = Dedup.incrementalJaccardPairsFromIndexDeltasPrebuilt(
-        indexView(s, baseDir, n), batchIdx, thresholdPpm, dfCap)
-      wave.submit(batchIdx
-        .write.mode("overwrite").parquet(s"$baseDir/index/b=$batchId"))
-      wave.submit(StreamIndex.deltaSized(pairs)
-        .write.mode("overwrite").parquet(s"$baseDir/pairs/b=$batchId"))
-      wave.commit(s"$baseDir/corpus/b=$batchId")
+      StreamIndex.BatchWave.run(s"$baseDir/corpus/b=$batchId") { wave =>
+        wave.submit(StreamIndex.writeDirNoMarker(
+          StreamIndex.deltaSized(batch.toDF()), s"$baseDir/corpus/b=$batchId"))
+        val batchIdx = StreamIndex.batchCkpt(StreamIndex.deltaSized(
+          Dedup.postingIndex(batch.toDF(), "doc_id", "text", n)))
+        val pairs = Dedup.incrementalJaccardPairsFromIndexDeltasPrebuilt(
+          indexView(s, baseDir, n), batchIdx, thresholdPpm, dfCap)
+        wave.submit(batchIdx
+          .write.mode("overwrite").parquet(s"$baseDir/index/b=$batchId"))
+        wave.submit(StreamIndex.deltaSized(pairs)
+          .write.mode("overwrite").parquet(s"$baseDir/pairs/b=$batchId"))
+      }
       true
     }
   }
@@ -258,17 +259,18 @@ object StreamNearDup {
   def allPairs(s: SparkSession, baseDir: String): DataFrame = {
     val vs = committedBatches(s"$baseDir/corpus")
       .filter(v => Files.exists(Paths.get(s"$baseDir/pairs/b=$v/_SUCCESS")))
-    if (vs.isEmpty)
-      s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("ida",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("idb",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("jaccard_ppm",
-            org.apache.spark.sql.types.LongType))))
-    else s.read.parquet(vs.map(v => s"$baseDir/pairs/b=$v"): _*)
+    if (vs.isEmpty) s.createDataFrame(s.sparkContext.emptyRDD[Row], PairsSchema)
+    else s.read.schema(PairsSchema)
+      .parquet(vs.map(v => s"$baseDir/pairs/b=$v"): _*)
   }
+
+  /** The pairs layer's schema — [[pairBatch]]'s writer shape, declared
+    * so a read costs no schema-inference job (StreamLayerSchemaSpec
+    * pins it against the files). */
+  val PairsSchema: StructType = StructType(Seq(
+    StructField("ida", LongType),
+    StructField("idb", LongType),
+    StructField("jaccard_ppm", LongType)))
 
   /** Batch ids under `dir` whose write completed (`_SUCCESS`). */
   private def committedBatches(dir: String): Seq[Long] =

@@ -70,19 +70,8 @@ class HierarchySpec extends SparkTestBase {
     // resolution with the minimal ceiling (3) and with a generous one
     // (20): early exit means the generous run costs at most one extra
     // zero-advance probe round, never 17 extra rounds.
-    def countJobs(thunk: => Unit): Int = {
-      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          val _ = jobs.incrementAndGet()
-        }
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try { thunk; Thread.sleep(2000) } // listener bus is async
-      finally spark.sparkContext.removeSparkListener(listener)
-      jobs.get()
-    }
+    def countJobs(thunk: => Unit): Int =
+      org.apache.spark.graft.ListenerBus.jobsDuring(spark.sparkContext)(thunk)
     def run(rounds: Int): Map[Long, (Long, Long)] =
       Hierarchy.resolveToRoot(
           (0L to 7L).toDF("id"), "id",

@@ -150,6 +150,96 @@ class IncrementalClusterSpec extends SparkTestBase {
     assert(folded.exists { case (n, _) => !before.contains(n) })
   }
 
+  /** A fold delta as row sets — what StreamClusters persists — plus
+    * whether it came off the driver path (local relations). */
+  private case class DeltaRows(relabel: Set[(Long, Long)],
+      newNodes: Set[(Long, Long)], broadcastable: Boolean, onDriver: Boolean)
+
+  private def deltaOf(map: DataFrame, pairs: DataFrame): DeltaRows = {
+    def rows(df: DataFrame) = df.select(df.columns.map(col(_).cast("long")): _*)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val d = Dedup.clusterFoldDelta(map, pairs)
+    DeltaRows(rows(d.relabel), rows(d.newNodes), d.broadcastable,
+      Seq(d.relabel, d.newNodes).forall(_.queryExecution.analyzed
+        .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]))
+  }
+
+  private def withGate[T](gate: Long)(body: => T): T = {
+    spark.conf.set(Dedup.FoldLocalCcMaxEdgesConf, gate.toString)
+    try body finally spark.conf.unset(Dedup.FoldLocalCcMaxEdgesConf)
+  }
+
+  /** The same delta rows as the forced distributed path (gate 0). */
+  private def assertSameDelta(got: DeltaRows, map: DataFrame,
+      pairs: DataFrame): Unit = {
+    val dist = withGate(0)(deltaOf(map, pairs))
+    assert(!dist.onDriver)
+    assert(got.relabel === dist.relabel)
+    assert(got.newNodes === dist.newNodes)
+  }
+
+  test("driver-path fold delta == distributed fold delta, row for row, " +
+      "over the 60 seeded random graphs") {
+    // same generator and seed as the fuzz test above; per-case
+    // disjoint id domains, so one delta covers all 60 cases
+    val rnd = new scala.util.Random(12021)
+    def randPairs(off: Long, n: Int, dom: Int): Seq[(Long, Long)] =
+      Seq.fill(n)((off + rnd.nextInt(dom), off + rnd.nextInt(dom)))
+        .filter(p => p._1 != p._2)
+        .map(p => (p._1 min p._2, p._1 max p._2))
+    val cases = (0 until 60).map { k =>
+      (randPairs(k * 10000L, 1 + rnd.nextInt(30), 40),
+        randPairs(k * 10000L, rnd.nextInt(25), 60))
+    }
+    val mapped = Dedup.connectedComponents(pairsDf(cases.flatMap(_._1)))
+      .select(col("node").as("doc_id"), col("cluster_id"))
+    val inc = pairsDf(cases.flatMap(_._2))
+    val got = deltaOf(mapped, inc)
+    assert(got.onDriver && got.broadcastable)
+    assertSameDelta(got, mapped, inc)
+    // anti-vacuity: both halves of the delta carry rows
+    assert(got.relabel.nonEmpty && got.newNodes.nonEmpty)
+  }
+
+  test("the pair-count gate is inclusive: at the batch's pair count the " +
+      "fold runs on the driver, one below it takes the distributed " +
+      "path — same delta either way") {
+    val mapped = Dedup.connectedComponents(
+        pairsDf(Seq((1L, 2L), (10L, 11L), (20L, 21L))))
+      .select(col("node").as("doc_id"), col("cluster_id"))
+    val incPairs = Seq((2L, 100L), (10L, 100L), (0L, 21L), (200L, 201L),
+      (1L, 2L))
+    val inc = pairsDf(incPairs)
+    val atGate = withGate(incPairs.size.toLong)(deltaOf(mapped, inc))
+    assert(atGate.onDriver && atGate.broadcastable)
+    val below = withGate(incPairs.size - 1L)(deltaOf(mapped, inc))
+    assert(!below.onDriver)
+    // the within-cluster pair (1,2) drops in contraction, so the
+    // distributed path's contracted probe still fits the gate
+    assert(below.broadcastable)
+    assertSameDelta(atGate, mapped, inc)
+    assertSameDelta(below, mapped, inc)
+    assert(atGate.relabel === Set((10L, 1L), (20L, 0L)))
+  }
+
+  test("int-keyed pairs take the distributed fold, with the long-keyed " +
+      "driver path's delta") {
+    import spark.implicits._
+    val mapped = Dedup.connectedComponents(
+        pairsDf(Seq((1L, 2L), (10L, 11L))))
+      .select(col("node").as("doc_id"), col("cluster_id"))
+    val incPairs = Seq((2, 100), (11, 100), (0, 1), (300, 301))
+    val intPairs = incPairs.toDF("ida", "idb")
+    val viaInt = deltaOf(mapped, intPairs)
+    assert(!viaInt.onDriver && viaInt.broadcastable)
+    val viaLong = deltaOf(mapped,
+      pairsDf(incPairs.map { case (a, b) => (a.toLong, b.toLong) }))
+    assert(viaLong.onDriver)
+    assert(viaInt.relabel === viaLong.relabel)
+    assert(viaInt.newNodes === viaLong.newNodes)
+    assert(viaLong.relabel === Set((1L, 0L), (10L, 0L)))
+  }
+
   test("multi-day associativity: folding two day-batches sequentially " +
       "equals one fold and equals the full rebuild") {
     val rnd = new scala.util.Random(40917)

@@ -207,4 +207,23 @@ class StreamClustersSpec extends SparkTestBase {
     assert(viewRows(dir) !== expectedMap,
       "fixture drift: Fixed(4) no longer binds — lower the cap")
   }
+
+  test("a trigger's fold against a one-delta cluster layer launches a " +
+      "pinned number of Spark jobs") {
+    // job counts are deterministic (no timing noise): a rise here is
+    // a new eager action or an inference read on the per-trigger path
+    val dir = Files.createTempDirectory("graft_stc_jobs").toString
+    assert(StreamNearDup.pairBatch(b1.toDS(), 0L, dir, 3, ppm))
+    StreamClusters.foldCommitted(spark, dir)
+    assert(StreamNearDup.pairBatch(b2.toDS(), 1L, dir, 3, ppm))
+    val jobs = org.apache.spark.graft.ListenerBus.jobsDuring(
+      spark.sparkContext)(StreamClusters.foldCommitted(spark, dir))
+    assert(Files.exists(Paths.get(s"$dir/cmap/b=1/_SUCCESS")))
+    assert(jobs === FoldJobs, s"foldCommitted launched $jobs jobs")
+  }
+
+  /** Measured: the view's relabel collect, the pair probe, the root
+    * lookup (two jobs: its broadcasts stage separately under AQE), and
+    * the delta write. The distributed fold this replaced took 18. */
+  private val FoldJobs = 5
 }

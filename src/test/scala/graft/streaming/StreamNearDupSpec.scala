@@ -311,6 +311,39 @@ class StreamNearDupSpec extends SparkTestBase {
       "a join-derived batch-sized delta must hit the small-file bound")
   }
 
+  test("a driver-side throw between wave submits joins the running " +
+      "corpus write before it escapes; the batch stays uncommitted") {
+    import java.nio.file.Paths
+    val dir = Files.createTempDirectory("graft_snd_wavethrow").toString
+    assert(StreamNearDup.pairBatch(b1.toDS(), 0L, dir, 3, 500000L))
+    // NONE makes batchCkpt throw on the driver thread AFTER the corpus
+    // data write was submitted to the wave
+    spark.conf.set(StreamIndex.BatchCkptStorageConf, "NONE")
+    try {
+      val ex = intercept[IllegalArgumentException] {
+        StreamNearDup.pairBatch(b2.toDS(), 1L, dir, 3, 500000L)
+      }
+      assert(ex.getMessage.contains(StreamIndex.BatchCkptStorageConf))
+      // every event posted so far delivered: a write still running
+      // when the exception escaped would still be an active job
+      org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
+      assert(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty,
+        "the wave's corpus write outlived the throw")
+      // joined, not abandoned: the write had run to completion (its
+      // files in place, its staging dir gone) before the throw escaped
+      val corpus = new java.io.File(s"$dir/corpus/b=1")
+      assert(!new java.io.File(corpus, "_temporary").exists())
+      assert(Option(corpus.list()).exists(_.exists(_.endsWith(".parquet"))),
+        "the corpus write was abandoned, not joined")
+    } finally spark.conf.unset(StreamIndex.BatchCkptStorageConf)
+    assert(!Files.exists(Paths.get(s"$dir/corpus/b=1/_SUCCESS")))
+    assert(StreamNearDup.corpusView(spark, dir).count() === b1.size)
+    // the replay commits the batch
+    assert(StreamNearDup.pairBatch(b2.toDS(), 1L, dir, 3, 500000L))
+    assert(StreamNearDup.corpusView(spark, dir).count() ===
+      (b1.size + b2.size))
+  }
+
   test("batchCkpt's storage level is conf-driven and verdict-neutral: " +
       "pairs under MEMORY_AND_DISK == pairs under the DISK_ONLY default; " +
       "an unknown level name throws") {
