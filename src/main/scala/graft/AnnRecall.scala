@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev probe (like PlanAudit/TimeOne): measures LSH and IVF top-k
@@ -11,12 +10,7 @@ import org.apache.spark.sql.functions._
 object AnnRecall {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
-    val cpus = LocalCpus()
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession()
 
     val corpus = Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), col("embedding"))

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run benchmark: times every SparkEntry query on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line.
   *
@@ -31,24 +29,9 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = LocalCpus()
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-    // SPARK_GRAFT_CONF="k=v;…" — same posture-injection hook as
-    // TimeOne (local-dir/AQE experiments); the driver never sets it
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";")
-      .filter(_.contains("=")).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        builder.config(k, v)
-      })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(
+      "spark.sql.adaptive.enabled" -> "true",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "true")
 
     def run(name: String): Unit =
       SparkEntry.all(name)(spark, sfDir)

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.operators.{Decontaminate, Dedup, Multimodal, Packing, Sampling, Similarity, TextAnalysis}
+import graft.operators.{Decontaminate, Dedup, LocalGate, Multimodal, Packing, Sampling, Similarity, TextAnalysis}
 import graft.streaming.{EventSessions, EventWindows, NdDoc, StreamBootstrap, StreamBudget, StreamClusters, StreamCurate, StreamEnrich, StreamNearDup}
 
 /** LLM-training-data pipeline extension queries (BASELINE.json
@@ -173,19 +173,7 @@ object ExtensionQueries {
   private[graft] val ArrivalOffsets: Map[String, Long] = Map(
     "increment" -> IncrementOffset,
     "resubmit" -> ResubmitOffset,
-    "day2" -> Day2Offset,
-    // the replica-scale probes' bridge-chain doc domains (ClusterFoldProbe
-    // and StreamClustersProbe's relabel-bearing day batches) — registered
-    // here so IdDomainSpec guards them like every query domain: an earlier
-    // revision parked them at 5.5/6.5·10¹², INSIDE the increment/resubmit
-    // spans, where a >5,000-copy replica would have collided the bridges
-    // with the probes' own re-crawl ids
-    "probe_bridge_day1" -> 8000000000000L,
-    "probe_bridge_day2" -> 9000000000000L,
-    // the SEEDED dir's relabel-bearing day batch (StreamClustersProbe's
-    // ST11 phase) — its bridges must merge the seeded map's clusters,
-    // and its ids must clear every domain already live in the seed
-    "probe_bridge_seeded" -> 10000000000000L)
+    "day2" -> Day2Offset)
 
   /** X32 — INCREMENTAL near-dup: the daily-ingest recurrence. The
     * corpus is `documents`; the increment batch is a deterministic
@@ -1138,7 +1126,7 @@ object ExtensionQueries {
     val delta = Dedup.clusterFoldDelta(readClusterMap(s, table), newPairs)
     require(delta.broadcastable,
       "foldClusterMapDurable: the relabel delta exceeded the driver " +
-        s"union-find gate (${Dedup.FoldLocalCcMaxEdgesConf}) — a patch " +
+        s"union-find gate (${LocalGate.MaxRowsConf}) — a patch " +
         "layer that cannot broadcast cannot serve; compact and rewrite " +
         "the snapshot instead")
     val r = delta.relabel.collect()
@@ -1153,8 +1141,8 @@ object ExtensionQueries {
     // 1. Stage the NEXT epoch's patch — invisible: readers resolve the
     //    patch by the committed epoch. A crashed earlier attempt's
     //    stale e+1 table is simply overwritten. The common pure-append
-    //    day (no relabels ever — ClusterFoldProbe saw exactly this at
-    //    125×m) writes no patch at all.
+    //    day (no relabels ever — PERF.md "Durable cluster-map fold
+    //    persist cost at 125×m" saw exactly this) writes no patch.
     if (composed.nonEmpty) {
       val pt = clusterPatchTable(table, e + 1)
       ClusterFoldHooks.beforeStagePatch()
@@ -1406,15 +1394,6 @@ object ExtensionQueries {
     * other from-index caller reads the bucketed table from here on. */
   def usePostingIndex(s: SparkSession, d: String, table: String): Unit =
     postingIndexArtifact.use(s, d, table)
-
-  /** Durable write of [[Dedup.postingIndex]] — bucketed by `_sh` so
-    * the serve-side batch join and [[Dedup.appendToPostingIndex]]'s
-    * full-outer merge both start from a hash-partitioned scan: at
-    * cluster scale the index (the corpus-sized side) is never
-    * exchanged again; only the day's batch shuffles. */
-  def writePostingIndex(s: SparkSession, d: String, table: String,
-      buckets: Int = 8): Unit =
-    postingIndexArtifact.write(s, d, table, buckets)
 
   /** Eviction hook mirroring [[evictClusterMap]]; also drops the
     * memoized cap stats (they are a pure function of the index). */
@@ -3776,7 +3755,7 @@ object ExtensionQueries {
     * `index/c=`/`cmap/c=` snapshot layers — pure map-only copies,
     * O(artifact bytes), no corpus re-pairing (the cost a seedless
     * adoption pays: the whole corpus pair listing again in trigger 0,
-    * StreamClustersProbe's bootstrap row) — and the remaining third
+    * PERF.md "Stream adoption cost") — and the remaining third
     * streams through as the day's live trigger, pairing against the
     * seeded index and folding into the seeded map. The composed view
     * must therefore equal the from-scratch cluster map of the WHOLE
@@ -3912,24 +3891,13 @@ object ExtensionQueries {
       DurableArtifact.epochRead(s, fpTable), sp)
   }
 
-  /** The ST12 seed conveniences: bootstrap a vector-admission stream
+  /** The ST12 seed convenience: bootstrap a vector-admission stream
     * dir from the durable PROBED-BUCKET table (the [[embBucketsArtifact]]
-    * family, epoch-read) plus a vector-corpus table — physical copy or
-    * by-ref pointers. The bucket table's recorded build params
+    * family, epoch-read) plus a vector-corpus table, by-ref — O(metadata)
+    * adoption. The bucket table's recorded build params
     * (dim/nPlanes/multiProbe) are verified against the stream's; the
     * corpus table must read as exactly (vec_id, embedding) with DOUBLE
     * elements (ST12's exact-rerank contract). */
-  def seedEmbedFromTables(s: SparkSession, baseDir: String,
-      corpus: DataFrame, bucketTable: String, dim: Int = 64,
-      nPlanes: Int = 12, cosThresholdPpm: Long = 990000L): Unit = {
-    val sp = graft.streaming.StreamParams.embed(dim, nPlanes,
-      cosThresholdPpm)
-    graft.streaming.StreamParams.requireTableCompatible(s, bucketTable, sp)
-    StreamBootstrap.seedEmbed(baseDir, corpus,
-      DurableArtifact.epochRead(s, bucketTable), sp)
-  }
-
-  /** By-ref twin of [[seedEmbedFromTables]] — O(metadata) adoption. */
   def seedEmbedFromTablesByRef(s: SparkSession, baseDir: String,
       corpusTable: String, bucketTable: String, dim: Int = 64,
       nPlanes: Int = 12, cosThresholdPpm: Long = 990000L): Unit = {

@@ -87,16 +87,11 @@ object MakeScale {
     val src = if (pos.length > 0) pos(0) else "/root/testdata/sf0.1"
     val dst = if (pos.length > 1) pos(1) else "/tmp/sf0.5x"
     val copies = if (pos.length > 2) pos(2).toInt else 5
-    val cpus = LocalCpus()
-    // getOrCreate: under a test harness this reuses (and must not
+    // under a test harness LocalSession reuses (and main must not
     // stop) the suite's session — main only stops what it created
     val hadSession = SparkSession.getActiveSession
       .orElse(SparkSession.getDefaultSession).isDefined
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     run(spark, src, dst, copies, mutate)
     if (!hadSession) spark.stop()
   }

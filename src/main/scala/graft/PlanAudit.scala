@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: dump formatted physical plans for scale-critical queries
   * so pushdown / pruning / join strategy can be audited (the "is this
@@ -15,12 +14,7 @@ object PlanAudit {
         "w1_top1_per_key", "j3_knn_nearest", "x5_ann_cosine_topk",
         "j7_asof_join", "j8_range_join", "a5_rollup", "a8_pivot",
         "c3_exists", "x9_hash_sample")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession("spark.sql.adaptive.enabled" -> "true")
     names.foreach { n =>
       val (exec, name) = if (n.startsWith("exec:")) (true, n.drop(5)) else (false, n)
       println(s"\n========== $n ==========")

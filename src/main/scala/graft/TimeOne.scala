@@ -1,30 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 object TimeOne {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 3
-    val cpus = LocalCpus()
-    // SPARK_GRAFT_SHUFFLE decouples reduce partition count from task
-    // slots (the SpillProbe levers) for memory-posture experiments
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val builder = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-    // SPARK_GRAFT_CONF="k=v;k=v" — posture experiments (sort-agg
-    // forced, AQE width knobs) without editing the harness per run
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";")
-      .filter(_.contains("=")).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        builder.config(k, v)
-      })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession("spark.sql.adaptive.enabled" -> "true")
     // 20x-replicated documents (ids offset per copy) — stress input
     // approximating the next scale factor up
     def docs20x = {

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -21,15 +20,7 @@ object Verify {
       case Some(set) => SparkEntry.queries.filter { case (n, _) => set(n) }
       case None      => SparkEntry.queries
     }
-    val cpus = LocalCpus()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     new java.io.File(outDir).mkdirs()
     // Exercise every materialized per-snapshot artifact end-to-end:
     // write the bucketed snapshot table once, point the session conf

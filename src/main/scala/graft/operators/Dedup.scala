@@ -258,8 +258,9 @@ object Dedup {
     * the pair partial-aggregate run in one stage whose per-task state
     * scales with postings/partitions, and 32 concurrent tasks racing
     * the unified memory manager for it spill (or not) per scheduling
-    * luck. The SpillProbe lever that works here is WIDTH, not task
-    * count: at 256 partitions the catastrophic reps vanish (22-44 s
+    * luck. The lever that works here (PERF.md "x27b 125×m
+    * adjudication CORRECTED") is WIDTH, not task count: at 256
+    * partitions the catastrophic reps vanish (22-44 s
     * band vs 20-172; the 8-slot bound also stabilizes, ±10%, but at
     * 2.7× the warm min). So: widen the list-build exchange so
     * per-task state fits the guaranteed share. Plan-time and
@@ -624,7 +625,7 @@ object Dedup {
     * artifact a 100 TB deployment builds ONCE per corpus snapshot and
     * serves every increment from: the daily job shingles only the
     * batch, joins it against the index (bucketed by `_sh` when written
-    * through `ExtensionQueries.writePostingIndex`, so the corpus side
+    * through `ExtensionQueries.postingIndexArtifact`, so the corpus side
     * joins without an exchange), and folds the batch's postings back
     * with [[appendToPostingIndex]] — the corpus itself is never
     * re-shingled or re-shuffled after the snapshot build. */
@@ -1053,7 +1054,7 @@ object Dedup {
         pairs.select(col(aCol), col(bCol)).localCheckpoint()
       } else pairs
     // Size-gated driver union-find — the same shortcut
-    // [[clusterFoldDelta]] ships (FoldLocalCcMaxEdgesConf, default 4M
+    // [[clusterFoldDelta]] ships ([[LocalGate]], default 4M
     // edges ≈ 64 MB collected): below the gate the undirected edge
     // list collects to the driver and path-compressed union-find
     // labels it in microseconds, where the distributed min-label loop
@@ -1068,7 +1069,7 @@ object Dedup {
     // shared: the count reads the persisted edges the loop would have
     // persisted anyway.
     val spark = pairs.sparkSession
-    val maxLocal = foldLocalGate(spark)
+    val maxLocal = LocalGate.maxRows(spark)
     val pairEdges = base.select(col(aCol).as("_pa"), col(bCol).as("_pb"))
     val longKeys = pairEdges.schema.fields.forall(_.dataType ==
       org.apache.spark.sql.types.LongType)
@@ -1192,7 +1193,7 @@ object Dedup {
       aCol: String = "ida", bCol: String = "idb",
       maxIter: Int = 25): ClusterFoldDelta = {
     val spark = map.sparkSession
-    val maxLocal = foldLocalGate(spark)
+    val maxLocal = LocalGate.maxRows(spark)
     val probeCap = maxLocal.min(Int.MaxValue - 1L).toInt
     val pairCols = newPairs.select(col(aCol).as("_a"), col(bCol).as("_b"))
     val longKeys = pairCols.schema.fields.forall(_.dataType ==
@@ -1330,29 +1331,6 @@ object Dedup {
       org.apache.spark.sql.types.StructType(Seq(a, b).map(
         org.apache.spark.sql.types.StructField(_,
           org.apache.spark.sql.types.LongType))))
-
-  /** [[FoldLocalCcMaxEdgesConf]], validated. */
-  private def foldLocalGate(spark: org.apache.spark.sql.SparkSession): Long = {
-    val raw = spark.conf.get(FoldLocalCcMaxEdgesConf, "4000000")
-    scala.util.Try(raw.toLong).toOption.filter(_ >= 0)
-      .getOrElse(throw new IllegalArgumentException(
-        s"$FoldLocalCcMaxEdgesConf must be a non-negative long, got " +
-          s"'$raw'"))
-  }
-
-  /** Session conf: edge count up to which the cluster folds run on
-    * the driver (default 4M edges ≈ 64 MB collected — the
-    * broadcast-join budget the relabel map must fit anyway).
-    * [[clusterFoldDelta]] probes the batch's PAIR count first: when
-    * the pairs fit (and the ids are longs), the whole fold — root
-    * lookup aside — runs on the driver. Otherwise the distributed
-    * fold probes its CONTRACTED edge count against the same gate and
-    * labels the touched-cluster graph with a driver-side union-find
-    * when that fits, the distributed min-label loop when not.
-    * [[connectedComponents]] gates its edge list the same way.
-    * IncrementalClusterSpec pins every path identical; set 0 to force
-    * the distributed loop. */
-  val FoldLocalCcMaxEdgesConf = "spark.graft.foldLocalCcMaxEdges"
 
   /** Union-find with path compression over the collected contracted
     * edges, relabeled to each component's MIN node id — the driver-
@@ -1494,14 +1472,6 @@ object Dedup {
     simhashBandedPairs(
       ensureParallelism(df).select(col(idCol).as("_id"),
         simhashSig(col(textCol), nBits, md5Variant).as("simhash")),
-      maxHamming)
-
-  /** [[simhashNearDups]] with a pluggable relational token hash — the
-    * composed-builtins reference path DedupSpec pins the native
-    * signature against. */
-  def simhashNearDupsWith(df: DataFrame, idCol: String, textCol: String,
-      hashFn: Column => Column, nBits: Int, maxHamming: Int): DataFrame =
-    simhashBandedPairs(simhashWith(df, idCol, textCol, hashFn, nBits),
       maxHamming)
 
   private def simhashBandedPairs(sh: DataFrame, maxHamming: Int): DataFrame = {

@@ -32,29 +32,22 @@ object Hierarchy {
     * ceiling for the deepest tree the caller accepts, not a fixed
     * price. An org-chart-shaped hierarchy (depth ≤ 7) resolves in 4
     * rounds under the default 6; callers can leave a generous ceiling
-    * without paying for it (HierarchySpec pins the job count). */
-  /** Session conf: node/edge count up to which [[resolveToRoot]]
-    * walks the hierarchy with a driver-side memoized chase instead of
-    * the distributed doubling loop (default 4M rows ≈ 64-96 MB
-    * collected — the same budget class as
-    * `spark.graft.foldLocalCcMaxEdges`). Each doubling round costs two
-    * driver actions at ~0.5 s of local stage latency at ANY SF, so a
-    * 4-round org-chart resolution was paying ~8 stage floors for
-    * microseconds of pointer chasing; above the gate (or on inputs
-    * the walk cannot faithfully replay: duplicate child edges, depth
-    * past the rounds budget, cycles) the loop runs unchanged.
-    * HierarchySpec pins local ≡ forced-distributed. Set 0 to force
-    * the loop. */
-  val LocalMaxRowsConf = "spark.graft.hierarchyLocalMaxRows"
-
+    * without paying for it (HierarchySpec pins the job count).
+    *
+    * DRIVER PATH: when both node and edge counts fit [[LocalGate]],
+    * the hierarchy is walked with a driver-side memoized chase instead
+    * of the doubling loop. Each doubling round costs two driver
+    * actions at ~0.5 s of local stage latency at ANY SF, so a 4-round
+    * org-chart resolution was paying ~8 stage floors for microseconds
+    * of pointer chasing; above the gate (or on inputs the walk cannot
+    * faithfully replay: duplicate child edges, depth past the rounds
+    * budget, cycles) the loop runs unchanged. HierarchySpec pins
+    * local ≡ forced-distributed. */
   def resolveToRoot(nodes: DataFrame, idCol: String,
       edges: DataFrame, childCol: String, parentCol: String,
       rounds: Int = 6): DataFrame = {
     val spark = nodes.sparkSession
-    val rawMax = spark.conf.get(LocalMaxRowsConf, "4000000")
-    val maxLocal = scala.util.Try(rawMax.toLong).toOption.filter(_ >= 0)
-      .getOrElse(throw new IllegalArgumentException(
-        s"$LocalMaxRowsConf must be a non-negative long, got '$rawMax'"))
+    val maxLocal = LocalGate.maxRows(spark)
     if (maxLocal > 0) {
       val nodesL = nodes.select(col(idCol).cast("long").as("id")).persist()
       val edgesL = edges.select(col(childCol).cast("long").as("c"),

@@ -275,12 +275,6 @@ object Multimodal {
         rows.map(r => decodeWav(r.getLong(0), r.getAs[Array[Byte]](1)))
       }(Encoders.product[DecodedAudio])
 
-  val MetadataSchema: StructType = StructType(Seq(
-    StructField("media_type", StringType),
-    StructField("width", IntegerType),
-    StructField("height", IntegerType),
-    StructField("duration_ms", LongType)))
-
   /** Wrap a string column as a binary payload + metadata struct — the
     * ingestion boundary where real pipelines read image bytes. */
   def asMedia(df: DataFrame, payloadCol: String, mediaType: String): DataFrame =

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import graft.sources.{CsvIngest, XmlShred}
 
 import java.nio.file.{Files, Paths}
@@ -31,16 +31,7 @@ object BlueFortyMain {
       if (args.length > 1) args(1) else "/tmp/blueforty_out")
     Files.createDirectories(outDir)
 
-    val cpus = graft.LocalCpus()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("blueforty-pipeline")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession("spark.app.name" -> "blueforty-pipeline")
     import spark.implicits._
 
     def save(df: DataFrame, name: String): DataFrame = {

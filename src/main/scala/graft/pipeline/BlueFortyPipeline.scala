@@ -112,20 +112,6 @@ object BlueFortyPipeline {
   def loadSupplierCase(spark: SparkSession, csvPath: String): DataFrame =
     SchemaInference.readInferred(spark, csvPath)
 
-  /** The reference's full Q6 extract boundary (BlueForty.py:300-321:
-    * psycopg2 `COPY supplier_case TO STDOUT` → landing CSV → inferred
-    * load): with a JDBC config the extract is a live partitioned
-    * datasource scan (no landing file at all — Spark-native replaces
-    * the CSV hop); without one, the landing-CSV inference path above.
-    * See JdbcSpec for the live path driven against embedded Derby. */
-  def extractSupplierCase(spark: SparkSession,
-      jdbc: Option[graft.sources.Jdbc.Options],
-      landingCsvPath: String): DataFrame =
-    jdbc match {
-      case Some(o) => graft.sources.Jdbc.readTable(spark, o)
-      case None    => loadSupplierCase(spark, landingCsvPath)
-    }
-
   /** CORE.SUPPLIER_ZIP5 view (BlueForty.py:364-388). NOTE the operator
     * order is the reference's: COALESCE → LPAD(5) → strip non-digits —
     * so a 4-char alphanumeric code gains a leading '0' *before* letters

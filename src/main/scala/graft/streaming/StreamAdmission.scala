@@ -129,7 +129,7 @@ object StreamAdmission {
           // O(batch) state, sized before the lineage cut) and serves
           // both the near-dup probe and the index append below — the
           // from-text form shingled the survivors twice per trigger
-          // (same change as StreamNearDup.pairBatch; St10Dissect A/B)
+          // (same change as StreamNearDup.pairBatch; OPTIMIZATION_r16.md)
           val batchIdx = StreamIndex.batchCkpt(StreamIndex.deltaSized(
             Dedup.postingIndex(survivors, "doc_id", "text", n)))
           val nearIds = Dedup.incrementalJaccardPairsFromIndexDeltasPrebuilt(
@@ -182,7 +182,8 @@ object StreamAdmission {
     * the curation heal, PLUS the fp-layer compaction — the fp deltas
     * grow one file per trigger exactly like the index deltas, and the
     * probe's file-open cost grows with stream age the same way
-    * (CompactionProbe's fp table). Returns the index snapshot id. */
+    * (PERF.md "ST9 fp-layer compaction"). Returns the index snapshot
+    * id. */
   def compactIndex(s: SparkSession, baseDir: String, n: Int = 3):
       Option[Long] = {
     StreamParams.verifyKeys(baseDir, Map("n" -> n.toString))

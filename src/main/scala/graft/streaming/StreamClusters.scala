@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.operators.Dedup
+import graft.operators.{Dedup, LocalGate}
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -123,7 +123,7 @@ object StreamClusters {
           val delta = Dedup.clusterFoldDelta(viewUpTo(s, baseDir, v), pairs)
           require(delta.broadcastable,
             s"StreamClusters: batch $v's relabel delta exceeded the " +
-              s"driver union-find gate (${Dedup.FoldLocalCcMaxEdgesConf}) " +
+              s"driver union-find gate (${LocalGate.MaxRowsConf}) " +
               "— a per-trigger relabel that cannot broadcast cannot " +
               "compose; compact and rebuild out-of-band")
           delta.relabel

@@ -150,7 +150,7 @@ private[graft] object StreamIndex {
     * (default 8g at the 5× replica) MEMORY_AND_DISK checkpoint
     * blocks cost the trigger's pair stage ~2.5 s of eviction/GC
     * pressure, while at an adequately-sized heap the two levels
-    * measure at par (St10Dissect matrix, OPTIMIZATION_r16.md).
+    * measure at par (OPTIMIZATION_r16.md's storage-level matrix).
     * Accepts any `StorageLevel.fromString` name. */
   val BatchCkptStorageConf = "spark.graft.streamCkptStorage"
 
@@ -426,10 +426,6 @@ private[graft] object StreamIndex {
   /** The [[IndexSchema]] with no rows — the pre-first-commit view. */
   def emptyIndex(s: SparkSession): DataFrame =
     s.createDataFrame(s.sparkContext.emptyRDD[Row], IndexSchema)
-
-  /** Newest committed compact snapshot id under `index/`, if any. */
-  def compactSnapshot(baseDir: String): Option[Long] =
-    layerSnapshot(baseDir, "index")
 
   /** Committed deltas not yet covered by a layer's compact snapshot —
     * the statistic the streams' `autoCompactEvery` trigger compares

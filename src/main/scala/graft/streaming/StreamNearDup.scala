@@ -145,7 +145,7 @@ object StreamNearDup {
       // shingled the batch twice per trigger (once inside the pair
       // listing, once for the delta write) — one full batch
       // shingle+shuffle saved per trigger at every scale, and ~0.5 s
-      // of the three stage chains at bench SF (St10Dissect A/B).
+      // of the three stage chains at bench SF (OPTIMIZATION_r16.md).
       //
       // The trigger's three writes land as ONE CONCURRENT WAVE
       // (StreamIndex.BatchWave): the corpus DATA job — depending on

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
 
 import java.nio.file.{Files, Path, Paths}
 
@@ -58,8 +58,9 @@ object StreamUpsert {
 
   // ------------------------------------------------- durable merge sink
 
-  /** The foreachBatch merge path: each micro-batch of the change log is
-    * folded into a durable latest-per-key parquet table at `tableDir`.
+  /** The foreachBatch merge sink: called from `foreachBatch`, it folds
+    * each micro-batch of the change log into a durable latest-per-key
+    * parquet table at `tableDir`.
     *
     * Exactly-once EFFECT on top of foreachBatch's at-least-once
     * delivery contract comes from a transactional versioned commit, not
@@ -81,21 +82,11 @@ object StreamUpsert {
     * dependency-free stand-in with the same commit semantics, and the
     * merge itself stays one O(keys) hash aggregation per batch.
     * StreamUpsertSpec pins replay idempotence and the
-    * crash-after-sink-write restart end-to-end. */
-  def foreachBatchMerge(changes: Dataset[ChangeRow], tableDir: String,
-      checkpointDir: String): StreamingQuery =
-    changes.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (b: Dataset[ChangeRow], id: Long) =>
-        val _ = mergeBatch(b, id, tableDir)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-
-  /** Fold one micro-batch into the versioned table. Returns false (and
-    * does nothing) when `batchId` is already committed — the replayed-
-    * batch case. Prunes committed versions older than the previous one
-    * after a successful commit. */
+    * crash-after-sink-write restart end-to-end.
+    *
+    * Returns false (and does nothing) when `batchId` is already
+    * committed — the replayed-batch case. Prunes committed versions
+    * older than the previous one after a successful commit. */
   def mergeBatch(batch: Dataset[ChangeRow], batchId: Long,
       tableDir: String): Boolean = {
     val s = batch.sparkSession

@@ -34,8 +34,6 @@ final class MultiPatternMatcher(patternStrings: Seq[String], pad: Boolean)
     .toArray
   require(pats.forall(_.length > 0), "empty patterns are not countable")
 
-  def nPatterns: Int = pats.length
-
   // Dispatch on the byte at `dispatchOff`: when every pattern shares
   // the same first byte (the padded-word case — all start with ' '),
   // dispatching on the SECOND byte keeps the per-position candidate

@@ -49,9 +49,8 @@ class IdDomainSpec extends AnyFunSuite {
 
   test("headroom ledger: the 2^44 bound leaves room for MORE 10^12 " +
       "arrival slots — the next kind can claim 10e12 without widening") {
-    // Round-15 state (8e12/9e12 now claimed by the probe bridge
-    // domains): the next slot after the highest claimed offset
-    // fits with room to spare, and so do several after it. If this
+    // The next slot after the highest claimed offset fits with room
+    // to spare, and so do several after it. If this
     // starts failing, the space is exhausted AGAIN — the next widening
     // step is documented in Dedup.SizeBits' comment (the size field
     // still has ~2 bits of slack above any fixture's shingle count,

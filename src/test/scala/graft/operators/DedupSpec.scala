@@ -155,12 +155,12 @@ class DedupSpec extends SparkTestBase {
     // since r16) always converges, so the refusal property is the
     // loop's alone
     val path = (1L until 7L).map(i => (i, i + 1)).toDF("ida", "idb")
-    spark.conf.set(Dedup.FoldLocalCcMaxEdgesConf, "0")
+    spark.conf.set(LocalGate.MaxRowsConf, "0")
     try {
       intercept[IllegalArgumentException] {
         Dedup.connectedComponents(path, maxIter = 1)
       }
-    } finally spark.conf.unset(Dedup.FoldLocalCcMaxEdgesConf)
+    } finally spark.conf.unset(LocalGate.MaxRowsConf)
   }
 
   test("editDistancePairs equals the naive all-pairs levenshtein") {

@@ -45,13 +45,13 @@ class HierarchySpec extends SparkTestBase {
       val viaLocal = Hierarchy.resolveToRoot(nodes.toDF("id"), "id",
           edges.toDF("child", "parent"), "child", "parent", rounds)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      spark.conf.set(Hierarchy.LocalMaxRowsConf, "0")
+      spark.conf.set(LocalGate.MaxRowsConf, "0")
       try {
         val viaDist = Hierarchy.resolveToRoot(nodes.toDF("id"), "id",
             edges.toDF("child", "parent"), "child", "parent", rounds)
           .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
         assert(viaLocal === viaDist, s"rounds=$rounds")
-      } finally spark.conf.unset(Hierarchy.LocalMaxRowsConf)
+      } finally spark.conf.unset(LocalGate.MaxRowsConf)
       viaLocal
     }
     val full = both(6) // depth 40 ≤ 2^6−1: fully resolved

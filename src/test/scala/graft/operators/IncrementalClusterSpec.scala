@@ -91,11 +91,11 @@ class IncrementalClusterSpec extends SparkTestBase {
     val mapped = Dedup.connectedComponents(pairsDf(base))
       .select(col("node").as("doc_id"), col("cluster_id"))
     val viaLocal = mapOf(Dedup.foldPairsIntoClusterMap(mapped, pairsDf(inc)))
-    spark.conf.set(Dedup.FoldLocalCcMaxEdgesConf, "0")
+    spark.conf.set(LocalGate.MaxRowsConf, "0")
     try {
       val viaDist = mapOf(Dedup.foldPairsIntoClusterMap(mapped, pairsDf(inc)))
       assert(viaDist === viaLocal)
-    } finally spark.conf.unset(Dedup.FoldLocalCcMaxEdgesConf)
+    } finally spark.conf.unset(LocalGate.MaxRowsConf)
     assert(viaLocal === mapOf(Dedup.connectedComponents(
         pairsDf(base ++ inc))
       .select(col("node").as("doc_id"), col("cluster_id"))))
@@ -109,11 +109,11 @@ class IncrementalClusterSpec extends SparkTestBase {
     val edges = Seq((5L, 6L), (6L, 7L), (7L, 1L), (10L, 11L),
       (20L, 21L), (21L, 22L), (22L, 20L), (100L, 3L))
     val viaLocal = mapOf(Dedup.connectedComponents(pairsDf(edges)))
-    spark.conf.set(Dedup.FoldLocalCcMaxEdgesConf, "0")
+    spark.conf.set(LocalGate.MaxRowsConf, "0")
     try {
       val viaDist = mapOf(Dedup.connectedComponents(pairsDf(edges)))
       assert(viaDist === viaLocal)
-    } finally spark.conf.unset(Dedup.FoldLocalCcMaxEdgesConf)
+    } finally spark.conf.unset(LocalGate.MaxRowsConf)
     assert(viaLocal === Set((5L, 1L), (6L, 1L), (7L, 1L), (1L, 1L),
       (10L, 10L), (11L, 10L), (20L, 20L), (21L, 20L), (22L, 20L),
       (100L, 3L), (3L, 3L)))
@@ -165,8 +165,8 @@ class IncrementalClusterSpec extends SparkTestBase {
   }
 
   private def withGate[T](gate: Long)(body: => T): T = {
-    spark.conf.set(Dedup.FoldLocalCcMaxEdgesConf, gate.toString)
-    try body finally spark.conf.unset(Dedup.FoldLocalCcMaxEdgesConf)
+    spark.conf.set(LocalGate.MaxRowsConf, gate.toString)
+    try body finally spark.conf.unset(LocalGate.MaxRowsConf)
   }
 
   /** The same delta rows as the forced distributed path (gate 0). */

@@ -6,8 +6,9 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import java.util.concurrent.atomic.AtomicLong
 
 /** Spill-path pin: a 100 TB design that has never spilled is unproven.
-  * SpillProbe records the constrained-heap evidence at replica scale
-  * (PERF.md); this spec pins the MECHANISM deterministically — when an
+  * PERF.md "Constrained-memory (spill) evidence" records the
+  * constrained-heap evidence at replica scale; this spec pins the
+  * MECHANISM deterministically — when an
   * operator's in-memory buffer crosses its spill threshold, execution
   * degrades to UnsafeExternalSorter disk spill and the result stays
   * bit-identical.

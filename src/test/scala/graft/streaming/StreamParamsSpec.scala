@@ -94,8 +94,8 @@ class StreamParamsSpec extends SparkTestBase {
     val ti = "g_sp_idx_n4_tbl"
     spark.sql(s"DROP TABLE IF EXISTS $ti")
     val corpus = b1.toDF("doc_id", "text")
-    // an index table built at n=4 and STAMPED that way (what
-    // writePostingIndex of an n=4 artifact records)
+    // an index table built at n=4 and STAMPED that way (what the
+    // posting-index artifact's write records for n=4)
     Dedup.postingIndex(corpus, "doc_id", "text", 4)
       .withColumn(DurableArtifact.FoldEpochCol, lit(0))
       .write.bucketBy(8, "_sh").sortBy("_sh")
