@@ -260,9 +260,9 @@ object Dedup {
     * the unified memory manager for it spill (or not) per scheduling
     * luck. The lever that works here (PERF.md "x27b 125×m
     * adjudication CORRECTED") is WIDTH, not task count: at 256
-    * partitions the catastrophic reps vanish (22-44 s
-    * band vs 20-172; the 8-slot bound also stabilizes, ±10%, but at
-    * 2.7× the warm min). So: widen the list-build exchange so
+    * partitions the catastrophic reps vanish (22-44 s band vs
+    * 20-172; the 8-slot bound also stabilizes, ±10%, but at 2.7× the
+    * warm min). So: widen the list-build exchange so
     * per-task state fits the guaranteed share. Plan-time and
     * file-stat-based (no extra pass, deterministic); a no-op below
     * ~16 MB × defaultParallelism of source text, so bench-SF plans
