@@ -68,16 +68,20 @@ object ExtensionQueries {
     * modality, [[graft.streaming.StreamEmbed]]): `vecs` carries
     * (vec_id, embedding), pairs carry the two id columns. */
   private[graft] def quantizedCosOnPairs(vecs: DataFrame, pairs: DataFrame,
-      aCol: String, bCol: String): DataFrame =
-    scaledCosOnPairs(quantizedVectors(vecs), pairs, aCol, bCol)
+      aCol: String, bCol: String, dim: Int = 64): DataFrame =
+    scaledCosOnPairs(vecs, pairs, aCol, bCol, dim)
 
   /** (vec_id, q: array<long> scale-6, n2: long scale-12) — each vector
     * quantized ONCE per row. The explode(array(…)) Generate is the
     * projection barrier (CLAUDE.md): without it CollapseProject inlines
     * the quantization into n2 and every downstream consumer. */
   private def quantizedVectors(df: DataFrame): DataFrame =
-    Tables.wide(df)
-      .select(col("vec_id"), explode(array(q6(col("embedding")))).as("q"))
+    quantize(Tables.wide(df))
+
+  /** [[quantizedVectors]] without the fan-out — for a driver path's
+    * fetch of a few rows. */
+  private def quantize(df: DataFrame): DataFrame =
+    df.select(col("vec_id"), explode(array(q6(col("embedding")))).as("q"))
       .select(col("vec_id"), col("q"), sdot(col("q"), col("q")).as("n2"))
 
   // ------------------------------------------------------------ dedup
@@ -768,21 +772,6 @@ object ExtensionQueries {
         .select((col("vec_id") + 1000000).as("vec_id"),
           transform(col("embedding").cast("array<double>"), x => -x)
             .as("embedding")))
-    val probed0 = docsEmbBuckets(s, d)
-    val cand1 = Similarity.incrementalLshCandidates(probed0,
-      b1.select(col("vec_id"),
-        col("embedding").cast("array<float>").as("embedding")),
-      "vec_id", "embedding", dim = 64, nPlanes = 12)
-    val near1 = scaledCosOnPairs(quantizedVectors(corpus.unionByName(b1)),
-        cand1, "ida", "idb")
-      .filter(col("cos") >= 0.99)
-    val v1 = embDayVerdicts(b1, near1).localCheckpoint()
-    val s1 = v1.filter(col("verdict") === "kept")
-      .select(col("vec_id"), col("embedding"))
-    val probed1 = Similarity.appendToEmbBuckets(probed0,
-      s1.select(col("vec_id"),
-        col("embedding").cast("array<float>").as("embedding")),
-      "vec_id", "embedding", dim = 64, nPlanes = 12)
     val b2 = raw.filter(col("vec_id") % 3 === 2)
       .select((col("vec_id") + 2000000).as("vec_id"),
         transform(col("embedding").cast("array<double>"),
@@ -791,19 +780,95 @@ object ExtensionQueries {
         .select((col("vec_id") + 2000000).as("vec_id"),
           transform(col("embedding").cast("array<double>"), x => -x)
             .as("embedding")))
-    val cand2 = Similarity.incrementalLshCandidates(probed1,
-      b2.select(col("vec_id"),
-        col("embedding").cast("array<float>").as("embedding")),
-      "vec_id", "embedding", dim = 64, nPlanes = 12)
-    val near2 = scaledCosOnPairs(
-        quantizedVectors(corpus.unionByName(s1).unionByName(b2)),
-        cand2, "ida", "idb")
-      .filter(col("cos") >= 0.99)
-    val v2 = embDayVerdicts(b2, near2)
-    v1.select(lit(1).as("day"), col("vec_id"), col("verdict"))
-      .unionByName(v2.select(lit(2).as("day"), col("vec_id"),
-        col("verdict")))
-      .orderBy("day", "vec_id")
+    val probed0 = docsEmbBuckets(s, d)
+    x42OnDriver(corpus, b1, b2, probed0).getOrElse {
+      val cand1 = Similarity.incrementalLshCandidates(probed0,
+        b1.select(col("vec_id"),
+          col("embedding").cast("array<float>").as("embedding")),
+        "vec_id", "embedding", dim = 64, nPlanes = 12)
+      val near1 = scaledCosOnPairs(corpus.unionByName(b1),
+          cand1, "ida", "idb", 64)
+        .filter(col("cos") >= 0.99)
+      val v1 = embDayVerdicts(b1, near1).localCheckpoint()
+      val s1 = v1.filter(col("verdict") === "kept")
+        .select(col("vec_id"), col("embedding"))
+      val probed1 = Similarity.appendToEmbBuckets(probed0,
+        s1.select(col("vec_id"),
+          col("embedding").cast("array<float>").as("embedding")),
+        "vec_id", "embedding", dim = 64, nPlanes = 12)
+      val cand2 = Similarity.incrementalLshCandidates(probed1,
+        b2.select(col("vec_id"),
+          col("embedding").cast("array<float>").as("embedding")),
+        "vec_id", "embedding", dim = 64, nPlanes = 12)
+      val near2 = scaledCosOnPairs(
+          corpus.unionByName(s1).unionByName(b2),
+          cand2, "ida", "idb", 64)
+        .filter(col("cos") >= 0.99)
+      val v2 = embDayVerdicts(b2, near2)
+      v1.select(lit(1).as("day"), col("vec_id"), col("verdict"))
+        .unionByName(v2.select(lit(2).as("day"), col("vec_id"),
+          col("verdict")))
+    }.orderBy("day", "vec_id")
+  }
+
+  /** x42 with both days' batches on the driver, when they fit
+    * [[LocalGate]] (rows × 64 elements): one probe collects both
+    * batches, and each day is serve → verdicts on the driver — the
+    * kernels' own driver paths (candidates, rerank) run against local
+    * batches, the verdicts and the day-1 survivors are driver
+    * collections handed back as local relations, and the fold is the
+    * same [[Similarity.appendToEmbBuckets]] over the survivors' local
+    * relation. One probe for both days, then a bucket fetch and a
+    * vector fetch per day: 9 jobs with the ordered write, where the
+    * distributed chain ran 20 (PERF.md "Small vector batches on the
+    * driver"); the same rows, since every value is computed by the
+    * same expressions. None over the gate. */
+  private def x42OnDriver(corpus: DataFrame, b1: DataFrame, b2: DataFrame,
+      probed0: DataFrame): Option[DataFrame] = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
+    val s = corpus.sparkSession
+    val days = LocalGate.collectIfFits(
+      b1.select(lit(1).as("_day"), col("vec_id"), col("embedding"))
+        .unionByName(b2.select(lit(2).as("_day"), col("vec_id"),
+          col("embedding"))), width = 64)
+      .getOrElse(return None)
+    val vecFrame = (rows: Seq[Row]) =>
+      s.createDataFrame(java.util.Arrays.asList(rows: _*), b1.schema)
+    val batch = (day: Int) => days.toSeq.filter(_.getInt(0) == day)
+      .map(r => Row(r.get(1), r.get(2)))
+    // one day's (vec_id, embedding, verdict) rows, served against
+    // `probed` with `vecs` (the corpus as of that day) for the rerank
+    def serve(rows: Seq[Row], vecs: DataFrame,
+        probed: DataFrame): Option[Seq[(Row, String)]] = {
+      val b = vecFrame(rows)
+      val cand = Similarity.incrementalLshCandidates(probed,
+        b.select(col("vec_id"),
+          col("embedding").cast("array<float>").as("embedding")),
+        "vec_id", "embedding", dim = 64, nPlanes = 12)
+      val near = scaledCosOnPairs(vecs.unionByName(b),
+          cand, "ida", "idb", 64)
+        .filter(col("cos") >= 0.99)
+      LocalGate.collectIfFits(near.select(col("idb"))).map { hit =>
+        val dropped = hit.iterator.map(_.getLong(0)).toSet
+        rows.map(r => r -> (if (!r.isNullAt(0) && dropped(r.getLong(0)))
+          "near_dup" else "kept"))
+      }
+    }
+    for {
+      v1 <- serve(batch(1), corpus, probed0)
+      s1 = vecFrame(v1.collect { case (r, "kept") => r })
+      probed1 = Similarity.appendToEmbBuckets(probed0,
+        s1.select(col("vec_id"),
+          col("embedding").cast("array<float>").as("embedding")),
+        "vec_id", "embedding", dim = 64, nPlanes = 12)
+      v2 <- serve(batch(2), corpus.unionByName(s1), probed1)
+    } yield s.createDataFrame(
+      java.util.Arrays.asList((Seq(1 -> v1, 2 -> v2).flatMap { case (day, v) =>
+        v.map { case (r, verdict) => Row(day, r.get(0), verdict) } }): _*),
+      StructType(Seq(StructField("day", IntegerType, nullable = false),
+        b1.schema("vec_id"),
+        StructField("verdict", StringType, nullable = false))))
   }
 
   /** One curation day of x42 — the vector twin of [[lshDayVerdicts]]. */
@@ -1624,18 +1689,67 @@ object ExtensionQueries {
     * path: two narrow id joins attach each side's (q, n2), one native
     * integer dot per pair — the rerank stage every approximate
     * candidate generator shares, minus the relational detour. */
-  private def scaledCosOnPairs(vecs: DataFrame, pairs: DataFrame,
-      aCol: String, bCol: String): DataFrame = {
-    val va = vecs.select(col("vec_id").as("_pa"), col("q").as("_qa"),
-      col("n2").as("_na"))
-    val vb = vecs.select(col("vec_id").as("_pb"), col("q").as("_qb"),
-      col("n2").as("_nb"))
-    pairs
-      .join(va, col(aCol) === col("_pa"))
-      .join(vb, col(bCol) === col("_pb"))
-      .select(col(aCol), col(bCol),
-        scaledCos(sdot(col("_qa"), col("_qb")), col("_na"), col("_nb"))
-          .as("cos"))
+  private def scaledCosOnPairs(raw: DataFrame, pairs: DataFrame,
+      aCol: String, bCol: String, dim: Int): DataFrame =
+    localScaledCos(raw, pairs, aCol, bCol, dim).getOrElse {
+      val vecs = quantizedVectors(raw)
+      val va = vecs.select(col("vec_id").as("_pa"), col("q").as("_qa"),
+        col("n2").as("_na"))
+      val vb = vecs.select(col("vec_id").as("_pb"), col("q").as("_qb"),
+        col("n2").as("_nb"))
+      pairs
+        .join(va, col(aCol) === col("_pa"))
+        .join(vb, col(bCol) === col("_pb"))
+        .select(col(aCol), col(bCol),
+          scaledCos(sdot(col("_qa"), col("_qb")), col("_na"), col("_nb"))
+            .as("cos"))
+    }
+
+  /** [[scaledCosOnPairs]]' driver path, taken when the pairs are
+    * already a local relation (a driver-path candidate set) with long
+    * ids and everything fits [[LocalGate]] — `(ids + 2 × pairs) × dim`
+    * collected elements: one filtered scan fetches only the candidate
+    * ids' vectors ([[LocalGate.filterToIds]]) and quantizes them in
+    * that job with [[quantize]] (no [[Tables.wide]] fan-out), and the pairs
+    * are scored by projecting the SAME `scaled_dot` / `scaledCos`
+    * Columns over a local relation of (pair, both vectors), which the
+    * optimizer evaluates (ConvertToLocalRelation) with no Spark job.
+    * Quantization stays in the fetch job's own `quantize_decimal6`, so
+    * every value is the distributed plan's. A vec_id fetched twice
+    * falls back to the joins, whose multiplicity it would change. */
+  private def localScaledCos(raw: DataFrame, pairs: DataFrame,
+      aCol: String, bCol: String, dim: Int): Option[DataFrame] = {
+    import org.apache.spark.sql.types.{ArrayType, LongType, StructField, StructType}
+    val s = pairs.sparkSession
+    val ids2 = pairs.select(col(aCol), col(bCol))
+    val eligible = ids2.schema.fields.forall(_.dataType == LongType) &&
+      raw.schema("vec_id").dataType == LongType && LocalGate.isLocal(ids2)
+    if (!eligible) return None
+    val pairRows = ids2.collect().filter(r => !r.isNullAt(0) && !r.isNullAt(1))
+      .map(r => (r.getLong(0), r.getLong(1)))
+    val ids = pairRows.iterator.flatMap { case (a, b) => Iterator(a, b) }.toSet
+    if ((ids.size + 2L * pairRows.length) * dim > LocalGate.maxRows(s))
+      return None
+    val vecs = quantize(LocalGate.filterToIds(
+      raw.select(col("vec_id"), col("embedding")), "vec_id", ids))
+    val fetched = LocalGate.collectIfFits(vecs, width = dim)
+      .getOrElse(return None)
+      .filter(r => !r.isNullAt(0))
+    val byId = fetched.iterator.map(r => r.getLong(0) -> r).toMap
+    if (byId.size < fetched.length) return None
+    val qType = vecs.schema("q").dataType.asInstanceOf[ArrayType]
+    val scored = pairRows.iterator.flatMap { case (a, b) =>
+      for (va <- byId.get(a); vb <- byId.get(b))
+        yield org.apache.spark.sql.Row(a, b, va.get(1), va.get(2), vb.get(1),
+          vb.get(2))
+    }.toSeq
+    val local = s.createDataFrame(java.util.Arrays.asList(scored: _*),
+      StructType(Seq(StructField(aCol, LongType), StructField(bCol, LongType),
+        StructField("_qa", qType), StructField("_na", LongType),
+        StructField("_qb", qType), StructField("_nb", LongType))))
+    Some(local.select(col(aCol), col(bCol),
+      scaledCos(sdot(col("_qa"), col("_qb")), col("_na"), col("_nb"))
+        .as("cos")))
   }
 
   /** Exact-decimal cosine restricted to a given pair set: dots and
@@ -1680,7 +1794,7 @@ object ExtensionQueries {
       .select(col("query_id").as("qa"), col("neighbor_id").as("vb"))
     val scored = (if (decimalRef)
         decimalCosOnPairs(expandDecimal(emb), cand, "qa", "vb")
-      else scaledCosOnPairs(quantizedVectors(emb), cand, "qa", "vb"))
+      else scaledCosOnPairs(emb, cand, "qa", "vb", 64))
       .select(col("qa").as("query_id"), col("vb").as("neighbor_id"), col("cos"))
     val w = Window.partitionBy("query_id")
       .orderBy(col("cos").desc, col("neighbor_id").asc)
@@ -1784,7 +1898,7 @@ object ExtensionQueries {
         col("embedding").cast("array<float>").as("embedding")),
       "vec_id", "embedding", dim = 64, nPlanes = 12, multiProbe = true)
     (if (decimalRef) decimalCosOnPairs(expandDecimal(all), cand, "ida", "idb")
-     else scaledCosOnPairs(quantizedVectors(all), cand, "ida", "idb"))
+     else scaledCosOnPairs(all, cand, "ida", "idb", 64))
       .filter(col("cos") >= 0.99)
       .orderBy("ida", "idb")
   }
@@ -1818,8 +1932,8 @@ object ExtensionQueries {
       increment.select(col("vec_id"),
         col("embedding").cast("array<float>").as("embedding")),
       "vec_id", "embedding", dim = 64, nPlanes = 12)
-    scaledCosOnPairs(quantizedVectors(corpus.unionByName(increment)),
-        cand, "ida", "idb")
+    scaledCosOnPairs(corpus.unionByName(increment),
+        cand, "ida", "idb", 64)
       .filter(col("cos") >= 0.99)
       .orderBy("ida", "idb")
   }

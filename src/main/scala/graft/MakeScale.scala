@@ -129,7 +129,7 @@ object MakeScale {
         .select(df.columns.map { c =>
           if (idCols.contains(c)) (col(c) + col("_k") * S).as(c)
           else mutate.get(c).map(f => f(col(c)).as(c)).getOrElse(col(c))
-        }: _*)
+        }.toIndexedSeq: _*)
       out.repartition(8).write.mode("overwrite")
         .parquet(s"$dst/$name.parquet")
       println(s"[makescale] $name -> ${nCopies}x")

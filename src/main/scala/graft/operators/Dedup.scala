@@ -1079,7 +1079,7 @@ object Dedup {
       val labels = localMinLabels(pe.collect()
         .map(r => (r.getLong(0), r.getLong(1))))
       pe.unpersist()
-      return longPairFrame(spark, "node", "cluster_id", labels)
+      return LocalGate.longPairFrame(spark, "node", "cluster_id", labels)
     }
     // above the gate the loop starts from the SAME persisted pair
     // list the count just materialized — no extra pass over the pair
@@ -1193,25 +1193,24 @@ object Dedup {
       aCol: String = "ida", bCol: String = "idb",
       maxIter: Int = 25): ClusterFoldDelta = {
     val spark = map.sparkSession
-    val maxLocal = LocalGate.maxRows(spark)
-    val probeCap = maxLocal.min(Int.MaxValue - 1L).toInt
     val pairCols = newPairs.select(col(aCol).as("_a"), col(bCol).as("_b"))
     val longKeys = pairCols.schema.fields.forall(_.dataType ==
       org.apache.spark.sql.types.LongType)
     // Driver path — the common batch shape. The batch's pairs are
-    // probed by a LIMIT-guarded collect (driver memory bounded at
-    // maxLocal+1 rows); when they fit the gate, the whole fold runs
+    // probed by a bounded collect ([[LocalGate.collectIfFits]]: driver
+    // memory bounded by the gate); when they fit, the whole fold runs
     // on the driver: one scan of `map` fetches the touched nodes'
     // current roots, and contraction, the union-find and the
     // relabel/new-node split are plain collections. The distributed
     // path below runs three multi-stage queries for the same rows
     // (roots checkpoint, contracted-edge probe, the returned
     // relabel/newNodes plans): 13-18 Spark jobs per stream-trigger
-    // fold, against 4-5 here (PERF.md "Cluster fold on the driver").
-    if (longKeys && maxLocal > 0) {
-      val probed = pairCols.limit(probeCap + 1).collect()
-      if (probed.length <= probeCap)
-        return localFoldDelta(map, probed.map(r => (r.getLong(0),
+    // fold, against 3-4 here (PERF.md "Cluster fold on the driver",
+    // "Small vector batches on the driver").
+    if (longKeys) {
+      val probed = LocalGate.collectIfFits(pairCols)
+      if (probed.isDefined)
+        return localFoldDelta(map, probed.get.map(r => (r.getLong(0),
           r.getLong(1))))
     }
     // Distributed path: over the gate, or for non-long keys.
@@ -1238,20 +1237,17 @@ object Dedup {
     // Connected components over roots only. Within-cluster pairs drop
     // in the contraction, so a batch over the pair gate can still
     // contract under it: the contracted edges are probed the same way
-    // (one LIMIT-guarded collect, in place of a localCheckpoint +
+    // (one bounded collect, in place of a localCheckpoint +
     // count + collect triple) and, when they fit, labeled by the
     // driver union-find. Above the gate the distributed min-label
     // loop runs from a checkpoint leaf (the truncated probe is
     // re-derived — the rare corpus-scale path; a relabel map too big
     // to collect is too big to broadcast anyway).
-    val probed =
-      if (maxLocal > 0) contractedPlan.limit(probeCap + 1).collect()
-      else Array.empty[org.apache.spark.sql.Row]
-    val (cc, small) =
-      if (maxLocal > 0 && probed.length <= probeCap)
-        (longPairFrame(spark, "_root", "_l", localMinLabels(probed
+    val (cc, small) = LocalGate.collectIfFits(contractedPlan) match {
+      case Some(probed) =>
+        (LocalGate.longPairFrame(spark, "_root", "_l", localMinLabels(probed
           .map(r => (r.getLong(0), r.getLong(1))))), true)
-      else {
+      case None =>
         // checkpoint leaf: the propagation loop's plan doubles per
         // round, so it must not start from the join plan above
         val contracted = contractedPlan.localCheckpoint()
@@ -1286,7 +1282,8 @@ object Dedup {
   /** [[clusterFoldDelta]]'s driver path over the batch's collected
     * pairs — row-identical to the distributed path
     * (IncrementalClusterSpec compares the deltas): roots come from one
-    * scan of `map` semi-joined against the broadcast touched ids, and
+    * scan of `map` restricted to the touched ids
+    * ([[LocalGate.filterToIds]]: an `InSet` filter, one job), and
     * the rest is the same contraction and min-label relabel, in
     * driver collections. Both frames are local relations. */
   private def localFoldDelta(map: DataFrame,
@@ -1296,41 +1293,21 @@ object Dedup {
       .toSet
     val mapped: Map[Long, Long] =
       if (nodes.isEmpty) Map.empty
-      else {
-        val ids = spark.createDataFrame(
-          java.util.Arrays.asList(nodes.toSeq
-            .map(n => org.apache.spark.sql.Row(n)): _*),
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("_n",
-              org.apache.spark.sql.types.LongType))))
-        map.select(col("doc_id").cast("long").as("_n"),
-            col("cluster_id").cast("long").as("_r"))
-          .join(broadcast(ids), Seq("_n"), "left_semi")
+      else LocalGate.filterToIds(map.select(col("doc_id").cast("long").as("_n"),
+            col("cluster_id").cast("long").as("_r")), "_n", nodes)
           .collect().iterator.map(r => r.getLong(0) -> r.getLong(1)).toMap
-      }
     val root = (n: Long) => mapped.getOrElse(n, n)
     val labels = localMinLabels(pairs.map { case (a, b) => (root(a), root(b)) }
       .filter { case (ra, rb) => ra != rb })
     val oldRoots = mapped.values.toSet
     ClusterFoldDelta(
-      longPairFrame(spark, "_root", "_l", labels.filter { case (r, l) =>
+      LocalGate.longPairFrame(spark, "_root", "_l", labels.filter { case (r, l) =>
         r != l && oldRoots(r) }),
-      longPairFrame(spark, "doc_id", "cluster_id", nodes.iterator
+      LocalGate.longPairFrame(spark, "doc_id", "cluster_id", nodes.iterator
         .filterNot(mapped.contains).map(n => n -> labels.getOrElse(n, n))
         .toSeq),
       broadcastable = true)
   }
-
-  /** A two-long-column local relation — the driver union-find's rows
-    * handed back to Spark. */
-  private def longPairFrame(spark: org.apache.spark.sql.SparkSession,
-      a: String, b: String, rows: Iterable[(Long, Long)]): DataFrame =
-    spark.createDataFrame(
-      java.util.Arrays.asList(rows.toSeq.map { case (x, y) =>
-        org.apache.spark.sql.Row(x, y) }: _*),
-      org.apache.spark.sql.types.StructType(Seq(a, b).map(
-        org.apache.spark.sql.types.StructField(_,
-          org.apache.spark.sql.types.LongType))))
 
   /** Union-find with path compression over the collected contracted
     * edges, relabeled to each component's MIN node id — the driver-

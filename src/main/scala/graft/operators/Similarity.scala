@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 /** Vector similarity search over an `array<float>` embedding column:
   * brute-force cosine top-k as the exact baseline, and deterministic
@@ -402,9 +403,12 @@ object Similarity {
     * probed, and the ebkt delta from that one frame. */
   def probedFromRaw(raw: DataFrame, nPlanes: Int,
       multiProbe: Boolean = true): DataFrame =
-    raw.select(col("_id"), explode(
-      if (multiProbe) probeRadius1(col("_b0"), nPlanes)
-      else array(col("_b0"))).as("_bucket"))
+    raw.select(col("_id"),
+      explode(probeSet(col("_b0"), nPlanes, multiProbe)).as("_bucket"))
+
+  /** A raw bucket's probe set: radius 1 when multiProbe, else itself. */
+  private def probeSet(b0: Column, nPlanes: Int, multiProbe: Boolean): Column =
+    if (multiProbe) probeRadius1(b0, nPlanes) else array(b0)
 
   /** Fold a re-embedded batch into the probed-bucket artifact: the
     * hyperplanes are deterministic in (dim, nPlanes) — corpus-
@@ -431,19 +435,69 @@ object Similarity {
   def incrementalLshCandidates(corpusProbed: DataFrame,
       increment: DataFrame, idCol: String, vecCol: String, dim: Int,
       nPlanes: Int = 12, multiProbe: Boolean = true): DataFrame = {
-    val incRaw = rawBuckets(increment, idCol, vecCol, dim, nPlanes)
-    incrementalLshCandidatesPrebuilt(corpusProbed, incRaw,
-      probedFromRaw(incRaw, nPlanes, multiProbe))
+    incrementalLshCandidatesPrebuilt(corpusProbed,
+      rawBuckets(increment, idCol, vecCol, dim, nPlanes), nPlanes, multiProbe)
   }
 
-  /** [[incrementalLshCandidates]] with the batch's raw AND probed
-    * bucket tables PREBUILT — the streaming trigger
+  /** [[incrementalLshCandidates]] with the batch's raw bucket table
+    * PREBUILT — the streaming trigger
     * ([[graft.streaming.StreamEmbed.pairBatch]]) hashes its batch
-    * against the hyperplanes ONCE and derives both sides (plus the
+    * against the hyperplanes ONCE and derives the probes here (and the
     * ebkt delta it appends) from that frame; the from-vectors form
     * hashed the batch three times per trigger. Row-identical by
-    * construction (the delegate above IS this function). */
+    * construction (the delegate above IS this function).
+    *
+    * Driver path (long ids, everything within [[LocalGate]]): the
+    * batch's raw buckets and probe sets are collected in one bounded
+    * probe ([[LocalGate.collectIfFits]]), the corpus rows whose bucket is one of the
+    * batch's raw buckets in one filtered scan
+    * ([[LocalGate.filterToIds]]), and the pairs are formed on the
+    * driver with the same `ida < idb` and dedupe — a local relation,
+    * two jobs where the equi joins below stage four to six. The
+    * candidate count is bounded by the gate before any pair is built;
+    * over the gate the distributed joins run unchanged. */
   def incrementalLshCandidatesPrebuilt(corpusProbed: DataFrame,
+      incRaw: DataFrame, nPlanes: Int,
+      multiProbe: Boolean = true): DataFrame =
+    localLshCandidates(corpusProbed, incRaw, nPlanes, multiProbe)
+      .getOrElse(distributedLshCandidates(corpusProbed, incRaw,
+        probedFromRaw(incRaw, nPlanes, multiProbe)))
+
+  private def localLshCandidates(corpusProbed: DataFrame,
+      incRaw: DataFrame, nPlanes: Int,
+      multiProbe: Boolean): Option[DataFrame] = {
+    val longIds = Seq(corpusProbed, incRaw).forall(df =>
+      df.schema.fields.take(2).forall(_.dataType == LongType))
+    if (!longIds) return None
+    val Array(rId, rB0) = incRaw.columns
+    val Array(cId, cBucket) = corpusProbed.columns
+    val probes = if (multiProbe) nPlanes + 1 else 1
+    // a batch row carries its probe set: `probes` elements
+    val batch = LocalGate.collectIfFits(incRaw.select(col(rId), col(rB0),
+        probeSet(col(rB0), nPlanes, multiProbe)), width = probes)
+      .getOrElse(return None)
+      .filter(r => !r.isNullAt(0) && !r.isNullAt(1))
+    val byBucket: Map[Long, Array[Long]] =
+      batch.groupMap(_.getLong(1))(_.getLong(0))
+    val corpus =
+      if (byBucket.isEmpty) Array.empty[Row]
+      else LocalGate.collectIfFits(LocalGate.filterToIds(
+          corpusProbed.select(col(cId), col(cBucket)), cBucket,
+          byBucket.keys)).getOrElse(return None)
+        .filter(r => !r.isNullAt(0))
+    val hits = (b: Long) => byBucket.get(b).fold(0L)(_.length.toLong)
+    val candidates = corpus.iterator.map(r => hits(r.getLong(1))).sum +
+      batch.iterator.map(r => r.getSeq[Long](2).iterator.map(hits).sum).sum
+    if (candidates > LocalGate.maxRows(incRaw.sparkSession)) return None
+    val pairs = scala.collection.mutable.HashSet.empty[(Long, Long)]
+    def pairWith(a: Long, bucket: Long): Unit =
+      byBucket.get(bucket).foreach(_.foreach(b => if (a < b) pairs += ((a, b))))
+    corpus.foreach(r => pairWith(r.getLong(0), r.getLong(1)))
+    batch.foreach(r => r.getSeq[Long](2).foreach(pairWith(r.getLong(0), _)))
+    Some(LocalGate.longPairFrame(incRaw.sparkSession, "ida", "idb", pairs))
+  }
+
+  private def distributedLshCandidates(corpusProbed: DataFrame,
       incRaw: DataFrame, incProbed: DataFrame): DataFrame = {
     // `ida < idb` is a no-op under the contract (every increment id
     // above every corpus id) and a guard against its violation: an id

@@ -27,11 +27,25 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * `apply` runs inside `getOrCreate`, after the SparkContext exists
   * but before the session's shared state and SQLConf do, so the static
   * conf takes effect for the session being built.
+  *
+  * It also points `file:` at [[PosixLocalFileSystem]] (Hadoop's
+  * checksummed local FS, minus the `chmod` process the stock one forks
+  * per written file when no native hadoop library is loaded), via
+  * `setIfUnset("fs.file.impl")` on the SparkContext's Hadoop conf:
+  *  - without it, `file:` resolves through ServiceLoader to Hive's
+  *    `ProxyLocalFileSystem`, a wrapper over the same stock FS;
+  *  - like the codegen cache, Hadoop's FileSystem cache is JVM-global:
+  *    the first `file:` FS built in a JVM keeps its class for every
+  *    later `FileSystem.get`, so a JVM that touched `file:` before the
+  *    first graft session keeps the stock FS;
+  *  - an explicit `fs.file.impl` always wins.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   import GraftExtensions._
   override def apply(ext: SparkSessionExtensions): Unit = {
     org.apache.spark.sql.graft.CodegenCache.sizeActiveContext()
+    org.apache.spark.sql.graft.ActiveContext.get.foreach(sc =>
+      PosixLocalFileSystem.install(sc.hadoopConfiguration))
     ext.injectFunction((
       FunctionIdentifier("cosine_sim"),
       new ExpressionInfo(classOf[org.apache.spark.sql.graft.CosineSimilarity].getName, "cosine_sim"),

@@ -165,11 +165,16 @@ object StreamAdmission {
     val dirs = StreamIndex.layerDirs(baseDir, "fps", healFps(s, baseDir, _))
     if (dirs.isEmpty)
       s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("fp",
-            org.apache.spark.sql.types.StringType))))
-    else StreamIndex.readDirs(s, dirs).distinct()
+        FpsSchema)
+    else StreamIndex.readDirs(s, dirs, Some(FpsSchema)).distinct()
   }
+
+  /** The `fps` layer's schema, declared so [[fpView]]'s read costs no
+    * schema-inference job (StreamLayerSchemaSpec pins it against the
+    * delta and compaction writers). */
+  private[streaming] val FpsSchema = org.apache.spark.sql.types.StructType(
+    Seq(org.apache.spark.sql.types.StructField("fp",
+      org.apache.spark.sql.types.StringType)))
 
   /** The accumulated exact-survivor posting-index view (ST8's layout,
     * curation heal). */
@@ -200,7 +205,7 @@ object StreamAdmission {
     * dirs) is provably ignored by [[fpView]] and re-swept. */
   def compactFps(s: SparkSession, baseDir: String): Option[Long] =
     StreamIndex.compactLayer(s, baseDir, "fps", healFps(s, baseDir, _),
-      _.distinct())
+      _.distinct(), Some(FpsSchema))
 
   /** Every verdict emitted so far — the exactly-once union the spec
     * pins against the one-shot recompute. Only verdict dirs whose
@@ -268,11 +273,8 @@ object StreamAdmission {
         val earlierFps =
           if (dirs.isEmpty)
             s.createDataFrame(
-              s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-              org.apache.spark.sql.types.StructType(Seq(
-                org.apache.spark.sql.types.StructField("fp",
-                  org.apache.spark.sql.types.StringType))))
-          else StreamIndex.readDirs(s, dirs).distinct()
+              s.sparkContext.emptyRDD[org.apache.spark.sql.Row], FpsSchema)
+          else StreamIndex.readDirs(s, dirs, Some(FpsSchema)).distinct()
         val docs = StreamIndex.readDir(s, s"$baseDir/corpus/b=$v")
           .withColumn("fp", TextAnalysis.fingerprintMd5(col("text")))
         val wFp = Window.partitionBy("fp").orderBy("doc_id")

@@ -158,8 +158,8 @@ object StreamClusters {
     val snap = StreamIndex.layerSnapshot(baseDir, Layer)
     // readDir: a by-ref seed's cmap snapshot is a pointer resolving
     // through the patch-aware committed read
-    val base = snap.map(m => StreamIndex.readDir(s, s"$baseDir/$Layer/c=$m")
-        .select("doc_id", "cluster_id"))
+    val base = snap.map(m => StreamIndex.readDir(s, s"$baseDir/$Layer/c=$m",
+        Some(MapSchema)).select("doc_id", "cluster_id"))
       .getOrElse(emptyMap(s))
     val batches = StreamIndex.committedBatches(s"$baseDir/corpus")
       .filter(v => snap.forall(v > _)).filter(_ < before)
@@ -243,10 +243,15 @@ object StreamClusters {
   /** The (doc_id, cluster_id) schema with no rows — the
     * pre-first-commit view. */
   private def emptyMap(s: SparkSession): DataFrame =
-    s.createDataFrame(s.sparkContext.emptyRDD[Row],
-      StructType(Seq(
-        StructField("doc_id", LongType, nullable = false),
-        StructField("cluster_id", LongType, nullable = false))))
+    s.createDataFrame(s.sparkContext.emptyRDD[Row], MapSchema)
+
+  /** The `cmap/c=` snapshot schema, declared so [[viewUpTo]]'s read
+    * costs no schema-inference job (StreamLayerSchemaSpec pins it
+    * against [[compactClusters]]' files). A by-ref seed's pointer
+    * snapshot resolves through its table instead. */
+  private[streaming] val MapSchema = StructType(Seq(
+    StructField("doc_id", LongType, nullable = false),
+    StructField("cluster_id", LongType, nullable = false)))
 
   /** The `cmap/b=` delta schema, declared so [[viewUpTo]]'s read
     * costs no schema-inference job (StreamLayerSchemaSpec pins it

@@ -116,12 +116,12 @@ object StreamEmbed {
         // (batch×corpus) + the batch's own probed self-join — the corpus
         // bucket rows are never self-joined, never re-hashed
         val cand = Similarity.incrementalLshCandidatesPrebuilt(
-          bucketsView(s, baseDir, dim, nPlanes), rawB, probedB)
+          bucketsView(s, baseDir, dim, nPlanes), rawB, nPlanes)
         // exact DECIMAL(9,6) rerank on candidates only — x36's scoring,
         // so the emitted pairs are oracle-exact (the threshold is stated
         // in ppm like every other gate; /1e6 reproduces the double)
         val pairs = graft.ExtensionQueries.quantizedCosOnPairs(
-            corpusView(s, baseDir).unionByName(bdf), cand, "ida", "idb")
+            corpusView(s, baseDir).unionByName(bdf), cand, "ida", "idb", dim)
           .filter(col("cos") >= cosThresholdPpm / 1e6)
         // probedB inherits the checkpoint's already-bounded partitioning
         // (deltaSized's leaf stats are gone after the lineage cut)
@@ -146,10 +146,16 @@ object StreamEmbed {
       healBuckets(s, baseDir, _, dim, nPlanes))
     if (dirs.isEmpty)
       s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("_id", LongType),
-          StructField("_bucket", LongType))))
-    else StreamIndex.readDirs(s, dirs).select("_id", "_bucket")
+        BucketsSchema)
+    else StreamIndex.readDirs(s, dirs, Some(BucketsSchema))
+      .select("_id", "_bucket")
   }
+
+  /** The `ebkt` layer's schema, declared so [[bucketsView]]'s read
+    * costs no schema-inference job (StreamLayerSchemaSpec pins it
+    * against the delta and compaction writers). */
+  private[streaming] val BucketsSchema = StructType(Seq(
+    StructField("_id", LongType), StructField("_bucket", LongType)))
 
   /** Maintenance pass for the ebkt layer — fold snapshot + committed
     * deltas into one `ebkt/c=<maxBatch>` snapshot; deferred one-pass
@@ -161,7 +167,8 @@ object StreamEmbed {
     StreamParams.verifyKeys(baseDir,
       Map("dim" -> dim.toString, "nPlanes" -> nPlanes.toString))
     StreamIndex.compactLayer(s, baseDir, "ebkt",
-      healBuckets(s, baseDir, _, dim, nPlanes), _.distinct())
+      healBuckets(s, baseDir, _, dim, nPlanes), _.distinct(),
+      Some(BucketsSchema))
   }
 
   /** Rebuild any missing `ebkt/b=<id>` delta from its committed

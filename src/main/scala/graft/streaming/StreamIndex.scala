@@ -377,9 +377,12 @@ private[graft] object StreamIndex {
     * source table after seeding fails the read loudly (the fix —
     * compact the stream first, which materializes its own snapshot
     * and drops the pointer — is in the message), never serves rows
-    * the seed's triggers did not pair against. */
-  def readDir(s: SparkSession, dir: String): DataFrame =
-    if (!isPointer(dir)) s.read.parquet(dir)
+    * the seed's triggers did not pair against. A plain dir is read
+    * with the layer's declared `schema` when given (saving the
+    * schema-inference job). */
+  def readDir(s: SparkSession, dir: String,
+      schema: Option[StructType] = None): DataFrame =
+    if (!isPointer(dir)) schema.fold(s.read)(s.read.schema(_)).parquet(dir)
     else {
       val lines = new String(Files.readAllBytes(Paths.get(dir, PointerFile)),
         java.nio.charset.StandardCharsets.UTF_8).split("\n", -1)
@@ -421,7 +424,7 @@ private[graft] object StreamIndex {
       schema: Option[StructType] = None): DataFrame =
     if (!dirs.exists(isPointer))
       schema.fold(s.read)(s.read.schema(_)).parquet(dirs: _*)
-    else dirs.map(readDir(s, _)).reduce(_.unionByName(_))
+    else dirs.map(readDir(s, _, schema)).reduce(_.unionByName(_))
 
   /** The [[IndexSchema]] with no rows — the pre-first-commit view. */
   def emptyIndex(s: SparkSession): DataFrame =

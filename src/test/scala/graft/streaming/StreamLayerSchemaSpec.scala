@@ -54,5 +54,36 @@ class StreamLayerSchemaSpec extends SparkTestBase {
     assert(StreamClusters.clusterView(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet ===
       Set((1L, 1L), (5L, 1L), (6L, 1L)))
+    // the cmap snapshot the compaction writes, read back through the
+    // declared schema by the next view
+    assert(StreamClusters.compactClusters(spark, dir) === Some(1L))
+    assertLayer(s"$dir/cmap/c=1", StreamClusters.MapSchema)
+    assert(StreamClusters.clusterView(spark, dir).count() === 3L)
+  }
+
+  test("fps and ebkt layers carry exactly their declared schemas") {
+    val fpDir = java.nio.file.Files.createTempDirectory("graft_sls_fp").toString
+    // 24 words, 12 en-stopword hits: lang 'en', quality ≥ 0.3
+    val en = "the alpha of beta and gamma the delta of epsilon " +
+      "and zeta the eta of theta and iota the kappa of lambda and mu"
+    assert(StreamAdmission.curateBatch(Seq(NdDoc(1L, en + " nu xi"),
+      NdDoc(2L, en + " nu omicron")).toDS(), 0L, fpDir))
+    assert(StreamAdmission.curateBatch(Seq(NdDoc(3L, en + " nu pi")).toDS(),
+      1L, fpDir))
+    assert(StreamAdmission.compactFps(spark, fpDir) === Some(1L))
+    Seq("b=0", "b=1", "c=1").foreach(v =>
+      assertLayer(s"$fpDir/fps/$v", StreamAdmission.FpsSchema))
+    assert(StreamAdmission.fpView(spark, fpDir).count() === 3L)
+
+    val embDir = java.nio.file.Files.createTempDirectory("graft_sls_eb").toString
+    val v = (seed: Int) => Array.tabulate(64)(i => math.sin(seed * 7 + i))
+    assert(StreamEmbed.pairBatch(Seq(EmbDoc(1L, v(1)), EmbDoc(2L, v(2)))
+      .toDS(), 0L, embDir))
+    assert(StreamEmbed.pairBatch(Seq(EmbDoc(3L, v(1))).toDS(), 1L, embDir))
+    assert(StreamEmbed.compactBuckets(spark, embDir) === Some(1L))
+    Seq("b=0", "b=1", "c=1").foreach(b =>
+      assertLayer(s"$embDir/ebkt/$b", StreamEmbed.BucketsSchema))
+    // 3 vectors × 13 radius-1 probes, read through the declared schema
+    assert(StreamEmbed.bucketsView(spark, embDir).count() === 39L)
   }
 }
