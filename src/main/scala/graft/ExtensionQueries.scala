@@ -62,15 +62,6 @@ object ExtensionQueries {
     round(s12ToDouble(dot) /
       (sqrt(s12ToDouble(na)) * sqrt(s12ToDouble(nb))), 6)
 
-  /** Exact DECIMAL(9,6)-quantized cosine restricted to a given pair
-    * set — the rerank every approximate candidate generator shares,
-    * packaged for callers outside this object (the streaming vector
-    * modality, [[graft.streaming.StreamEmbed]]): `vecs` carries
-    * (vec_id, embedding), pairs carry the two id columns. */
-  private[graft] def quantizedCosOnPairs(vecs: DataFrame, pairs: DataFrame,
-      aCol: String, bCol: String, dim: Int = 64): DataFrame =
-    scaledCosOnPairs(vecs, pairs, aCol, bCol, dim)
-
   /** (vec_id, q: array<long> scale-6, n2: long scale-12) — each vector
     * quantized ONCE per row. The explode(array(…)) Generate is the
     * projection barrier (CLAUDE.md): without it CollapseProject inlines
@@ -765,14 +756,14 @@ object ExtensionQueries {
       .select(col("vec_id"), col("embedding"))
     val corpus = raw.select(col("vec_id"),
       col("embedding").cast("array<double>").as("embedding"))
-    val b1 = raw.filter(col("vec_id") % 3 === 1)
+    val day1 = raw.filter(col("vec_id") % 3 === 1)
       .select((col("vec_id") + 1000000).as("vec_id"),
         transform(col("embedding"), x => x + lit(0.001)).as("embedding"))
       .unionByName(raw.filter(col("vec_id") % 3 === 2)
         .select((col("vec_id") + 1000000).as("vec_id"),
           transform(col("embedding").cast("array<double>"), x => -x)
             .as("embedding")))
-    val b2 = raw.filter(col("vec_id") % 3 === 2)
+    val day2 = raw.filter(col("vec_id") % 3 === 2)
       .select((col("vec_id") + 2000000).as("vec_id"),
         transform(col("embedding").cast("array<double>"),
           x => -x + lit(0.001)).as("embedding"))
@@ -780,106 +771,76 @@ object ExtensionQueries {
         .select((col("vec_id") + 2000000).as("vec_id"),
           transform(col("embedding").cast("array<double>"), x => -x)
             .as("embedding")))
+    // both days' batches in ONE bounded probe: when they fit
+    // [[LocalGate]] (rows × 64 elements) they come back as a local
+    // relation, and every step below takes its driver path — the
+    // candidates and the rerank fetch only what they need, and the
+    // verdicts and the day-1 survivors evaluate with no Spark job
+    // (PERF.md "Small vector batches on the driver"); over the gate
+    // the same chain runs distributed
+    val days = LocalGate.localIfFits(
+      day1.withColumn("_day", lit(1))
+        .unionByName(day2.withColumn("_day", lit(2))), width = 64)
+    val b1 = days.filter(col("_day") === 1).drop("_day")
+    val b2 = days.filter(col("_day") === 2).drop("_day")
     val probed0 = docsEmbBuckets(s, d)
-    x42OnDriver(corpus, b1, b2, probed0).getOrElse {
-      val cand1 = Similarity.incrementalLshCandidates(probed0,
-        b1.select(col("vec_id"),
-          col("embedding").cast("array<float>").as("embedding")),
-        "vec_id", "embedding", dim = 64, nPlanes = 12)
-      val near1 = scaledCosOnPairs(corpus.unionByName(b1),
-          cand1, "ida", "idb", 64)
-        .filter(col("cos") >= 0.99)
-      val v1 = embDayVerdicts(b1, near1).localCheckpoint()
-      val s1 = v1.filter(col("verdict") === "kept")
-        .select(col("vec_id"), col("embedding"))
-      val probed1 = Similarity.appendToEmbBuckets(probed0,
-        s1.select(col("vec_id"),
-          col("embedding").cast("array<float>").as("embedding")),
-        "vec_id", "embedding", dim = 64, nPlanes = 12)
-      val cand2 = Similarity.incrementalLshCandidates(probed1,
-        b2.select(col("vec_id"),
-          col("embedding").cast("array<float>").as("embedding")),
-        "vec_id", "embedding", dim = 64, nPlanes = 12)
-      val near2 = scaledCosOnPairs(
-          corpus.unionByName(s1).unionByName(b2),
-          cand2, "ida", "idb", 64)
-        .filter(col("cos") >= 0.99)
-      val v2 = embDayVerdicts(b2, near2)
-      v1.select(lit(1).as("day"), col("vec_id"), col("verdict"))
-        .unionByName(v2.select(lit(2).as("day"), col("vec_id"),
-          col("verdict")))
-    }.orderBy("day", "vec_id")
-  }
-
-  /** x42 with both days' batches on the driver, when they fit
-    * [[LocalGate]] (rows × 64 elements): one probe collects both
-    * batches, and each day is serve → verdicts on the driver — the
-    * kernels' own driver paths (candidates, rerank) run against local
-    * batches, the verdicts and the day-1 survivors are driver
-    * collections handed back as local relations, and the fold is the
-    * same [[Similarity.appendToEmbBuckets]] over the survivors' local
-    * relation. One probe for both days, then a bucket fetch and a
-    * vector fetch per day: 9 jobs with the ordered write, where the
-    * distributed chain ran 20 (PERF.md "Small vector batches on the
-    * driver"); the same rows, since every value is computed by the
-    * same expressions. None over the gate. */
-  private def x42OnDriver(corpus: DataFrame, b1: DataFrame, b2: DataFrame,
-      probed0: DataFrame): Option[DataFrame] = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
-    val s = corpus.sparkSession
-    val days = LocalGate.collectIfFits(
-      b1.select(lit(1).as("_day"), col("vec_id"), col("embedding"))
-        .unionByName(b2.select(lit(2).as("_day"), col("vec_id"),
-          col("embedding"))), width = 64)
-      .getOrElse(return None)
-    val vecFrame = (rows: Seq[Row]) =>
-      s.createDataFrame(java.util.Arrays.asList(rows: _*), b1.schema)
-    val batch = (day: Int) => days.toSeq.filter(_.getInt(0) == day)
-      .map(r => Row(r.get(1), r.get(2)))
-    // one day's (vec_id, embedding, verdict) rows, served against
-    // `probed` with `vecs` (the corpus as of that day) for the rerank
-    def serve(rows: Seq[Row], vecs: DataFrame,
-        probed: DataFrame): Option[Seq[(Row, String)]] = {
-      val b = vecFrame(rows)
-      val cand = Similarity.incrementalLshCandidates(probed,
-        b.select(col("vec_id"),
-          col("embedding").cast("array<float>").as("embedding")),
-        "vec_id", "embedding", dim = 64, nPlanes = 12)
-      val near = scaledCosOnPairs(vecs.unionByName(b),
-          cand, "ida", "idb", 64)
-        .filter(col("cos") >= 0.99)
-      LocalGate.collectIfFits(near.select(col("idb"))).map { hit =>
-        val dropped = hit.iterator.map(_.getLong(0)).toSet
-        rows.map(r => r -> (if (!r.isNullAt(0) && dropped(r.getLong(0)))
-          "near_dup" else "kept"))
-      }
+    val cand1 = Similarity.incrementalLshCandidates(probed0,
+      b1.select(col("vec_id"),
+        col("embedding").cast("array<float>").as("embedding")),
+      "vec_id", "embedding", dim = 64, nPlanes = 12)
+    val near1 = scaledCosOnPairs(corpus.unionByName(b1),
+        cand1, "ida", "idb", 64)
+      .filter(col("cos") >= 0.99)
+    // day 1 feeds both the fold and the output: a distributed day is
+    // cut once, a driver-path day is already a local relation
+    val v1 = {
+      val v = embDayVerdicts(b1, near1)
+      if (LocalGate.isLocal(v)) v else v.localCheckpoint()
     }
-    for {
-      v1 <- serve(batch(1), corpus, probed0)
-      s1 = vecFrame(v1.collect { case (r, "kept") => r })
-      probed1 = Similarity.appendToEmbBuckets(probed0,
-        s1.select(col("vec_id"),
-          col("embedding").cast("array<float>").as("embedding")),
-        "vec_id", "embedding", dim = 64, nPlanes = 12)
-      v2 <- serve(batch(2), corpus.unionByName(s1), probed1)
-    } yield s.createDataFrame(
-      java.util.Arrays.asList((Seq(1 -> v1, 2 -> v2).flatMap { case (day, v) =>
-        v.map { case (r, verdict) => Row(day, r.get(0), verdict) } }): _*),
-      StructType(Seq(StructField("day", IntegerType, nullable = false),
-        b1.schema("vec_id"),
-        StructField("verdict", StringType, nullable = false))))
+    val s1 = v1.filter(col("verdict") === "kept")
+      .select(col("vec_id"), col("embedding"))
+    val probed1 = Similarity.appendToEmbBuckets(probed0,
+      s1.select(col("vec_id"),
+        col("embedding").cast("array<float>").as("embedding")),
+      "vec_id", "embedding", dim = 64, nPlanes = 12)
+    val cand2 = Similarity.incrementalLshCandidates(probed1,
+      b2.select(col("vec_id"),
+        col("embedding").cast("array<float>").as("embedding")),
+      "vec_id", "embedding", dim = 64, nPlanes = 12)
+    val near2 = scaledCosOnPairs(
+        corpus.unionByName(s1).unionByName(b2),
+        cand2, "ida", "idb", 64)
+      .filter(col("cos") >= 0.99)
+    val v2 = embDayVerdicts(b2, near2)
+    v1.select(lit(1).as("day"), col("vec_id"), col("verdict"))
+      .unionByName(v2.select(lit(2).as("day"), col("vec_id"),
+        col("verdict")))
+      .orderBy("day", "vec_id")
   }
 
-  /** One curation day of x42 — the vector twin of [[lshDayVerdicts]]. */
+  /** One curation day of x42 — the vector twin of [[lshDayVerdicts]]:
+    * a batch vector is a near dup when it is some pair's `idb`. Pairs
+    * off a driver path (a local relation of at most
+    * [[LocalGate.InSetMaxIds]] distinct ids) test that as an `InSet`
+    * over the batch, which a local batch evaluates with no Spark job;
+    * other pairs through a left join on their distinct ids. */
   private def embDayVerdicts(batch: DataFrame,
       pairs: DataFrame): DataFrame = {
-    val dropped = pairs.select(col("idb").as("vec_id")).distinct()
-      .withColumn("_near", lit(1))
-    batch.join(dropped, Seq("vec_id"), "left")
-      .select(col("vec_id"), col("embedding"),
-        when(col("_near").isNotNull, "near_dup")
-          .otherwise("kept").as("verdict"))
+    val verdict = (near: Column) =>
+      when(near, "near_dup").otherwise("kept").as("verdict")
+    val localIds = Option.when(LocalGate.isLocal(pairs))(
+        pairs.select(col("idb")).collect().map(_.get(0)).toSet)
+      .filter(_.size <= LocalGate.InSetMaxIds)
+    localIds.fold {
+      val dropped = pairs.select(col("idb").as("vec_id")).distinct()
+        .withColumn("_near", lit(1))
+      batch.join(dropped, Seq("vec_id"), "left")
+        .select(col("vec_id"), col("embedding"),
+          verdict(col("_near").isNotNull))
+    } { ids =>
+      batch.select(col("vec_id"), col("embedding"),
+        verdict(col("vec_id").isInCollection(ids)))
+    }
   }
 
   /** X35b — x35 SERVED FROM THE PER-SNAPSHOT LSH ARTIFACTS
@@ -1685,11 +1646,14 @@ object ExtensionQueries {
       .orderBy("query_id", "neighbor_id")
   }
 
-  /** Exact cosine restricted to a given pair set on the quantized-long
-    * path: two narrow id joins attach each side's (q, n2), one native
-    * integer dot per pair — the rerank stage every approximate
-    * candidate generator shares, minus the relational detour. */
-  private def scaledCosOnPairs(raw: DataFrame, pairs: DataFrame,
+  /** Exact DECIMAL(9,6)-quantized cosine restricted to a given pair
+    * set, on the quantized-long path: two narrow id joins attach each
+    * side's (q, n2), one native integer dot per pair — the rerank stage
+    * every approximate candidate generator shares (the streaming vector
+    * modality, [[graft.streaming.StreamEmbed]], included), minus the
+    * relational detour. `raw` carries (vec_id, embedding) of `dim`
+    * elements, the pairs carry the two id columns. */
+  private[graft] def scaledCosOnPairs(raw: DataFrame, pairs: DataFrame,
       aCol: String, bCol: String, dim: Int): DataFrame =
     localScaledCos(raw, pairs, aCol, bCol, dim).getOrElse {
       val vecs = quantizedVectors(raw)

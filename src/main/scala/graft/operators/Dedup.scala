@@ -1029,8 +1029,10 @@ object Dedup {
     // per round. Shallow near-dup graphs (≤ ~5 rounds) never notice,
     // but a ~15-round propagation (random/path-like graphs) built a
     // 2 GB plan string and OOM'd the driver before any work ran. The
-    // fix is a PERIODIC localCheckpoint (every 8th round, bounding
-    // growth at 2⁸ × base) rather than one per round: a checkpoint
+    // fix is a PERIODIC localCheckpoint (every 8th round, or sooner
+    // once a round's PRINTED plan — cached rounds re-printed inside
+    // it, ~4× per round — passes [[RenderedCharsLimit]]) rather than
+    // one per round: a checkpoint
     // leaf in the RETURNED plan breaks AQE exchange reuse through the
     // cached cluster map downstream (x29's shared-stage device went
     // dark — bisected against the per-round form), so the common
@@ -1099,8 +1101,12 @@ object Dedup {
       val next0 = labels.join(nbrMin, col("node") === col("src"), "left_outer")
         .select(col("node"), col("label").as("_old"),
           least(col("label"), coalesce(col("_nbr"), col("label"))).as("label"))
+      // a round's plan string re-prints its cached predecessors, ~4×
+      // longer per round: cut sooner than the 8th round once it
+      // prints past RenderedCharsLimit
       val (next, persisted) =
-        if (iter % 8 == 7) (next0.localCheckpoint(), false)
+        if (iter % 8 == 7 || rendersPast(next0, RenderedCharsLimit))
+          (next0.localCheckpoint(), false)
         else (next0.persist(), true)
       changed = next.filter(col("label") =!= col("_old")).count()
       // a localCheckpoint must never be unpersisted (its lineage is
@@ -1121,6 +1127,30 @@ object Dedup {
     * optimizer pass per call). */
   private[operators] def planNodeCount(df: DataFrame): Int =
     df.queryExecution.analyzed.collect { case p => p }.size
+
+  /** Whether `df`'s optimized plan prints longer than `limit` chars —
+    * counted as the tree string streams, stopping at the limit. */
+  private[operators] def rendersPast(df: DataFrame, limit: Long): Boolean = {
+    var n = 0L
+    val past = new scala.util.control.ControlThrowable {}
+    try {
+      df.queryExecution.optimizedPlan.treeString(
+        (s: String) => { n += s.length; if (n > limit) throw past },
+        true, false, org.apache.spark.sql.internal.SQLConf.get.maxToStringFields,
+        false, false)
+      false
+    } catch { case t: Throwable if t eq past => true }
+  }
+
+  /** Plan-string length past which [[connectedComponents]]' loop cuts
+    * a round to a checkpoint leaf before its 8th round: AQE renders
+    * every query's plan into a string (`onUpdatePlan`), and a round
+    * prints its cached predecessors, so the string grows ~4× per
+    * round. A 9-round forced-distributed fold (IncrementalClusterSpec,
+    * 60 random graphs) printed 4.5 K chars at round 1 and 292 M at
+    * round 8, one allocation from OOM at a 4 GB heap; with this limit
+    * it cuts at round 6 (18 M). */
+  private[operators] val RenderedCharsLimit = 8000000L
 
   /** Base-plan node count above which [[connectedComponents]] severs
     * its input to a localCheckpoint leaf before the propagation loop.

@@ -1,6 +1,11 @@
 package graft.operators
 
+import org.apache.spark.TaskContext
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions.{broadcast, col}
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
@@ -12,9 +17,10 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * [[Dedup.clusterFoldDelta]], [[Hierarchy.resolveToRoot]] and the
   * vector serve kernels ([[Similarity.incrementalLshCandidates]] and
   * the quantized cosine rerank). The helpers below are the pattern's
-  * three pieces: the bounded probe ([[collectIfFits]]), the way
-  * back into Spark ([[longPairFrame]]), and the scan restricted to a
-  * driver-known id set ([[filterToIds]]). */
+  * three pieces: the bounded probe ([[collectIfFits]], and
+  * [[localIfFits]] on top of it), the way back into Spark
+  * ([[longPairFrame]]), and the scan restricted to a driver-known id
+  * set ([[filterToIds]]). */
 object LocalGate {
 
   /** Session conf: collected elements up to which the gated operators
@@ -46,34 +52,73 @@ object LocalGate {
     * distributed plan. Gate 0 (or a row wider than the gate) always
     * answers None. A frame whose plan optimizes to a local relation (a
     * driver path's output) is answered with no Spark job. Otherwise
-    * ONE job takes at most gate/width + 1 rows from every partition,
-    * and the driver keeps partitions only while their total fits, so
-    * it holds at most about twice the gate. (A `limit(n).collect()`
-    * scans partitions incrementally — 1, then 4×, … — and a probe that
-    * fits must read them all: two or more jobs on any multi-partition
-    * input, such as a union.) */
+    * `df`'s own plan runs once and [[boundedCollect]] reads it. */
   def collectIfFits(df: DataFrame, width: Long = 1): Option[Array[Row]] = {
     val cap = (maxRows(df.sparkSession) / width.max(1L))
       .min(Int.MaxValue - 1L).toInt
-    if (cap <= 0) None
-    else if (isLocal(df)) Some(df.collect()).filter(_.length <= cap)
-    else {
-      val rdd = df.rdd
-      val parts = new Array[Array[Row]](rdd.getNumPartitions)
-      var total = 0L
-      df.sparkSession.sparkContext.runJob(rdd,
-        (it: Iterator[Row]) => it.take(cap + 1).toArray,
-        (i: Int, part: Array[Row]) =>
-          if (total <= cap) { total += part.length; parts(i) = part })
-      if (total > cap) None else Some(parts.flatten)
+    if (cap <= 0) return None
+    val qe = df.queryExecution
+    val rows = qe.optimizedPlan match {
+      case l: LocalRelation => Option.when(l.data.length <= cap)(l.data)
+      case _ => boundedCollect(qe.toRdd, cap)
+    }
+    rows.map { rs =>
+      val toRow = ExpressionEncoder(df.schema).resolveAndBind()
+        .createDeserializer()
+      rs.iterator.map(toRow).toArray
     }
   }
+
+  /** `rdd`'s rows when it holds at most `cap`, else None — in at most
+    * three jobs, with the rows that reach the driver bounded by
+    * 2 × cap + 3 per partition over all of them:
+    *  1. every partition sends up to its share of `cap` (cap over the
+    *     partition count, rounded up) plus one row; when none sends
+    *     the extra row, that was all of `rdd` — the common case;
+    *  2. else the partitions that did report their row counts (capped
+    *     at cap + 1) — None when the total passes `cap`;
+    *  3. else those partitions send their rows (each at most its
+    *     count + 1, so a plan that re-runs differently is caught too).
+    * A `limit(cap + 1).collect()` scans partitions incrementally (1,
+    * then 4×, …), so a fitting probe of a multi-partition input (a
+    * union) paid two or more jobs; one job that sends cap + 1 rows
+    * from EVERY partition would ship partitions × cap rows over the
+    * gate, past `spark.driver.maxResultSize`. */
+  private def boundedCollect(rdd: RDD[InternalRow],
+      cap: Int): Option[Seq[InternalRow]] = {
+    val sc = rdd.sparkContext
+    val share = ((cap + rdd.getNumPartitions - 1L) /
+      rdd.getNumPartitions.max(1)).toInt
+    val parts = sc.runJob(rdd, (it: Iterator[InternalRow]) =>
+      it.take(share + 1).map(_.copy()).toArray)
+    val full = parts.indices.filter(parts(_).length > share)
+    val done = parts.iterator.filter(_.length <= share)
+      .map(_.length.toLong).sum
+    if (full.nonEmpty) {
+      if (done + full.size * (share + 1L) > cap) return None
+      val counts = sc.runJob(rdd, (it: Iterator[InternalRow]) =>
+        it.take(cap + 1).size, full)
+      if (done + counts.map(_.toLong).sum > cap) return None
+      val limit = full.zip(counts).toMap
+      val rest = sc.runJob(rdd, (ctx: TaskContext, it: Iterator[InternalRow]) =>
+        it.take(limit(ctx.partitionId()) + 1).map(_.copy()).toArray, full)
+      full.zip(rest).foreach { case (i, part) => parts(i) = part }
+    }
+    Option.when(parts.iterator.map(_.length.toLong).sum <= cap)(
+      parts.toSeq.flatten)
+  }
+
+  /** `df` as a local relation when `rows × width` fits the gate (its
+    * rows collected by [[collectIfFits]]), else `df` itself — the input
+    * of a chain whose steps each take their driver path on local input. */
+  def localIfFits(df: DataFrame, width: Long = 1): DataFrame =
+    collectIfFits(df, width).fold(df)(rows => df.sparkSession
+      .createDataFrame(java.util.Arrays.asList(rows: _*), df.schema))
 
   /** Whether `df` optimizes to a local relation — rows the driver
     * already holds, collected with no Spark job. */
   def isLocal(df: DataFrame): Boolean =
-    df.queryExecution.optimizedPlan
-      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+    df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
 
   /** A two-long-column local relation — driver-computed rows handed
     * back to Spark. */

@@ -120,7 +120,7 @@ object StreamEmbed {
         // exact DECIMAL(9,6) rerank on candidates only — x36's scoring,
         // so the emitted pairs are oracle-exact (the threshold is stated
         // in ppm like every other gate; /1e6 reproduces the double)
-        val pairs = graft.ExtensionQueries.quantizedCosOnPairs(
+        val pairs = graft.ExtensionQueries.scaledCosOnPairs(
             corpusView(s, baseDir).unionByName(bdf), cand, "ida", "idb", dim)
           .filter(col("cos") >= cosThresholdPpm / 1e6)
         // probedB inherits the checkpoint's already-bounded partitioning

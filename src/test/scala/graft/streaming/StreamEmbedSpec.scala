@@ -49,7 +49,7 @@ class StreamEmbedSpec extends SparkTestBase {
     val ids = all.select(col("vec_id"))
     val cand = ids.toDF("ida")
       .join(ids.toDF("idb"), col("ida") < col("idb"))
-    ExtensionQueries.quantizedCosOnPairs(all, cand, "ida", "idb")
+    ExtensionQueries.scaledCosOnPairs(all, cand, "ida", "idb", dim = 64)
       .filter(col("cos") >= thresholdPpm / 1e6)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       .toSet
