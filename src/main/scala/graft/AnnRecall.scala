@@ -31,8 +31,8 @@ object AnnRecall {
       }.min
 
     for (nPlanes <- Seq(6, 8, 10, 12); mp <- Seq(true, false)) {
-      val lsh = pairSet(operators.Similarity.lshTopK(
-        corpus, queries, "vec_id", "embedding", 64, k, nPlanes, mp))
+      val lsh = pairSet(operators.Similarity.lshTopKMulti(
+        corpus, queries, "vec_id", "embedding", 64, k, nPlanes, nTables = 1, mp))
       val rec = (brute intersect lsh).size.toDouble / brute.size
       println(f"[annrecall] lsh nPlanes=$nPlanes multiProbe=$mp recall=$rec%.3f")
     }

@@ -109,12 +109,12 @@ object ExtensionQueries {
     * counts keep only df≤cap shingles while set sizes stay FULL, so
     * capped Jaccard underestimates — boilerplate-only pairs fall out.
     * The oracle applies the identical integer cap rule before pairing;
-    * x2stress times the capped path at scale. Scored and gated in
-    * exact-integer ppm (r8 advice): the cap changes the (c,na,nb)
-    * combinations vs x2, so x2's never-hit-a-rounding-tie history
-    * doesn't transfer, and here the rounded value also gates the ≥0.5
-    * row set — [[Dedup.ngramJaccardPairsPpm]] keeps both engines in
-    * long arithmetic end to end. */
+    * PERF.md "Dedup family" records the capped path at scale. Scored
+    * and gated in exact-integer ppm (r8 advice): the cap changes the
+    * (c,na,nb) combinations vs x2, so x2's never-hit-a-rounding-tie
+    * history doesn't transfer, and here the rounded value also gates
+    * the ≥0.5 row set — [[Dedup.ngramJaccardPairsPpm]] keeps both
+    * engines in long arithmetic end to end. */
   def x2bNgramJaccardCapped(s: SparkSession, d: String): DataFrame =
     Dedup.ngramJaccardPairsPpm(Tables.documents(s, d), "doc_id", "text",
         n = 3, thresholdPpm = 500000L, dfCap = Dedup.DfCap.AdaptiveAvg(2))
@@ -335,8 +335,7 @@ object ExtensionQueries {
 
   /** The corpus fingerprint set — the second durable per-snapshot
     * artifact (alongside the posting index); one map pass + distinct.
-    * Package-private for TimeOne's stage dissection; the durable form
-    * is [[corpusFpArtifact]]. */
+    * The durable form is [[corpusFpArtifact]]. */
   private[graft] def curationCorpusFp(docs: DataFrame): DataFrame =
     docs.select(operators.TextAnalysis.fingerprintMd5(col("text")).as("fp"))
       .distinct()
@@ -361,8 +360,8 @@ object ExtensionQueries {
   /** x34's batch + scoring + exact-flag chain (everything upstream of
     * the pair stage), probing `fpSet` for corpus-fp exact hits — x34
     * passes the inline recompute (self-contained oracle form), x34b
-    * the durable artifact. Package-private for TimeOne's dissection. */
-  private[graft] def curationFlagged(s: SparkSession, d: String,
+    * the durable artifact. */
+  private def curationFlagged(s: SparkSession, d: String,
       fpSet: DataFrame): DataFrame = {
     val docs = Tables.wide(Tables.documents(s, d))
       .select(col("doc_id"), col("text"))
@@ -1902,13 +1901,12 @@ object ExtensionQueries {
       .orderBy("ida", "idb")
   }
 
-  /** The ~1M-vector stress corpus shared by the embStress bench rows
-    * and TimeOne's x36stress dissection: each base embedding
-    * replicated 500× with a deterministic per-copy one-dimension
-    * perturbation — the scale where the vector recurrence's
-    * artifact-vs-recompute gap is measurable (at the fixture's 200
-    * vectors every path is stage-latency bound). */
-  def embStressCorpus(s: SparkSession, d: String): DataFrame = {
+  /** The ~1M-vector stress corpus of the embStress bench rows: each
+    * base embedding replicated 500× with a deterministic per-copy
+    * one-dimension perturbation — the scale where the vector
+    * recurrence's artifact-vs-recompute gap is measurable (at the
+    * fixture's 200 vectors every path is stage-latency bound). */
+  private def embStressCorpus(s: SparkSession, d: String): DataFrame = {
     val e = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
     e.select(col("vec_id"), col("embedding"),
         explode(sequence(lit(0), lit(499))).as("k"))
@@ -1935,8 +1933,7 @@ object ExtensionQueries {
   }
 
   /** The vector recurrence's ~0.1% re-embed batch over
-    * [[embStressCorpus]] — TimeOne x36stress's fixture, shared by the
-    * serve bench row. */
+    * [[embStressCorpus]], served by the x36s bench row. */
   private def embStressIncrement(s: SparkSession, d: String): DataFrame =
     embStressCorpus(s, d).filter(pmod(col("vec_id"), lit(997)) === 0)
       .select((col("vec_id") + 1000000000L).as("vec_id"),
@@ -1945,8 +1942,8 @@ object ExtensionQueries {
 
   /** The vector-recurrence SCALE path as bench history (the r10
     * verdict's gap: x36's bench row is fixture-constant, so the
-    * 2.0-vs-6.3 s evidence at ~1M vectors lived only in TimeOne
-    * notes): serves the stress batch's candidate generation from the
+    * 2.0-vs-6.3 s evidence at ~1M vectors lived only in PERF.md):
+    * serves the stress batch's candidate generation from the
     * memoized probed-bucket artifact — the daily job, corpus never
     * mapped over. benchOnly: the candidate semantics are pinned by
     * IncrementalEmbedSpec at fixture scale; this row exists to track
@@ -2946,9 +2943,8 @@ object ExtensionQueries {
     x27CappedCore(s, d, Dedup.DfCap.AdaptiveBounded(4))
 
   /** x27's snippet-augmented corpus (docs ∪ 40%-prefix snippets of
-    * every 20th doc) — package-private for TimeOne's stage
-    * dissection. */
-  private[graft] def x27Corpus(s: SparkSession, d: String): DataFrame = {
+    * every 20th doc). */
+  private def x27Corpus(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.wide(Tables.documents(s, d))
       .select(col("doc_id"), col("text"))
     val ws = split(col("text"), " ")
@@ -3224,11 +3220,11 @@ object ExtensionQueries {
     * sort splits across `shards` tasks instead of funnelling through
     * one reducer ('en' ≈ half of any real crawl; x22c had to trade
     * the kept set for this bound — here the hash order gives it away
-    * free). TimeOne's x30stress fixture (one language owning 50% of a
-    * 15M-row corpus) prices both shapes; at local[32] the extra
-    * exchange makes this the slower twin, at 1000 executors the
-    * per-task bound is what keeps the job out of spill/OOM territory
-    * — the x22c trade, minus the semantic price. */
+    * free). PERF.md "x30 fraction-cap skew proof" prices both shapes
+    * on a 15M-row corpus with one language owning 50%; at local[32]
+    * the extra exchange makes this the slower twin, at 1000 executors
+    * the per-task bound is what keeps the job out of spill/OOM
+    * territory — the x22c trade, minus the semantic price. */
   def x30bLanguageBudgetSharded(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.wide(Tables.documents(s, d))
       .select(col("doc_id"),
@@ -3324,9 +3320,9 @@ object ExtensionQueries {
     * of `assigned` canonicalize equal and ReuseExchange computes the
     * (expensive) assignment subtree once — same device, same reason
     * as x28's n_urls guard. The residual cost is the hot cluster's
-    * sort itself; TimeOne's x22stress fixture (one centroid owning
-    * 40% of a 1M-vector corpus) measures it against the old
-    * windowed-count shape. */
+    * sort itself; PERF.md "x22-family cap stage" measures it against
+    * the old windowed-count shape with one centroid owning 40% of the
+    * assignments. */
   private[graft] def capHalfPerCluster(assigned: DataFrame): DataFrame = {
     // ONE explicit exchange of the raw assignment rows by cluster_id
     // feeds BOTH consumers: the count aggregates straight off the
@@ -3399,7 +3395,7 @@ object ExtensionQueries {
 
   /** x22's SHARDED cap — the scale escape hatch for the one residual
     * cost capHalfPerCluster accepts: the hot cluster's admit-rank sort
-    * runs in ONE task (6M rows in the 40%-hot TimeOne fixture). Here
+    * runs in ONE task (6M rows in PERF.md's 40%-hot fixture). Here
     * the sort key is a hash, so the cap can shard: members split into
     * `shards` deterministic minstd buckets, each bucket keeps
     * ⌊n_shard/2⌋ in the same minstd order, and the per-task sort is
@@ -3473,43 +3469,33 @@ object ExtensionQueries {
     * levenshtein (edit count) with the similarity measure linkage
     * pipelines actually rank by. */
   def t10NameMatch(s: SparkSession, d: String): DataFrame =
-    t10Pairs(Tables.part(s, d).select(col("p_name")), windowed = true)
+    t10Pairs(Tables.part(s, d).select(col("p_name")))
       .orderBy("name_a", "name_b")
 
-  /** t10's blocked pair generator, shared with the TimeOne stress
-    * fixtures. `windowed = true` is the shipped blocking —
-    * sorted-neighborhood within first-token blocks (Hernández-Stolfo):
-    * names rank alphabetically per block and each name pairs only with
-    * its next w=8 neighbors, generated by exploding the rank range and
-    * equi-joining on (blk, rn) — so candidate pairs are ≤ w·n BY
+  /** t10's blocked pair generator: sorted-neighborhood within
+    * first-token blocks (Hernández-Stolfo): names rank alphabetically
+    * per block and each name pairs only with its next w=8 neighbors,
+    * generated by exploding the rank range and equi-joining on
+    * (blk, rn) — so candidate pairs are ≤ w·n BY
     * CONSTRUCTION, linear in the vocabulary, where the plain
     * single-key block join grows quadratically (TPC-H first tokens are
     * ~90 colors; every corpus 10× grows those blocks 10×). Alphabetic
     * neighbors are exactly the shared-prefix pairs Jaro-Winkler
     * up-weights, which is why this is the standard linkage blocking.
     * The per-block rank window is a sort, not a pairing — O(b log b)
-    * against the O(b²) it replaces. `windowed = false` keeps the
-    * all-pairs single-key shape for measurement (t10stress_single). */
-  def t10Pairs(nameRows: DataFrame, windowed: Boolean,
-      w: Int = 8): DataFrame = {
+    * against the O(b²) it replaces (PERF.md "t10 blocking"). */
+  private def t10Pairs(nameRows: DataFrame, w: Int = 8): DataFrame = {
     val names = nameRows.select(col("p_name")).distinct()
       .withColumn("blk", split(col("p_name"), " ").getItem(0))
-    val pairs = if (windowed) {
-      val ranked = names.withColumn("rn",
-        row_number().over(Window.partitionBy("blk").orderBy("p_name")))
-      // rank order IS alphabetical order, so name_a < name_b holds by
-      // construction (rn_b > rn_a)
-      val probes = ranked.select(col("blk"), col("p_name").as("name_a"),
-        explode(sequence(col("rn") + 1, col("rn") + w)).as("rn"))
-      probes.join(
+    val ranked = names.withColumn("rn",
+      row_number().over(Window.partitionBy("blk").orderBy("p_name")))
+    // rank order IS alphabetical order, so name_a < name_b holds by
+    // construction (rn_b > rn_a)
+    val probes = ranked.select(col("blk"), col("p_name").as("name_a"),
+      explode(sequence(col("rn") + 1, col("rn") + w)).as("rn"))
+    probes.join(
         ranked.select(col("blk"), col("p_name").as("name_b"), col("rn")),
         Seq("blk", "rn"))
-    } else {
-      names.select(col("blk"), col("p_name").as("name_a"))
-        .join(names.select(col("blk"), col("p_name").as("name_b")), Seq("blk"))
-        .filter(col("name_a") < col("name_b"))
-    }
-    pairs
       .withColumn("sim",
         round(TextAnalysis.jaroWinkler(col("name_a"), col("name_b")), 6))
       .filter(col("sim") >= 0.5)
@@ -3700,8 +3686,8 @@ object ExtensionQueries {
     * salt) join — merge hint keeps the exchange real (broadcast would
     * hide the skew), the salt spreads the hot key over 8 reducers.
     * Result is the plain join's aggregate, so the oracle recomputes it
-    * directly; the salted-vs-naive wall-time ratio is measured in
-    * TimeOne/PERF.md.
+    * directly; the salted-vs-naive wall-time ratio is in PERF.md
+    * "Skew resistance".
     *
     * The key is derived from the WITHIN-COPY id (`id mod 1e8`, the
     * MakeScale replication stride) offset into a per-copy 997-key
@@ -6049,7 +6035,7 @@ object ExtensionQueries {
   /** The memoized artifacts' BUILD cost as first-class bench rows: the
     * serving queries (x31, x5c, x22d) hit the session memo after their
     * first run, so BENCH history records memo-lookup cost (~0.06 s)
-    * and a fit regression would hide in TimeOne notes only. These rows
+    * and a fit regression would hide in one-off timing notes. These rows
     * bypass the memo and run the un-memoized fit/learn entry points
     * with the exact parameters the serving queries use. benchOnly:
     * k-means centroids aren't SQL-portable, and the BPE table already

@@ -14,6 +14,8 @@ object PlanAudit {
         "w1_top1_per_key", "j3_knn_nearest", "x5_ann_cosine_topk",
         "j7_asof_join", "j8_range_join", "a5_rollup", "a8_pivot",
         "c3_exists", "x9_hash_sample")
+    SparkEntry.requireKnown(names.map(_.stripPrefix("exec:")),
+      SparkEntry.all.keySet, "PlanAudit: no such row")
     val spark = LocalSession("spark.sql.adaptive.enabled" -> "true")
     names.foreach { n =>
       val (exec, name) = if (n.startsWith("exec:")) (true, n.drop(5)) else (false, n)

@@ -698,4 +698,13 @@ object SparkEntry {
     * the same parquet tables. */
   val oracleSql: Map[String, String] =
     rows.flatMap(r => r.oracle.map(r.name -> _)).toMap
+
+  /** Fails, naming every one of `names` not in `among`: a main checks
+    * its row names with this before it starts a session, so a typo
+    * fails at once instead of after Spark is up. */
+  def requireKnown(names: Iterable[String], among: collection.Set[String],
+      what: String): Unit = {
+    val unknown = names.filterNot(among).toSeq.distinct.sorted
+    require(unknown.isEmpty, s"$what: ${unknown.mkString(", ")}")
+  }
 }

@@ -11,11 +11,8 @@ object Verify {
     // here instead of dumping nothing.
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).toSet)
-    only.foreach { set =>
-      val unknown = set -- SparkEntry.queries.keySet
-      require(unknown.isEmpty, "SPARK_GRAFT_ONLY names no oracle row: " +
-        unknown.toSeq.sorted.mkString(", "))
-    }
+    only.foreach(SparkEntry.requireKnown(_, SparkEntry.queries.keySet,
+      "SPARK_GRAFT_ONLY names no oracle row"))
     val selected = only match {
       case Some(set) => SparkEntry.queries.filter { case (n, _) => set(n) }
       case None      => SparkEntry.queries
@@ -31,9 +28,8 @@ object Verify {
     // falls back to the memo build. A consumer name must be an oracle
     // row: after a rename the read-back path would silently go unrun.
     def snapshot(consumers: Set[String], what: String)(write: => Unit): Unit = {
-      val unknown = consumers -- SparkEntry.queries.keySet
-      require(unknown.isEmpty,
-        s"$what snapshot consumers are not oracle rows: ${unknown.mkString(", ")}")
+      SparkEntry.requireKnown(consumers, SparkEntry.queries.keySet,
+        s"$what snapshot consumers are not oracle rows")
       if (selected.keys.exists(consumers)) {
         try write
         catch { case e: Throwable =>

@@ -310,26 +310,6 @@ object Dedup {
     explodePackedPairs(cappedLists(post, packedEntry, dfCap))
   }
 
-  // timing-dissection entry points (TimeOne x2post / x2pairs /
-  // x27blists / x27bpairs)
-  def postingsHashedForTiming(df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
-    postingsHashed(df, idCol, textCol, n)
-  def coShinglePairsForTiming(df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
-    coShinglePairs(df, idCol, textCol, n, DfCap.NoCap)
-  def cappedListsForTiming(df: DataFrame, idCol: String, textCol: String,
-      n: Int, dfCap: DfCap): DataFrame = {
-    val post0 = postingsHashed(df, idCol, textCol, n)
-    val post = dfCap match { // same exchange discipline as coShinglePairs
-      case DfCap.AdaptiveBounded(_) => post0.repartition(col("_sh"))
-      case _ => post0
-    }
-    cappedLists(post, packedEntry, dfCap)
-  }
-  def pairCountsForTiming(df: DataFrame, idCol: String, textCol: String,
-      n: Int, dfCap: DfCap): DataFrame =
-    coShinglePairs(df, idCol, textCol, n, dfCap)
-      .groupBy("ida", "idb").agg(count(lit(1)).as("c"))
-
   /** All pairs with word-n-gram Jaccard ≥ threshold. Exact, with the
     * strategy picked by the threshold: count-based co-shingle pairing
     * below [[PrefixFilterThreshold]] (one posting shuffle + pair-count
@@ -853,22 +833,6 @@ object Dedup {
         round(inter.cast("double") /
           (size(col("set_a")) + size(col("set_b")) - inter), 6).as("jaccard"))
       .filter(col("jaccard") >= threshold)
-  }
-
-  /** MinHash signatures: each shingle string is hashed ONCE to a long
-    * map-side; the numHashes permutations derive from that fixed
-    * 8-byte value inside [[graft.functions.MinHashAgg]]. Docs with no
-    * shingles (< n words) produce no signature. */
-  def minhashSignature(df: DataFrame, idCol: String, textCol: String,
-      n: Int = 3, numHashes: Int = 128): DataFrame = {
-    // One custom typed aggregate computes the whole k-wide signature
-    // per doc in a single pass with a primitive-array buffer (see
-    // MinHashAgg for why k built-in min-columns or higher-order array
-    // lambdas both lose). Partial aggregation still applies: mappers
-    // pre-fold their postings before the per-doc shuffle.
-    val post = postingsHashed(df, idCol, textCol, n)
-    post.groupBy("_id")
-      .agg(graft.functions.MinHashAgg.minhash(numHashes)(col("_sh")).as("_sig"))
   }
 
   /** LSH banding + exact verification. Candidate pairs are ids sharing

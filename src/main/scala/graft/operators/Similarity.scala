@@ -97,34 +97,9 @@ object Similarity {
     array((lit(0L) +: (0 until nPlanes).map(p => lit(1L << p))).map(m =>
       bucket.bitwiseXOR(m)): _*)
 
-  /** Approximate top-k: candidates limited to the query's LSH bucket
-    * (± one plane disagreement when multiProbe), exact cosine rerank. */
-  def lshTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
-      vecCol: String, dim: Int, k: Int, nPlanes: Int = 12,
-      multiProbe: Boolean = true): DataFrame = {
-    val cb = corpus.select(col(idCol).as("neighbor_id"),
-      col(vecCol).as("_cv"),
-      lshBucket(col(vecCol), dim, nPlanes).as("_bucket"))
-    val qb0 = queries.select(col(idCol).as("query_id"),
-      col(vecCol).as("_qv"),
-      lshBucket(col(vecCol), dim, nPlanes).as("_qbucket"))
-    val qb = qb0.select(col("query_id"), col("_qv"),
-      explode(
-        if (multiProbe) probeRadius1(col("_qbucket"), nPlanes)
-        else array(col("_qbucket"))).as("_bucket"))
-      .distinct()
-    val scored = broadcast(qb)
-      .join(cb, Seq("_bucket"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        cosine(col("_qv"), col("_cv")).as("cos"))
-      .groupBy("query_id", "neighbor_id").agg(first(col("cos")).as("cos"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    scored.withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") <= k)
-      .drop("_rn")
-  }
+  /** A raw bucket's probe set: radius 1 when multiProbe, else itself. */
+  private def probeSet(b0: Column, nPlanes: Int, multiProbe: Boolean): Column =
+    if (multiProbe) probeRadius1(b0, nPlanes) else array(b0)
 
   /** Multi-table LSH top-k — the recall workhorse. One table of r
     * planes only recovers pairs that agree on (almost) every plane; at
@@ -163,17 +138,17 @@ object Similarity {
     val qb = queries.select(col(idCol).as("query_id"),
       explode(multiTableKeys(col(vecCol), dim, nPlanes, nTables)).as("_tk"))
       .select(col("query_id"),
-        explode(
-          if (multiProbe)
-            array((lit(0L) +: (0 until nPlanes).map(p => lit(1L << p))).map(m =>
-              col("_tk").bitwiseXOR(m)): _*)
-          else array(col("_tk"))).as("_key"))
+        explode(probeSet(col("_tk"), nPlanes, multiProbe)).as("_key"))
       .distinct()
     broadcast(qb).join(cb, Seq("_key"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .select("query_id", "neighbor_id")
       .distinct()
   }
+
+  /** Approximate top-k over [[multiTableKeys]] candidates, exact cosine
+    * rerank. `nTables = 1` is the single-table form: table 0's key
+    * offset is 0, so its keys are the plain bucket codes. */
   def lshTopKMulti(corpus: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, dim: Int, k: Int, nPlanes: Int = 4, nTables: Int = 16,
       multiProbe: Boolean = true): DataFrame = {
@@ -182,11 +157,7 @@ object Similarity {
     val qb = queries.select(col(idCol).as("query_id"), col(vecCol).as("_qv"),
       explode(multiTableKeys(col(vecCol), dim, nPlanes, nTables)).as("_tk"))
       .select(col("query_id"), col("_qv"),
-        explode(
-          if (multiProbe)
-            array((lit(0L) +: (0 until nPlanes).map(p => lit(1L << p))).map(m =>
-              col("_tk").bitwiseXOR(m)): _*)
-          else array(col("_tk"))).as("_key"))
+        explode(probeSet(col("_tk"), nPlanes, multiProbe)).as("_key"))
       .distinct()
     // cosine before the dedupe agg: a few fused FMAs per duplicate beat
     // shuffling the vectors through the groupBy
@@ -351,9 +322,7 @@ object Similarity {
     // probe one side at radius 1, keep the other exact: a pair whose
     // codes differ in ≤1 bit meets exactly through the flipped probe
     val probed = b0.select(col("_id"), col("_v"),
-      explode(
-        if (multiProbe) probeRadius1(col("_b0"), nPlanes)
-        else array(col("_b0"))).as("_bucket"))
+      explode(probeSet(col("_b0"), nPlanes, multiProbe)).as("_bucket"))
     val a = probed.toDF("ida", "va", "bucket")
     val b = b0.toDF("idb", "vb", "bucket2")
     a.join(b, col("bucket") === col("bucket2") && col("ida") < col("idb"))
@@ -371,9 +340,7 @@ object Similarity {
     val b0 = df.select(col(idCol).as("_id"),
       lshBucket(col(vecCol), dim, nPlanes).as("_b0"))
     val probed = b0.select(col("_id"),
-      explode(
-        if (multiProbe) probeRadius1(col("_b0"), nPlanes)
-        else array(col("_b0"))).as("_bucket"))
+      explode(probeSet(col("_b0"), nPlanes, multiProbe)).as("_bucket"))
     probed.toDF("ida", "bucket")
       .join(b0.toDF("idb", "bucket2"),
         col("bucket") === col("bucket2") && col("ida") < col("idb"))
@@ -405,10 +372,6 @@ object Similarity {
       multiProbe: Boolean = true): DataFrame =
     raw.select(col("_id"),
       explode(probeSet(col("_b0"), nPlanes, multiProbe)).as("_bucket"))
-
-  /** A raw bucket's probe set: radius 1 when multiProbe, else itself. */
-  private def probeSet(b0: Column, nPlanes: Int, multiProbe: Boolean): Column =
-    if (multiProbe) probeRadius1(b0, nPlanes) else array(b0)
 
   /** Fold a re-embedded batch into the probed-bucket artifact: the
     * hyperplanes are deterministic in (dim, nPlanes) — corpus-

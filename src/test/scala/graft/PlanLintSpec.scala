@@ -231,7 +231,8 @@ class PlanLintSpec extends SparkTestBase {
   // count(*) window frame: that frame forces the reducer to buffer a
   // hot cluster's ENTIRE membership before emitting a row (topic
   // sizes are unbounded by construction — measured 1.4× whole-query
-  // at TimeOne's 40%-hot x22stress fixture), where the shipped shape
+  // with 40% of assignments on one cluster, PERF.md "x22-family cap
+  // stage"), where the shipped shape
   // is a running-frame row_number plus a groupBy count joined back.
   // An unbounded frame shows as `unboundedfollowing$()` in the window
   // spec; the running rank frame ends at currentrow$().

@@ -31,4 +31,15 @@ class RowRegistrySpec extends AnyFunSuite {
     assert(SparkEntry.all.keySet ==
       SparkEntry.queries.keySet ++ SparkEntry.benchOnly.keySet)
   }
+
+  test("requireKnown names every unknown name and none of the known ones") {
+    val e = intercept[IllegalArgumentException] {
+      SparkEntry.requireKnown(Seq("x2stress", "a1_po_totals", "no_such_row"),
+        SparkEntry.all.keySet, "no such row")
+    }
+    assert(e.getMessage.contains("no such row: no_such_row, x2stress"),
+      e.getMessage)
+    assert(!e.getMessage.contains("a1_po_totals"), e.getMessage)
+    SparkEntry.requireKnown(Seq("a1_po_totals"), SparkEntry.all.keySet, "ok")
+  }
 }

@@ -156,7 +156,7 @@ class IncrementalClusterSpec extends SparkTestBase {
       newNodes: Set[(Long, Long)], broadcastable: Boolean, onDriver: Boolean)
 
   private def deltaOf(map: DataFrame, pairs: DataFrame): DeltaRows = {
-    def rows(df: DataFrame) = df.select(df.columns.map(col(_).cast("long")): _*)
+    def rows(df: DataFrame) = df.select(df.columns.map(col(_).cast("long")).toIndexedSeq: _*)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val d = Dedup.clusterFoldDelta(map, pairs)
     DeltaRows(rows(d.relabel), rows(d.newNodes), d.broadcastable,

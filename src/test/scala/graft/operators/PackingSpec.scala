@@ -38,10 +38,10 @@ class PackingSpec extends SparkTestBase {
   test("caller-supplied bounds skip the probe pass but keep the values") {
     val probed = Packing.globalOffsets(corpus, "n_tok", "id")
       .select("id", "start_off").as[(Long, Long)].collect().toMap
-    val given = Packing.globalOffsets(corpus, "n_tok", "id",
+    val supplied = Packing.globalOffsets(corpus, "n_tok", "id",
         bounds = Some((-500L, 9999L)))
       .select("id", "start_off").as[(Long, Long)].collect().toMap
-    assert(given == probed)
+    assert(supplied == probed)
   }
 
   // keyed fixture: a dominant key ("en" — 60 of 100 rows) plus small

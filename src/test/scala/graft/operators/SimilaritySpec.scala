@@ -42,8 +42,8 @@ class SimilaritySpec extends SparkTestBase {
     val brute = Similarity.bruteForceTopK(clustered, queries, "vec_id", "embedding", 5)
       .select("query_id", "neighbor_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val lsh = Similarity.lshTopK(clustered, queries, "vec_id", "embedding",
-        dim = 8, k = 5, nPlanes = 6)
+    val lsh = Similarity.lshTopKMulti(clustered, queries, "vec_id", "embedding",
+        dim = 8, k = 5, nPlanes = 6, nTables = 1)
       .select("query_id", "neighbor_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     // same-cluster neighbors share sign-buckets: recall should be high

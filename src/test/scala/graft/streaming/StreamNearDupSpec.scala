@@ -327,7 +327,7 @@ class StreamNearDupSpec extends SparkTestBase {
       // every event posted so far delivered: a write still running
       // when the exception escaped would still be an active job
       org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
-      assert(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty,
+      assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty,
         "the wave's corpus write outlived the throw")
       // joined, not abandoned: the write had run to completion (its
       // files in place, its staging dir gone) before the throw escaped
