@@ -66,8 +66,7 @@ private[graft] final class DurableArtifact(
     stats: Option[DataFrame => Map[String, String]] = None) {
   import DurableArtifact._
 
-  private val memo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+  private val memo = new SessionMemo[DataFrame](_.unpersist())
   /** Builds observed (memo or write path) — specs assert the durable
     * read-back never bumps it. */
   private[graft] val builds = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -87,54 +86,46 @@ private[graft] final class DurableArtifact(
     // path once a fold lands; fold-AWARE consumers (the daily job
     // serving the union corpus) opt in explicitly via
     // [[DurableArtifact.ServeFoldedConf]].
-    // Params are part of provenance: a table stamped with DIFFERENT
-    // build parameters (or a pre-params table with none recorded) is
-    // some other parameterization's artifact — fall back to building,
-    // exactly like a sourceDir mismatch, never serve its rows. A
-    // legacy table the operator KNOWS was built with these params is
-    // adopted once via [[adoptParams]].
-    if (t.nonEmpty && s.catalog.tableExists(t) && stampedFor(s, t, d) &&
-        paramsMatch(s, t) &&
-        (foldsOf(s, t) == 0 ||
-          s.conf.get(ServeFoldedConf, "false").toBoolean))
-      Some(readTable(s, t))
-    else None
+    if (t.isEmpty) None
+    else servableProps(s, t, d)
+      .filter(p => foldsIn(p) == 0 ||
+        s.conf.get(ServeFoldedConf, "false").toBoolean)
+      .map(_ => readTable(s, t))
   }
 
-  /** True iff the table's recorded build params equal this artifact's
+  /** `t`'s properties, in ONE catalog fetch, iff the table exists and
+    * carries this artifact's provenance for `d`: the corpus dir AND
+    * the build params (a table stamped with DIFFERENT params, or with
+    * none, is some other parameterization's artifact — serving it is
+    * the same wrong-rows hazard as a sourceDir mismatch). */
+  private def servableProps(s: SparkSession, t: String,
+      d: String): Option[Map[String, String]] =
+    if (!s.catalog.tableExists(t)) None
+    else Some(propsOf(s, t)).filter(p =>
+      p.get(SourceDirProp).contains(normDir(d)) && paramsMatch(p))
+
+  /** True iff the recorded build params equal this artifact's
     * (vacuously true for a parameterless artifact). */
-  private[graft] def paramsMatch(s: SparkSession, t: String): Boolean =
-    params.isEmpty || propsOf(s, t).get(ParamsProp)
-      .contains(canonParams(params))
+  private def paramsMatch(props: Map[String, String]): Boolean =
+    params.isEmpty || props.get(ParamsProp).contains(canonParams(params))
 
   /** The memo build path (bypasses the durable table — used by
     * [[write]] so an overwrite never scans the very table it is
-    * replacing). */
-  private[graft] def memoized(s: SparkSession, d: String): DataFrame = {
-    // hygiene: a stopped-then-recreated session must not leak its
-    // (now-unusable) persisted entries into the memo forever
-    memo.keys.filter(_._1.sparkContext.isStopped).foreach(memo.remove)
-    memo.get((s, d)).getOrElse {
-      // a build may run driver-side loop actions eagerly, so concurrent
-      // first-callers each pay one (and the counter records each);
-      // putIfAbsent keeps exactly one persisted frame and unpersists
-      // the loser instead of leaking it
+    * replacing). A build may run driver-side loop actions eagerly, so
+    * concurrent first callers each pay one (and the counter records
+    * each); the memo keeps exactly one persisted frame. */
+  private[graft] def memoized(s: SparkSession, d: String): DataFrame =
+    memo(s, d) {
       builds.incrementAndGet()
-      val built = build(s, d).persist()
-      memo.putIfAbsent((s, d), built) match {
-        case Some(winner) => built.unpersist(); winner
-        case None         => built
-      }
+      build(s, d).persist()
     }
-  }
 
   /** Point this session's consumers at a written table: writes it if
-    * absent OR stamped for a different corpus dir (the snapshot job),
-    * then sets [[tableConf]] so every consumer reads the bucketed
-    * table from here on. */
+    * absent OR stamped for a different corpus dir or params (the
+    * snapshot job), then sets [[tableConf]] so every consumer reads
+    * the bucketed table from here on. */
   def use(s: SparkSession, d: String, table: String): Unit = {
-    if (!s.catalog.tableExists(table) || !stampedFor(s, table, d) ||
-        !paramsMatch(s, table)) {
+    if (servableProps(s, table, d).isEmpty) {
       write(s, d, table)
       // the build frame served its purpose (it is now the table);
       // don't pin a corpus-sized persisted copy for the session's
@@ -163,21 +154,39 @@ private[graft] final class DurableArtifact(
       .format("parquet").saveAsTable(table)
     // provenance stamp: the durable-read branch only trusts a table
     // whose recorded corpus dir matches the caller's (normalized so
-    // trailing-slash / file:-prefix spellings compare equal, escaped
-    // so a quote in the path can't break the statement) AND whose
-    // recorded build params match the artifact's — one statement, so
-    // no reader can see a dir-stamped-but-param-less table
-    val paramStamp =
-      if (params.isEmpty) ""
-      else s", '$ParamsProp' = '${sqlEscape(canonParams(params))}'"
-    // snapshot stats ride the same statement: no reader can see a
-    // dir-stamped table whose stats are missing-but-expected or (worse)
-    // inherited from the table's previous content
-    val statStamp = stats.map(f => f(memoized(s, d))).filter(_.nonEmpty)
-      .map(m => s", '$StatsProp' = '${sqlEscape(canonParams(m))}'")
-      .getOrElse("")
-    s.sql(s"ALTER TABLE $table SET TBLPROPERTIES " +
-      s"('$SourceDirProp' = '${sqlEscape(normDir(d))}'$paramStamp$statStamp)")
+    // trailing-slash / file:-prefix spellings compare equal) AND whose
+    // recorded build params match the artifact's. Snapshot stats ride
+    // the same statement: no reader can see a dir-stamped table whose
+    // params or stats are missing-but-expected or (worse) inherited
+    // from the table's previous content.
+    setProps(s, table, Map(SourceDirProp -> normDir(d)) ++
+      Option.when(params.nonEmpty)(ParamsProp -> canonParams(params)) ++
+      stats.map(f => f(memoized(s, d))).filter(_.nonEmpty)
+        .map(m => StatsProp -> canonParams(m)))
+  }
+
+  /** Refuse to fold into a table this artifact's snapshot write did
+    * not produce: without the [[DurableArtifact.FoldEpochCol]] column a
+    * reader racing the append could see a torn delta, and under other
+    * (or unrecorded) build params the fold would mix parameterizations
+    * into one table — an n=4 delta in an n=3 index matches no
+    * consumer. Unlike resolve's silent fall-back-to-build, a fold has
+    * no safe fallback, so both refuse loudly, naming the rewrite. */
+  private[graft] def requireFoldable(s: SparkSession, table: String,
+      caller: String, rewrite: String): Unit = {
+    require(s.table(table).columns.contains(FoldEpochCol),
+      s"$caller: $table has no $FoldEpochCol column — it is not an " +
+        "epoch-layout artifact table, and a plain append could tear " +
+        s"under a concurrent reader; rewrite the snapshot with $rewrite")
+    if (params.nonEmpty) {
+      val recorded = propsOf(s, table).get(ParamsProp)
+      require(recorded.contains(canonParams(params)),
+        s"$caller: $table records build params " +
+          s"'${recorded.getOrElse("<none>")}' but this artifact folds " +
+          s"deltas derived under '${canonParams(params)}' — folding " +
+          "would mix parameterizations into one table; rewrite the " +
+          s"snapshot with $rewrite")
+    }
   }
 
   /** Fold a batch DELTA into the durable table at O(batch): an INSERT
@@ -225,45 +234,17 @@ private[graft] final class DurableArtifact(
     require(s.catalog.tableExists(table),
       s"appendDelta: no table $table — write the snapshot first")
     val buckets = DurableArtifact.numBucketsOf(s, table, bucketCols)
-    // pre-epoch (round-13-era) tables folded through a PLAIN append
-    // here — the exact torn-read hazard the epoch protocol closed,
-    // silently reintroduced for old catalogs. Refuse loudly instead.
-    require(s.table(table).columns.contains(FoldEpochCol),
-      s"appendDelta: $table has no $FoldEpochCol column — a pre-epoch " +
-        "(legacy-layout) table cannot fold commit-safely: a reader " +
-        "racing the plain append could see a torn delta. Migrate once " +
-        "with migrateToEpochLayout(table), then retry the fold")
-    // params guard: folding a delta derived under THESE params into a
-    // table built under different (or unrecorded) ones poisons every
-    // later read — an n=4 delta in an n=3 index matches no consumer.
-    // Unlike resolve's silent fall-back-to-build, a fold has no safe
-    // fallback, so refuse loudly; a pre-params table the operator
-    // knows was built with these params adopts once via adoptParams.
-    if (params.nonEmpty) {
-      val recorded = propsOf(s, table).get(ParamsProp)
-      require(recorded.contains(canonParams(params)),
-        s"appendDelta: $table records build params " +
-          s"'${recorded.getOrElse("<none>")}' but this artifact folds " +
-          s"deltas derived under '${canonParams(params)}' — folding " +
-          "would mix parameterizations into one table. If the table " +
-          "predates param stamping and WAS built with these params, " +
-          "adopt it once with adoptParams(table); otherwise rewrite " +
-          "the snapshot with write()")
-    }
+    requireFoldable(s, table, "appendDelta", "write()")
     // SINGLE-WRITER enforcement: the commit-safe protocol assumes one
     // fold in flight; a second concurrent folder would interleave
     // epoch reads and counter bumps into silent corruption. The lease
     // property turns that violated assumption into a loud error.
-    val lease = heldLease.getOrElse(
-      DurableArtifact.acquireFoldLease(s, table))
-    heldLease.foreach { tok =>
-      require(DurableArtifact.propsOf(s, table)
-          .get(DurableArtifact.FoldLeaseProp).contains(tok),
-        s"appendDelta: caller claims the fold lease on $table but the " +
-          "table records a different holder — two writers interleaved")
-    }
+    val lease = heldLease.getOrElse(acquireFoldLease(s, table))
+    heldLease.foreach(tok => requireLease(s, table, tok,
+      s"appendDelta: caller claims the fold lease on $table but the " +
+        "table records a different holder — two writers interleaved"))
     try {
-      val e = DurableArtifact.foldsOf(s, table)
+      val e = foldsOf(s, table)
       // COMMIT SAFETY (single writer, any concurrent readers): the
       // delta's rows land stamped epoch e+1 — invisible to every reader
       // going through the epoch-consistent read until the folds-counter
@@ -290,8 +271,7 @@ private[graft] final class DurableArtifact(
       // whose entire acquire spans this fold's guard sequence AND
       // whose complete fold lands inside our append — the fence below
       // still detects that, though recovery is then a rebuild.
-      require(DurableArtifact.propsOf(s, table)
-          .get(DurableArtifact.FoldLeaseProp).contains(lease),
+      requireLease(s, table, lease,
         s"appendDelta: lost the fold lease on $table before the file " +
           "append — a concurrent fold interleaved; this fold aborts " +
           "without writing")
@@ -311,7 +291,7 @@ private[graft] final class DurableArtifact(
       // (rebuild), and the pre-append re-verify above makes reaching
       // this state require the racer's whole fold to land inside this
       // fold's append.
-      require(DurableArtifact.foldsOf(s, table) == e,
+      require(foldsOf(s, table) == e,
         s"appendDelta: $table's folds counter moved past $e while this " +
           "fold was appending — a concurrent fold completed underneath " +
           "it, and this fold's epoch-stamped rows are now mixed into " +
@@ -324,125 +304,77 @@ private[graft] final class DurableArtifact(
       // epoch with the old numbers would silently mis-derive whatever
       // the stats parameterize (a caller that CAN restate them
       // supplies the update through extraProps, which wins the merge)
-      val props = (Map(DurableArtifact.StatsProp -> "") ++ extraProps +
-          (DurableArtifact.FoldsProp -> (e + 1).toString) +
-          (DurableArtifact.FoldLeaseProp -> ""))
-        .map { case (k, v) => s"'$k' = '${v.replace("'", "''")}'" }
-        .mkString(", ")
-      s.sql(s"ALTER TABLE $table SET TBLPROPERTIES ($props)")
+      setProps(s, table, Map(StatsProp -> "") ++ extraProps +
+        (FoldsProp -> (e + 1).toString) + (FoldLeaseProp -> ""))
     } catch {
       case t: Throwable =>
         // a FAILED (thrown) fold frees the window — the next fold's own
         // guards give the precise recovery message; a crashed JVM leaves
         // the lease set, and compactTable clears it with the torn rows
-        DurableArtifact.releaseFoldLease(s, table, lease)
+        releaseFoldLease(s, table, lease)
         throw t
     }
     evict(s, d)
   }
 
-  /** Canonicalize the table's layout: rows re-stamped fold-epoch 0
-    * under the same bucket spec, graft provenance re-applied — the
-    * recovery step after a crashed fold (the epoch-filtered read
-    * never saw a torn append's rows, so the rewrite discards them)
-    * and the periodic stats-friendly rewrite. Content-identical to
-    * the epoch-consistent read; NOT concurrent-reader-safe (an
-    * in-place overwrite — run in the single-writer window). */
-  def compactTable(s: SparkSession, table: String): Unit = {
+  /** Canonicalize the table's layout: the durable read ([[readTable]]
+    * — committed epochs only, the cluster map's patch applied)
+    * rewritten under the same bucket spec with every row re-stamped
+    * fold-epoch 0, graft provenance re-applied plus `extraProps` — the
+    * recovery step after a crashed fold (the epoch-filtered read never
+    * saw a torn append's rows, so the rewrite discards them) and the
+    * periodic stats-friendly rewrite. Content-identical to the durable
+    * read; compaction changes layout, never provenance, so a folded
+    * table stays marked folded ([[rebase]] is the path back). A table
+    * is already canonical when every row is epoch 0 and no recorded
+    * `extraProps` key differs from its given value (the cluster map's
+    * live-patch marker). NOT concurrent-reader-safe (an in-place
+    * overwrite — run in the single-writer window). */
+  def compactTable(s: SparkSession, table: String,
+      extraProps: Map[String, String] = Map.empty): Unit = {
     // a fold lease surviving into the maintenance window is a CRASHED
     // fold's (this runs in the single-writer window by contract) —
-    // clear it so folding can resume once the torn rows are discarded
-    if (DurableArtifact.propsOf(s, table)
-        .get(DurableArtifact.FoldLeaseProp).exists(_.nonEmpty))
-      s.sql(s"ALTER TABLE $table SET TBLPROPERTIES " +
-        s"('${DurableArtifact.FoldLeaseProp}' = '')")
+    // clear it so folding can resume once the torn rows are discarded;
+    // never restate it below
+    if (leaseHolder(s, table).nonEmpty)
+      setProps(s, table, Map(FoldLeaseProp -> ""))
     val raw = s.table(table)
     if (!raw.columns.contains(FoldEpochCol)) return
-    val e = DurableArtifact.foldsOf(s, table)
-    if (raw.filter(col(FoldEpochCol) =!= 0).head(1).isEmpty) return
-    val props = DurableArtifact.propsOf(s, table)
-      .filter { case (k, _) => k.startsWith("graft.") }
-    val buckets = DurableArtifact.numBucketsOf(s, table, bucketCols)
-    val canon = raw.filter(col(FoldEpochCol) <= e)
-      .withColumn(FoldEpochCol, lit(0)).localCheckpoint()
-    canon.write.mode("overwrite")
+    val props = propsOf(s, table)
+      .filter { case (k, _) => k.startsWith("graft.") && k != FoldLeaseProp }
+    val dirty =
+      extraProps.exists { case (k, v) => props.get(k).exists(_ != v) } ||
+        raw.filter(col(FoldEpochCol) =!= 0).head(1).nonEmpty
+    if (!dirty) return
+    val buckets = numBucketsOf(s, table, bucketCols)
+    // materialized OFF the table first (localCheckpoint): Spark refuses
+    // to overwrite a table a live plan still scans
+    readTable(s, table).withColumn(FoldEpochCol, lit(0)).localCheckpoint()
+      .write.mode("overwrite")
       .bucketBy(buckets, bucketCols.head, bucketCols.tail: _*)
       .sortBy(bucketCols.head, bucketCols.tail: _*)
       .format("parquet").saveAsTable(table)
-    if (props.nonEmpty) {
-      val restated = props.map { case (k, v) =>
-        s"'$k' = '${DurableArtifact.sqlEscape(v)}'" }.mkString(", ")
-      s.sql(s"ALTER TABLE $table SET TBLPROPERTIES ($restated)")
-    }
-  }
-
-  /** One-shot migration of a PRE-EPOCH (round-13-era) artifact table
-    * to the commit-safe layout: every row re-stamped fold-epoch 0
-    * under the table's own bucket spec, graft provenance re-applied.
-    * Required before [[appendDelta]] will fold into such a table (its
-    * legacy plain append reintroduced exactly the torn-read hazard the
-    * epoch protocol closed). Idempotent — a no-op on an epoch-layout
-    * table; NOT concurrent-reader-safe (an in-place overwrite — run in
-    * the single-writer window, like [[compactTable]]). */
-  def migrateToEpochLayout(s: SparkSession, table: String): Unit = {
-    val raw = s.table(table)
-    if (raw.columns.contains(FoldEpochCol)) return
-    // a pre-epoch table cannot carry a MEANINGFUL lease (no epoch fold
-    // ever ran on it) — drop any stray one rather than restate it
-    val props = DurableArtifact.propsOf(s, table)
-      .filter { case (k, _) =>
-        k.startsWith("graft.") && k != DurableArtifact.FoldLeaseProp }
-    val buckets = DurableArtifact.numBucketsOf(s, table, bucketCols)
-    val stamped = raw.withColumn(FoldEpochCol, lit(0)).localCheckpoint()
-    stamped.write.mode("overwrite")
-      .bucketBy(buckets, bucketCols.head, bucketCols.tail: _*)
-      .sortBy(bucketCols.head, bucketCols.tail: _*)
-      .format("parquet").saveAsTable(table)
-    if (props.nonEmpty) {
-      val restated = props.map { case (k, v) =>
-        s"'$k' = '${DurableArtifact.sqlEscape(v)}'" }.mkString(", ")
-      s.sql(s"ALTER TABLE $table SET TBLPROPERTIES ($restated)")
-    }
+    setProps(s, table, props ++ extraProps)
   }
 
   /** Return a FOLDED artifact table to snapshot-serving status as the
     * canonical artifact of corpus dir `d` — the deliberate
-    * snapshot-rotation step for the append-only families (the cluster
-    * map's patch-aware twin is `ExtensionQueries.rebaseClusterMap`).
+    * snapshot-rotation step (the folds counter is otherwise one-way).
     * The caller asserts that `d` IS the union corpus the folded rows
     * now cover — typically the dir the daily job has been appending
     * batches into. Compacts first so the rebased table is canonical
     * (every row epoch 0, no torn leftovers), then restamps provenance:
-    * sourceDir = `d`, folds = 0. After this, conf-resolved SNAPSHOT
-    * consumers ([[resolve]] WITHOUT [[DurableArtifact.ServeFoldedConf]])
-    * serve the table directly again, zero rebuilds — without it, a
-    * deployment cycling corpus snapshots full-rewrites the table
-    * nightly just to reset the one-way folds counter. */
-  def rebase(s: SparkSession, d: String, table: String): Unit = {
-    compactTable(s, table)
-    s.sql(s"ALTER TABLE $table SET TBLPROPERTIES (" +
-      s"'${DurableArtifact.SourceDirProp}' = " +
-      s"'${DurableArtifact.sqlEscape(DurableArtifact.normDir(d))}', " +
-      s"'${DurableArtifact.FoldsProp}' = '0')")
-  }
-
-  /** One-shot adoption of a PRE-PARAMS (round-15-era) table: stamps
-    * this artifact's build params so resolve/appendDelta trust it
-    * again. The CALLER asserts the table really was built with these
-    * params — that assertion is exactly what the stamp records (the
-    * pre-epoch migrate pattern: explicit, loud, once). Refuses a table
-    * already stamped with DIFFERENT params — that is a real conflict,
-    * not missing provenance; rewrite the snapshot instead. */
-  def adoptParams(s: SparkSession, table: String): Unit = {
-    if (params.isEmpty) return
-    val recorded = propsOf(s, table).get(ParamsProp)
-    require(recorded.forall(_ == canonParams(params)),
-      s"adoptParams: $table already records '${recorded.getOrElse("")}' " +
-        s"— refusing to restamp as '${canonParams(params)}'; a genuine " +
-        "parameter change needs a snapshot rewrite (write()), not a " +
-        "relabel")
-    s.sql(s"ALTER TABLE $table SET TBLPROPERTIES " +
-      s"('$ParamsProp' = '${sqlEscape(canonParams(params))}')")
+    * sourceDir = `d`, folds = 0, plus `extraProps`. After this,
+    * conf-resolved SNAPSHOT consumers ([[resolve]] WITHOUT
+    * [[DurableArtifact.ServeFoldedConf]]) serve the table directly
+    * again, zero rebuilds — without it, a deployment cycling corpus
+    * snapshots full-rewrites the table nightly just to reset the
+    * counter. */
+  def rebase(s: SparkSession, d: String, table: String,
+      extraProps: Map[String, String] = Map.empty): Unit = {
+    compactTable(s, table, extraProps)
+    setProps(s, table,
+      Map(SourceDirProp -> normDir(d), FoldsProp -> "0") ++ extraProps)
   }
 
   /** The recorded snapshot stats iff the durable branch would serve
@@ -456,20 +388,15 @@ private[graft] final class DurableArtifact(
   def servedSnapshotStats(s: SparkSession,
       d: String): Option[Map[String, String]] = {
     val t = s.conf.get(tableConf, "")
-    if (t.nonEmpty && s.catalog.tableExists(t) && stampedFor(s, t, d) &&
-        paramsMatch(s, t)) {
-      val props = propsOf(s, t)
-      if (props.get(FoldsProp).forall(_.toInt == 0))
-        props.get(StatsProp).filter(_.nonEmpty).map(parseParams)
-      else None
-    } else None
+    if (t.isEmpty) None
+    else servableProps(s, t, d).filter(foldsIn(_) == 0)
+      .flatMap(_.get(StatsProp)).filter(_.nonEmpty).map(parseParams)
   }
 
   /** Eviction hook for the session memo: unpersists and forgets one
     * (session, dir) entry — what a long-lived session iterating corpus
     * snapshots calls when a snapshot is superseded. */
-  def evict(s: SparkSession, d: String): Unit =
-    memo.remove((s, d)).foreach(_.unpersist())
+  def evict(s: SparkSession, d: String): Unit = memo.evict(s, d)
 }
 
 private[graft] object DurableArtifact {
@@ -523,14 +450,18 @@ private[graft] object DurableArtifact {
   private[graft] val FoldEpochCol = "_fe"
 
   /** The epoch-consistent default read: rows of committed epochs
-    * only, bookkeeping column dropped. Pre-epoch tables (no `_fe`
-    * column) read as-is. */
-  private[graft] def epochRead(s: SparkSession, t: String): DataFrame = {
-    val raw = s.table(t)
+    * only, bookkeeping column dropped. A table without the `_fe`
+    * column (a caller-built plain table, e.g. a stream seed's) reads
+    * as-is. */
+  private[graft] def epochRead(s: SparkSession, t: String): DataFrame =
+    upToEpoch(s.table(t), foldsOf(s, t))
+
+  /** `raw`'s rows of fold epochs ≤ `e`, bookkeeping column dropped (a
+    * frame without the column passes through). */
+  private[graft] def upToEpoch(raw: DataFrame, e: Int): DataFrame =
     if (raw.columns.contains(FoldEpochCol))
-      raw.filter(col(FoldEpochCol) <= foldsOf(s, t)).drop(FoldEpochCol)
+      raw.filter(col(FoldEpochCol) <= e).drop(FoldEpochCol)
     else raw
-  }
   /** Count of batch deltas folded into the table since its snapshot
     * write ([[DurableArtifact.appendDelta]]). */
   private[graft] val FoldsProp = "graft.folds"
@@ -546,7 +477,7 @@ private[graft] object DurableArtifact {
     * metastore round-trip can still both pass, but any fold that
     * OVERLAPS an in-flight one (the realistic double-scheduled-job
     * case) is refused. A lease left by a crashed JVM is cleared by
-    * [[DurableArtifact.compactTable]] / compactClusterMap — the same
+    * [[DurableArtifact.compactTable]] (compactClusterMap) — the same
     * single-writer-window recovery pass that discards torn rows. */
   private[graft] val FoldLeaseProp = "graft.foldLease"
 
@@ -557,30 +488,37 @@ private[graft] object DurableArtifact {
     * failure). */
   private[graft] def acquireFoldLease(s: SparkSession,
       table: String): String = {
-    val held = propsOf(s, table).get(FoldLeaseProp).filter(_.nonEmpty)
+    val held = leaseHolder(s, table)
     require(held.isEmpty,
       s"fold lease on $table is held ('${held.getOrElse("")}') — a " +
         "concurrent fold is in progress, or a crashed fold left its " +
         "lease; once no writer is live, compactTable/compactClusterMap " +
         "clears it (and discards any torn rows) so folding can resume")
     val token = java.util.UUID.randomUUID().toString
-    s.sql(s"ALTER TABLE $table SET TBLPROPERTIES " +
-      s"('$FoldLeaseProp' = '$token')")
-    val now = propsOf(s, table).get(FoldLeaseProp)
-    require(now.contains(token),
+    setProps(s, table, Map(FoldLeaseProp -> token))
+    requireLease(s, table, token,
       s"lost the fold-lease race on $table to a concurrent writer " +
-        s"(holder: ${now.getOrElse("<none>")})")
+        s"(holder: ${leaseHolder(s, table).getOrElse("<none>")})")
     token
   }
+
+  /** The recorded fold-lease holder, if a fold holds the window. */
+  private[graft] def leaseHolder(s: SparkSession, table: String): Option[String] =
+    propsOf(s, table).get(FoldLeaseProp).filter(_.nonEmpty)
+
+  /** Refuse with `msg` unless `token` is `table`'s recorded holder. */
+  private[graft] def requireLease(s: SparkSession, table: String,
+      token: String, msg: => String): Unit =
+    require(leaseHolder(s, table).contains(token), msg)
 
   /** Release a held lease WITHOUT a flip (the failed-fold path) — a
     * no-op unless `token` is still the recorded holder, so a stale
     * release can never free a successor's window. */
   private[graft] def releaseFoldLease(s: SparkSession, table: String,
       token: String): Unit =
-    if (propsOf(s, table).get(FoldLeaseProp).contains(token))
-      s.sql(s"ALTER TABLE $table SET TBLPROPERTIES " +
-        s"('$FoldLeaseProp' = '')")
+    if (leaseHolder(s, table).contains(token))
+      setProps(s, table, Map(FoldLeaseProp -> ""))
+
   /** Session conf: set "true" to let [[DurableArtifact.resolve]] serve
     * FOLDED tables (graft.folds > 0 — snapshot corpus plus appended
     * batches). Default false: snapshot-scoped consumers must never
@@ -612,9 +550,23 @@ private[graft] object DurableArtifact {
     s.sql(s"SHOW TBLPROPERTIES $table").collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
 
+  /** The ONE writer of graft's table properties: every protocol step
+    * (provenance stamp, fold flip, lease, compaction restate, rebase)
+    * sets its properties in one statement through here, values
+    * single-quote-escaped. */
+  private def setProps(s: SparkSession, table: String,
+      props: Map[String, String]): Unit =
+    if (props.nonEmpty)
+      s.sql(s"ALTER TABLE $table SET TBLPROPERTIES (" + props.map {
+        case (k, v) => s"'$k' = '${v.replace("'", "''")}'" }.mkString(", ") + ")")
+
   /** Folds recorded on `table` (0 when never folded). */
   private[graft] def foldsOf(s: SparkSession, table: String): Int =
-    propsOf(s, table).get(FoldsProp).map(_.toInt).getOrElse(0)
+    foldsIn(propsOf(s, table))
+
+  /** The folds counter in an already-fetched property map. */
+  private[graft] def foldsIn(props: Map[String, String]): Int =
+    props.get(FoldsProp).map(_.toInt).getOrElse(0)
 
   /** Corpus dirs compare NORMALIZED: equivalent spellings (trailing
     * slash, file: prefix, ./ segments) must hit the durable table, not
@@ -622,17 +574,11 @@ private[graft] object DurableArtifact {
   private[graft] def normDir(d: String): String =
     new java.io.File(d.stripPrefix("file:")).getCanonicalPath
 
-  /** Single-quote doubling for strings interpolated into
-    * TBLPROPERTIES statements. */
-  private[graft] def sqlEscape(v: String): String = v.replace("'", "''")
-
   /** True iff `table` carries `d` (normalized) as its recorded corpus
     * dir. */
   private[graft] def stampedFor(s: SparkSession, table: String,
       d: String): Boolean =
-    s.sql(s"SHOW TBLPROPERTIES $table").collect()
-      .exists(r => r.getString(0) == SourceDirProp &&
-        r.getString(1) == normDir(d))
+    propsOf(s, table).get(SourceDirProp).contains(normDir(d))
 
   /** A previous JVM's default-warehouse directory can outlive its
     * in-memory metastore; saveAsTable then refuses to adopt the

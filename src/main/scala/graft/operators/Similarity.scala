@@ -204,25 +204,23 @@ object Similarity {
     * every query), the same cost model as the near-dup cluster map and
     * the BPE merge table. Keyed by a caller-supplied corpus key (the
     * data dir) plus the fit parameters; the model is driver-held
-    * centroids only, so no persist hygiene beyond dropping stopped
+    * centroids only, so nothing is released beyond dropping stopped
     * sessions' keys. The seeded fit is deterministic, so memoization
     * cannot change any result. */
-  private val codebookMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), org.apache.spark.ml.clustering.KMeansModel]
+  private val codebookMemo =
+    new graft.SessionMemo[org.apache.spark.ml.clustering.KMeansModel]()
   private[graft] def memoCodebook(corpusKey: String, corpus: DataFrame,
       idCol: String, vecCol: String, nLists: Int, seed: Long,
       trainFraction: Int): org.apache.spark.ml.clustering.KMeansModel = {
     val s = corpus.sparkSession
-    codebookMemo.keys.filter(_._1.sparkContext.isStopped)
-      .foreach(codebookMemo.remove)
     // the key must carry the full fit identity: corpus dir AND which
     // table/columns were fitted (schema tag + id/vec cols) AND every
     // fit parameter — two callers fitting different columns under the
     // same data dir must never share a model
     val tableTag = corpus.schema.fields
       .map(f => s"${f.name}:${f.dataType.simpleString}").mkString(",")
-    codebookMemo.getOrElseUpdate(
-      (s, s"$corpusKey#$tableTag#$idCol#$vecCol#$nLists#$seed#$trainFraction"),
+    codebookMemo(s,
+      s"$corpusKey#$tableTag#$idCol#$vecCol#$nLists#$seed#$trainFraction")(
       fitCodebook(corpus, idCol, vecCol, nLists, seed, trainFraction))
   }
 

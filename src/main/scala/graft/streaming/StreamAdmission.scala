@@ -163,9 +163,7 @@ object StreamAdmission {
     * snapshot/delta/crash rules as the posting-index layer. */
   def fpView(s: SparkSession, baseDir: String): DataFrame = {
     val dirs = StreamIndex.layerDirs(baseDir, "fps", healFps(s, baseDir, _))
-    if (dirs.isEmpty)
-      s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        FpsSchema)
+    if (dirs.isEmpty) StreamIndex.emptyFrame(s, FpsSchema)
     else StreamIndex.readDirs(s, dirs, Some(FpsSchema)).distinct()
   }
 
@@ -215,16 +213,15 @@ object StreamAdmission {
       .filter(v =>
         Files.exists(Paths.get(s"$baseDir/verdicts/b=$v/_SUCCESS")))
     if (vs.isEmpty)
-      s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("doc_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("quality",
-            org.apache.spark.sql.types.DoubleType),
-          org.apache.spark.sql.types.StructField("verdict",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("split",
-            org.apache.spark.sql.types.StringType))))
+      StreamIndex.emptyFrame(s, org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("doc_id",
+          org.apache.spark.sql.types.LongType),
+        org.apache.spark.sql.types.StructField("quality",
+          org.apache.spark.sql.types.DoubleType),
+        org.apache.spark.sql.types.StructField("verdict",
+          org.apache.spark.sql.types.StringType),
+        org.apache.spark.sql.types.StructField("split",
+          org.apache.spark.sql.types.StringType))))
     else s.read.parquet(vs.map(v => s"$baseDir/verdicts/b=$v"): _*)
   }
 
@@ -232,15 +229,10 @@ object StreamAdmission {
     * dir (one md5 pass over that batch — fps are derivable per batch). */
   private def healFps(s: SparkSession, baseDir: String,
       batches: Seq[Long]): Unit =
-    batches
-      .filterNot(v => Files.exists(Paths.get(s"$baseDir/fps/b=$v/_SUCCESS")))
-      .foreach { v =>
-        StreamIndex.deltaSized(
-            StreamIndex.readDir(s, s"$baseDir/corpus/b=$v")
-            .select(TextAnalysis.fingerprintMd5(col("text")).as("fp"))
-            .distinct())
-          .write.mode("overwrite").parquet(s"$baseDir/fps/b=$v")
-      }
+    StreamIndex.healMissing(baseDir, "fps", batches)(v =>
+      StreamIndex.readDir(s, s"$baseDir/corpus/b=$v")
+        .select(TextAnalysis.fingerprintMd5(col("text")).as("fp"))
+        .distinct())
 
   /** Rebuild any missing `index/b=<id>` delta by REPLAYING the
     * exact-dedup decision for that batch: its corpus docs, fp-ranked
@@ -251,40 +243,34 @@ object StreamAdmission {
     * self-consistent.) */
   private def healIndex(s: SparkSession, baseDir: String,
       batches: Seq[Long], n: Int): Unit =
-    batches.sorted
-      .filterNot(v => Files.exists(Paths.get(s"$baseDir/index/b=$v/_SUCCESS")))
-      .foreach { v =>
-        val earlier = StreamIndex.committedBatches(s"$baseDir/corpus")
-          .filter(_ < v)
-        // "strictly earlier fps" reads through the fp SNAPSHOT when one
-        // covers only batches before v (snap < v) — on a SEEDED dir the
-        // alternative is rebuilding fps/b=-1 by fingerprinting the
-        // whole corpus through the seed (pointer or copy): an O(corpus)
-        // pass plus a redundant delta no view reads, in exactly the
-        // O(metadata)-adoption scenario the seed exists for. A snapshot
-        // at ≥ v would include v's own (and later) fps — wrong for the
-        // replayed decision — so that case keeps the per-batch path.
-        val fpSnap = StreamIndex.layerSnapshot(baseDir, "fps")
-          .filter(_ < v)
-        val live = earlier.filter(b => fpSnap.forall(b > _))
-        healFps(s, baseDir, live)
-        val dirs = fpSnap.map(m => s"$baseDir/fps/c=$m").toSeq ++
-          live.map(b => s"$baseDir/fps/b=$b")
-        val earlierFps =
-          if (dirs.isEmpty)
-            s.createDataFrame(
-              s.sparkContext.emptyRDD[org.apache.spark.sql.Row], FpsSchema)
-          else StreamIndex.readDirs(s, dirs, Some(FpsSchema)).distinct()
-        val docs = StreamIndex.readDir(s, s"$baseDir/corpus/b=$v")
-          .withColumn("fp", TextAnalysis.fingerprintMd5(col("text")))
-        val wFp = Window.partitionBy("fp").orderBy("doc_id")
-        val survivors = docs
-          .withColumn("_rn", row_number().over(wFp))
-          .join(earlierFps.withColumn("_hit", lit(1)), Seq("fp"), "left")
-          .filter(col("_hit").isNull && col("_rn") === 1)
-          .select(col("doc_id"), col("text"))
-        StreamIndex.deltaSized(
-            Dedup.postingIndex(survivors, "doc_id", "text", n))
-          .write.mode("overwrite").parquet(s"$baseDir/index/b=$v")
-      }
+    StreamIndex.healMissing(baseDir, "index", batches.sorted) { v =>
+      val earlier = StreamIndex.committedBatches(s"$baseDir/corpus")
+        .filter(_ < v)
+      // "strictly earlier fps" reads through the fp SNAPSHOT when one
+      // covers only batches before v (snap < v) — on a SEEDED dir the
+      // alternative is rebuilding fps/b=-1 by fingerprinting the
+      // whole corpus through the seed (pointer or copy): an O(corpus)
+      // pass plus a redundant delta no view reads, in exactly the
+      // O(metadata)-adoption scenario the seed exists for. A snapshot
+      // at ≥ v would include v's own (and later) fps — wrong for the
+      // replayed decision — so that case keeps the per-batch path.
+      val fpSnap = StreamIndex.layerSnapshot(baseDir, "fps")
+        .filter(_ < v)
+      val live = earlier.filter(b => fpSnap.forall(b > _))
+      healFps(s, baseDir, live)
+      val dirs = fpSnap.map(m => s"$baseDir/fps/c=$m").toSeq ++
+        live.map(b => s"$baseDir/fps/b=$b")
+      val earlierFps =
+        if (dirs.isEmpty) StreamIndex.emptyFrame(s, FpsSchema)
+        else StreamIndex.readDirs(s, dirs, Some(FpsSchema)).distinct()
+      val docs = StreamIndex.readDir(s, s"$baseDir/corpus/b=$v")
+        .withColumn("fp", TextAnalysis.fingerprintMd5(col("text")))
+      val wFp = Window.partitionBy("fp").orderBy("doc_id")
+      val survivors = docs
+        .withColumn("_rn", row_number().over(wFp))
+        .join(earlierFps.withColumn("_hit", lit(1)), Seq("fp"), "left")
+        .filter(col("_hit").isNull && col("_rn") === 1)
+        .select(col("doc_id"), col("text"))
+      Dedup.postingIndex(survivors, "doc_id", "text", n)
+    }
 }

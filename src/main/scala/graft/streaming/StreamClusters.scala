@@ -160,7 +160,7 @@ object StreamClusters {
     // through the patch-aware committed read
     val base = snap.map(m => StreamIndex.readDir(s, s"$baseDir/$Layer/c=$m",
         Some(MapSchema)).select("doc_id", "cluster_id"))
-      .getOrElse(emptyMap(s))
+      .getOrElse(StreamIndex.emptyFrame(s, MapSchema))
     val batches = StreamIndex.committedBatches(s"$baseDir/corpus")
       .filter(v => snap.forall(v > _)).filter(_ < before)
       .filter(v => Files.exists(Paths.get(s"$baseDir/$Layer/b=$v/_SUCCESS")))
@@ -239,11 +239,6 @@ object StreamClusters {
     }
     built
   }
-
-  /** The (doc_id, cluster_id) schema with no rows — the
-    * pre-first-commit view. */
-  private def emptyMap(s: SparkSession): DataFrame =
-    s.createDataFrame(s.sparkContext.emptyRDD[Row], MapSchema)
 
   /** The `cmap/c=` snapshot schema, declared so [[viewUpTo]]'s read
     * costs no schema-inference job (StreamLayerSchemaSpec pins it

@@ -144,9 +144,7 @@ object StreamEmbed {
       Map("dim" -> dim.toString, "nPlanes" -> nPlanes.toString))
     val dirs = StreamIndex.layerDirs(baseDir, "ebkt",
       healBuckets(s, baseDir, _, dim, nPlanes))
-    if (dirs.isEmpty)
-      s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        BucketsSchema)
+    if (dirs.isEmpty) StreamIndex.emptyFrame(s, BucketsSchema)
     else StreamIndex.readDirs(s, dirs, Some(BucketsSchema))
       .select("_id", "_bucket")
   }
@@ -176,24 +174,20 @@ object StreamEmbed {
     * corpus-independent, so the rebuild is exact). */
   private def healBuckets(s: SparkSession, baseDir: String,
       batches: Seq[Long], dim: Int, nPlanes: Int): Unit =
-    batches
-      .filterNot(v => Files.exists(Paths.get(s"$baseDir/ebkt/b=$v/_SUCCESS")))
-      .foreach { v =>
-        StreamIndex.deltaSized(Similarity.probedBuckets(
-            StreamIndex.readDir(s, s"$baseDir/corpus/b=$v")
-              .select(col("vec_id"),
-                col("embedding").cast("array<float>").as("embedding")),
-            "vec_id", "embedding", dim, nPlanes))
-          .write.mode("overwrite").parquet(s"$baseDir/ebkt/b=$v")
-      }
+    StreamIndex.healMissing(baseDir, "ebkt", batches)(v =>
+      Similarity.probedBuckets(
+        StreamIndex.readDir(s, s"$baseDir/corpus/b=$v")
+          .select(col("vec_id"),
+            col("embedding").cast("array<float>").as("embedding")),
+        "vec_id", "embedding", dim, nPlanes))
 
   /** All vectors streamed so far (committed batches only). */
   def corpusView(s: SparkSession, baseDir: String): DataFrame = {
     val vs = StreamIndex.committedBatches(s"$baseDir/corpus")
     if (vs.isEmpty)
-      s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("vec_id", LongType),
-          StructField("embedding", ArrayType(DoubleType)))))
+      StreamIndex.emptyFrame(s, StructType(Seq(
+        StructField("vec_id", LongType),
+        StructField("embedding", ArrayType(DoubleType)))))
     else StreamIndex.readDirs(s, vs.map(v => s"$baseDir/corpus/b=$v"))
       .select("vec_id", "embedding")
   }
@@ -205,10 +199,9 @@ object StreamEmbed {
     val vs = StreamIndex.committedBatches(s"$baseDir/corpus")
       .filter(v => Files.exists(Paths.get(s"$baseDir/pairs/b=$v/_SUCCESS")))
     if (vs.isEmpty)
-      s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("ida", LongType),
-          StructField("idb", LongType),
-          StructField("cos", DoubleType))))
+      StreamIndex.emptyFrame(s, StructType(Seq(
+        StructField("ida", LongType), StructField("idb", LongType),
+        StructField("cos", DoubleType))))
     else s.read.parquet(vs.map(v => s"$baseDir/pairs/b=$v"): _*)
   }
 }

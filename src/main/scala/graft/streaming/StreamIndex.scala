@@ -30,7 +30,7 @@ private[graft] object StreamIndex {
   def indexView(s: SparkSession, baseDir: String,
       heal: Seq[Long] => Unit): DataFrame = {
     val dirs = layerDirs(baseDir, "index", heal)
-    if (dirs.isEmpty) emptyIndex(s)
+    if (dirs.isEmpty) emptyFrame(s, IndexSchema)
     else readDirs(s, dirs, Some(IndexSchema))
   }
 
@@ -118,46 +118,40 @@ private[graft] object StreamIndex {
     built
   }
 
-  /** Session conf bounding files per streaming DELTA dir (default 8).
-    * Per-batch dirs are the classic streaming small-file trap: a
-    * 32-partition shuffle writing a batch-sized delta leaves up to 32
-    * tiny files PER LAYER PER TRIGGER — the file population (and
-    * every later probe's open cost) grows 3 layers × width × stream
-    * age, and at local stage latency the commit overhead alone is
-    * visible (st10 measured ~25% faster with the bound at sf0.1).
-    * Compaction already folds deltas; this bounds the churn between
-    * passes. Raise it for deployments whose per-trigger batches are
-    * large enough to want more write parallelism. */
-  val DeltaMaxFilesConf = "spark.graft.streamDeltaMaxFiles"
+  /** Files per streaming DELTA dir. Per-batch dirs are the classic
+    * streaming small-file trap: a 32-partition shuffle writing a
+    * batch-sized delta leaves up to 32 tiny files PER LAYER PER
+    * TRIGGER — the file population (and every later probe's open
+    * cost) grows 3 layers × width × stream age, and at local stage
+    * latency the commit overhead alone is visible (st10 measured ~25%
+    * faster with the bound at sf0.1). Compaction already folds deltas;
+    * this bounds the churn between passes, and [[deltaSized]] widens
+    * it for frames too large for it. */
+  private val DeltaMaxFiles = 8
 
   /** Session conf: estimated bytes each delta-write task should own
     * once a frame outgrows the small-file bound (default 64 MB). The
     * file bound exists to stop per-trigger small-file churn; applied
     * blindly it would also narrow a CORPUS-sized write (a bootstrap
-    * trigger, a seeded snapshot copy) to `DeltaMaxFilesConf` tasks for
+    * trigger, a seeded snapshot copy) to `DeltaMaxFiles` tasks for
     * the whole final stage — coalesce narrows compute, not just file
     * count — so the bound widens with the frame's plan-time size
     * estimate, exactly like `Dedup.listStageWidth`. */
   val DeltaTargetBytesConf = "spark.graft.streamDeltaTargetBytes"
 
-  /** Session conf: the StorageLevel for the PER-TRIGGER batch
-    * checkpoints (the build-once frames pairBatch/curateBatch/
-    * StreamEmbed.pairBatch serve their probe AND delta write from).
-    * Default DISK_ONLY: the frame is re-read only within its own
-    * trigger and lands on local disk moments later anyway, so disk
-    * blocks (page-cache-warm on re-read) serve it without competing
-    * with execution memory — under a heap NOT scaled to the data
-    * (default 8g at the 5× replica) MEMORY_AND_DISK checkpoint
+  /** One-trigger-lifetime checkpoint for a batch's posting/bucket
+    * delta (the build-once frames pairBatch/curateBatch/
+    * StreamEmbed.pairBatch serve their probe AND delta write from):
+    * cuts lineage so the frame computes once for its in-trigger
+    * consumers, stored DISK_ONLY. The frame is re-read only within its
+    * own trigger and lands on local disk moments later anyway, so
+    * disk blocks (page-cache-warm on re-read) serve it without
+    * competing with execution memory — under a heap NOT scaled to the
+    * data (default 8g at the 5× replica) MEMORY_AND_DISK checkpoint
     * blocks cost the trigger's pair stage ~2.5 s of eviction/GC
     * pressure, while at an adequately-sized heap the two levels
     * measure at par (OPTIMIZATION_r16.md's storage-level matrix).
-    * Accepts any `StorageLevel.fromString` name. */
-  val BatchCkptStorageConf = "spark.graft.streamCkptStorage"
-
-  /** One-trigger-lifetime checkpoint for a batch's posting/bucket
-    * delta: cuts lineage so the frame computes once for its
-    * in-trigger consumers, at [[BatchCkptStorageConf]]'s storage
-    * level. DISK_ONLY is right for exactly these frames — NARROW
+    * DISK_ONLY is right for exactly these frames — NARROW
     * packed-long rows whose serialized form is small — and wrong for
     * text-bearing ones: converting the day-verdict / curation-flagged
     * / seed-index checkpoints (rows carry the document text) was
@@ -165,28 +159,8 @@ private[graft] object StreamIndex {
     * per-consumer deserialization of wide rows outweighs the heap
     * relief), so those sites keep the plain deserialized-heap
     * localCheckpoint — the per-site sign-flip lesson again. */
-  def batchCkpt(df: DataFrame): DataFrame = {
-    val name = df.sparkSession.conf.get(BatchCkptStorageConf, "DISK_ONLY")
-    val level =
-      try org.apache.spark.storage.StorageLevel.fromString(name)
-      catch {
-        case e: Throwable => throw new IllegalArgumentException(
-          s"$BatchCkptStorageConf must be a StorageLevel name, got '$name'",
-          e)
-      }
-    // NONE parses but RDD.localCheckpoint silently substitutes a
-    // disk-backed level for it (the conf would LOOK honored while
-    // changing nothing), and OFF_HEAP needs spark.memory.offHeap
-    // configured and dies much later with a less actionable error —
-    // reject both up front with the conf named
-    require(level != org.apache.spark.storage.StorageLevel.NONE &&
-        level != org.apache.spark.storage.StorageLevel.OFF_HEAP,
-      s"$BatchCkptStorageConf: '$name' is not a meaningful checkpoint " +
-        "level here (NONE is silently replaced by a disk-backed level; " +
-        "OFF_HEAP requires spark.memory.offHeap.*) — use DISK_ONLY or a " +
-        "MEMORY_* level")
-    df.localCheckpoint(true, level)
-  }
+  def batchCkpt(df: DataFrame): DataFrame =
+    df.localCheckpoint(true, org.apache.spark.storage.StorageLevel.DISK_ONLY)
 
   // ————————————————————————————— concurrent per-trigger commits ———
   // A trigger's layer writes (pairs/verdicts/fps/index/ebkt + the
@@ -266,14 +240,11 @@ private[graft] object StreamIndex {
       .parquet(dir)
 
   /** Bound a delta frame's output file count before a per-batch dir
-    * write: batch-sized deltas coalesce to the configured small-file
-    * bound (default 8 — plans byte-identical to the fixed bound at
-    * bench SF); a frame whose analyzed size estimate exceeds
+    * write: batch-sized deltas coalesce to the [[DeltaMaxFiles]]
+    * small-file bound; a frame whose analyzed size estimate exceeds
     * bound × target widens to ~target bytes per task so a
     * replica-scale bootstrap write keeps its parallelism. */
   def deltaSized(df: DataFrame): DataFrame = {
-    val n = df.sparkSession.conf.get(DeltaMaxFilesConf, "8").toInt
-    require(n > 0, s"$DeltaMaxFilesConf must be positive, got $n")
     val rawT = df.sparkSession.conf
       .get(DeltaTargetBytesConf, (64L << 20).toString)
     val target = scala.util.Try(rawT.toLong).toOption.filter(_ > 0)
@@ -292,7 +263,7 @@ private[graft] object StreamIndex {
     // stage-reuse sharp edge.)
     val bytes = df.queryExecution.analyzed.collectLeaves()
       .map(_.stats.sizeInBytes).sum
-    val want = (bytes / target).min(4096).max(n).toInt
+    val want = (bytes / target).min(4096).max(DeltaMaxFiles).toInt
     df.coalesce(want)
   }
 
@@ -426,9 +397,20 @@ private[graft] object StreamIndex {
       schema.fold(s.read)(s.read.schema(_)).parquet(dirs: _*)
     else dirs.map(readDir(s, _, schema)).reduce(_.unionByName(_))
 
-  /** The [[IndexSchema]] with no rows — the pre-first-commit view. */
-  def emptyIndex(s: SparkSession): DataFrame =
-    s.createDataFrame(s.sparkContext.emptyRDD[Row], IndexSchema)
+  /** `schema` with no rows — a layer's pre-first-commit view. */
+  def emptyFrame(s: SparkSession, schema: StructType): DataFrame =
+    s.createDataFrame(s.sparkContext.emptyRDD[Row], schema)
+
+  /** Rebuild every `<layer>/b=<id>` delta among `batches` (in order)
+    * that has no `_SUCCESS` — a committed corpus batch written before
+    * the layer existed — from `derive(id)`, bounded by [[deltaSized]].
+    * The heal loop of every layer whose deltas derive per batch. */
+  def healMissing(baseDir: String, layer: String, batches: Seq[Long])(
+      derive: Long => DataFrame): Unit =
+    batches
+      .filterNot(v => Files.exists(Paths.get(s"$baseDir/$layer/b=$v/_SUCCESS")))
+      .foreach(v => deltaSized(derive(v))
+        .write.mode("overwrite").parquet(s"$baseDir/$layer/b=$v"))
 
   /** Committed deltas not yet covered by a layer's compact snapshot —
     * the statistic the streams' `autoCompactEvery` trigger compares

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.operators.Dedup
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -231,14 +231,9 @@ object StreamNearDup {
     * its committed corpus dir (the pre-index-deployment heal). */
   private def healDeltas(s: SparkSession, baseDir: String,
       batches: Seq[Long], n: Int): Unit =
-    batches
-      .filterNot(v => Files.exists(Paths.get(s"$baseDir/index/b=$v/_SUCCESS")))
-      .foreach { v =>
-        StreamIndex.deltaSized(Dedup.postingIndex(
-            StreamIndex.readDir(s, s"$baseDir/corpus/b=$v"),
-            "doc_id", "text", n))
-          .write.mode("overwrite").parquet(s"$baseDir/index/b=$v")
-      }
+    StreamIndex.healMissing(baseDir, "index", batches)(v =>
+      Dedup.postingIndex(StreamIndex.readDir(s, s"$baseDir/corpus/b=$v"),
+        "doc_id", "text", n))
 
 
 
@@ -259,7 +254,7 @@ object StreamNearDup {
   def allPairs(s: SparkSession, baseDir: String): DataFrame = {
     val vs = committedBatches(s"$baseDir/corpus")
       .filter(v => Files.exists(Paths.get(s"$baseDir/pairs/b=$v/_SUCCESS")))
-    if (vs.isEmpty) s.createDataFrame(s.sparkContext.emptyRDD[Row], PairsSchema)
+    if (vs.isEmpty) StreamIndex.emptyFrame(s, PairsSchema)
     else s.read.schema(PairsSchema)
       .parquet(vs.map(v => s"$baseDir/pairs/b=$v"): _*)
   }

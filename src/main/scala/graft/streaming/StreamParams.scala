@@ -24,10 +24,8 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   * entry point (each trigger, each maintenance pass that takes a
   * parameter, each seed) verifies its own parameters against the
   * recorded ones and throws on mismatch. A dir with committed history
-  * but no marker (written by a pre-params deployment) refuses new
-  * triggers until the operator ASSERTS its parameters once via
-  * [[adopt]] — the explicit adopt-or-migrate pattern the durable
-  * tables use (`DurableArtifact.adoptParams`), never a guess. */
+  * but no marker refuses new triggers: the engine never guesses a
+  * dir's parameterization. */
 private[graft] object StreamParams {
 
   private val MarkerFile = "_params"
@@ -74,8 +72,8 @@ private[graft] object StreamParams {
     *  - no marker, no committed history → record `params` (trigger 0 /
     *    the seed defines the dir's parameterization; a marker from a
     *    crashed never-committed attempt is simply overwritten);
-    *  - no marker but committed history → throw with the [[adopt]]
-    *    migration message (a pre-params deployment's dir). */
+    *  - no marker but committed history → throw (nothing records what
+    *    the history was built with; start a fresh dir). */
   def establish(baseDir: String, params: Map[String, String]): Unit =
     recorded(baseDir) match {
       case Some(r) if r == params => ()
@@ -95,11 +93,10 @@ private[graft] object StreamParams {
         if (committed.nonEmpty)
           throw new IllegalArgumentException(
             s"$baseDir has committed stream history but no _params " +
-              "marker (a pre-params deployment). If its history really " +
-              "was built with " +
-              s"'${DurableArtifact.canonParams(params)}', assert that " +
-              "once with StreamParams.adopt(baseDir, params); the " +
-              "engine never guesses a dir's parameterization")
+              "marker, so nothing records the parameters its layers " +
+              s"were built with; this call runs " +
+              s"'${DurableArtifact.canonParams(params)}' and the engine " +
+              "never guesses a dir's parameterization. Start a fresh dir")
         else write(baseDir, params)
     }
 
@@ -120,20 +117,6 @@ private[graft] object StreamParams {
       }
     }
 
-  /** One-shot adoption of a pre-params dir: the OPERATOR asserts its
-    * committed history was built with `params`. Refuses to overwrite a
-    * conflicting marker — that is a real mismatch, not missing
-    * provenance. */
-  def adopt(baseDir: String, params: Map[String, String]): Unit = {
-    recorded(baseDir).filter(_ != params).foreach { r =>
-      throw new IllegalArgumentException(
-        s"adopt: $baseDir already records " +
-          s"'${DurableArtifact.canonParams(r)}' — a genuine parameter " +
-          "change needs a fresh dir, not a relabel")
-    }
-    write(baseDir, params)
-  }
-
   private def write(baseDir: String, params: Map[String, String]): Unit = {
     val dir = Paths.get(baseDir)
     Files.createDirectories(dir)
@@ -148,7 +131,7 @@ private[graft] object StreamParams {
   /** Seed-time TABLE check: every build param RECORDED on the durable
     * table that the stream's parameterization also names must agree —
     * the n=4-index-into-an-n=3-stream seed throws here. A table with
-    * no recorded params (pre-params, or a caller-built frame) is the
+    * no recorded params (a caller-built table) is the
     * caller's assertion, same trust level as handing the frame
     * directly. Keys only one side knows (the index records just `n`;
     * the stream also records its threshold) are fine — they

@@ -22,13 +22,12 @@ class DurableClusterFoldSpec extends SparkTestBase {
   private val table = "g_cluster_fold_spec"
   private val serveTable = "g_cluster_fold_serve_spec"
   private val cadenceTable = "g_cluster_fold_cadence_spec"
-  private val legacyTable = "g_cluster_fold_legacy_spec"
+  private val foreignTable = "g_cluster_fold_foreign_spec"
   private val leaseTable = "g_cluster_fold_lease_spec"
 
   private def dropAll(): Unit = {
-    Seq(table, serveTable, cadenceTable, legacyTable, leaseTable).foreach { t =>
+    Seq(table, serveTable, cadenceTable, foreignTable, leaseTable).foreach { t =>
       spark.sql(s"DROP TABLE IF EXISTS $t")
-      spark.sql(s"DROP TABLE IF EXISTS ${t}_patch")
       spark.sql(s"SHOW TABLES LIKE '${t}_patch_e*'").collect()
         .map(_.getString(1))
         .foreach(p => spark.sql(s"DROP TABLE IF EXISTS $p"))
@@ -59,8 +58,11 @@ class DurableClusterFoldSpec extends SparkTestBase {
       .format("parquet").saveAsTable(t)
     // what the snapshot job's write() stamps — the fold's params guard
     // requires it before folding deltas into the table
-    ExtensionQueries.clusterMapArtifact.adoptParams(spark, t)
+    spark.sql(s"ALTER TABLE $t SET TBLPROPERTIES ($paramsStamp)")
   }
+  private def paramsStamp: String =
+    s"'${DurableArtifact.ParamsProp}' = " +
+      s"'${DurableArtifact.canonParams(ExtensionQueries.clusterMapArtifact.params)}'"
   private def patch(t: String, e: Int): String =
     ExtensionQueries.clusterPatchTable(t, e)
 
@@ -259,8 +261,8 @@ class DurableClusterFoldSpec extends SparkTestBase {
       .write.bucketBy(8, "doc_id").sortBy("doc_id")
       .format("parquet").saveAsTable(serveTable)
     spark.sql(s"ALTER TABLE $serveTable SET TBLPROPERTIES " +
-      s"('${DurableArtifact.SourceDirProp}' = '${DurableArtifact.normDir(d)}')")
-    ExtensionQueries.clusterMapArtifact.adoptParams(spark, serveTable)
+      s"('${DurableArtifact.SourceDirProp}' = '${DurableArtifact.normDir(d)}', " +
+      s"$paramsStamp)")
     ExtensionQueries.foldClusterMapDurable(spark, d, serveTable, halfB)
     all.unpersist()
 
@@ -309,58 +311,40 @@ class DurableClusterFoldSpec extends SparkTestBase {
       "a rebased table must serve snapshot consumers directly")
   }
 
-  test("a round-13 LEGACY layout (folds>0, unsuffixed patch, no epoch " +
-      "column) serves its stored relabels, refuses further folds, and " +
-      "compactClusterMap migrates it to the epoch layout in one pass") {
-    // base WITHOUT the epoch column + a bumped folds counter + the
-    // unsuffixed patch table: exactly what the round-13 code persisted
+  test("the fold refuses a table writeClusterMap did not write — no " +
+      "epoch column, or no build-params stamp — naming the rewrite, " +
+      "and the refused fold writes nothing") {
+    // no epoch column: a plain append could tear under a reader
     ccMap(basePairs).write.bucketBy(8, "doc_id").sortBy("doc_id")
-      .format("parquet").saveAsTable(legacyTable)
-    spark.sql(s"ALTER TABLE $legacyTable SET TBLPROPERTIES (" +
-      s"'${DurableArtifact.SourceDirProp}' = '${DurableArtifact.normDir(d)}', " +
-      s"'${DurableArtifact.FoldsProp}' = '1')")
-    import spark.implicits._
-    Seq((10L, 1L)).toDF("old_cluster_id", "new_cluster_id")
-      .write.format("parquet")
-      .saveAsTable(ExtensionQueries.legacyClusterPatchTable(legacyTable))
+      .format("parquet").saveAsTable(foreignTable)
+    spark.sql(s"ALTER TABLE $foreignTable SET TBLPROPERTIES (" +
+      s"'${DurableArtifact.SourceDirProp}' = '${DurableArtifact.normDir(d)}')")
     val want = rows(ccMap(basePairs))
-      .map { case (n, c) => (n, if (c == 10L) 1L else c) }
-    assert(rows(ExtensionQueries.readClusterMap(spark, legacyTable)) === want,
-      "the legacy patch must be applied, never silently dropped")
-
     val ex = intercept[IllegalArgumentException] {
-      ExtensionQueries.foldClusterMapDurable(spark, d, legacyTable,
+      ExtensionQueries.foldClusterMapDurable(spark, d, foreignTable,
         pairsDf(Seq((0L, 1L))))
     }
-    assert(ex.getMessage.contains("compactClusterMap"),
-      "the refusal must point at the migration pass")
-
-    ExtensionQueries.compactClusterMap(spark, legacyTable)
-    assert(spark.table(legacyTable).columns
-      .contains(ExtensionQueries.FoldEpochCol))
-    assert(!spark.catalog.tableExists(
-      ExtensionQueries.legacyClusterPatchTable(legacyTable)),
-      "the migrated legacy patch must be retired")
-    assert(rows(ExtensionQueries.readClusterMap(spark, legacyTable)) === want)
-    assert(DurableArtifact.foldsOf(spark, legacyTable) === 1,
-      "migration changes layout, never provenance")
-    // a legacy table also predates PARAM stamping: the fold refuses
-    // until the operator asserts the build params via adoptParams (the
-    // layout migrate and the params adoption are separate, explicit
-    // one-shots — the engine never guesses what a table was built with)
+    assert(ex.getMessage.contains(ExtensionQueries.FoldEpochCol) &&
+      ex.getMessage.contains("writeClusterMap"),
+      s"the refusal must name the rewrite: ${ex.getMessage}")
+    assert(rows(ExtensionQueries.readClusterMap(spark, foreignTable)) === want)
+    // epoch layout but no params stamp: the engine never guesses what a
+    // table was built with
+    spark.sql(s"DROP TABLE $foreignTable")
+    ccMap(basePairs).withColumn(ExtensionQueries.FoldEpochCol, lit(0))
+      .write.bucketBy(8, "doc_id").sortBy("doc_id")
+      .format("parquet").saveAsTable(foreignTable)
     val exP = intercept[IllegalArgumentException] {
-      ExtensionQueries.foldClusterMapDurable(spark, d, legacyTable,
+      ExtensionQueries.foldClusterMapDurable(spark, d, foreignTable,
         pairsDf(Seq((0L, 1L))))
     }
-    assert(exP.getMessage.contains("adoptParams"),
-      s"the refusal must name the adoption step: ${exP.getMessage}")
-    ExtensionQueries.clusterMapArtifact.adoptParams(spark, legacyTable)
-    // …and the commit-safe fold now runs on the migrated table
-    ExtensionQueries.foldClusterMapDurable(spark, d, legacyTable,
-      pairsDf(Seq((0L, 1L))))
-    assert(rows(ExtensionQueries.readClusterMap(spark, legacyTable))
-      === want.map { case (n, c) => (n, if (c == 1L) 0L else c) } +
-        ((0L, 0L)))
+    assert(exP.getMessage.contains("params") &&
+      exP.getMessage.contains("writeClusterMap"),
+      s"the refusal must name the rewrite: ${exP.getMessage}")
+    assert(rows(ExtensionQueries.readClusterMap(spark, foreignTable)) === want)
+    assert(DurableArtifact.foldsOf(spark, foreignTable) === 0)
+    assert(DurableArtifact.leaseHolder(spark, foreignTable).isEmpty,
+      "a refused fold must release its lease")
   }
 
   test("the cluster fold claims the writer lease BEFORE patch staging: " +

@@ -24,4 +24,13 @@ class SourceLintSpec extends AnyFunSuite {
     assert(offenders.isEmpty, "build the session with graft.LocalSession: " +
       offenders.mkString(", "))
   }
+
+  test("only DurableArtifact writes table properties in src/main") {
+    val offenders = mainSources.filter { p =>
+      p.getFileName.toString != "DurableArtifact.scala" &&
+        Files.readString(p).contains("SET TBLPROPERTIES")
+    }
+    assert(offenders.isEmpty, "set the fold protocol's table properties " +
+      "through DurableArtifact: " + offenders.mkString(", "))
+  }
 }

@@ -487,58 +487,56 @@ class DurableArtifactsSpec extends SparkTestBase {
     spark.sql(s"DROP TABLE IF EXISTS $t")
   }
 
-  test("appendDelta refuses a pre-epoch (legacy-layout) table with a " +
-      "migration message; migrateToEpochLayout then restores " +
-      "commit-safe folding") {
+  test("appendDelta refuses a table write() did not produce — no " +
+      "epoch column, or no build-params stamp — naming write(); after " +
+      "write() the fold runs commit-safely") {
     import org.apache.spark.sql.functions._
     val t = "g_fp_preepoch_spec"
     spark.sql(s"DROP TABLE IF EXISTS $t")
-    // a round-13-era table: bucketed, provenance-stamped, NO _fe column
+    // bucketed and provenance-stamped, but NO _fe column
     spark.range(4).select(md5(col("id").cast("string")).as("fp"))
       .write.bucketBy(8, "fp").sortBy("fp")
       .format("parquet").saveAsTable(t)
     spark.sql(s"ALTER TABLE $t SET TBLPROPERTIES " +
       s"('${graft.DurableArtifact.SourceDirProp}' = " +
       s"'${graft.DurableArtifact.normDir(d)}')")
-    val legacy = tableRows(t)
+    val plain = tableRows(t)
     val delta = spark.range(2)
       .select(md5(concat(lit("mig"), col("id").cast("string"))).as("fp"))
     val ex = intercept[IllegalArgumentException] {
       ExtensionQueries.corpusFpArtifact.appendDelta(spark, d, t, delta)
     }
-    assert(ex.getMessage.contains("migrateToEpochLayout"),
-      "the refusal must name the one-shot migration")
-    assert(tableRows(t) === legacy, "the refused fold must write nothing")
-
-    ExtensionQueries.corpusFpArtifact.migrateToEpochLayout(spark, t)
-    // migrated: every row epoch 0, bucket spec and provenance kept
-    assert(spark.table(t).columns.contains(graft.DurableArtifact.FoldEpochCol))
-    assert(spark.table(t)
-      .agg(max(col(graft.DurableArtifact.FoldEpochCol))).head().getInt(0) === 0)
-    assert(bucketSpec(t).exists(b =>
-      b.numBuckets == 8 && b.bucketColumnNames == Seq("fp")))
-    assert(graft.DurableArtifact.stampedFor(spark, t, d))
-    // idempotent
-    ExtensionQueries.corpusFpArtifact.migrateToEpochLayout(spark, t)
-    // a legacy table also predates PARAM stamping — the fold refuses
-    // until the operator adopts (asserts) the build params, the same
-    // explicit one-shot pattern as the layout migration
+    assert(ex.getMessage.contains(graft.DurableArtifact.FoldEpochCol) &&
+      ex.getMessage.contains("write()"),
+      s"the refusal must name the rewrite: ${ex.getMessage}")
+    assert(tableRows(t) === plain, "the refused fold must write nothing")
+    // the epoch layout without a params stamp is refused too: the
+    // engine never guesses what a table was built with
+    spark.range(4).select(md5(col("id").cast("string")).as("fp"),
+        lit(0).as(graft.DurableArtifact.FoldEpochCol))
+      .write.mode("overwrite").bucketBy(8, "fp").sortBy("fp")
+      .format("parquet").saveAsTable(t)
     val exP = intercept[IllegalArgumentException] {
       ExtensionQueries.corpusFpArtifact.appendDelta(spark, d, t, delta)
     }
-    assert(exP.getMessage.contains("adoptParams"))
-    ExtensionQueries.corpusFpArtifact.adoptParams(spark, t)
-    // …and the fold now runs with full commit safety (interleaved
-    // reader probe included)
+    assert(exP.getMessage.contains("params") &&
+      exP.getMessage.contains("write()"),
+      s"the refusal must name the rewrite: ${exP.getMessage}")
+    assert(graft.DurableArtifact.foldsOf(spark, t) === 0)
+    // …and after the named fix the fold runs with full commit safety
+    // (interleaved reader probe included)
+    ExtensionQueries.corpusFpArtifact.write(spark, d, t)
+    ExtensionQueries.evictCorpusFp(spark, d)
+    val base = tableRows(t)
     var probed = false
     ExtensionQueries.corpusFpArtifact.appendDelta(spark, d, t, delta,
       afterFilesWritten = () => {
-        assert(rows(graft.DurableArtifact.epochRead(spark, t)) === legacy)
+        assert(rows(graft.DurableArtifact.epochRead(spark, t)) === base)
         probed = true
       })
     assert(probed)
     assert(rows(graft.DurableArtifact.epochRead(spark, t))
-      === legacy ++ rows(delta))
+      === base ++ rows(delta))
     spark.sql(s"DROP TABLE IF EXISTS $t")
   }
 
@@ -685,7 +683,7 @@ class DurableArtifactsSpec extends SparkTestBase {
 
   test("build-parameter provenance: write() stamps graft.params, a " +
       "mismatched or missing stamp is never served (fall back to " +
-      "build), use() rewrites it, and adoptParams refuses a conflict") {
+      "build), a fold into it is refused, and use() rewrites it") {
     import org.apache.spark.sql.functions._
     val t = "g_emb_params_spec"
     spark.sql(s"DROP TABLE IF EXISTS $t")
@@ -723,12 +721,7 @@ class DurableArtifactsSpec extends SparkTestBase {
         spark.range(1).select(lit(1L).as("_id"), lit(7L).as("_bucket")))
     }
     assert(exF.getMessage.contains("param"))
-    // adoptParams refuses to RELABEL a genuine conflict…
-    val exA = intercept[IllegalArgumentException] {
-      art.adoptParams(spark, t)
-    }
-    assert(exA.getMessage.contains("rewrite"))
-    // …and use() rewrites the table for the caller's parameterization
+    // use() rewrites the table for the caller's parameterization
     art.use(spark, d, t)
     assert(graft.DurableArtifact.recordedParams(spark, t)
       .exists(_("nPlanes") == "12"))

@@ -316,14 +316,26 @@ class StreamNearDupSpec extends SparkTestBase {
     import java.nio.file.Paths
     val dir = Files.createTempDirectory("graft_snd_wavethrow").toString
     assert(StreamNearDup.pairBatch(b1.toDS(), 0L, dir, 3, 500000L))
-    // NONE makes batchCkpt throw on the driver thread AFTER the corpus
-    // data write was submitted to the wave
-    spark.conf.set(StreamIndex.BatchCkptStorageConf, "NONE")
+    // batch 0's index delta gone and its corpus files moved aside: the
+    // trigger's index heal then fails on the driver thread AFTER the
+    // corpus data write was submitted to the wave (it cannot read the
+    // batch back to rebuild the delta)
+    val c0 = Paths.get(s"$dir/corpus/b=0")
+    val aside = Files.createTempDirectory("graft_snd_aside")
+    StreamIndex.deleteTree(s"$dir/index/b=0")
+    val parts = {
+      import scala.jdk.CollectionConverters._
+      val ls = Files.list(c0)
+      try ls.iterator.asScala
+        .filter(_.getFileName.toString.endsWith(".parquet")).toList
+      finally ls.close()
+    }
+    parts.foreach(p => Files.move(p, aside.resolve(p.getFileName)))
     try {
-      val ex = intercept[IllegalArgumentException] {
+      val ex = intercept[org.apache.spark.sql.AnalysisException] {
         StreamNearDup.pairBatch(b2.toDS(), 1L, dir, 3, 500000L)
       }
-      assert(ex.getMessage.contains(StreamIndex.BatchCkptStorageConf))
+      assert(ex.getMessage.contains("infer schema"), ex.getMessage)
       // every event posted so far delivered: a write still running
       // when the exception escaped would still be an active job
       org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
@@ -335,54 +347,13 @@ class StreamNearDupSpec extends SparkTestBase {
       assert(!new java.io.File(corpus, "_temporary").exists())
       assert(Option(corpus.list()).exists(_.exists(_.endsWith(".parquet"))),
         "the corpus write was abandoned, not joined")
-    } finally spark.conf.unset(StreamIndex.BatchCkptStorageConf)
+    } finally parts.foreach(p =>
+      Files.move(aside.resolve(p.getFileName), p))
     assert(!Files.exists(Paths.get(s"$dir/corpus/b=1/_SUCCESS")))
     assert(StreamNearDup.corpusView(spark, dir).count() === b1.size)
     // the replay commits the batch
     assert(StreamNearDup.pairBatch(b2.toDS(), 1L, dir, 3, 500000L))
     assert(StreamNearDup.corpusView(spark, dir).count() ===
       (b1.size + b2.size))
-  }
-
-  test("batchCkpt's storage level is conf-driven and verdict-neutral: " +
-      "pairs under MEMORY_AND_DISK == pairs under the DISK_ONLY default; " +
-      "an unknown level name throws") {
-    def runAll(dir: String): Set[(Long, Long, Long)] = {
-      Seq(b1, b2, b3).zipWithIndex.foreach { case (b, id) =>
-        val _ = StreamNearDup.pairBatch(b.toDS(), id.toLong, dir, 3, 500000L)
-      }
-      StreamNearDup.allPairs(spark, dir).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    }
-    val defaultPairs = runAll(Files.createTempDirectory("graft_ckd").toString)
-    spark.conf.set(StreamIndex.BatchCkptStorageConf, "MEMORY_AND_DISK")
-    try {
-      val memPairs = runAll(Files.createTempDirectory("graft_ckm").toString)
-      assert(memPairs === defaultPairs)
-      assert(defaultPairs === expectedPairs,
-        "both levels must match the batch recompute, not just each other")
-    } finally spark.conf.unset(StreamIndex.BatchCkptStorageConf)
-    spark.conf.set(StreamIndex.BatchCkptStorageConf, "NOT_A_LEVEL")
-    try {
-      val ex = intercept[IllegalArgumentException] {
-        val _ = StreamIndex.batchCkpt(spark.range(3).toDF())
-      }
-      assert(ex.getMessage.contains(StreamIndex.BatchCkptStorageConf))
-      assert(ex.getCause != null,
-        "the parse failure must ride along as the cause")
-    } finally spark.conf.unset(StreamIndex.BatchCkptStorageConf)
-    // parseable but meaningless levels are rejected UP FRONT: NONE is
-    // silently replaced by localCheckpoint (conf would look honored),
-    // OFF_HEAP dies later with a less actionable error
-    Seq("NONE", "OFF_HEAP").foreach { lvl =>
-      spark.conf.set(StreamIndex.BatchCkptStorageConf, lvl)
-      try {
-        val ex = intercept[IllegalArgumentException] {
-          val _ = StreamIndex.batchCkpt(spark.range(3).toDF())
-        }
-        assert(ex.getMessage.contains(StreamIndex.BatchCkptStorageConf))
-        assert(ex.getMessage.contains(lvl))
-      } finally spark.conf.unset(StreamIndex.BatchCkptStorageConf)
-    }
   }
 }

@@ -65,27 +65,19 @@ class StreamParamsSpec extends SparkTestBase {
   }
 
   test("a pre-params dir (committed history, no marker) refuses new " +
-      "triggers until the operator adopts its parameters once") {
+      "triggers, naming a fresh dir, and commits nothing") {
     val dir = Files.createTempDirectory("graft_sp_legacy").toString
     assert(StreamNearDup.pairBatch(b1.toDS(), 0L, dir, 3, 500000L))
-    // simulate the pre-params deployment: history, no marker
+    // history with no marker: nothing records its parameters
     Files.delete(Paths.get(dir, "_params"))
     val e = intercept[IllegalArgumentException] {
       StreamNearDup.pairBatch(b2.toDS(), 1L, dir, 3, 500000L)
     }
-    assert(e.getMessage.contains("adopt"),
-      "the refusal must name the adoption step")
-    // adopt refuses a conflicting marker… there is none here, so it
-    // records the operator's assertion and streaming resumes
-    StreamParams.adopt(dir, StreamParams.neardup(3, 500000L,
-      Dedup.DfCap.NoCap))
-    assert(StreamNearDup.pairBatch(b2.toDS(), 1L, dir, 3, 500000L))
-    // …and adopt on a now-recorded dir refuses a different assertion
-    val e2 = intercept[IllegalArgumentException] {
-      StreamParams.adopt(dir, StreamParams.neardup(4, 500000L,
-        Dedup.DfCap.NoCap))
-    }
-    assert(e2.getMessage.contains("fresh dir"))
+    assert(e.getMessage.contains("fresh dir"),
+      s"the refusal must name the fix: ${e.getMessage}")
+    assert(StreamIndex.committedBatches(s"$dir/corpus") === Seq(0L))
+    assert(StreamParams.recorded(dir).isEmpty,
+      "the refused trigger must not guess a marker")
   }
 
   test("seeding an n=4 posting-index TABLE into an n=3 stream throws " +
